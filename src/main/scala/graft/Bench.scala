@@ -117,7 +117,9 @@ object Bench {
       // executor classloaders by a per-STREAMING-RUN artifact uuid, and the
       // codegen cache is classloader-keyed — so every streaming query run
       // recompiled its full plan even with byte-identical sources
-      // (StreamCodegenProbe: stream rerun = 7 recompiles with isolation,
+      // (StreamCodegenProbe, removed; see
+      // `git show e6d0d1b:src/main/scala/graft/tools/StreamCodegenProbe.scala`:
+      // stream rerun = 7 recompiles with isolation,
       // 0 without; batch reruns always 0). This engine registers no
       // session artifacts, so isolation buys nothing and costs ~10-20
       // janino compiles per micro-batch fold. Same effect on a cluster:
@@ -236,7 +238,9 @@ object Bench {
         if (vals.isEmpty) None else Some(vals.sum)
       }
     // The measured-noisy families (r12 verdict #3 root cause, see
-    // tools/CodegenChurnProbe): in-suite rep 1 inherits the position's
+    // CodegenChurnProbe, removed; see
+    // `git show e6d0d1b:src/main/scala/graft/tools/CodegenChurnProbe.scala`):
+    // in-suite rep 1 inherits the position's
     // JVM state — a codegen-cache eviction burst (the ~80 queries since
     // the warm pass evict this query's classes from the bounded janino
     // LRU; churn-60 probe: 72 recompiled classes on rep 1 vs 29 steady)
@@ -408,7 +412,8 @@ object Bench {
     // per-rep whole-stage-codegen compilation counts, run order (the r12
     // verdict #3 attribution channel: a blown rep whose compile count
     // dwarfs its siblings' is the janino-cache-eviction one-off the
-    // CodegenChurnProbe measured, not an operator regression)
+    // CodegenChurnProbe measured, not an operator regression; removed, see
+    // `git show e6d0d1b:src/main/scala/graft/tools/CodegenChurnProbe.scala`)
     val repCompilesJson = results.map { case (k, (_, _, _, _, _, cs, _)) =>
       s""""$k":[${cs.mkString(",")}]"""
     }.mkString("{", ",", "}")

@@ -20,7 +20,9 @@ object Tables {
     * (session, dir, table) — the logical plan over an immutable input
     * table, i.e. its file listing and footer schema, never rows and never
     * operator output. `spark.read.parquet` costs ~75 ms of driver-side
-    * listing + schema inference per call (SessionFloorProbe), paid inside
+    * listing + schema inference per call (SessionFloorProbe; removed, see
+    * `git show e6d0d1b:src/main/scala/graft/tools/SessionFloorProbe.scala`),
+    * paid inside
     * the timer by every query rep; the driver's test tables are
     * deterministic and immutable per contract, so the handle is a pure
     * input fixture. Every query still scans the parquet DATA from disk on

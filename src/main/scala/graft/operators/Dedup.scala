@@ -962,12 +962,14 @@ object Dedup {
         col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
     // cand is referenced by both candOldIds union branches AND the final
-    // pair join, but a persist here LOSES (r15 EmbIncAbProbe, median-of-5:
+    // pair join, but a persist here LOSES (r15 EmbIncAbProbe, removed; see
+    // `git show e6d0d1b:src/main/scala/graft/tools/EmbIncAbProbe.scala`;
+    // median-of-5:
     // cand+vecs 3.51 s, none 2.57, cand-only 3.09, vecs-only 1.86): within
     // the one materializing action Spark's exchange reuse already dedups
     // the identical cand subtrees, so the r14 persist only added block
-    // materialization and a job barrier. Default off; toggleable so the
-    // probe can keep measuring both shapes.
+    // materialization and a job barrier. Default off; toggleable so both
+    // shapes stay measurable.
     val cand0 = crossCand.union(newCand).distinct()
     val cand = if (cacheCand) cand0.persist() else cand0
     // only candidate corpus vectors are re-read (semi-join prunes the scan)

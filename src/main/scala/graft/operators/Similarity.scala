@@ -898,7 +898,9 @@ object Similarity {
     * order makes centroids partitioning-sensitive, same caveat as
     * `embedding_kmeans`.
     *
-    * Defaults swept via `tools.KnnSweep` on this corpus: (16, 6, 2) gives
+    * Defaults swept via KnnSweep (removed; see
+    * `git show e6d0d1b:src/main/scala/graft/tools/KnnSweep.scala`)
+    * on this corpus: (16, 6, 2) gives
     * edge recall 0.69–0.73 vs the exact all-pairs graph at every sf; self-
     * join recall runs lower than the query-form sweeps because EVERY node
     * is a query, so bucket-boundary nodes are fully represented. Raising
@@ -1016,13 +1018,15 @@ object Similarity {
     *
     * Convergence on this corpus (sf0.01/0.1, k=5, kk=4k): seed recall
     * 0.29/0.20 at seedProbe=2 → 0.995/0.884 after 3 rounds (KnnSweep,
-    * flagged form); the fresh-pair filter makes per-round proposal counts
+    * flagged form; removed, see
+    * `git show e6d0d1b:src/main/scala/graft/tools/KnnSweep.scala`);
+    * the fresh-pair filter makes per-round proposal counts
     * DECAY with convergence (measured sf0.1: 805k → 450k → 268k vs
     * ~805k/492k/483k when every pair was re-proposed each round). On
     * near-random data recall
     * for fixed (rounds, kk) drifts down with n — real embedding corpora
     * are clustered, which is the regime descent exploits; if recall at a
-    * new scale matters, sweep with `tools.KnnSweep` and raise kk/rounds.
+    * new scale matters, re-run that sweep and raise kk/rounds.
     */
   def knnGraphDescent(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, rounds: Int = 3, seedProbe: Int = 2, searchK: Int = 0,
@@ -1031,7 +1035,9 @@ object Similarity {
     // list, so a list wider than the requested k (kk = 4k by default)
     // converges in far fewer rounds on weakly-clustered data — the
     // standard NN-descent K-vs-k split. Volume stays linear: 2·kk²·n.
-    // Defaults from tools.KnnSweep on this corpus (near-random 64-d
+    // Defaults from KnnSweep (removed; see
+    // `git show e6d0d1b:src/main/scala/graft/tools/KnnSweep.scala`)
+    // on this corpus (near-random 64-d
     // vectors, the hard case for descent): (rounds=3, seedProbe=2, kk=4k)
     // measures recall 0.995/0.884 at sf0.01/sf0.1 vs the exact graph —
     // comfortably above the 0.6 contract floor — with time growth ~1.8×

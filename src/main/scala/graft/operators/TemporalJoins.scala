@@ -129,7 +129,8 @@ object TemporalJoins {
     * width = median interval length / 4 (one approxQuantile pass over the
     * ranges side, driver cost O(1)).
     *
-    * Why /4 and not the median itself — `tools.BinSweep`, sf0.01+sf0.1:
+    * Why /4 and not the median itself — BinSweep (removed; see
+    * `git show e6d0d1b:src/main/scala/graft/tools/BinSweep.scala`), sf0.01+sf0.1:
     * candidate volume (equi-join rows before the residual filter) is
     * (len/width + 1)-ish per range meeting width-proportional per-bin
     * fan-in, so narrowing bins trades a BOUNDED explosion factor (~5 rows

@@ -112,7 +112,9 @@ object ExtendedQueries {
     // windows [v, v+2) matched against click values as an EQUI join on the
     // bin key — the shape that survives when the ranges side is too big to
     // broadcast (the broadcast form is range_join_bucket). The AUTO width
-    // (median interval length / 4 — tools.BinSweep) keeps the candidate
+    // (median interval length / 4 — BinSweep, removed; see
+    // `git show e6d0d1b:src/main/scala/graft/tools/BinSweep.scala`)
+    // keeps the candidate
     // volume within ~1.25x of the match count; telemetry
     // (range_join_binned_candidates) lands the measured volume in
     // bench_out. Aggregated per click; oracle runs the plain inequality

@@ -442,7 +442,8 @@ object PipelineQueries {
     // corpus is the only thing bucket-partitioned and resident. Contract:
     // both servings well-formed and exact-rerank-verified, multi-probe
     // recall@5 vs ORIGINAL-space brute force STRICTLY above the
-    // single-probe serving's (measured via graft.tools.JlMultiProbe:
+    // single-probe serving's (measured via JlMultiProbe, removed; see
+    // `git show e6d0d1b:src/main/scala/graft/tools/JlMultiProbe.scala`:
     // single 0.12/0.22/0.22 vs multi 0.66/0.50/0.54 at sf0.1/0.01/0.001,
     // monotone through the ladder 1->2->4->6) and above the serving
     // row's 0.4 floor.
@@ -487,7 +488,9 @@ object PipelineQueries {
 
     // PQ (product-quantization) top-k: 16-byte codes + native ADC scoring
     // + exact re-rank of the 8k-shortlist. Params swept at sf0.001/0.01/0.1
-    // via graft.tools.PqSweep (recall 0.88/0.82/0.84, floor 0.6 — the
+    // via PqSweep (removed; see
+    // `git show e6d0d1b:src/main/scala/graft/tools/PqSweep.scala`;
+    // recall 0.88/0.82/0.84, floor 0.6 — the
     // round-2 lesson: statistical floors are scale-dependent, sweep first).
     "sim_pq_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
@@ -532,7 +535,9 @@ object PipelineQueries {
     // kNN set in BOTH directions, cluster labels = min member id over
     // exactly the mutual-edge node set, and the trainIters=0 edge set
     // partition-invariant (deterministic seeded init + fixed-order kernels).
-    // Recall floor 0.6 from tools.KnnSweep: (16, 6, 2) measures 0.69-0.73
+    // Recall floor 0.6 from KnnSweep (removed; see
+    // `git show e6d0d1b:src/main/scala/graft/tools/KnnSweep.scala`):
+    // (16, 6, 2) measures 0.69-0.73
     // at sf0.001/0.01/0.1.
     "sim_knn_graph" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
@@ -868,7 +873,9 @@ object PipelineQueries {
     // IVF-PQ composition: coarse buckets bound WHICH vectors a query
     // touches, PQ codes bound WHAT the scan reads per vector. Both
     // approximations compound, so the floor sits under the plain-IVF and
-    // plain-PQ floors (PqSweep: 0.54/0.70/0.58 at nProbe=8, m=16 across
+    // plain-PQ floors (PqSweep, removed; see
+    // `git show e6d0d1b:src/main/scala/graft/tools/PqSweep.scala`:
+    // 0.54/0.70/0.58 at nProbe=8, m=16 across
     // sfs; floor 0.4).
     "sim_ivfpq_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")

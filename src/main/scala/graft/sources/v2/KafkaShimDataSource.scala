@@ -199,7 +199,7 @@ private[v2] class KafkaShimTable(topic: String, nPartitions: Int,
       override def build(): Scan = new KafkaShimScan(topic, nPartitions,
         Option(options.get("startingOffsets")),
         Option(options.get("endingOffsets")),
-        Option(options.get("maxOffsetsPerTrigger")).map(_.toLong),
+        SourceOptions.positiveLong(options, "maxOffsetsPerTrigger"),
         Option(options.get("minPartitions")).map(_.toInt).getOrElse(0))
     }
 

@@ -81,15 +81,17 @@ private[v2] class QueueSourceTable(queueName: String)
       TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
-      override def build(): Scan = new QueueScan(queueName,
-        // Tracking is opt-in: a policy exists only when the user configured
-        // some part of it, so policy-free streams pay zero bookkeeping.
-        if (options.containsKey("maxReceiveCount") || options.containsKey("dlq"))
-          Some(RedrivePolicy(
-            Option(options.get("maxReceiveCount")).map(_.toInt).getOrElse(5),
-            Option(options.get("dlq")).getOrElse(s"$queueName-dlq")))
-        else None,
-        Option(options.get("maxMessagesPerTrigger")).map(_.toLong))
+      override def build(): Scan = {
+        val maxReceives = SourceOptions.positiveInt(options, "maxReceiveCount")
+        new QueueScan(queueName,
+          // Tracking is opt-in: a policy exists only when the user configured
+          // some part of it, so policy-free streams pay zero bookkeeping.
+          if (maxReceives.isDefined || options.containsKey("dlq"))
+            Some(RedrivePolicy(maxReceives.getOrElse(5),
+              Option(options.get("dlq")).getOrElse(s"$queueName-dlq")))
+          else None,
+          SourceOptions.positiveLong(options, "maxMessagesPerTrigger"))
+      }
     }
 }
 

@@ -98,7 +98,7 @@ private[v2] class TopicSourceTable(topic: String, nPartitions: Int)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
       override def build(): Scan = new TopicScan(topic, nPartitions,
-        Option(options.get("maxMessagesPerTrigger")).map(_.toLong))
+        SourceOptions.positiveLong(options, "maxMessagesPerTrigger"))
     }
 }
 

@@ -207,7 +207,10 @@ object StreamingQueries {
                 // cacheCand/cacheVecs ON here, unlike the operator default:
                 // in this fold the corpus/index sides are parquet re-reads
                 // behind anti-joins, so recomputing the candidate subtree
-                // per reference re-scans files — EmbIncAbProbe's streaming-
+                // per reference re-scans files — EmbIncAbProbe's (removed;
+                // see
+                // `git show e6d0d1b:src/main/scala/graft/tools/EmbIncAbProbe.scala`)
+                // streaming-
                 // shaped arm measured both-persists fastest (1.13 s/batch
                 // vs 1.44 with the standalone-optimal vecs-only setting)
                 graft.operators.Dedup.embeddingPairsLshIncremental(

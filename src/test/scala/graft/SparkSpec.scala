@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one per suite via lazy val). */
@@ -17,4 +18,18 @@ trait SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The IllegalArgumentException a streaming query fails with, waiting at
+    * most 60 s. A query that ends cleanly, keeps running, or fails for
+    * another reason fails the test.
+    */
+  def streamArgumentError(start: => StreamingQuery): IllegalArgumentException = {
+    val e = intercept[Exception] {
+      val q = start
+      try q.awaitTermination(60000L) finally q.stop()
+    }
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case iae: IllegalArgumentException => iae }
+      .getOrElse(fail(s"expected an IllegalArgumentException, got $e"))
+  }
 }

@@ -377,4 +377,20 @@ class DedupSpec extends SparkSpec {
     assert(a == b)
     assert(a.nonEmpty)
   }
+
+  // clusters (ckptWithSum) and clustersStar (checkpointTracked) read their
+  // convergence witness with an unbounded obs.get right after an eager
+  // localCheckpoint; this pins that the checkpoint alone fires observe().
+  test("eager localCheckpoint fires observe() metrics before any other " +
+      "action") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val obs = org.apache.spark.sql.Observation("ckpt_fires_observe")
+    spark.range(1000)
+      .observe(obs, count(lit(1)).as("n"), sum(col("id")).as("s"))
+      .localCheckpoint()
+    val m = Await.result(Future(obs.get)(ExecutionContext.global), 10.seconds)
+    assert(m("n") == 1000L)
+    assert(m("s") == 499500L)
+  }
 }

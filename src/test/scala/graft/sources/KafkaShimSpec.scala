@@ -116,6 +116,21 @@ class KafkaShimSpec extends SparkSpec {
     TopicDataSource.clear(topic, 2)
   }
 
+  test("non-positive maxOffsetsPerTrigger fails naming the option") {
+    val topic = topicName
+    publishInts(topic, 2, 0 until 6)
+    val e = streamArgumentError {
+      spark.readStream.format("graft-kafka")
+        .option("subscribe", topic).option("partitions", "2")
+        .option("startingOffsets", "earliest")
+        .option("maxOffsetsPerTrigger", "0").load()
+        .writeStream.format("memory").queryName("kshim_badopt_sink")
+        .trigger(Trigger.AvailableNow()).start()
+    }
+    assert(e.getMessage.contains("maxOffsetsPerTrigger"))
+    TopicDataSource.clear(topic, 2)
+  }
+
   test("minPartitions splits log slices into contiguous offset " +
       "sub-ranges: read tasks reach the floor, rows and offsets intact") {
     val topic = topicName

@@ -90,6 +90,25 @@ class QueueDataSourceSpec extends SparkSpec {
     assert(got.filter(col("receive_count") =!= 1).count() == 0)
   }
 
+  test("non-positive maxMessagesPerTrigger or maxReceiveCount fails " +
+      "naming the option") {
+    val q = s"qds-badopt-${java.util.UUID.randomUUID()}"
+    put(q, 0 until 3)
+    Seq("maxMessagesPerTrigger" -> "0", "maxMessagesPerTrigger" -> "-3",
+        "maxReceiveCount" -> "0").zipWithIndex.foreach { case ((k, v), i) =>
+      val e = streamArgumentError {
+        spark.readStream.format("graft-queue").option("queue", q)
+          .option(k, v).load()
+          .writeStream.format("memory").queryName(s"qds_badopt_sink_$i")
+          .trigger(Trigger.AvailableNow()).start()
+      }
+      assert(e.getMessage.contains(k), s"$k=$v: ${e.getMessage}")
+    }
+    // nothing was delivered or dead-lettered
+    assert(InMemoryQueue.receiveCount(q, "0") == 0)
+    assert(InMemoryQueue.size(s"$q-dlq") == 0)
+  }
+
   test("exceeding maxReceiveCount dead-letters to the dlq queue") {
     val q = s"qds-dlq-${java.util.UUID.randomUUID()}"
     put(q, 0 until 3)

@@ -97,6 +97,20 @@ class TopicDataSourceSpec extends SparkSpec {
     TopicDataSource.clear(topic, 4)
   }
 
+  test("non-positive maxMessagesPerTrigger fails naming the option") {
+    val topic = topicName
+    publishInts(topic, 2, 0 until 6)
+    val e = streamArgumentError {
+      spark.readStream.format("graft-topic")
+        .option("topic", topic).option("partitions", "2")
+        .option("maxMessagesPerTrigger", "0").load()
+        .writeStream.format("memory").queryName("tds_badopt_sink")
+        .trigger(Trigger.AvailableNow()).start()
+    }
+    assert(e.getMessage.contains("maxMessagesPerTrigger"))
+    TopicDataSource.clear(topic, 2)
+  }
+
   test("checkpoint restart resumes from the committed per-partition offsets") {
     val topic = topicName
     val cp = java.nio.file.Files.createTempDirectory("tds-ckpt-").toString

@@ -67,10 +67,12 @@ class StreamingSpec extends SparkSpec {
       new InMemoryQueueClient("qs1"))
     assert(InMemoryQueue.size("qs1") === 35)
 
-    val qs = new QueueStream(spark, "qs1")
-    // parse bodies back to typed rows inside the stream (consumer side)
+    // the graft-queue source reads the queue as a log; parse bodies back
+    // to typed rows inside the stream (consumer side)
     val schema = Encoders.product[graft.model.Record].schema
-    val parsed = qs.stream.select(
+    val messages = spark.readStream.format("graft-queue")
+      .option("queue", "qs1").load()
+    val parsed = messages.select(
       org.apache.spark.sql.functions.from_json(
         org.apache.spark.sql.functions.col("body"), schema).as("r"))
       .select("r.*")
@@ -78,7 +80,6 @@ class StreamingSpec extends SparkSpec {
       .outputMode("append")
       .option("checkpointLocation", tmpDir("qsckpt"))
       .start()
-    assert(qs.pump() === 35)
     q.processAllAvailable()
     q.stop()
     val out = spark.table("qs_out")
