@@ -1,6 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration.{DurationInt, FiniteDuration}
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -577,6 +582,20 @@ object Dedup {
           .as("n_tokens_cut"))
   }
 
+  /** The convergence witness of one round of an iterative loop: the row of
+    * `metrics` that `obs` collects while `out`'s eager `localCheckpoint`
+    * materializes. The observed row arrives through a listener callback, so
+    * the wait for it is bounded; if it has not landed within `bound`, the
+    * same `metrics` are computed as a scalar aggregate over the checkpointed
+    * `out` (one more job, the same value).
+    */
+  private[operators] def roundWitness(obs: Observation, out: DataFrame,
+      metrics: Seq[Column], bound: FiniteDuration = 60.seconds): Row =
+    try Await.result(obs.future, bound)
+    catch {
+      case _: TimeoutException => out.agg(metrics.head, metrics.tail: _*).head()
+    }
+
   /** Connected components over an undirected pair list — the step that turns
     * near-dup PAIRS into dedup CLUSTERS (keep one representative per
     * component). Iterative min-label propagation: every node starts labeled
@@ -604,10 +623,10 @@ object Dedup {
     // checkpoint as an observe() metric — previously it was its own scalar
     // aggregate job per round, doubling the loop's action count.
     def ckptWithSum(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation("graft_clusters_witness")
-      val out = df.observe(obs, coalesce(sum(col("lbl")), lit(0L)).as("s"))
-        .localCheckpoint()
-      (out, obs.get.apply("s").asInstanceOf[Long])
+      val obs = Observation("graft_clusters_witness")
+      val s = coalesce(sum(col("lbl")), lit(0L)).as("s")
+      val out = df.observe(obs, s).localCheckpoint()
+      (out, roundWitness(obs, out, Seq(s)).getAs[Long]("s"))
     }
     var (labels, prevSum) = ckptWithSum(
       edges.select(col("src").as("id")).distinct()
@@ -668,16 +687,16 @@ object Dedup {
     // previously a second scalar-aggregate job per round.
     def checkpointTracked(
         df: DataFrame): (DataFrame, Set[Int], (Long, BigDecimal)) = {
-      val obs = org.apache.spark.sql.Observation("graft_cs_witness")
+      val obs = Observation("graft_cs_witness")
+      val n = count(lit(1)).as("n")
+      val h = coalesce(sum(xxhash64(col("src"), col("dst"))
+        .cast("decimal(38,0)")), lit(java.math.BigDecimal.ZERO)).as("h")
       val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.observe(obs, count(lit(1)).as("n"),
-          coalesce(sum(xxhash64(col("src"), col("dst"))
-            .cast("decimal(38,0)")), lit(java.math.BigDecimal.ZERO)).as("h"))
+      val out = df.observe(obs, n, h)
         .localCheckpoint() // eager: materialized before release
-      val m = obs.get
+      val m = roundWitness(obs, out, Seq(n, h))
       (out, sc.getPersistentRDDs.keySet.toSet.diff(before),
-        (m("n").asInstanceOf[Long],
-          BigDecimal(m("h").asInstanceOf[java.math.BigDecimal])))
+        (m.getAs[Long]("n"), BigDecimal(m.getAs[java.math.BigDecimal]("h"))))
     }
     def release(ids: Set[Int]): Unit =
       ids.foreach(id =>

@@ -83,6 +83,13 @@ object Publisher {
     ).as[QueueMessage]
   }
 
+  /** Driver-side guard for every public entry point that sends: with fewer
+    * than one attempt `sendPartition` would send nothing and hand every
+    * message back as a dead letter.
+    */
+  private[graft] def requireAttempts(maxAttempts: Int): Unit =
+    require(maxAttempts >= 1, s"maxAttempts must be at least 1, got $maxAttempts")
+
   /** Send one partition's messages in client-sized batches with bounded
     * retries; returns the messages that still failed.
     */
@@ -114,6 +121,7 @@ object Publisher {
       req: PublishRequest,
       client: QueueClient,
       maxAttempts: Int = 5): PublishResult = {
+    requireAttempts(maxAttempts)
     import spark.implicits._
     val df = spark.read.parquet(req.paths: _*)
     val messages = serialize(df, req.idColumn)

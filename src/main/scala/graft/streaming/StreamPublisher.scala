@@ -27,6 +27,7 @@ object StreamPublisher {
       maxAttempts: Int = 5,
       trigger: Trigger = Trigger.AvailableNow(),
       checkpoint: String): StreamingQuery = {
+    Publisher.requireAttempts(maxAttempts)
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -55,6 +56,7 @@ object StreamPublisher {
       dlqPath: String,
       client: QueueClient,
       maxAttempts: Int = 5): Dataset[QueueMessage] = {
+    Publisher.requireAttempts(maxAttempts)
     import spark.implicits._
     spark.read
       .schema(org.apache.spark.sql.Encoders.product[QueueMessage].schema)

@@ -379,8 +379,9 @@ class DedupSpec extends SparkSpec {
   }
 
   // clusters (ckptWithSum) and clustersStar (checkpointTracked) read their
-  // convergence witness with an unbounded obs.get right after an eager
-  // localCheckpoint; this pins that the checkpoint alone fires observe().
+  // convergence witness from an Observation right after an eager
+  // localCheckpoint; this pins that the checkpoint alone fires observe(), so
+  // roundWitness's scalar fallback stays off the normal path.
   test("eager localCheckpoint fires observe() metrics before any other " +
       "action") {
     import scala.concurrent.{Await, ExecutionContext, Future}
@@ -392,5 +393,28 @@ class DedupSpec extends SparkSpec {
     val m = Await.result(Future(obs.get)(ExecutionContext.global), 10.seconds)
     assert(m("n") == 1000L)
     assert(m("s") == 499500L)
+  }
+
+  test("roundWitness returns the observed row when the observation fires") {
+    import scala.concurrent.duration._
+    val obs = org.apache.spark.sql.Observation("witness_fires")
+    val s = sum(col("id")).as("s")
+    spark.range(1000).observe(obs, s).localCheckpoint()
+    // a different frame: the fallback would read 45 from it, not 499500
+    val row = Dedup.roundWitness(obs, spark.range(10).toDF(), Seq(s), 60.seconds)
+    assert(row.getAs[Long]("s") === 499500L)
+  }
+
+  test("roundWitness falls back to a scalar aggregate over the checkpoint " +
+      "when the observation never fires") {
+    import scala.concurrent.duration._
+    val never = org.apache.spark.sql.Observation("witness_never_fires")
+    val out = spark.range(10).toDF().localCheckpoint()
+    val n = count(lit(1)).as("n")
+    val s = sum(col("id")).as("s")
+    val row = Dedup.roundWitness(never, out, Seq(n, s), 50.millis)
+    assert(row.getAs[Long]("n") === 10L)
+    assert(row.getAs[Long]("s") === 45L)
+    assert(!never.future.isCompleted)
   }
 }

@@ -1,10 +1,13 @@
 package graft.pipeline
 
 import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
 import graft.model.Record
 import graft.sources.DataGenerator
+import graft.streaming.StreamPublisher
 
 /** End-to-end reference parity: generate → parquet → publish (JSON, batches
   * of ≤10, retry, partial failure) → consume (count + from_json round-trip).
@@ -79,5 +82,78 @@ class PipelineSpec extends SparkSpec {
     val res = Publisher.publish(spark,
       Publisher.PublishRequest(Seq(dir)), new InMemoryQueueClient("q5"))
     assert(res.publishedRows === n)
+  }
+
+  /** Publish `n` generated records into a cleared queue `q`. */
+  def published(q: String, n: Long, seed: Long): Unit = {
+    val (dir, _) = freshData(n, seed)
+    InMemoryQueue.clear(q)
+    Publisher.publish(spark,
+      Publisher.PublishRequest(Seq(dir)), new InMemoryQueueClient(q))
+  }
+
+  test("consume parses in parallel tasks, not in a driver-side LocalRelation") {
+    val cores = spark.sparkContext.defaultParallelism
+    published("q6", 3L * cores, 7L)
+    val back = Consumer.consume(spark, "q6", Encoders.product[Record].schema)
+    val local = back.queryExecution.optimizedPlan.collect {
+      case r: LocalRelation => r
+    }
+    assert(local.isEmpty, back.queryExecution.optimizedPlan.treeString)
+    assert(back.rdd.getNumPartitions === cores)
+    assert(back.count() === 3L * cores)
+  }
+
+  test("consume drains the queue before any action runs") {
+    published("q7", 40L, 8L)
+    assert(Consumer.count("q7") === 40)
+    Consumer.consume(spark, "q7", Encoders.product[Record].schema)
+    assert(Consumer.count("q7") === 0)
+  }
+
+  test("every action on the consumed frame sees the same drained rows") {
+    published("q8", 40L, 9L)
+    val back = Consumer.consume(spark, "q8", Encoders.product[Record].schema)
+    val first = back.collect().toSeq
+    assert(first.size === 40)
+    val firstDf = spark.createDataFrame(
+      spark.sparkContext.parallelize(first), back.schema)
+    assert(back.exceptAll(firstDf).isEmpty)
+    assert(firstDf.exceptAll(back).isEmpty)
+  }
+
+  test("an empty queue consumes to zero rows of the requested schema") {
+    InMemoryQueue.clear("q9")
+    // from_json reports every field nullable, so request a nullable schema
+    val schema = new StructType().add("id", "string")
+      .add("account_balance", "double").add("tags", "array<string>")
+    val back = Consumer.consume(spark, "q9", schema)
+    assert(back.count() === 0L)
+    assert(back.schema === schema)
+  }
+
+  test("collect() returns consumed rows in queue order") {
+    published("q10", 60L, 10L)
+    val queued = InMemoryQueue.all("q10").map(_.id)
+    val back = Consumer.consume(spark, "q10", Encoders.product[Record].schema)
+    assert(back.select("id").collect().map(_.getString(0)).toSeq === queued)
+  }
+
+  test("maxAttempts below 1 is rejected on the driver at every entry point") {
+    val (dir, _) = freshData(20L, 11L)
+    InMemoryQueue.clear("q11")
+    val client = new InMemoryQueueClient("q11")
+    val errors = Seq(
+      intercept[IllegalArgumentException](Publisher.publish(spark,
+        Publisher.PublishRequest(Seq(dir)), client, maxAttempts = 0)),
+      intercept[IllegalArgumentException](StreamPublisher.start(
+        spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir),
+        client, tmpDir("dlq"), maxAttempts = 0,
+        checkpoint = tmpDir("ckpt"))),
+      intercept[IllegalArgumentException](
+        StreamPublisher.redrive(spark, dir, client, maxAttempts = -1)))
+    errors.foreach(e => assert(e.getMessage.contains("maxAttempts")))
+    assert(Consumer.count("q11") === 0)
+    assert(spark.streams.active.isEmpty)
   }
 }
