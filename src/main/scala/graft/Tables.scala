@@ -30,11 +30,15 @@ object Tables {
     * table, where schema and file manifest are likewise resolved once.
     */
   private val handles =
-    new scala.collection.concurrent.TrieMap[(Int, String, String), DataFrame]
+    new scala.collection.concurrent.TrieMap[(String, String, String), DataFrame]
 
+  /** Keyed by the session's `sessionUUID`: an identity hash can collide,
+    * or be reused once a session is collected, and hand one session a
+    * handle bound to another.
+    */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     handles.getOrElseUpdate(
-      (System.identityHashCode(spark), dir, name),
+      (org.apache.spark.sql.GraftSqlShim.sessionUUID(spark), dir, name),
       if (name == "events") normalizeEventTs(eventsRaw(spark, dir))
       else spark.read.parquet(s"$dir/$name.parquet"))
 

@@ -2,23 +2,19 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Spark-native plugin entry point: registers graft's Catalyst expressions
   * into every session built with
   *
   *   spark.sql.extensions=graft.functions.GraftExtensions
   *
-  * so plain-SQL users (thriftserver, spark-sql, notebooks) get
-  * `simhash64`, `minhash_sig`, `word_shingles`, `winnow_fingerprint` without
-  * any imperative `register` call. `HashExpressions.register` remains for
-  * programmatic sessions; both routes build identical expression trees.
+  * so plain-SQL users (thriftserver, spark-sql, notebooks) get every
+  * `HashExpressions.sqlFunctions` entry (`simhash64`, `minhash_sig`, …)
+  * without any imperative `register` call. `HashExpressions.register`
+  * remains for programmatic sessions; both routes read the same table.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def intArg(e: Expression): Int =
-    e.eval(InternalRow.empty).asInstanceOf[Number].intValue
 
   private def info(name: String, usage: String): ExpressionInfo =
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
@@ -29,38 +25,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // plans.AsOfJoin.asOf via experimental.extraStrategies.
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.AsOfJoinPruning)
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(array<string>) - 64-bit SimHash fingerprint"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", "minhash_sig(array<string>, k) - k-minimum MinHash signature"),
-      (exprs: Seq[Expression]) => MinHashSig(exprs.head, intArg(exprs(1)))))
-    ext.injectFunction((FunctionIdentifier("word_shingles"),
-      info("word_shingles", "word_shingles(array<string>, n) - distinct word n-grams"),
-      (exprs: Seq[Expression]) => WordShingles(exprs.head, intArg(exprs(1)))))
-    ext.injectFunction((FunctionIdentifier("winnow_fingerprint"),
-      info("winnow_fingerprint", "winnow_fingerprint(string, k, w) - winnowing hashes"),
-      (exprs: Seq[Expression]) =>
-        WinnowFingerprint(exprs.head, intArg(exprs(1)), intArg(exprs(2)))))
-    ext.injectFunction((FunctionIdentifier("vec_dot"),
-      info("vec_dot", "vec_dot(array<double>, array<double>) - dot product"),
-      (exprs: Seq[Expression]) => VecDot(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("ngram_gen"),
-      info("ngram_gen", "ngram_gen(array<string>, n) - one row per n-gram window"),
-      (exprs: Seq[Expression]) => NgramGenerate(exprs.head, intArg(exprs(1)))))
-    ext.injectFunction((FunctionIdentifier("pq_score"),
-      info("pq_score",
-        "pq_score(array<double>, array<int>, ksub) - PQ ADC inner product"),
-      (exprs: Seq[Expression]) =>
-        PqScore(exprs.head, exprs(1), intArg(exprs(2)))))
-    ext.injectFunction((FunctionIdentifier("hilbert16"),
-      info("hilbert16",
-        "hilbert16(bigint, bigint) - 32-bit Hilbert curve index"),
-      (exprs: Seq[Expression]) => HilbertIndex(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("hilbert21"),
-      info("hilbert21",
-        "hilbert21(bigint, bigint, bigint) - 63-bit 3-D Hilbert index"),
-      (exprs: Seq[Expression]) =>
-        Hilbert3Index(exprs.head, exprs(1), exprs(2))))
+    HashExpressions.sqlFunctions.foreach { case (name, usage, build) =>
+      ext.injectFunction((FunctionIdentifier(name), info(name, usage), build))
+    }
   }
 }

@@ -289,10 +289,43 @@ object HashExpressions {
 
   private[functions] def hash64(s: UTF8String): Long = NativeKernels.hash64(s)
 
-  /** Register SQL-callable forms: simhash64(arr), winnow_fingerprint(str,k,w),
-    * minhash_sig(arr,k), word_shingles(arr,n), vec_dot(a,b).
+  private def intArg(e: Expression): Int =
+    e.eval(InternalRow.empty).asInstanceOf[Number].intValue
+
+  /** graft's SQL functions as (name, usage, builder): the one table both
+    * registration routes — [[register]] and [[GraftExtensions]] — are
+    * built from, so they bind the same names to identical expression
+    * trees.
+    */
+  private[functions] val sqlFunctions
+      : Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("simhash64", "simhash64(array<string>) - 64-bit SimHash fingerprint",
+      e => SimHash64(e.head)),
+    ("minhash_sig",
+      "minhash_sig(array<string>, k) - k-minimum MinHash signature",
+      e => MinHashSig(e.head, intArg(e(1)))),
+    ("word_shingles",
+      "word_shingles(array<string>, n) - distinct word n-grams",
+      e => WordShingles(e.head, intArg(e(1)))),
+    ("winnow_fingerprint",
+      "winnow_fingerprint(string, k, w) - winnowing hashes",
+      e => WinnowFingerprint(e.head, intArg(e(1)), intArg(e(2)))),
+    ("vec_dot", "vec_dot(array<double>, array<double>) - dot product",
+      e => VecDot(e.head, e(1))),
+    ("ngram_gen", "ngram_gen(array<string>, n) - one row per n-gram window",
+      e => NgramGenerate(e.head, intArg(e(1)))),
+    ("pq_score",
+      "pq_score(array<double>, array<int>, ksub) - PQ ADC inner product",
+      e => PqScore(e.head, e(1), intArg(e(2)))),
+    ("hilbert16", "hilbert16(bigint, bigint) - 32-bit Hilbert curve index",
+      e => HilbertIndex(e.head, e(1))),
+    ("hilbert21",
+      "hilbert21(bigint, bigint, bigint) - 63-bit 3-D Hilbert index",
+      e => Hilbert3Index(e.head, e(1), e(2))))
+
+  /** Register every [[sqlFunctions]] entry as a session function.
     * Idempotent; call once per session before using `expr`/`call_function`.
-    * (`GraftExtensions` registers the same set via spark.sql.extensions.)
+    * (`GraftExtensions` registers the same table via spark.sql.extensions.)
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
@@ -301,30 +334,10 @@ object HashExpressions {
     // set is already bound (checking one name as a proxy would skip
     // registration in a session where e.g. an older build bound everything
     // but pq_score).
-    val names = Seq("simhash64", "winnow_fingerprint", "minhash_sig",
-      "word_shingles", "vec_dot", "ngram_gen", "pq_score", "hilbert16",
-      "hilbert21")
-    if (names.forall(n => reg.functionExists(FunctionIdentifier(n)))) return
-    def intArg(e: Expression): Int =
-      e.eval(InternalRow.empty).asInstanceOf[Number].intValue
-    reg.createOrReplaceTempFunction("simhash64",
-      exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("winnow_fingerprint",
-      exprs => WinnowFingerprint(exprs.head, intArg(exprs(1)), intArg(exprs(2))),
-      "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      exprs => MinHashSig(exprs.head, intArg(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("word_shingles",
-      exprs => WordShingles(exprs.head, intArg(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("vec_dot",
-      exprs => VecDot(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("ngram_gen",
-      exprs => NgramGenerate(exprs.head, intArg(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("pq_score",
-      exprs => PqScore(exprs.head, exprs(1), intArg(exprs(2))), "built-in")
-    reg.createOrReplaceTempFunction("hilbert16",
-      exprs => HilbertIndex(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("hilbert21",
-      exprs => Hilbert3Index(exprs.head, exprs(1), exprs(2)), "built-in")
+    if (sqlFunctions.forall { case (n, _, _) =>
+        reg.functionExists(FunctionIdentifier(n)) }) return
+    sqlFunctions.foreach { case (n, _, build) =>
+      reg.createOrReplaceTempFunction(n, build, "built-in")
+    }
   }
 }

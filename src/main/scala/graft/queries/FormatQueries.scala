@@ -1844,14 +1844,20 @@ object FormatQueries {
           .write.mode("overwrite").parquet(s"$d/t")
         s"$d/t"
       })
-      val work = s"${tmp("graft-compactf-run-")}/t"
-      copyDir(s, staged, work)
-      val (nBefore, nAfter) = graft.sources.Maintenance
-        .compactParquet(s, work, targetFileBytes = 512L * 1024 * 1024)
-      Contracts.row(s,
-        "n_rows" -> s.read.parquet(work).count(),
-        "files_before" -> nBefore.toLong,
-        "files_after" -> nAfter.toLong)
+      // the row holds computed values only, so the rep's work dir is
+      // deleted once they are in
+      val run = new org.apache.hadoop.fs.Path(tmp("graft-compactf-run-"))
+      val work = s"$run/t"
+      try {
+        copyDir(s, staged, work)
+        val (nBefore, nAfter) = graft.sources.Maintenance
+          .compactParquet(s, work, targetFileBytes = 512L * 1024 * 1024)
+        Contracts.row(s,
+          "n_rows" -> s.read.parquet(work).count(),
+          "files_before" -> nBefore.toLong,
+          "files_after" -> nAfter.toLong)
+      } finally
+        run.getFileSystem(s.sparkContext.hadoopConfiguration).delete(run, true)
     }),
     "manifest_prune" -> ((s, dir) => {
       val st = stores(s, dir)

@@ -59,10 +59,11 @@ object StreamingQueries {
   }
 
   /** Staged n-file split input per (source dir, family) — scaffolding, not
-    * operator (the embIndexInCache pattern): deterministic slices of the
-    * same table, written once and read-only afterwards, shared by the
-    * contract and timed forms and across bench reps; each RUN still gets
-    * its own fresh checkpoint/snapshot/work dirs.
+    * operator: deterministic `sliceKey % n` slices of the same table,
+    * written once and read-only afterwards, shared by the contract and
+    * timed forms and across bench reps; each RUN still gets its own fresh
+    * checkpoint/snapshot/work dirs. One family per distinct frame: folds
+    * that stream the same columns share one staged split.
     */
   private val splitInCache =
     new scala.collection.concurrent.TrieMap[(String, String), String]
@@ -79,6 +80,20 @@ object StreamingQueries {
       d
     })
 
+  /** Run `f` with `spark.sql.shuffle.partitions` set to `n`, restoring the
+    * session value after; `None` leaves the session conf untouched.
+    */
+  private def withShufflePartitions[T](s: SparkSession, n: Option[Int])(
+      f: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = n.map { p =>
+      val v = s.conf.get(key)
+      s.conf.set(key, p.toString)
+      v
+    }
+    try f finally prev.foreach(s.conf.set(key, _))
+  }
+
   private def runToTable(df: DataFrame, mode: String,
       s: SparkSession): DataFrame = {
     val qn = s"graft_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
@@ -88,19 +103,62 @@ object StreamingQueries {
     // deployment sizes this to keyspace × executor count instead). The
     // partition count is baked into the query's checkpoint at first start,
     // so set it only for this launch and restore after.
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = df.writeStream.format("memory").queryName(qn)
+    withShufflePartitions(s, Some(8)) {
+      df.writeStream.format("memory").queryName(qn)
         .outputMode(mode)
         .option("checkpointLocation", cp)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
+        .awaitTermination()
     }
     s.table(qn)
+  }
+
+  /** One bounded fold run: the number of non-empty micro-batches it
+    * applied, and each one's wall seconds keyed by batch id.
+    */
+  private case class FoldRun(batches: Long,
+      walls: scala.collection.Map[Long, Double])
+
+  /** The stream harness shared by every `run*Stream` fold: stream the
+    * staged split under `inDir` one file per micro-batch
+    * (`maxFilesPerTrigger` 1, `Trigger.AvailableNow`, checkpoint at
+    * `<stage>/ckpt`), hand each NON-EMPTY batch and its id to `body`, and
+    * wait for the run to end. An empty batch is skipped: it neither counts
+    * as a batch nor lands a segment.
+    *
+    * `shufflePartitions`: a fold's per-batch work is joins and
+    * aggregations over batch-sized frames, so at the session's partition
+    * count it is task-scheduling overhead, not data (the [[runToTable]]
+    * lesson). The index and segment folds run at `Some(8)` — sized per
+    * batch, not per corpus; a cluster deployment raises it with the ingest
+    * rate — and the session conf is restored after the run. The three
+    * sketch-snapshot folds pass `None` and keep the session value.
+    */
+  private def runFold(s: SparkSession,
+      schema: org.apache.spark.sql.types.StructType, inDir: String,
+      stage: String, shufflePartitions: Option[Int])(
+      body: (DataFrame, Long) => Unit): FoldRun = {
+    val batches = new java.util.concurrent.atomic.AtomicLong(0)
+    val walls = new scala.collection.concurrent.TrieMap[Long, Double]
+    withShufflePartitions(s, shufflePartitions) {
+      s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet")
+        .writeStream
+        .option("checkpointLocation", s"$stage/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          if (!b.isEmpty) {
+            val bt0 = System.nanoTime()
+            batches.incrementAndGet()
+            body(b, id)
+            walls(id) = (System.nanoTime() - bt0) / 1e9
+          }
+          ()
+        }.start()
+        .awaitTermination()
+    }
+    FoldRun(batches.get(), walls)
   }
 
   /** Result of one bounded [[runEmbeddingIndexStream]] run: the
@@ -125,38 +183,12 @@ object StreamingQueries {
     * directories instead of double-appending, and the anti-join below
     * keeps its recomputation byte-identical.
     */
-  /** Staged 3-file input per source dir — scaffolding, not operator: the
-    * split is deterministic (vec_id % 3 of the same table) and read-only
-    * once written, so reps and the contract/timed pair share it; each RUN
-    * still gets a fresh work dir (checkpoint/corpus/index/pairs), which
-    * is what must start empty (the bpe_encode memoization pattern).
-    */
-  private val embIndexInCache =
-    new scala.collection.concurrent.TrieMap[String, String]
-
-  /** The staged vec_id % 3 three-file split of `embeddings`, written once
-    * per source dir and shared by every embedding-store streaming fold
-    * (SRP index, IVF-PQ index): read-only scaffolding, so reps and the
-    * contract/timed forms reuse it safely.
-    */
-  private def stagedEmbSplit(s: SparkSession, dir: String): String =
-    embIndexInCache.getOrElseUpdate(dir, {
-      val emb = Tables.t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      val d = Files.createTempDirectory("graft-semb-in-").toString
-      (0 until 3).foreach { i =>
-        emb.filter(col("vec_id") % 3 === i).coalesce(1)
-          .write.parquet(s"$d/f$i.parquet")
-      }
-      d
-    })
-
   private def runEmbeddingIndexStream(s: SparkSession,
       dir: String): EmbeddingIndexRun = {
     val stage = Files.createTempDirectory("graft-semb-").toString
     val emb = Tables.t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val inDir = stagedEmbSplit(s, dir)
+    val inDir = stagedSplit(s, dir, "semb", emb, col("vec_id"))
     // Fixed across the run AND the from-scratch comparison: bucket count
     // sized to the full corpus (the production choice — an index cannot
     // re-bit per ingest without a rebuild).
@@ -169,90 +201,66 @@ object StreamingQueries {
     val pairsPath = s"$stage/pairs"
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    // Per-batch wall seconds, exposed after the run as an observe() row
-    // (Bench's listener lands it in bench telemetry): the fold's cost is
-    // dominated by fixed micro-batch trigger machinery at 3 batches, and
-    // this row is what makes a real per-batch regression distinguishable
-    // from that overhead — sec_per_batch should stay roughly flat as the
-    // batch count grows, while total query wall grows with it.
-    val batchWall =
-      new scala.collection.concurrent.TrieMap[Long, Double]
-    // Per-batch work is a chain of joins over batch-sized frames: at 32
-    // shuffle partitions the fold is task-scheduling overhead, not data
-    // (the runToTable lesson). Sized per batch, not per corpus — a
-    // cluster deployment raises it with the ingest rate. Restored after.
-    val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet")
-        .writeStream
-        .option("checkpointLocation", s"$stage/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          if (!b.isEmpty) {
-            val bt0 = System.nanoTime()
-            batches.incrementAndGet()
-            val haveIndex =
-              fs.exists(new org.apache.hadoop.fs.Path(idxPath))
-            val pairs =
-              if (haveIndex) {
-                // Anti-join out this batch's OWN ids: a batch replayed
-                // after a mid-batch crash has already written its corpus
-                // and index subdirs, and pairing it against its own rows
-                // would duplicate the within-batch pairs through the
-                // vector re-read.
-                val own = b.select(col("vec_id"))
-                // cacheCand/cacheVecs ON here, unlike the operator default:
-                // in this fold the corpus/index sides are parquet re-reads
-                // behind anti-joins, so recomputing the candidate subtree
-                // per reference re-scans files — EmbIncAbProbe's (removed;
-                // see
-                // `git show e6d0d1b:src/main/scala/graft/tools/EmbIncAbProbe.scala`)
-                // streaming-
-                // shaped arm measured both-persists fastest (1.13 s/batch
-                // vs 1.44 with the standalone-optimal vecs-only setting)
-                graft.operators.Dedup.embeddingPairsLshIncremental(
-                  b,
-                  s.read.parquet(s"$stage/corpus/b*")
-                    .join(own, Seq("vec_id"), "left_anti"),
-                  s.read.parquet(s"$idxPath/b*")
-                    .join(own.select(col("vec_id").as("id")), Seq("id"),
-                      "left_anti"),
-                  "vec_id", "embedding", threshold, nBits, nTables,
-                  cacheCand = true, cacheVecs = true)
-              } else
-                graft.operators.Dedup.embeddingPairsLsh(
-                  b, "vec_id", "embedding", threshold, nBits, nTables)
-            // coalesce(1): batch-sized outputs — one file per batch per
-            // table keeps the per-ingest file count (and the next
-            // batch's read fan-in) proportional to batches, not tasks
-            pairs.select(col("id_a"), col("id_b"), col("cos")).coalesce(1)
-              .write.mode("overwrite").parquet(s"$pairsPath/b$id")
-            b.coalesce(1)
-              .write.mode("overwrite").parquet(s"$stage/corpus/b$id")
-            graft.operators.Dedup.srpIndex(b, "vec_id", "embedding",
-                nBits, nTables).coalesce(1)
-              .write.mode("overwrite").parquet(s"$idxPath/b$id")
-            batchWall(id) = (System.nanoTime() - bt0) / 1e9
-          }
-          ()
-        }.start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-    observeBatchWall(s, "streaming_embedding_index_batch_wall", batchWall)
+    val run = runFold(s, emb.schema, inDir, stage, Some(8)) { (b, id) =>
+      val haveIndex =
+        fs.exists(new org.apache.hadoop.fs.Path(idxPath))
+      val pairs =
+        if (haveIndex) {
+          // Anti-join out this batch's OWN ids: a batch replayed
+          // after a mid-batch crash has already written its corpus
+          // and index subdirs, and pairing it against its own rows
+          // would duplicate the within-batch pairs through the
+          // vector re-read.
+          val own = b.select(col("vec_id"))
+          // cacheCand/cacheVecs ON here, unlike the operator default:
+          // in this fold the corpus/index sides are parquet re-reads
+          // behind anti-joins, so recomputing the candidate subtree
+          // per reference re-scans files — EmbIncAbProbe's (removed;
+          // see
+          // `git show e6d0d1b:src/main/scala/graft/tools/EmbIncAbProbe.scala`)
+          // streaming-
+          // shaped arm measured both-persists fastest (1.13 s/batch
+          // vs 1.44 with the standalone-optimal vecs-only setting)
+          graft.operators.Dedup.embeddingPairsLshIncremental(
+            b,
+            s.read.parquet(s"$stage/corpus/b*")
+              .join(own, Seq("vec_id"), "left_anti"),
+            s.read.parquet(s"$idxPath/b*")
+              .join(own.select(col("vec_id").as("id")), Seq("id"),
+                "left_anti"),
+            "vec_id", "embedding", threshold, nBits, nTables,
+            cacheCand = true, cacheVecs = true)
+        } else
+          graft.operators.Dedup.embeddingPairsLsh(
+            b, "vec_id", "embedding", threshold, nBits, nTables)
+      // coalesce(1): batch-sized outputs — one file per batch per
+      // table keeps the per-ingest file count (and the next
+      // batch's read fan-in) proportional to batches, not tasks
+      pairs.select(col("id_a"), col("id_b"), col("cos")).coalesce(1)
+        .write.mode("overwrite").parquet(s"$pairsPath/b$id")
+      b.coalesce(1)
+        .write.mode("overwrite").parquet(s"$stage/corpus/b$id")
+      graft.operators.Dedup.srpIndex(b, "vec_id", "embedding",
+          nBits, nTables).coalesce(1)
+        .write.mode("overwrite").parquet(s"$idxPath/b$id")
+    }
+    observeBatchWall(s, "streaming_embedding_index_batch_wall", run.walls)
     EmbeddingIndexRun(s.read.parquet(s"$pairsPath/b*"),
       s.read.parquet(s"$idxPath/b*"), nVecs, nBits, nTables, threshold,
-      batches.get())
+      run.batches)
   }
 
   /** Land per-batch foreachBatch wall times as an observe() row (count /
     * avg / max seconds per batch) — a tiny driver-built frame executed
-    * once so Bench's QueryExecutionListener records it as telemetry.
+    * once so Bench's QueryExecutionListener records it as telemetry. An
+    * index fold's cost is dominated by fixed micro-batch trigger machinery
+    * at 3 batches, and this row is what makes a real per-batch regression
+    * distinguishable from that overhead — sec_per_batch should stay
+    * roughly flat as the batch count grows, while total query wall grows
+    * with it.
     */
   private def observeBatchWall(s: SparkSession, name: String,
-      wall: scala.collection.concurrent.TrieMap[Long, Double]): Unit =
+      wall: scala.collection.Map[Long, Double]): Unit =
     if (wall.nonEmpty) {
       import s.implicits._
       wall.toSeq.toDF("batch", "sec")
@@ -263,13 +271,6 @@ object StreamingQueries {
         .count()
       ()
     }
-
-  /** Staged 3-file documents input per source dir (same scaffolding
-    * pattern as [[embIndexInCache]]): deterministic doc_id % 3 split,
-    * written once, shared by the contract and timed forms.
-    */
-  private val textIndexInCache =
-    new scala.collection.concurrent.TrieMap[String, String]
 
   /** Streaming maintenance of the persisted BM25 inverted index
     * ([[graft.operators.TextAnalysis.buildTextIndex]]'s segment model,
@@ -284,44 +285,16 @@ object StreamingQueries {
   private def runTextIndexStream(s: SparkSession,
       dir: String): (String, Long) = {
     val docs = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val inDir = textIndexInCache.getOrElseUpdate(dir, {
-      val d = Files.createTempDirectory("graft-stxt-in-").toString
-      (0 until 3).foreach { i =>
-        docs.filter(col("doc_id") % 3 === i).coalesce(1)
-          .write.parquet(s"$d/f$i.parquet")
-      }
-      d
-    })
+    val inDir = stagedSplit(s, dir, "sdoc", docs, col("doc_id"))
     val stage = Files.createTempDirectory("graft-stxt-").toString
     val idxPath = s"$stage/idx"
     graft.operators.TextAnalysis.initTextIndex(s, idxPath, nBuckets = 16)
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val batchWall =
-      new scala.collection.concurrent.TrieMap[Long, Double]
-    // batch-sized joins/aggs per micro-batch — 8 shuffle partitions, the
-    // runToTable lesson; restored after the fold
-    val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet")
-        .writeStream
-        .option("checkpointLocation", s"$stage/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          if (!b.isEmpty) {
-            val bt0 = System.nanoTime()
-            batches.incrementAndGet()
-            graft.operators.TextAnalysis.appendToTextIndex(b, "doc_id",
-              "text", idxPath, id)
-            batchWall(id) = (System.nanoTime() - bt0) / 1e9
-          }
-          ()
-        }.start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-    observeBatchWall(s, "streaming_text_index_batch_wall", batchWall)
-    (idxPath, batches.get())
+    val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
+      graft.operators.TextAnalysis.appendToTextIndex(b, "doc_id",
+        "text", idxPath, id)
+    }
+    observeBatchWall(s, "streaming_text_index_batch_wall", run.walls)
+    (idxPath, run.batches)
   }
 
   /** Streaming maintenance of the persisted IVF-PQ vector index — the
@@ -350,47 +323,32 @@ object StreamingQueries {
       dir: String): (String, String, Long) = {
     val emb = Tables.t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val inDir = stagedEmbSplit(s, dir)
+    val inDir = stagedSplit(s, dir, "semb", emb, col("vec_id"))
     val stage = Files.createTempDirectory("graft-sivfpq-").toString
     val idxPath = s"$stage/idx"
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet")
-        .writeStream
-        .option("checkpointLocation", s"$stage/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          if (!b.isEmpty) {
-            batches.incrementAndGet()
-            // bootstrap-complete marker = train/, written LAST (see
-            // scaladoc: makes every crash-replay interleaving idempotent)
-            if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/train"))) {
-              graft.operators.Similarity.buildIvfPqIndex(b, "vec_id",
-                "embedding", idxPath, nCentroids = 8, m = 16)
-              if (id != 0L) {
-                val from = new org.apache.hadoop.fs.Path(
-                  s"$idxPath/codes/batch=0")
-                val to = new org.apache.hadoop.fs.Path(
-                  s"$idxPath/codes/batch=$id")
-                if (fs.exists(to)) fs.delete(to, true)
-                fs.rename(from, to)
-              }
-              b.coalesce(1).write.mode("overwrite")
-                .parquet(s"$stage/train")
-            } else
-              graft.operators.Similarity.appendToIvfPqIndex(b, "vec_id",
-                "embedding", idxPath, batchId = id)
-          }
-          ()
-        }.start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-    (idxPath, stage, batches.get())
+    val run = runFold(s, emb.schema, inDir, stage, Some(8)) { (b, id) =>
+      // bootstrap-complete marker = train/, written LAST (see
+      // scaladoc: makes every crash-replay interleaving idempotent)
+      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/train"))) {
+        graft.operators.Similarity.buildIvfPqIndex(b, "vec_id",
+          "embedding", idxPath, nCentroids = 8, m = 16)
+        if (id != 0L) {
+          val from = new org.apache.hadoop.fs.Path(
+            s"$idxPath/codes/batch=0")
+          val to = new org.apache.hadoop.fs.Path(
+            s"$idxPath/codes/batch=$id")
+          if (fs.exists(to)) fs.delete(to, true)
+          fs.rename(from, to)
+        }
+        b.coalesce(1).write.mode("overwrite")
+          .parquet(s"$stage/train")
+      } else
+        graft.operators.Similarity.appendToIvfPqIndex(b, "vec_id",
+          "embedding", idxPath, batchId = id)
+    }
+    (idxPath, stage, run.batches)
   }
 
   /** Streaming novelty maintenance: the continuously-ingesting form of
@@ -407,66 +365,29 @@ object StreamingQueries {
     * vocabulary); corpus text is read exactly once, the batch it arrived
     * in.
     */
-  private val noveltyInCache =
-    new scala.collection.concurrent.TrieMap[String, String]
-
-  /** Staged time-scrambled 3-file events split for the streaming funnel. */
-  private val funnelInCache =
-    new scala.collection.concurrent.TrieMap[String, String]
-
-  /** (doc_id, text) staged as 3 one-file micro-batch inputs (doc_id % 3),
-    * memoized per dir — shared by the novelty and reservoir streams.
-    */
-  private def stagedDocsDir(s: SparkSession, dir: String): String =
-    noveltyInCache.getOrElseUpdate(dir, {
-      val docs = Tables.t(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-      val d = Files.createTempDirectory("graft-snov-in-").toString
-      (0 until 3).foreach { i =>
-        docs.filter(col("doc_id") % 3 === i).coalesce(1)
-          .write.parquet(s"$d/f$i.parquet")
-      }
-      d
-    })
-
   private def runNoveltyStream(s: SparkSession,
       dir: String): (String, String, Long) = {
     val docs = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val inDir = stagedDocsDir(s, dir)
+    val inDir = stagedSplit(s, dir, "sdoc", docs, col("doc_id"))
     val stage = Files.createTempDirectory("graft-snov-").toString
     val segDir = s"$stage/segments"
     val outDir = s"$stage/scores"
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet")
-        .writeStream
-        .option("checkpointLocation", s"$stage/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          if (!b.isEmpty) {
-            batches.incrementAndGet()
-            val prior = priorSegments(s, fs, segDir, id)
-            // shared gram pass (r15): one tokenize/shingle of the batch
-            // feeds both writes — see TextAnalysis.noveltyBatchFold
-            val (bg, scores, base) = graft.operators.TextAnalysis
-              .noveltyBatchFold(b, prior, "doc_id", "text")
-            try {
-              scores.coalesce(1)
-                .write.mode("overwrite").parquet(s"$outDir/b$id")
-              bg.coalesce(1)
-                .write.mode("overwrite").parquet(s"$segDir/b$id")
-            } finally base.unpersist(blocking = false)
-          }
-          ()
-        }.start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-    (segDir, outDir, batches.get())
+    val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
+      val prior = priorSegments(s, fs, segDir, id)
+      // shared gram pass (r15): one tokenize/shingle of the batch
+      // feeds both writes — see TextAnalysis.noveltyBatchFold
+      val (bg, scores, base) = graft.operators.TextAnalysis
+        .noveltyBatchFold(b, prior, "doc_id", "text")
+      try {
+        scores.coalesce(1)
+          .write.mode("overwrite").parquet(s"$outDir/b$id")
+        bg.coalesce(1)
+          .write.mode("overwrite").parquet(s"$segDir/b$id")
+      } finally base.unpersist(blocking = false)
+    }
+    (segDir, outDir, run.batches)
   }
 
   private val reservoirK = 40
@@ -490,41 +411,26 @@ object StreamingQueries {
   private def runReservoirStream(s: SparkSession,
       dir: String): (String, Long) = {
     val docs = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val inDir = stagedDocsDir(s, dir)
+    val inDir = stagedSplit(s, dir, "sdoc", docs, col("doc_id"))
     val stage = Files.createTempDirectory("graft-sres-").toString
     val segDir = s"$stage/snap"
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet")
-        .writeStream
-        .option("checkpointLocation", s"$stage/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          if (!b.isEmpty) {
-            batches.incrementAndGet()
-            val p = new org.apache.hadoop.fs.Path(segDir)
-            val prior =
-              if (!fs.exists(p)) Array.empty[Long]
-              else fs.listStatus(p).map(_.getPath.getName)
-                .flatMap(graft.operators.Segments.id)
-                .filter(_ < id)
-            val snap =
-              if (prior.isEmpty) b.select(col("doc_id")).limit(0)
-              else s.read.parquet(s"$segDir/b${prior.max}")
-            graft.operators.Sampling.reservoirMerge(snap,
-                b.select(col("doc_id")), "doc_id", reservoirK, "rs")
-              .coalesce(1).write.mode("overwrite").parquet(s"$segDir/b$id")
-          }
-          ()
-        }.start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-    (segDir, batches.get())
+    val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
+      val p = new org.apache.hadoop.fs.Path(segDir)
+      val prior =
+        if (!fs.exists(p)) Array.empty[Long]
+        else fs.listStatus(p).map(_.getPath.getName)
+          .flatMap(graft.operators.Segments.id)
+          .filter(_ < id)
+      val snap =
+        if (prior.isEmpty) b.select(col("doc_id")).limit(0)
+        else s.read.parquet(s"$segDir/b${prior.max}")
+      graft.operators.Sampling.reservoirMerge(snap,
+          b.select(col("doc_id")), "doc_id", reservoirK, "rs")
+        .coalesce(1).write.mode("overwrite").parquet(s"$segDir/b$id")
+    }
+    (segDir, run.batches)
   }
 
   /** Streaming quality-filter serving: the classifier's weights are
@@ -542,30 +448,15 @@ object StreamingQueries {
   private def runQualityScoreStream(s: SparkSession, dir: String,
       weights: Array[Double]): (String, Long) = {
     val docs = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val inDir = stagedDocsDir(s, dir)
+    val inDir = stagedSplit(s, dir, "sdoc", docs, col("doc_id"))
     val stage = Files.createTempDirectory("graft-sqsc-").toString
     val outDir = s"$stage/scores"
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet")
-        .writeStream
-        .option("checkpointLocation", s"$stage/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          if (!b.isEmpty) {
-            batches.incrementAndGet()
-            graft.operators.QualityModel
-              .score(b, "doc_id", "text", weights)
-              .coalesce(1).write.mode("overwrite").parquet(s"$outDir/b$id")
-          }
-          ()
-        }.start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-    (outDir, batches.get())
+    val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
+      graft.operators.QualityModel
+        .score(b, "doc_id", "text", weights)
+        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/b$id")
+    }
+    (outDir, run.batches)
   }
 
   /** Streaming maintenance of the file-stats manifest
@@ -583,39 +474,18 @@ object StreamingQueries {
   private def runManifestStream(s: SparkSession,
       dir: String): (String, String, Long) = {
     val docs = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val inDir = stagedDocsDir(s, dir)
+    val inDir = stagedSplit(s, dir, "sdoc", docs, col("doc_id"))
     val stage = Files.createTempDirectory("graft-sman-").toString
     val tbl = s"$stage/table"
     val man = s"$stage/manifest"
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet")
-        .writeStream
-        .option("checkpointLocation", s"$stage/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          if (!b.isEmpty) {
-            batches.incrementAndGet()
-            b.select(col("doc_id")).coalesce(1)
-              .write.mode("overwrite").parquet(s"$tbl/d$id")
-            graft.operators.Manifest.appendToManifest(s, Seq(s"$tbl/d$id"),
-              Seq("doc_id"), man, batchId = id)
-          }
-          ()
-        }.start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-    (man, tbl, batches.get())
+    val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
+      b.select(col("doc_id")).coalesce(1)
+        .write.mode("overwrite").parquet(s"$tbl/d$id")
+      graft.operators.Manifest.appendToManifest(s, Seq(s"$tbl/d$id"),
+        Seq("doc_id"), man, batchId = id)
+    }
+    (man, tbl, run.batches)
   }
-
-  /** Staged 3-file purchase-events split for the streaming drift
-    * monitor.
-    */
-  private val driftInCache =
-    new scala.collection.concurrent.TrieMap[String, String]
 
   /** Streaming drift-monitor fold: frozen reference decile `edges`, ONE
     * bucket-count aggregation per micro-batch, landed as an idempotent
@@ -632,47 +502,19 @@ object StreamingQueries {
     val ev = Tables.t(s, dir, "events")
       .filter(col("event_type") === "purchase")
       .select(col("event_id"), col("value"))
-    val inDir = driftInCache.getOrElseUpdate(dir, {
-      val d = Files.createTempDirectory("graft-sdrift-in-").toString
-      (0 until 3).foreach { i =>
-        ev.filter(col("event_id") % 3 === i).coalesce(1)
-          .write.parquet(s"$d/f$i.parquet")
-      }
-      d
-    })
+    val inDir = stagedSplit(s, dir, "sdrift", ev, col("event_id"))
     val stage = Files.createTempDirectory("graft-sdrift-").toString
     val segDir = s"$stage/segments"
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet")
-        .writeStream
-        .option("checkpointLocation", s"$stage/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          if (!b.isEmpty) {
-            batches.incrementAndGet()
-            b.filter(col("value").isNotNull)
-              .groupBy(graft.operators.Drift
-                .bucketOf(col("value"), edges).as("bucket"))
-              .agg(count(lit(1)).as("n"))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$segDir/b$id")
-          }
-          ()
-        }.start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-    (segDir, batches.get())
+    val run = runFold(s, ev.schema, inDir, stage, Some(8)) { (b, id) =>
+      b.filter(col("value").isNotNull)
+        .groupBy(graft.operators.Drift
+          .bucketOf(col("value"), edges).as("bucket"))
+        .agg(count(lit(1)).as("n"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$segDir/b$id")
+    }
+    (segDir, run.batches)
   }
-
-  /** Staged 3-file full-column documents split for the streaming
-    * expectations gate.
-    */
-  private val expectInCache =
-    new scala.collection.concurrent.TrieMap[String, String]
 
   /** Streaming data-quality gate fold: each micro-batch lands ONE row of
     * SUFFICIENT STATISTICS (row/satisfied counts, sum/min/max) as an
@@ -691,45 +533,23 @@ object StreamingQueries {
       dir: String): (String, Long) = {
     val docs = Tables.t(s, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
-    val inDir = expectInCache.getOrElseUpdate(dir, {
-      val d = Files.createTempDirectory("graft-sexp-in-").toString
-      (0 until 3).foreach { i =>
-        docs.filter(col("doc_id") % 3 === i).coalesce(1)
-          .write.parquet(s"$d/f$i.parquet")
-      }
-      d
-    })
+    val inDir = stagedSplit(s, dir, "sexp", docs, col("doc_id"))
     val stage = Files.createTempDirectory("graft-sexp-").toString
     val segDir = s"$stage/segments"
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet")
-        .writeStream
-        .option("checkpointLocation", s"$stage/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          if (!b.isEmpty) {
-            batches.incrementAndGet()
-            b.agg(
-              count(lit(1)).as("n"),
-              count(when(col("text").isNotNull, lit(1)))
-                .as("n_text_nonnull"),
-              count(when(col("lang").isin("de", "en", "es", "fr", "zh"),
-                lit(1))).as("n_lang_conform"),
-              sum(col("n_chars")).as("sum_n_chars"),
-              min(col("n_chars")).as("min_n_chars"),
-              max(col("n_chars")).as("max_n_chars"))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$segDir/b$id")
-          }
-          ()
-        }.start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-    (segDir, batches.get())
+    val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
+      b.agg(
+        count(lit(1)).as("n"),
+        count(when(col("text").isNotNull, lit(1)))
+          .as("n_text_nonnull"),
+        count(when(col("lang").isin("de", "en", "es", "fr", "zh"),
+          lit(1))).as("n_lang_conform"),
+        sum(col("n_chars")).as("sum_n_chars"),
+        min(col("n_chars")).as("min_n_chars"),
+        max(col("n_chars")).as("max_n_chars"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$segDir/b$id")
+    }
+    (segDir, run.batches)
   }
 
   /** Streaming APPROXIMATE-uniqueness fold (r11 verdict item #5 — the
@@ -748,38 +568,16 @@ object StreamingQueries {
       dir: String): (String, Long) = {
     val docs = Tables.t(s, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
-    val inDir = expectInCache.getOrElseUpdate(dir, {
-      val d = Files.createTempDirectory("graft-sexp-in-").toString
-      (0 until 3).foreach { i =>
-        docs.filter(col("doc_id") % 3 === i).coalesce(1)
-          .write.parquet(s"$d/f$i.parquet")
-      }
-      d
-    })
+    val inDir = stagedSplit(s, dir, "sexp", docs, col("doc_id"))
     val stage = Files.createTempDirectory("graft-sexphll-").toString
     val segDir = s"$stage/segments"
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet")
-        .writeStream
-        .option("checkpointLocation", s"$stage/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          if (!b.isEmpty) {
-            batches.incrementAndGet()
-            b.agg(count(lit(1)).as("n"),
-                hll_sketch_agg(col("doc_id"), lit(12)).as("hll"))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$segDir/b$id")
-          }
-          ()
-        }.start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-    (segDir, batches.get())
+    val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
+      b.agg(count(lit(1)).as("n"),
+          hll_sketch_agg(col("doc_id"), lit(12)).as("hll"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$segDir/b$id")
+    }
+    (segDir, run.batches)
   }
 
   /** ppm scores + weak labels of a documents frame under the FROZEN
@@ -862,96 +660,74 @@ object StreamingQueries {
       aFrozenFx: Long, bFrozenFx: Long): (String, Long) = {
     val docs = Tables.t(s, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
-    val inDir = expectInCache.getOrElseUpdate(dir, {
-      val d = Files.createTempDirectory("graft-sexp-in-").toString
-      (0 until 3).foreach { i =>
-        docs.filter(col("doc_id") % 3 === i).coalesce(1)
-          .write.parquet(s"$d/f$i.parquet")
-      }
-      d
-    })
+    val inDir = stagedSplit(s, dir, "sexp", docs, col("doc_id"))
     val stage = Files.createTempDirectory("graft-splatt-").toString
     val segDir = s"$stage/segments"
     val verDir = s"$stage/verdicts"
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet")
-        .writeStream
-        .option("checkpointLocation", s"$stage/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          if (!b.isEmpty) {
-            batches.incrementAndGet()
-            val scored = plattScored(b)
-            // both variants in one pass; the drift plant re-bins on the
-            // perturbed score, exactly what a poisoned scorer would emit
-            val both = scored.select(col("y"), explode(array(
-                struct(lit("base").as("variant"),
-                  col("score_ppm").as("sp")),
-                struct(lit("drift").as("variant"),
-                  when(col("doc_id") % 3 === 2,
-                    lit(1000000L) - col("score_ppm"))
-                    .otherwise(col("score_ppm")).as("sp")))).as("e"))
-              .select(col("y"), col("e.variant").as("variant"),
-                col("e.sp").as("score_ppm"))
-            val seg = both.withColumn("bin",
-                least(floor(col("score_ppm") / 100000.0).cast("long"),
-                  lit(9L)))
-              .groupBy(col("variant"), col("bin"))
-              .agg(count(lit(1)).as("n"),
-                sum(col("y")).cast("long").as("n_pos"),
-                sum(col("score_ppm")).cast("long").as("sum_ppm"))
-              .localCheckpoint()
-            seg.coalesce(1).write.mode("overwrite")
-              .parquet(s"$segDir/b$id")
-            // cumulative bins: prior segments STRICTLY below id + this
-            // batch's stats from memory — a replayed batch never reads
-            // its own half-written segment as prior
-            val fs = new org.apache.hadoop.fs.Path(segDir)
-              .getFileSystem(s.sparkContext.hadoopConfiguration)
-            val sp = new org.apache.hadoop.fs.Path(segDir)
-            val priorDirs =
-              if (!fs.exists(sp)) Array.empty[String]
-              else fs.listStatus(sp).map(_.getPath)
-                .filter(d => graft.operators.Segments.id(d.getName)
-                  .exists(_ < id))
-                .map(_.toString)
-            val cum = (if (priorDirs.isEmpty) seg
-              else seg.unionByName(s.read.parquet(priorDirs.toSeq: _*)))
-              .groupBy(col("variant"), col("bin"))
-              .agg(sum(col("n")).as("n"),
-                sum(col("n_pos")).as("n_pos"),
-                sum(col("sum_ppm")).as("sum_ppm"))
-              .collect()
-            val verdicts = Seq("base", "drift").map { variant =>
-              val bins = cum.filter(_.getString(0) == variant)
-                .map(r => (r.getLong(1), r.getLong(2), r.getLong(3),
-                  r.getLong(4)))
-                .sortBy(_._1) // summation order is part of the contract
-              val (a, bb) = graft.operators.QualityModel.plattFit(
-                bins.map { case (_, n, np, sp2) =>
-                  ((sp2 / n).toDouble / 1e6, n, np)
-                }.toSeq)
-              val aFx = math.floor(a * 1e6 + 0.5).toLong
-              val bFx = math.floor(bb * 1e6 + 0.5).toLong
-              (variant, id, aFx, bFx,
-                math.abs(aFx - aFrozenFx) > PlattDriftEnvelopeFx ||
-                  math.abs(bFx - bFrozenFx) > PlattDriftEnvelopeFx)
-            }
-            import s.implicits._
-            verdicts.toDF("variant", "batch_id", "a_fx", "b_fx",
-                "tripped")
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$verDir/b$id")
-          }
-          ()
-        }.start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-    (stage, batches.get())
+    val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
+      val scored = plattScored(b)
+      // both variants in one pass; the drift plant re-bins on the
+      // perturbed score, exactly what a poisoned scorer would emit
+      val both = scored.select(col("y"), explode(array(
+          struct(lit("base").as("variant"),
+            col("score_ppm").as("sp")),
+          struct(lit("drift").as("variant"),
+            when(col("doc_id") % 3 === 2,
+              lit(1000000L) - col("score_ppm"))
+              .otherwise(col("score_ppm")).as("sp")))).as("e"))
+        .select(col("y"), col("e.variant").as("variant"),
+          col("e.sp").as("score_ppm"))
+      val seg = both.withColumn("bin",
+          least(floor(col("score_ppm") / 100000.0).cast("long"),
+            lit(9L)))
+        .groupBy(col("variant"), col("bin"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("y")).cast("long").as("n_pos"),
+          sum(col("score_ppm")).cast("long").as("sum_ppm"))
+        .localCheckpoint()
+      seg.coalesce(1).write.mode("overwrite")
+        .parquet(s"$segDir/b$id")
+      // cumulative bins: prior segments STRICTLY below id + this
+      // batch's stats from memory — a replayed batch never reads
+      // its own half-written segment as prior
+      val fs = new org.apache.hadoop.fs.Path(segDir)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      val sp = new org.apache.hadoop.fs.Path(segDir)
+      val priorDirs =
+        if (!fs.exists(sp)) Array.empty[String]
+        else fs.listStatus(sp).map(_.getPath)
+          .filter(d => graft.operators.Segments.id(d.getName)
+            .exists(_ < id))
+          .map(_.toString)
+      val cum = (if (priorDirs.isEmpty) seg
+        else seg.unionByName(s.read.parquet(priorDirs.toSeq: _*)))
+        .groupBy(col("variant"), col("bin"))
+        .agg(sum(col("n")).as("n"),
+          sum(col("n_pos")).as("n_pos"),
+          sum(col("sum_ppm")).as("sum_ppm"))
+        .collect()
+      val verdicts = Seq("base", "drift").map { variant =>
+        val bins = cum.filter(_.getString(0) == variant)
+          .map(r => (r.getLong(1), r.getLong(2), r.getLong(3),
+            r.getLong(4)))
+          .sortBy(_._1) // summation order is part of the contract
+        val (a, bb) = graft.operators.QualityModel.plattFit(
+          bins.map { case (_, n, np, sp2) =>
+            ((sp2 / n).toDouble / 1e6, n, np)
+          }.toSeq)
+        val aFx = math.floor(a * 1e6 + 0.5).toLong
+        val bFx = math.floor(bb * 1e6 + 0.5).toLong
+        (variant, id, aFx, bFx,
+          math.abs(aFx - aFrozenFx) > PlattDriftEnvelopeFx ||
+            math.abs(bFx - bFrozenFx) > PlattDriftEnvelopeFx)
+      }
+      import s.implicits._
+      verdicts.toDF("variant", "batch_id", "a_fx", "b_fx",
+          "tripped")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$verDir/b$id")
+    }
+    (stage, run.batches)
   }
 
   /** 3σ relative envelope of an lgK=12 HLL estimate (RSE ≈ 1.04/√2^12). */
@@ -1065,31 +841,20 @@ object StreamingQueries {
     val snapPath = s"$stage/snap"
     val snapDir = new org.apache.hadoop.fs.Path(snapPath)
     val fs = snapDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet")
-      .writeStream
-      .option("checkpointLocation", s"$stage/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (!b.isEmpty) {
-          batches.incrementAndGet()
-          val batchSk = graft.operators.Sketches.hllByGroup(
-            b, "event_type", "user_id")
-          val merged =
-            if (fs.exists(snapDir))
-              graft.operators.Sketches.hllMergeSnapshots(
-                s.read.parquet(snapPath), batchSk, "event_type")
-            else batchSk
-          val next = new org.apache.hadoop.fs.Path(s"$snapPath-next-$id")
-          merged.write.mode("overwrite").parquet(next.toString)
-          if (fs.exists(snapDir)) fs.delete(snapDir, true)
-          fs.rename(next, snapDir)
-        }
-        ()
-      }.start()
-    q.awaitTermination()
-    (snapPath, batches.get())
+    val run = runFold(s, ev.schema, inDir, stage, None) { (b, id) =>
+      val batchSk = graft.operators.Sketches.hllByGroup(
+        b, "event_type", "user_id")
+      val merged =
+        if (fs.exists(snapDir))
+          graft.operators.Sketches.hllMergeSnapshots(
+            s.read.parquet(snapPath), batchSk, "event_type")
+        else batchSk
+      val next = new org.apache.hadoop.fs.Path(s"$snapPath-next-$id")
+      merged.write.mode("overwrite").parquet(next.toString)
+      if (fs.exists(snapDir)) fs.delete(snapDir, true)
+      fs.rename(next, snapDir)
+    }
+    (snapPath, run.batches)
   }
 
   /** Frequent-items segment fold (stream half of streaming_freq_snapshot):
@@ -1103,26 +868,15 @@ object StreamingQueries {
     val inDir = stagedSplit(s, dir, "sfi", docs, col("doc_id"))
     val stage = Files.createTempDirectory("graft-sfi-").toString
     val segPath = s"$stage/segs"
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet")
-      .writeStream
-      .option("checkpointLocation", s"$stage/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (!b.isEmpty) {
-          batches.incrementAndGet()
-          val toks = b.select(col("lang"),
-            explode(graft.operators.TextAnalysis.tokens(col("text")))
-              .as("token"))
-          graft.operators.Sketches.fiByGroup(
-              toks, "lang", "token", maxMapSize = 8)
-            .write.mode("overwrite").parquet(s"$segPath/b$id")
-        }
-        ()
-      }.start()
-    q.awaitTermination()
-    (segPath, batches.get())
+    val run = runFold(s, docs.schema, inDir, stage, None) { (b, id) =>
+      val toks = b.select(col("lang"),
+        explode(graft.operators.TextAnalysis.tokens(col("text")))
+          .as("token"))
+      graft.operators.Sketches.fiByGroup(
+          toks, "lang", "token", maxMapSize = 8)
+        .write.mode("overwrite").parquet(s"$segPath/b$id")
+    }
+    (segPath, run.batches)
   }
 
   /** KLL-snapshot maintenance fold (stream half of
@@ -1138,31 +892,20 @@ object StreamingQueries {
     val snapPath = s"$stage/snap"
     val snapDir = new org.apache.hadoop.fs.Path(snapPath)
     val fs = snapDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet")
-      .writeStream
-      .option("checkpointLocation", s"$stage/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (!b.isEmpty) {
-          batches.incrementAndGet()
-          val batchSk = graft.operators.Sketches.kllByGroup(
-            b, "event_type", "value")
-          val merged =
-            if (fs.exists(snapDir))
-              graft.operators.Sketches.kllMergeSnapshots(
-                s.read.parquet(snapPath), batchSk, "event_type")
-            else batchSk
-          val next = new org.apache.hadoop.fs.Path(s"$snapPath-next-$id")
-          merged.write.mode("overwrite").parquet(next.toString)
-          if (fs.exists(snapDir)) fs.delete(snapDir, true)
-          fs.rename(next, snapDir)
-        }
-        ()
-      }.start()
-    q.awaitTermination()
-    (snapPath, batches.get())
+    val run = runFold(s, ev.schema, inDir, stage, None) { (b, id) =>
+      val batchSk = graft.operators.Sketches.kllByGroup(
+        b, "event_type", "value")
+      val merged =
+        if (fs.exists(snapDir))
+          graft.operators.Sketches.kllMergeSnapshots(
+            s.read.parquet(snapPath), batchSk, "event_type")
+        else batchSk
+      val next = new org.apache.hadoop.fs.Path(s"$snapPath-next-$id")
+      merged.write.mode("overwrite").parquet(next.toString)
+      if (fs.exists(snapDir)) fs.delete(snapDir, true)
+      fs.rename(next, snapDir)
+    }
+    (snapPath, run.batches)
   }
 
   /** Bench overrides (the [[graft.queries.PipelineQueries.timed]] pattern):
@@ -1501,14 +1244,7 @@ object StreamingQueries {
       val ev = Tables.t(s, dir, "events")
         .select(col("user_id"), col("event_type"), col("ts"),
           col("event_id"))
-      val inDir = funnelInCache.getOrElseUpdate(dir, {
-        val d = Files.createTempDirectory("graft-sfun-in-").toString
-        (0 until 3).foreach { i =>
-          ev.filter(col("event_id") % 3 === i).coalesce(1)
-            .write.parquet(s"$d/f$i.parquet")
-        }
-        d
-      })
+      val inDir = stagedSplit(s, dir, "sfun", ev, col("event_id"))
       val stepCol = steps.zipWithIndex.foldLeft(lit(-1)) {
         case (acc, (st, i)) =>
           when(col("event_type") === lit(st), lit(i)).otherwise(acc)

@@ -34,4 +34,15 @@ class TablesSpec extends SparkSpec {
       assert(secs.toSeq === (0 until 20).map(base + _))
     } finally spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
   }
+
+  test("the handle memo is keyed per session: each session gets a handle " +
+    "bound to itself, and a repeat call returns the same handle") {
+    val other = spark.newSession()
+    val mine = Tables.t(spark, sfDir, "region")
+    val theirs = Tables.t(other, sfDir, "region")
+    assert(mine.sparkSession eq spark)
+    assert(theirs.sparkSession eq other)
+    assert(Tables.t(spark, sfDir, "region") eq mine)
+    assert(Tables.t(other, sfDir, "region") eq theirs)
+  }
 }

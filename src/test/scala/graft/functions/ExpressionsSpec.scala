@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -192,6 +193,12 @@ class ExpressionsSpec extends SparkSpec {
       assert(row.getAs[Seq[String]]("sh") === Seq("a b", "b c"))
       assert(row.getAs[Int]("w") > 0)
       assert(s2.sql("SELECT ngram_gen(array('a','b','c'), 2)").count() === 2L)
+      // every entry of the shared function table resolves in the
+      // extension-built session, not just the ones exercised above
+      HashExpressions.sqlFunctions.foreach { case (name, _, _) =>
+        assert(s2.sessionState.functionRegistry
+          .functionExists(FunctionIdentifier(name)), name)
+      }
       // the planner strategy for the native as-of join rides along
       assert(s2.sessionState.planner.strategies
         .contains(graft.plans.AsOfJoinStrategy))
