@@ -453,19 +453,33 @@ object TextAnalysis {
     * a segment appended by a concurrent [[appendToTextIndex]] between
     * snapshot and swap survives un-merged. Readers must not race the
     * delete-then-rename swap window; run compaction between batches.
+    *
+    * Fails, rather than do nothing, on a path without the `meta` directory
+    * [[initTextIndex]] writes and on the legacy four-store layout
+    * (`postings`/`df`/`norms`/`stats` directories, no `seg`); a freshly
+    * initialized index with no segment yet is a no-op.
     */
   def compactTextIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     val stage = s"$path/.compact"
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val segRoot = new org.apache.hadoop.fs.Path(s"$path/seg")
+    val hasSegs = fs.exists(segRoot)
+    val legacy = if (hasSegs) Nil else Seq("postings", "df", "norms", "stats")
+      .filter(d => fs.exists(new org.apache.hadoop.fs.Path(s"$path/$d")))
+    if (legacy.nonEmpty) throw new IllegalStateException(
+      s"$path holds the legacy four-store text-index layout " +
+        s"(${legacy.mkString(", ")} directories, no seg/); rebuild it " +
+        "with buildTextIndex")
+    require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/meta")),
+      s"$path is not a text index: no meta directory (initTextIndex writes it)")
+    if (!hasSegs) return
     // one listing of the unified segment store: read set == delete set
     // (concurrent appends land outside the snapshot and survive the swap
     // un-merged). The single-write segment form retires the old
     // half-written-store diagnosis: all four stores of a batch commit in
     // one job, so a segment exists whole or not at all.
-    val segRoot = new org.apache.hadoop.fs.Path(s"$path/seg")
-    if (!fs.exists(segRoot)) return
     val segs = fs.listStatus(segRoot)
       .filter(_.getPath.getName.startsWith("batch="))
       .map(_.getPath)

@@ -1,5 +1,13 @@
 package graft.pipeline
 
+import java.lang.ref.WeakReference
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.{Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -20,23 +28,83 @@ object Consumer {
     * source instead (see graft.streaming).
     *
     * The drain is eager: the queue is empty when this returns. The drained
-    * bodies are handed to Spark as a parallelized RDD, sliced the way
-    * `LocalTableScanExec` slices local rows (one slice per core, at most one
-    * per body), and not as a local `Seq`: a `Seq` becomes a `LocalRelation`,
-    * and `ConvertToLocalRelation` then folds the `from_json` projection into
-    * it while the plan is optimized, so every body would be parsed by one
-    * interpreted projection on the driver thread. Over an RDD scan the parse
-    * runs in code-generated tasks on every core. The parallelized slices
-    * keep the bodies, so each action on the result sees the same rows, in
-    * queue order.
+    * bodies are staged in one driver-side array and read through a
+    * [[StagedBodiesRDD]], whose partitions carry only their index: each
+    * parse task reads its contiguous slice of the array in place instead of
+    * having its share of the bodies serialized into the task on the driver
+    * (what `parallelize` does, one task after another). Slicing is
+    * `parallelize`'s: one slice per core, at most one per body, so each
+    * action on the result sees the same rows, in queue order. (A local
+    * `Seq` would become a `LocalRelation`, into which the optimizer folds
+    * the `from_json` projection: every body parsed on the driver thread.)
+    *
+    * The snapshot lives exactly as long as the returned frame: the frame's
+    * RDD holds the array, the task-side registry only weakly. Tasks find it
+    * because local[n] runs them in the driver's JVM, the premise
+    * `InMemoryQueue` and the `graft-queue` source already rest on; a task
+    * that cannot find its snapshot fails, naming it, rather than return no
+    * rows.
     */
   def consume(spark: SparkSession, queueName: String, schema: StructType): DataFrame = {
     import spark.implicits._
-    val bodies = InMemoryQueue.drain(queueName).map(_.body)
+    val bodies = InMemoryQueue.drain(queueName).iterator.map(_.body).toArray
     val slices = math.max(1,
-      math.min(bodies.size, spark.sparkContext.defaultParallelism))
-    spark.createDataset(spark.sparkContext.parallelize(bodies, slices))
+      math.min(bodies.length, spark.sparkContext.defaultParallelism))
+    spark.createDataset(StagedBodies(spark.sparkContext, bodies, slices))
       .select(from_json(col("value"), schema).as("r"))
       .select(col("r.*"))
   }
+}
+
+/** The drained bodies of one [[Consumer.consume]] call as an `RDD[String]`
+  * of `slices` contiguous slices. The array stays on the driver: the RDD
+  * holds it in a `@transient` field (so it is never serialized into a
+  * task), and each task looks it up by `stagedId` in the JVM-local
+  * [[StagedBodies]] registry, which holds it only weakly.
+  */
+private[pipeline] class StagedBodiesRDD(
+    sc: SparkContext,
+    @transient private val bodies: Array[String],
+    stagedId: Long,
+    slices: Int) extends RDD[String](sc, Nil) {
+
+  override protected def getPartitions: Array[Partition] =
+    Array.tabulate[Partition](slices)(StagedSlice)
+
+  override def compute(split: Partition, context: TaskContext): Iterator[String] = {
+    val all = StagedBodies.lookup(stagedId)
+    val i = split.index.toLong
+    all.iterator.slice((i * all.length / slices).toInt,
+      ((i + 1) * all.length / slices).toInt)
+  }
+}
+
+private case class StagedSlice(index: Int) extends Partition
+
+/** JVM-local registry of staged consume snapshots, keyed by a per-call id.
+  * Entries are weak: a snapshot is reachable only while the frame whose RDD
+  * holds it is, and a collected one leaves a cleared entry that the next
+  * staging call purges.
+  */
+private[pipeline] object StagedBodies {
+  private val staged = new ConcurrentHashMap[Long, WeakReference[Array[String]]]
+  private val nextId = new AtomicLong
+
+  def apply(sc: SparkContext, bodies: Array[String], slices: Int): StagedBodiesRDD = {
+    staged.values.removeIf(_.get == null)
+    val id = nextId.incrementAndGet()
+    staged.put(id, new WeakReference(bodies))
+    new StagedBodiesRDD(sc, bodies, id, slices)
+  }
+
+  def lookup(id: Long): Array[String] =
+    Option(staged.get(id)).flatMap(r => Option(r.get)).getOrElse(
+      throw new IllegalStateException(s"staged consume snapshot $id is gone: " +
+        "its frame was dropped, or the task runs outside the driver JVM that " +
+        "staged it (Consumer.consume assumes local[n], where tasks share the " +
+        "driver's JVM)"))
+
+  /** Ids whose snapshot is still reachable. */
+  def liveIds: Seq[Long] =
+    staged.asScala.collect { case (id, r) if r.get != null => id }.toSeq
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.DriverSchemaParquetFileFormat
 import org.apache.spark.sql.functions._
 
 /** Parquet → JSON → queue publisher: the Spark restatement of the reference's
@@ -17,7 +18,9 @@ import org.apache.spark.sql.functions._
   * ids) messages that still fail after `maxAttempts` are RETURNED as a
   * Dataset so callers can dead-letter them (redrive analog,
   * template.yaml:10-12). Scale posture: no shuffle, no driver collection —
-  * the only driver-side values are two accumulator counters.
+  * the only driver-side values are two accumulator counters — and one Spark
+  * job per publish: the scan's schema comes from one parquet footer read on
+  * the driver (see [[source]]), not from a schema-inference job.
   */
 object Publisher {
 
@@ -116,6 +119,18 @@ object Publisher {
     */
   val ObservationName = "graft_publish"
 
+  /** The publish scan: `spark.read.parquet(paths)` planned without a Spark
+    * job. Stock parquet inference learns the schema by running a one-task
+    * job that reads one footer, a fixed scheduling cost on the blocking path
+    * of every publish; [[DriverSchemaParquetFileFormat]] reads that same
+    * footer on the driver and infers the same schema. With `mergeSchema`
+    * set (as a reader option or session conf) every part-file's footer is
+    * merged, and the stock job does that unchanged.
+    */
+  private[graft] def source(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.format(classOf[DriverSchemaParquetFileFormat].getName)
+      .load(paths: _*)
+
   def publish(
       spark: SparkSession,
       req: PublishRequest,
@@ -123,7 +138,7 @@ object Publisher {
       maxAttempts: Int = 5): PublishResult = {
     requireAttempts(maxAttempts)
     import spark.implicits._
-    val df = spark.read.parquet(req.paths: _*)
+    val df = source(spark, req.paths)
     val messages = serialize(df, req.idColumn)
       // Plan-level metrics: counted inside the same job that publishes (no
       // second scan), delivered through listener callbacks when the action

@@ -135,6 +135,29 @@ class Bm25Spec extends SparkSpec {
     assert(grown.map(_.getLong(2)).toSet == Set(9L))
   }
 
+  test("compacting a path with no index meta fails instead of no-op") {
+    val e = intercept[IllegalArgumentException](
+      TextAnalysis.compactTextIndex(spark, s"${tmpDir("bm25-none")}/idx"))
+    assert(e.getMessage.contains("no meta directory"))
+  }
+
+  test("compacting the legacy four-store layout fails naming it") {
+    val path = tmpDir("bm25-legacy")
+    TextAnalysis.initTextIndex(spark, path, nBuckets = 8)
+    Seq("postings", "df", "norms", "stats")
+      .foreach(d => new java.io.File(s"$path/$d").mkdirs())
+    val e = intercept[IllegalStateException](
+      TextAnalysis.compactTextIndex(spark, path))
+    assert(e.getMessage.contains("legacy four-store"))
+  }
+
+  test("compacting a freshly initialized index is a no-op") {
+    val path = tmpDir("bm25-fresh")
+    TextAnalysis.initTextIndex(spark, path, nBuckets = 8)
+    TextAnalysis.compactTextIndex(spark, path)
+    assert(new java.io.File(path).list().toSet === Set("meta"))
+  }
+
   test("filtered serving equals the in-memory filtered form and only " +
       "eligible docs are returned; all-ids filter is the identity") {
     import org.apache.spark.sql.functions.col

@@ -1,7 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.Encoders
+import org.apache.spark.SparkException
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, Encoders, GraftSqlShim}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
@@ -155,5 +158,120 @@ class PipelineSpec extends SparkSpec {
     errors.foreach(e => assert(e.getMessage.contains("maxAttempts")))
     assert(Consumer.count("q11") === 0)
     assert(spark.streams.active.isEmpty)
+  }
+
+  test("publish runs exactly one Spark job") {
+    val dir = tmpDir("pipe-jobs")
+    DataGenerator.generate(spark, 80L, 12L).repartition(4)
+      .write.mode("overwrite").parquet(dir)
+    assert(new java.io.File(dir).list().count(_.endsWith(".parquet")) === 4)
+    InMemoryQueue.clear("q12")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    GraftSqlShim.waitListenerBusEmpty(spark) // bounded: 10 s
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val res = Publisher.publish(spark,
+        Publisher.PublishRequest(Seq(dir)), new InMemoryQueueClient("q12"))
+      assert(res.publishedRows === 80L)
+      GraftSqlShim.waitListenerBusEmpty(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get === 1, "the schema must come without a Spark job")
+  }
+
+  test("publish reads the schema spark.read.parquet infers") {
+    def same(paths: String*): Unit = {
+      val want = spark.read.parquet(paths: _*).schema
+      assert(Publisher.source(spark, paths).schema === want, paths)
+    }
+    val (dir, _) = freshData(30L, 13L)
+    val names = new java.io.File(dir).list()
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")))
+    same(dir)
+    val (dir2, _) = freshData(20L, 14L)
+    same(dir, dir2)
+    same(new java.io.File(dir).listFiles().map(_.getPath)
+      .filter(_.endsWith(".parquet")).head)
+    same(s"$dir/*.parquet")
+
+    val parted = tmpDir("pipe-parted")
+    spark.read.parquet(dir).withColumn("k", lit(7))
+      .write.mode("overwrite").partitionBy("k").parquet(parted)
+    same(parted)
+    assert(Publisher.source(spark, Seq(parted)).columns.contains("k"))
+    assert(Publisher.source(spark, Seq(parted))
+      .exceptAll(spark.read.parquet(parted)).isEmpty)
+
+    import spark.implicits._
+    val (ab, ac) = (tmpDir("pipe-ab"), tmpDir("pipe-ac"))
+    Seq((1, "x")).toDF("a", "b").coalesce(1).write.mode("overwrite").parquet(ab)
+    Seq((2, 3.0)).toDF("a", "c").coalesce(1).write.mode("overwrite").parquet(ac)
+    val key = "spark.sql.parquet.mergeSchema"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try {
+      same(ab, ac)
+      assert(Publisher.source(spark, Seq(ab, ac)).columns.toSet ===
+        Set("a", "b", "c"))
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("an empty directory fails as spark.read.parquet does") {
+    val empty = tmpDir("pipe-empty")
+    val stock = intercept[AnalysisException](spark.read.parquet(empty))
+    val ours = intercept[AnalysisException](Publisher.source(spark, Seq(empty)))
+    assert(stock.getCondition === "UNABLE_TO_INFER_SCHEMA")
+    assert(ours.getCondition === stock.getCondition)
+  }
+
+  test("a corrupt footer fails, or with ignoreCorruptFiles is skipped, " +
+      "as spark.read.parquet does") {
+    val (dir, _) = freshData(20L, 16L)
+    // sorts before every part-file, so it is the file inference reads
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "a-corrupt.parquet"),
+      "not parquet".getBytes)
+    def condition(read: => Any): String =
+      Iterator.iterate[Throwable](intercept[Exception](read))(_.getCause)
+        .takeWhile(_ != null).collectFirst {
+          case e: org.apache.spark.SparkThrowable if e.getCondition != null &&
+            !e.getCondition.startsWith("SPARK_JOB") => e.getCondition
+        }.getOrElse("none")
+    val stock = condition(spark.read.parquet(dir))
+    assert(stock.startsWith("FAILED_READ_FILE"), stock)
+    assert(condition(Publisher.source(spark, Seq(dir))) === stock)
+    val key = "spark.sql.files.ignoreCorruptFiles"
+    spark.conf.set(key, "true")
+    try {
+      val skipped = condition(spark.read.parquet(dir))
+      assert(skipped === "UNABLE_TO_INFER_SCHEMA")
+      assert(condition(Publisher.source(spark, Seq(dir))) === skipped)
+    } finally spark.conf.unset(key)
+  }
+
+  test("a dropped consumed frame leaves no live staged snapshot") {
+    published("q13", 40L, 15L)
+    // the frame is only reachable inside this call
+    def consumedRows(): Long =
+      Consumer.consume(spark, "q13", Encoders.product[Record].schema).count()
+    assert(consumedRows() === 40L)
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (StagedBodies.liveIds.nonEmpty && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(100)
+    }
+    assert(StagedBodies.liveIds.isEmpty)
+  }
+
+  test("a task whose staged snapshot is gone fails naming it") {
+    // an id the registry never staged: what a task sees once the snapshot
+    // was collected or when it runs in another JVM
+    val orphan = new StagedBodiesRDD(spark.sparkContext, Array("{}"),
+      stagedId = -1L, slices = 1)
+    val e = intercept[SparkException](orphan.collect())
+    assert(e.getMessage.contains("staged consume snapshot -1 is gone"))
+    assert(e.getMessage.contains("local[n]"))
   }
 }
