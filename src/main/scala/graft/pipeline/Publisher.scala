@@ -145,7 +145,7 @@ object Publisher {
       // completes. Accumulators below remain the mid-job progress signal.
       .observe(ObservationName,
         count(lit(1)).as("attempted_rows"),
-        sum(length(col("body"))).cast("long").as("attempted_bytes"))
+        sum(octet_length(col("body"))).cast("long").as("attempted_bytes"))
       .as[QueueMessage]
     val sent = spark.sparkContext.longAccumulator("publishedRows")
     val dead = messages.mapPartitions { it =>

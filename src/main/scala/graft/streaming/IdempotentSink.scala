@@ -10,6 +10,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * exactly-once output on top of an at-least-once source, the standard
   * `foreachBatch` idempotency pattern. Readers just scan the root path
   * (`batch_id` becomes a partition column).
+  *
+  * `start` installs [[graft.fs.setup]] on the stream's session: from then on
+  * the context's `file:` paths, the sink's parquet writes and the checkpoint
+  * logs among them, resolve to [[graft.fs.NioLocalFileSystem]] and
+  * [[graft.fs.NioLocalFs]], which set permission bits and read links
+  * without spawning `chmod` or `readlink`.
   */
 object IdempotentSink {
 
@@ -17,7 +23,8 @@ object IdempotentSink {
       stream: DataFrame,
       outPath: String,
       checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    graft.fs.setup(stream.sparkSession)
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -27,4 +34,5 @@ object IdempotentSink {
         ()
       }
       .start()
+  }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, TTLConfig, Trigger, ValueState}
 
 import graft.Tables
 
@@ -94,22 +94,57 @@ object StreamingQueries {
     try f finally prev.foreach(s.conf.set(key, _))
   }
 
+  /** How long a bounded stream may run before [[awaitBounded]] gives up. */
+  private[streaming] val AwaitBoundMs: Long = 30L * 60 * 1000
+
+  /** Waits for `q` to end, at most `boundMs`; past it stops `q` and throws a
+    * TimeoutException naming it. A failed query throws its
+    * StreamingQueryException, as `awaitTermination` does.
+    */
+  private[streaming] def awaitBounded(q: StreamingQuery,
+      boundMs: Long = AwaitBoundMs): Unit =
+    if (!q.awaitTermination(boundMs)) {
+      q.stop()
+      throw new java.util.concurrent.TimeoutException(
+        s"streaming query ${Option(q.name).getOrElse("(unnamed)")} (id ${q.id}) " +
+          s"did not end within $boundMs ms and was stopped")
+    }
+
+  /** Runs `body` on a fresh temp dir named `prefix*`, then deletes the dir
+    * and everything under it, whether `body` ended or threw. The delete is
+    * in-process and does not follow links (Spark's `Utils.deleteRecursively`
+    * forks `rm -rf`); an entry it cannot delete fails the call.
+    */
+  private def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir) finally if (Files.exists(dir)) {
+      val paths = Files.walk(dir)
+      try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.delete(p))
+      finally paths.close()
+    }
+  }
+
+  /** Runs `df` to completion into a memory table and returns the table. The
+    * checkpoint lives only for the run: the rows are in the table once the
+    * query ends.
+    */
   private def runToTable(df: DataFrame, mode: String,
       s: SparkSession): DataFrame = {
     val qn = s"graft_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val cp = Files.createTempDirectory("graft-ckpt-").toString
     // Stateful operators pay per state-store-partition commit overhead every
     // micro-batch; at local bench scale 8 partitions beats 32 (a cluster
     // deployment sizes this to keyspace × executor count instead). The
     // partition count is baked into the query's checkpoint at first start,
     // so set it only for this launch and restore after.
-    withShufflePartitions(s, Some(8)) {
-      df.writeStream.format("memory").queryName(qn)
-        .outputMode(mode)
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+    withTempDir("graft-ckpt-") { cp =>
+      withShufflePartitions(s, Some(8)) {
+        awaitBounded(df.writeStream.format("memory").queryName(qn)
+          .outputMode(mode)
+          .option("checkpointLocation", cp.toString)
+          .trigger(Trigger.AvailableNow())
+          .start())
+      }
     }
     s.table(qn)
   }
@@ -142,7 +177,7 @@ object StreamingQueries {
     val batches = new java.util.concurrent.atomic.AtomicLong(0)
     val walls = new scala.collection.concurrent.TrieMap[Long, Double]
     withShufflePartitions(s, shufflePartitions) {
-      s.readStream.schema(schema)
+      awaitBounded(s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*.parquet")
         .writeStream
         .option("checkpointLocation", s"$stage/ckpt")
@@ -155,8 +190,7 @@ object StreamingQueries {
             walls(id) = (System.nanoTime() - bt0) / 1e9
           }
           ()
-        }.start()
-        .awaitTermination()
+        }.start())
     }
     FoldRun(batches.get(), walls)
   }
@@ -1195,7 +1229,7 @@ object StreamingQueries {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+    awaitBounded(q)
     s.read.parquet(mvDir.toString)
       .select(col("event_type"), col("n"), round(col("sv"), 2).as("total"))
       .orderBy(col("event_type"))
@@ -2049,23 +2083,27 @@ object StreamingQueries {
         .write.format("graft-kafka").mode("append")
         .option("topic", topic).option("partitions", nParts.toString)
         .save()
-      val inDir = Files.createTempDirectory("graft-ksink-in-").toString
-      ev.filter(col("key").cast("long") % 2 === 1)
-        .write.mode("overwrite").parquet(inDir)
-      val q = s.readStream.schema(s.read.parquet(inDir).schema)
-        .parquet(inDir)
-        .writeStream.format("graft-kafka")
-        .option("topic", topic).option("partitions", nParts.toString)
-        .option("checkpointLocation", s"$inDir/../graft-ksink-ckpt-$topic")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val back = s.read.format("graft-kafka")
-        .option("subscribe", topic).option("partitions", nParts.toString)
-        .load()
-        .select(col("key").cast("string").as("k"), col("partition"),
-          from_json(col("value").cast("string"), sch).as("r"))
-        .localCheckpoint()
+      // The input and, under it, the checkpoint live until `back` is
+      // local-checkpointed: it no longer reads them.
+      val back = withTempDir("graft-ksink-in-") { dir =>
+        val inDir = dir.toString
+        ev.filter(col("key").cast("long") % 2 === 1)
+          .write.mode("overwrite").parquet(inDir)
+        val q = s.readStream.schema(s.read.parquet(inDir).schema)
+          .parquet(inDir)
+          .writeStream.format("graft-kafka")
+          .option("topic", topic).option("partitions", nParts.toString)
+          .option("checkpointLocation", s"$inDir/_ckpt")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        awaitBounded(q)
+        s.read.format("graft-kafka")
+          .option("subscribe", topic).option("partitions", nParts.toString)
+          .load()
+          .select(col("key").cast("string").as("k"), col("partition"),
+            from_json(col("value").cast("string"), sch).as("r"))
+          .localCheckpoint()
+      }
       graft.sources.v2.TopicDataSource.clear(topic, nParts)
       val keyParts = back.select(col("k"), col("partition"))
         .distinct().count()
@@ -2112,7 +2150,7 @@ object StreamingQueries {
             b.write.mode("append").parquet(out)
             ()
           }.start()
-        sq.awaitTermination()
+        awaitBounded(sq)
         true
       } catch { case _: Throwable => false }
       val out = Files.createTempDirectory("graft-dlq-out-").toString

@@ -6,13 +6,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one per suite via lazy val). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .appName("graft-test")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    graft.fs.setup(s)
+    s
+  }
 
   def sfDir: String = "/root/testdata/sf0.001"
 

@@ -217,4 +217,29 @@ class StreamingSpec extends SparkSpec {
     assert(math.abs(row.getAs[Long]("a_drift_fx") -
       row.getAs[Long]("a_frozen_fx")) > 3000000L)
   }
+
+  test("awaitBounded stops a stream that never ends and names it") {
+    val q = spark.readStream.format("rate").option("rowsPerSecond", "1").load()
+      .writeStream.format("noop").queryName("never_ends").start()
+    val e = intercept[java.util.concurrent.TimeoutException](
+      StreamingQueries.awaitBounded(q, boundMs = 300L))
+    assert(e.getMessage.contains("never_ends") && e.getMessage.contains(q.id.toString))
+    assert(!q.isActive)
+  }
+
+  test("streaming_kafka_sink and a runToTable query leave none of their temp dirs behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    // Only the names these two queries create: other processes come and go
+    // in the shared temp dir.
+    def entries: Set[String] = tmp.list().toSet.filter(n =>
+      n.startsWith("graft-ksink-") || n.startsWith("graft-ckpt-"))
+    // streaming_funnel stages its split input once per source dir and
+    // keeps it for later runs; the first run creates it.
+    val funnel = StreamingQueries.queries("streaming_funnel")
+    funnel(spark, sfDir).collect()
+    val before = entries
+    assert(StreamingQueries.queries("streaming_kafka_sink")(spark, sfDir).count() > 0)
+    assert(funnel(spark, sfDir).count() > 0)
+    assert((entries -- before).isEmpty, (entries -- before).mkString(", "))
+  }
 }
