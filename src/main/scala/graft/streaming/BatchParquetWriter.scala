@@ -1,0 +1,148 @@
+package graft.streaming
+
+import java.io.IOException
+import java.util.UUID
+
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
+
+/** Writes one micro-batch of one streaming query as parquet under
+  * `<outPath>/batch_id=<id>`, in the layout `batch.write.parquet` leaves:
+  * `part-<partition>-<token>-c<n><codec>.parquet` files and a `_SUCCESS`
+  * marker.
+  *
+  * The stock write ships the session's whole Hadoop configuration (over a
+  * thousand entries) inside every task and commits through
+  * `FileOutputCommitter`'s `_temporary` renames. Here the configuration
+  * `ParquetFileFormat.prepareWrite` fills in is broadcast once per query
+  * and schema; a task reads it from the block manager. Each batch is one
+  * job over its rows: each task writes its part files into the hidden
+  * staging dir `.batch_id=<id>.<token>` (Spark's listing skips names that
+  * start with `.`), then the driver writes `_SUCCESS`, deletes an older
+  * `batch_id=<id>` and renames the staging dir into place. A crash before
+  * the rename leaves the old output (or none) visible; the re-run batch
+  * deletes the dead staging dir. The token is new for every write, so a
+  * replayed batch's part files get new names.
+  *
+  * File operations go through the Hadoop `FileSystem` of the output path;
+  * for `file:` paths after [[graft.fs.setup]] that is the fork-free
+  * [[graft.fs.NioLocalFileSystem]]. [[close]] destroys the broadcast.
+  *
+  * `beforeCommit` runs on the driver after the part files and `_SUCCESS`
+  * are written and before the rename (a seam for crash-injection specs).
+  */
+private[streaming] final class BatchParquetWriter(outPath: String,
+    beforeCommit: Long => Unit = _ => ()) {
+  import BatchParquetWriter._
+
+  private var prepared: Option[Prepared] = None
+
+  def write(batch: DataFrame, batchId: Long): Unit = {
+    val spark = batch.sparkSession
+    val p = prepare(spark, batch.schema)
+    val conf = p.conf.value.value
+    val out = new Path(outPath, s"batch_id=$batchId")
+    val fs = out.getFileSystem(conf)
+    Option(fs.globStatus(new Path(outPath, s".batch_id=$batchId.*")))
+      .foreach(_.foreach(st => fs.delete(st.getPath, true)))
+    val token = UUID.randomUUID().toString
+    val staging = new Path(outPath, s".batch_id=$batchId.$token")
+    val rdd = batch.queryExecution.toRdd
+    // As FileFormatWriter: a batch without partitions still writes one
+    // schema-only file.
+    val rows = if (rdd.partitions.isEmpty) {
+      spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+    } else rdd
+    val task = new WriteTask(p.conf, p.factory, p.schema, staging.toString, token,
+      spark.sessionState.conf.maxRecordsPerFile)
+    spark.sparkContext.runJob(rows, task.run _)
+    fs.create(new Path(staging, "_SUCCESS")).close()
+    beforeCommit(batchId)
+    if (fs.exists(out) && !fs.delete(out, true)) throw new IOException(s"could not delete $out")
+    if (!fs.rename(staging, out)) throw new IOException(s"could not rename $staging to $out")
+  }
+
+  /** Destroys the broadcast configuration; idempotent. */
+  def close(): Unit = synchronized {
+    prepared.foreach(_.conf.destroy())
+    prepared = None
+  }
+
+  private def prepare(spark: SparkSession, schema: StructType): Prepared = synchronized {
+    prepared.filter(_.schema == schema).getOrElse {
+      close()
+      val format = new ParquetFileFormat
+      // The stock write's checks: an unsupported type or field name fails here.
+      DataSourceUtils.verifySchema(format, schema)
+      DataSourceUtils.checkFieldNames(format, schema)
+      val job = Job.getInstance(spark.sessionState.newHadoopConf())
+      job.setOutputKeyClass(classOf[Void])
+      job.setOutputValueClass(classOf[InternalRow])
+      val factory = format.prepareWrite(spark, job, Map.empty, schema)
+      val p = Prepared(schema, factory,
+        spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration)))
+      prepared = Some(p)
+      p
+    }
+  }
+}
+
+private object BatchParquetWriter {
+
+  private final case class Prepared(schema: StructType, factory: OutputWriterFactory,
+      conf: Broadcast[SerializableConfiguration])
+
+  /** One task's write: its rows into `part-<partition>-<token>-c<n>` files
+    * under `dir`, a new file every `maxRecords` rows when that is positive.
+    * Only partition 0 writes a file for no rows. A failed attempt deletes
+    * the files it wrote.
+    */
+  private final class WriteTask(conf: Broadcast[SerializableConfiguration],
+      factory: OutputWriterFactory, schema: StructType, dir: String, token: String,
+      maxRecords: Long) extends Serializable {
+
+    def run(task: TaskContext, rows: Iterator[InternalRow]): Unit =
+      if (task.partitionId == 0 || rows.hasNext) {
+        val attempt = new TaskAttemptID(new TaskID(new JobID(token, task.stageId),
+          TaskType.MAP, task.partitionId), task.attemptNumber)
+        val ctx = new TaskAttemptContextImpl(conf.value.value, attempt)
+        val ext = factory.getFileExtension(ctx)
+        val files = ArrayBuffer.empty[Path]
+        def open(): OutputWriter = {
+          files += new Path(dir, f"part-${task.partitionId}%05d-$token-c${files.size}%03d$ext")
+          factory.newInstance(files.last.toString, schema, ctx)
+        }
+        var writer = open()
+        try {
+          var n = 0L
+          rows.foreach { row =>
+            if (maxRecords > 0 && n == maxRecords) {
+              writer.close()
+              writer = open()
+              n = 0L
+            }
+            writer.write(row)
+            n += 1
+          }
+          writer.close()
+        } catch {
+          case t: Throwable =>
+            try writer.close() catch { case s: Throwable => t.addSuppressed(s) }
+            val fs = new Path(dir).getFileSystem(ctx.getConfiguration)
+            files.foreach(f => fs.delete(f, false))
+            throw t
+        }
+      }
+  }
+}

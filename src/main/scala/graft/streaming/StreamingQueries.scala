@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,27 +28,28 @@ object StreamingQueries {
     * branch — duplicating it here unbranched is exactly how round 7 broke
     * every file-stream query when the testdata switched NANOS→MICROS.
     */
-  private def rawEvents(s: SparkSession, dir: String): DataFrame = {
+  private def rawEvents(s: SparkSession, dir: String, stage: Path): DataFrame = {
     val schema = Tables.eventsRaw(s, dir).schema
     // FileStreamSource wants a directory it can watch for arriving files;
-    // stage the bounded input into one (in production this IS the landing
-    // directory and the stream just keeps running).
-    val stage = Files.createTempDirectory("graft-stream-in-")
+    // stage the bounded input into a fresh one under `stage` (in production
+    // this IS the landing directory and the stream just keeps running). The
+    // caller owns `stage` and deletes it once the query reading it has ended.
+    val in = Files.createTempDirectory(stage, "events-")
     Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
-      stage.resolve("events.parquet"))
-    Tables.normalizeEventTs(s.readStream.schema(schema).parquet(stage.toString))
+      in.resolve("events.parquet"))
+    Tables.normalizeEventTs(s.readStream.schema(schema).parquet(in.toString))
   }
 
-  /** Streaming scan of the documents table (same staging pattern as
-    * [[rawEvents]]). `nCopies` stages that many copies of the file;
+  /** Streaming scan of the documents table (the staging pattern of
+    * [[rawEvents]], into the caller's `stage` itself). `nCopies` stages
+    * that many copies of the file;
     * combined with `maxFilesPerTrigger = Some(1)` each copy lands in its
     * OWN micro-batch — the harness for proving state crosses real batch
     * boundaries.
     */
-  private def rawDocs(s: SparkSession, dir: String, nCopies: Int = 1,
+  private def rawDocs(s: SparkSession, dir: String, stage: Path, nCopies: Int = 1,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    val stage = Files.createTempDirectory("graft-stream-docs-")
     (1 to nCopies).foreach(i =>
       Files.copy(java.nio.file.Paths.get(s"$dir/documents.parquet"),
         stage.resolve(s"copy${i}_documents.parquet")))
@@ -115,11 +116,11 @@ object StreamingQueries {
     * in-process and does not follow links (Spark's `Utils.deleteRecursively`
     * forks `rm -rf`); an entry it cannot delete fails the call.
     */
-  private def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
+  private def withTempDir[T](prefix: String)(body: Path => T): T = {
     val dir = Files.createTempDirectory(prefix)
     try body(dir) finally if (Files.exists(dir)) {
       val paths = Files.walk(dir)
-      try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
         .forEach(p => Files.delete(p))
       finally paths.close()
     }
@@ -1247,15 +1248,16 @@ object StreamingQueries {
     // stream the watermark DOES eventually pass a session's close time; on
     // this bounded harness it never can (watermark stops at max(ts) - delay),
     // which is exactly why the flush must not depend on it here.
-    "streaming_sessionize" -> ((s, dir) =>
+    "streaming_sessionize" -> ((s, dir) => withTempDir("graft-stream-in-") { stage =>
       collapseSessions(runToTable(
-        sessionizeStream(rawEvents(s, dir)), "update", s))),
+        sessionizeStream(rawEvents(s, dir, stage)), "update", s))
+    }),
 
     // The SAME sessionization through the built-in streaming session_window
     // operator (merging-window state store path) — custom state above, native
     // operator here, one oracle for both.
-    "streaming_session_window" -> ((s, dir) => {
-      val agg = rawEvents(s, dir)
+    "streaming_session_window" -> ((s, dir) => withTempDir("graft-stream-in-") { stage =>
+      val agg = rawEvents(s, dir, stage)
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
         .select(col("session_window.start").as("s_start"),
@@ -1312,14 +1314,14 @@ object StreamingQueries {
       }
     }),
 
-    "streaming_tws_stats" -> ((s, dir) => {
+    "streaming_tws_stats" -> ((s, dir) => withTempDir("graft-stream-in-") { stage =>
       import s.implicits._
       val prev = s.conf.getOption(
         "spark.sql.streaming.stateStore.providerClass")
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       try {
-        val perKey = rawEvents(s, dir)
+        val perKey = rawEvents(s, dir, stage)
           .select(col("user_id"), col("value")).as[(Long, Double)]
           .groupByKey(_._1)
           .transformWithState(new UserStats, TimeMode.None(),
@@ -1341,8 +1343,8 @@ object StreamingQueries {
     }),
     // Tumbling event-time window + watermark, run to completion. Identical
     // results to the batch `time_window_agg` — which is exactly the point.
-    "streaming_window_agg" -> ((s, dir) => {
-      val agg = rawEvents(s, dir)
+    "streaming_window_agg" -> ((s, dir) => withTempDir("graft-stream-in-") { stage =>
+      val agg = rawEvents(s, dir, stage)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
@@ -1356,13 +1358,13 @@ object StreamingQueries {
     // happen within 10 minutes after the click. Watermarks + the time-range
     // predicate bound both join states, which is what lets two unbounded
     // streams join with finite memory.
-    "streaming_stream_join" -> ((s, dir) => {
-      val clicks = rawEvents(s, dir)
+    "streaming_stream_join" -> ((s, dir) => withTempDir("graft-stream-in-") { stage =>
+      val clicks = rawEvents(s, dir, stage)
         .filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
           col("ts").as("click_ts"))
         .withWatermark("click_ts", "1 hour")
-      val purchases = rawEvents(s, dir)
+      val purchases = rawEvents(s, dir, stage)
         .filter(col("event_type") === "purchase")
         .select(col("event_id").as("purchase_id"),
           col("user_id").as("p_user_id"), col("ts").as("purchase_ts"))
@@ -1381,8 +1383,8 @@ object StreamingQueries {
     // downstream counts must equal the batch counts over the original table.
     // (Unbounded dedup state here; production bounds it with
     // dropDuplicatesWithinWatermark once ids can't recur past the watermark.)
-    "streaming_dedup" -> ((s, dir) => {
-      val ev = rawEvents(s, dir)
+    "streaming_dedup" -> ((s, dir) => withTempDir("graft-stream-in-") { stage =>
+      val ev = rawEvents(s, dir, stage)
       val deduped = ev.union(ev)
         .dropDuplicates("event_id")
         .groupBy(col("event_type"))
@@ -1399,8 +1401,8 @@ object StreamingQueries {
     // single file would only exercise intra-batch dedup); the oracle is the
     // batch funnel over the same table — streaming/batch parity for the
     // curation path.
-    "streaming_curation" -> ((s, dir) => {
-      val docs = rawDocs(s, dir, nCopies = 2, maxFilesPerTrigger = Some(1))
+    "streaming_curation" -> ((s, dir) => withTempDir("graft-stream-docs-") { stage =>
+      val docs = rawDocs(s, dir, stage, nCopies = 2, maxFilesPerTrigger = Some(1))
       val funnel = docs
         .withColumn("n_tok",
           size(split(trim(lower(col("text"))), "\\s+")).cast("long"))
@@ -1416,8 +1418,8 @@ object StreamingQueries {
     // dedup state once the watermark passes an id's event time — the
     // production form when duplicates can only arrive within a known delay
     // (unbounded dropDuplicates state is the alternative above).
-    "streaming_dedup_watermark" -> ((s, dir) => {
-      val ev = rawEvents(s, dir)
+    "streaming_dedup_watermark" -> ((s, dir) => withTempDir("graft-stream-in-") { stage =>
+      val ev = rawEvents(s, dir, stage)
       val deduped = ev.union(ev)
         .withWatermark("ts", "1 day")
         .dropDuplicatesWithinWatermark("event_id")
@@ -1431,9 +1433,9 @@ object StreamingQueries {
     // memory sink (update mode) records one row per key per micro-batch;
     // max(n) per key is the final count regardless of how the source was
     // split into batches.
-    "streaming_stateful_count" -> ((s, dir) => {
+    "streaming_stateful_count" -> ((s, dir) => withTempDir("graft-stream-in-") { stage =>
       import s.implicits._
-      val perKey = rawEvents(s, dir)
+      val perKey = rawEvents(s, dir, stage)
         .select(col("user_id")).as[Long]
         .groupByKey(identity)
         .mapGroupsWithState[Long, (Long, Long)](GroupStateTimeout.NoTimeout) {

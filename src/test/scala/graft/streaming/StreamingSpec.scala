@@ -232,7 +232,8 @@ class StreamingSpec extends SparkSpec {
     // Only the names these two queries create: other processes come and go
     // in the shared temp dir.
     def entries: Set[String] = tmp.list().toSet.filter(n =>
-      n.startsWith("graft-ksink-") || n.startsWith("graft-ckpt-"))
+      Seq("graft-ksink-", "graft-ckpt-", "graft-stream-in-", "graft-stream-docs-")
+        .exists(n.startsWith))
     // streaming_funnel stages its split input once per source dir and
     // keeps it for later runs; the first run creates it.
     val funnel = StreamingQueries.queries("streaming_funnel")
@@ -240,6 +241,9 @@ class StreamingSpec extends SparkSpec {
     val before = entries
     assert(StreamingQueries.queries("streaming_kafka_sink")(spark, sfDir).count() > 0)
     assert(funnel(spark, sfDir).count() > 0)
+    // Queries over the staged events and documents inputs.
+    StreamingQueries.queries("streaming_stream_join")(spark, sfDir).collect()
+    StreamingQueries.queries("streaming_curation")(spark, sfDir).collect()
     assert((entries -- before).isEmpty, (entries -- before).mkString(", "))
   }
 }
