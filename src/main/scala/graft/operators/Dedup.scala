@@ -1066,10 +1066,7 @@ object Dedup {
     if (segs.isEmpty) return
     spark.read.parquet(segs.map(_.toString): _*).coalesce(1)
       .write.mode("overwrite").parquet(s"$stage/b-1")
-    segs.foreach(p => fs.delete(p, true))
-    fs.rename(new org.apache.hadoop.fs.Path(s"$stage/b-1"),
-      new org.apache.hadoop.fs.Path(s"$dir/b-1"))
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
+    Segments.swapIn(fs, segs, stage, "b-1", dir)
   }
 
   def embeddingPairsLsh(df: DataFrame, idCol: String, vecCol: String,

@@ -126,10 +126,7 @@ object Manifest {
     val stage = s"$manifestPath/.compact"
     resolved(spark, segs.map(_.toString).toSeq)
       .coalesce(1).write.mode("overwrite").parquet(s"$stage/b-1")
-    segs.foreach(p => fs.delete(p, true))
-    fs.rename(new org.apache.hadoop.fs.Path(s"$stage/b-1"),
-      new org.apache.hadoop.fs.Path(s"$manifestPath/b-1"))
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
+    Segments.swapIn(fs, segs, stage, "b-1", manifestPath)
   }
 
   /** The current manifest: union of all segments, one row per data file. */

@@ -727,10 +727,7 @@ object Similarity {
       .select(col("nid"), col("codes"), col("bucket"))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$stage/batch=-1")
-    segs.foreach(p => fs.delete(p, true))
-    fs.rename(new org.apache.hadoop.fs.Path(s"$stage/batch=-1"),
-      new org.apache.hadoop.fs.Path(s"$path/codes/batch=-1"))
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
+    Segments.swapIn(fs, segs, stage, "batch=-1", s"$path/codes")
   }
 
   /** Query a [[buildIvfPqIndex]]-persisted index. `corpus` supplies the raw

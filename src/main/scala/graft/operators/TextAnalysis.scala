@@ -516,10 +516,7 @@ object TextAnalysis {
     writeUnifiedSegment(
       postings.unionByName(dfreq).unionByName(normsRows).unionByName(stats),
       s"$stage/batch=-1")
-    segs.foreach(p => fs.delete(p, true))
-    fs.rename(new org.apache.hadoop.fs.Path(s"$stage/batch=-1"),
-      new org.apache.hadoop.fs.Path(s"$path/seg/batch=-1"))
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
+    Segments.swapIn(fs, segs, stage, "batch=-1", s"$path/seg")
   }
 
   /** BM25 top-`k` over a persisted index — exact same ranking as a
@@ -725,10 +722,7 @@ object TextAnalysis {
     spark.read.parquet(segs.map(_.toString): _*)
       .groupBy(col("g")).agg(sum(col("df")).as("df"))
       .coalesce(1).write.mode("overwrite").parquet(s"$stage/b-1")
-    segs.foreach(p => fs.delete(p, true))
-    fs.rename(new org.apache.hadoop.fs.Path(s"$stage/b-1"),
-      new org.apache.hadoop.fs.Path(s"$segDir/b-1"))
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
+    Segments.swapIn(fs, segs, stage, "b-1", segDir)
   }
 
   /** Incremental novelty: score an arriving batch against the persisted

@@ -8,14 +8,17 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{ExprUtils, GenericInternalRow}
+import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JacksonParser, JSONOptions}
+import org.apache.spark.sql.catalyst.util.FailureSafeParser
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Queue → typed rows: the reference's consumer Lambda
   * (cmd/sqs-record-consumer/main.go:27-32) only logs the batch count; we keep
   * that behavior in `count` and add the obvious next step the stub left
-  * unwritten — parsing bodies back into rows with `from_json`.
+  * unwritten — parsing bodies back into rows, as `from_json` would.
   */
 object Consumer {
 
@@ -36,7 +39,30 @@ object Consumer {
     * `parallelize`'s: one slice per core, at most one per body, so each
     * action on the result sees the same rows, in queue order. (A local
     * `Seq` would become a `LocalRelation`, into which the optimizer folds
-    * the `from_json` projection: every body parsed on the driver thread.)
+    * the parse: every body parsed on the driver thread.)
+    *
+    * Each task parses its staged `String`s with Spark's own `JacksonParser`
+    * over `CreateJacksonParser.string`, and the frame is built straight
+    * from those rows. `createDataset(bodies).select(from_json(...))` gives
+    * the same rows, but re-encodes every body to a `UTF8String`, decodes
+    * it again through a fresh `InputStreamReader`, and runs two
+    * projections and three analyses around the parse; here there is one
+    * analysis, and the body goes from `String` to rows in one pass. Parity
+    * with `from_json(col, schema)` is that of Spark's
+    * `JsonToStructsEvaluator`, built the same way:
+    *  - `JSONOptions` of an empty options map, the session time zone and
+    *    the session's `spark.sql.columnNameOfCorruptRecord`, built inside
+    *    the task (where `from_json` builds them, so task-side SQL confs
+    *    apply alike);
+    *  - its parse mode (PERMISSIVE), `allowArrayAsStructs = false`;
+    *  - a `FailureSafeParser` over the parser schema `schema.asNullable`,
+    *    the corrupt-record column kept there and filtered out of the
+    *    schema the `JacksonParser` reads, `UTF8String.fromString` giving
+    *    the bad record's text;
+    *  - the first row a body yields; a `null` body, or one that yields no
+    *    row, gives the all-null row `select("r.*")` gives for a null
+    *    struct.
+    * The frame's schema is `schema.asNullable`, as `from_json` reports it.
     *
     * The snapshot lives exactly as long as the returned frame: the frame's
     * RDD holds the array, the task-side registry only weakly. Tasks find it
@@ -46,13 +72,36 @@ object Consumer {
     * rows.
     */
   def consume(spark: SparkSession, queueName: String, schema: StructType): DataFrame = {
-    import spark.implicits._
     val bodies = InMemoryQueue.drain(queueName).iterator.map(_.body).toArray
     val slices = math.max(1,
       math.min(bodies.length, spark.sparkContext.defaultParallelism))
-    spark.createDataset(StagedBodies(spark.sparkContext, bodies, slices))
-      .select(from_json(col("value"), schema).as("r"))
-      .select(col("r.*"))
+    val nullable = GraftSqlShim.asNullable(schema)
+    val timeZone = spark.conf.get("spark.sql.session.timeZone")
+    val corruptColumn = spark.conf.get("spark.sql.columnNameOfCorruptRecord")
+    val rows = StagedBodies(spark.sparkContext, bodies, slices).mapPartitions { it =>
+      val parse = jsonParser(nullable, timeZone, corruptColumn)
+      val allNull = new GenericInternalRow(nullable.length)
+      it.map { body =>
+        val parsed = if (body == null) Iterator.empty else parse.parse(body)
+        if (parsed.hasNext) parsed.next() else allNull
+      }
+    }
+    GraftSqlShim.internalCreateDataFrame(spark, rows, nullable)
+  }
+
+  /** `JsonToStructsEvaluator`'s parser for a struct schema, reading
+    * `String`s instead of `UTF8String`s.
+    */
+  private def jsonParser(schema: StructType, timeZone: String,
+      corruptColumn: String): FailureSafeParser[String] = {
+    val options = new JSONOptions(Map.empty[String, String], timeZone, corruptColumn)
+    ExprUtils.verifyColumnNameOfCorruptRecord(schema, options.columnNameOfCorruptRecord)
+    val raw = new JacksonParser(
+      StructType(schema.filterNot(_.name == options.columnNameOfCorruptRecord)),
+      options, allowArrayAsStructs = false)
+    new FailureSafeParser[String](
+      body => raw.parse(body, CreateJacksonParser.string, UTF8String.fromString),
+      options.parseMode, schema, options.columnNameOfCorruptRecord)
   }
 }
 

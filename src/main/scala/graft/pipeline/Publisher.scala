@@ -1,6 +1,8 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.parquet.DriverSchemaParquetFileFormat
 import org.apache.spark.sql.functions._
 
@@ -45,11 +47,14 @@ object Publisher {
   def serialize(df: DataFrame, idColumn: String): Dataset[QueueMessage] = {
     val spark = df.sparkSession
     import spark.implicits._
+    messageColumns(df, idColumn).as[QueueMessage]
+  }
+
+  /** The `(id, body)` columns of [[serialize]], which [[publish]] sends. */
+  private def messageColumns(df: DataFrame, idColumn: String): DataFrame =
     df.select(
       col(idColumn).cast("string").as("id"),
-      to_json(struct(df.columns.map(col): _*)).as("body")
-    ).as[QueueMessage]
-  }
+      to_json(struct(df.columns.map(col): _*)).as("body"))
 
   /** Byte-parity variant of `serialize`: the emitted JSON is identical to Go
     * `json.Marshal` of the reference's Record (internal/models/record.go:7-34)
@@ -131,35 +136,51 @@ object Publisher {
     spark.read.format(classOf[DriverSchemaParquetFileFormat].getName)
       .load(paths: _*)
 
+  /** Publish every row of `req.paths`: one SQL execution, one Spark job.
+    *
+    * The `(id, body)` projection and its `observe` are analyzed once, and
+    * the send runs over that plan's own rows (`queryExecution.toRdd`):
+    * each `QueueMessage` is built from the row's two `UTF8String`s (a null
+    * stays null, as the `QueueMessage` encoder leaves it), with no
+    * object-deserialize/serialize pair around the send. The job runs inside
+    * `SQLExecution.withNewExecutionId(qe, Some("collect"))`, as
+    * `Dataset.collect` runs its own: when it ends, the execution-end event
+    * carries `qe`, whose observed metrics (`attempted_rows`,
+    * `attempted_bytes`, counted in the same job) reach every registered
+    * `QueryExecutionListener` through `onSuccess("collect", qe, _)`.
+    */
   def publish(
       spark: SparkSession,
       req: PublishRequest,
       client: QueueClient,
       maxAttempts: Int = 5): PublishResult = {
     requireAttempts(maxAttempts)
-    import spark.implicits._
-    val df = source(spark, req.paths)
-    val messages = serialize(df, req.idColumn)
+    val messages = messageColumns(source(spark, req.paths), req.idColumn)
       // Plan-level metrics: counted inside the same job that publishes (no
       // second scan), delivered through listener callbacks when the action
       // completes. Accumulators below remain the mid-job progress signal.
       .observe(ObservationName,
         count(lit(1)).as("attempted_rows"),
         sum(octet_length(col("body"))).cast("long").as("attempted_bytes"))
-      .as[QueueMessage]
     val sent = spark.sparkContext.longAccumulator("publishedRows")
-    val dead = messages.mapPartitions { it =>
-      var rows = 0L
-      val failed = sendPartition(
-        it.map { m => rows += 1; m }, client, maxAttempts).toVector
-      sent.add(rows - failed.size)
-      failed.iterator
-    }
+    val qe = messages.queryExecution
     // Dead letters are typically few (poison messages); collecting them is the
     // driver-side DLQ hand-off, not a data-path collect.
-    val deadLetters = dead.collect().toSeq
+    val deadLetters = SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.toRdd.mapPartitions { rows =>
+        var n = 0L
+        val failed = sendPartition(
+          rows.map { r => n += 1; QueueMessage(string(r, 0), string(r, 1)) },
+          client, maxAttempts).toVector
+        sent.add(n - failed.size)
+        failed.iterator
+      }.collect().toSeq
+    }
     PublishResult(req.paths, sent.value, deadLetters.size.toLong, deadLetters)
   }
+
+  private def string(row: InternalRow, i: Int): String =
+    if (row.isNullAt(i)) null else row.getUTF8String(i).toString
 }
 
 /** Session-registerable sink for the publisher's observed metrics:

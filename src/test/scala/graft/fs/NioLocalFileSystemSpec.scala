@@ -178,6 +178,9 @@ class NioLocalFileSystemSpec extends SparkSpec {
       .isInstanceOf[NioLocalFileSystem])
     // Warm-up: one-time forks of the JVM (Hadoop's shell probes) happen here.
     runSink(src, tmpDir("nio-warm-out"), tmpDir("nio-warm-ckpt"))
+    // So does Spark's `getconf PAGESIZE`, which the executor's first
+    // heartbeat-timed metrics poll would otherwise fork whenever it comes.
+    org.apache.spark.ExecutorShim.initProcfsMetrics()
 
     // Spark's ArtifactManager deletes a session's artifact dir with
     // `rm -rf` when the session stops or is collected, whichever session

@@ -2,9 +2,11 @@ package graft.pipeline
 
 import org.apache.spark.SparkException
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{AnalysisException, Encoders, GraftSqlShim}
+import org.apache.spark.sql.{AnalysisException, Encoders, GraftSqlShim, Row}
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.execution.SerializeFromObjectExec
+import org.apache.spark.sql.functions.{col, from_json, lit}
 import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
@@ -13,7 +15,7 @@ import graft.sources.DataGenerator
 import graft.streaming.StreamPublisher
 
 /** End-to-end reference parity: generate → parquet → publish (JSON, batches
-  * of ≤10, retry, partial failure) → consume (count + from_json round-trip).
+  * of ≤10, retry, partial failure) → consume (count + JSON round-trip).
   * SURVEY.md §7.1 item 6.
   */
 class PipelineSpec extends SparkSpec {
@@ -127,7 +129,8 @@ class PipelineSpec extends SparkSpec {
 
   test("an empty queue consumes to zero rows of the requested schema") {
     InMemoryQueue.clear("q9")
-    // from_json reports every field nullable, so request a nullable schema
+    // consume reports the schema as from_json does, every field nullable,
+    // so request a nullable schema
     val schema = new StructType().add("id", "string")
       .add("account_balance", "double").add("tags", "array<string>")
     val back = Consumer.consume(spark, "q9", schema)
@@ -273,5 +276,82 @@ class PipelineSpec extends SparkSpec {
     val e = intercept[SparkException](orphan.collect())
     assert(e.getMessage.contains("staged consume snapshot -1 is gone"))
     assert(e.getMessage.contains("local[n]"))
+  }
+
+  /** Consumes `bodies` from a fresh queue `q` and checks the frame against
+    * the one the old `from_json` path builds from them,
+    * `createDataset(bodies).select(from_json(col("value"), schema).as("r"))
+    * .select("r.*")`: same schema, same rows in the same order. Returns the
+    * rows.
+    */
+  def assertSameAsFromJson(q: String, schema: StructType, bodies: Seq[String]): Seq[Row] = {
+    InMemoryQueue.clear(q)
+    bodies.zipWithIndex.foreach { case (b, i) =>
+      InMemoryQueue.queue(q).add(QueueMessage(i.toString, b)) }
+    val oracle = spark.createDataset(bodies)(Encoders.STRING)
+      .select(from_json(col("value"), schema).as("r")).select(col("r.*"))
+    val back = Consumer.consume(spark, q, schema)
+    assert(back.schema === oracle.schema)
+    val rows = back.collect().toSeq
+    assert(rows === oracle.collect().toSeq)
+    rows
+  }
+
+  test("consume gives the rows and schema from_json gives, edge cases too") {
+    val record = Encoders.product[Record].schema
+    val (dir, _) = freshData(30L, 17L)
+    val wellFormed = Publisher.serialize(spark.read.parquet(dir), "id")
+      .collect().map(_.body).toSeq
+    assert(assertSameAsFromJson("q14", record, wellFormed).size === 30)
+
+    val simple = new StructType().add("id", "string", nullable = false)
+      .add("n", "long").add("tags", "array<string>")
+      .add("nested", new StructType().add("x", "double", nullable = false))
+    val edge = Seq(
+      """{"id":"a","n":1,"tags":["x","y"],"nested":{"x":1.5}}""",
+      """{"id":"b","n":"not a number","tags":["x"]}""",   // partial result
+      """{"id":"c","n":2,"tags":["x",""",                  // truncated
+      null,
+      "",
+      """[{"id":"d","n":3}]""",                            // top-level array
+      "{\"id\":\"naïve café 日本語 \uD83D\uDE00\",\"n\":4}",
+      "{\"id\":\"\\u00e9\\ud83d\\ude00\",\"n\":5}",  // escaped 4-byte
+      "{\"id\":\"lone \uD800 surrogate\",\"n\":6}",
+      "{\"id\":\"escaped lone \\ud800\",\"n\":7}",
+      """{"n":8}""")
+    val rows = assertSameAsFromJson("q15", simple, edge)
+    assert(rows.size === edge.size)
+    assert(rows(3) === Row(null, null, null, null))
+    assert(rows(6).getString(0) === "naïve café 日本語 \uD83D\uDE00")
+
+    // mid-schema, so the parsed fields sit at other indices than the output's
+    val withCorrupt = StructType(simple.fields.take(2) ++
+      new StructType().add("_corrupt_record", "string").fields ++ simple.fields.drop(2))
+    val corrupt = assertSameAsFromJson("q16", withCorrupt, edge)
+    assert(corrupt(2).getString(2) === edge(2))
+    assert(corrupt(0).isNullAt(2) && corrupt(0).getSeq[String](3) === Seq("x", "y"))
+
+    val key = "spark.sql.session.timeZone"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try {
+      val ts = new StructType().add("t", "timestamp").add("d", "date")
+      val local = assertSameAsFromJson("q17", ts, Seq(
+        """{"t":"2024-01-01 00:00:00","d":"2024-01-01"}""",
+        """{"t":"2024-03-10T02:30:00","d":"2024-03-10"}""",
+        """{"t":"2024-07-01T12:00:00Z"}"""))
+      assert(local.head.getTimestamp(0) ===
+        java.sql.Timestamp.from(java.time.Instant.parse("2024-01-01T08:00:00Z")))
+    } finally spark.conf.set(key, saved)
+  }
+
+  test("the consumed frame's plan runs no from_json and no object serializer") {
+    published("q18", 40L, 18L)
+    val back = Consumer.consume(spark, "q18", Encoders.product[Record].schema)
+    assert(back.count() === 40L)
+    val plan = back.queryExecution.executedPlan
+    assert(plan.collect { case s: SerializeFromObjectExec => s }.isEmpty, plan.treeString)
+    assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[JsonToStructs]))),
+      plan.treeString)
   }
 }

@@ -1,6 +1,14 @@
 package graft.pipeline
 
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.GraftSqlShim
+import org.apache.spark.sql.catalyst.plans.logical.DeserializeToObject
+import org.apache.spark.sql.execution.{DeserializeToObjectExec, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
@@ -62,5 +70,70 @@ class PublishMetricsSpec extends SparkSpec {
       assert(rows == 25L)
       assert(res.publishedRows == 23L && res.failedRows == 2L)
     } finally spark.listenerManager.unregister(m)
+  }
+
+  /** Keeps every successful execution that carries the publisher's
+    * observed metrics.
+    */
+  class PublishExecutions extends QueryExecutionListener {
+    val seen = new ConcurrentLinkedQueue[QueryExecution]()
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      if (qe.observedMetrics.contains(Publisher.ObservationName)) seen.add(qe)
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    def metrics: Seq[(Long, Long)] = seen.asScala.toSeq.map { qe =>
+      val r = qe.observedMetrics(Publisher.ObservationName)
+      (r.getAs[Long]("attempted_rows"), r.getAs[Long]("attempted_bytes"))
+    }
+  }
+
+  /** `body` with a [[PublishExecutions]] registered; returns what it saw
+    * once the listener bus has drained.
+    */
+  def observing(body: => Unit): PublishExecutions = {
+    val l = new PublishExecutions
+    GraftSqlShim.waitListenerBusEmpty(spark)
+    spark.listenerManager.register(l)
+    try {
+      body
+      GraftSqlShim.waitListenerBusEmpty(spark)
+    } finally spark.listenerManager.unregister(l)
+    l
+  }
+
+  test("each publish reports exactly one (rows, bytes), null ids included") {
+    val dir = tmpDir("obs-nullid")
+    import spark.implicits._
+    Seq(Some(1L) -> "a", None -> "b", Some(3L) -> "c", None -> "d")
+      .toDF("k", "text").write.mode("overwrite").parquet(dir)
+    val req = Publisher.PublishRequest(Seq(dir), idColumn = "k")
+    val bytes = Publisher.serialize(spark.read.parquet(dir), "k").collect()
+      .map(_.body.getBytes(StandardCharsets.UTF_8).length.toLong).sum
+    val first = observing {
+      val res = Publisher.publish(spark, req, new DiscardQueueClient)
+      assert(res.publishedRows == 4L && res.failedRows == 0L)
+    }
+    assert(first.metrics == Seq((4L, bytes)))
+    val dead = observing {
+      val res = Publisher.publish(spark, req, new QueueClient {
+        def send(batch: Seq[QueueMessage]) = BatchSendResult(batch.map(_.id))
+      }, maxAttempts = 2)
+      assert(res.deadLetters.map(_.id).sortBy(Option(_)) ==
+        Seq(null, null, "1", "3"))
+    }
+    assert(dead.metrics == Seq((4L, bytes)))
+  }
+
+  test("the publish plan sends from its own rows, with no object deserializer") {
+    val seen = observing {
+      Publisher.publish(spark,
+        Publisher.PublishRequest(Seq(s"$sfDir/nation.parquet"), idColumn = "n_nationkey"),
+        new DiscardQueueClient)
+    }.seen.asScala.toSeq
+    assert(seen.size == 1)
+    val qe = seen.head
+    assert(qe.optimizedPlan.collect { case d: DeserializeToObject => d }.isEmpty,
+      qe.optimizedPlan.treeString)
+    assert(qe.executedPlan.collect { case d: DeserializeToObjectExec => d }.isEmpty,
+      qe.executedPlan.treeString)
   }
 }
