@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-import scala.jdk.CollectionConverters._
+import java.util.concurrent.ConcurrentHashMap
 
 /** One message on the wire: record id + its JSON serialization.
   * Reference analog: an SQS `SendMessageBatchRequestEntry`
@@ -29,41 +28,52 @@ trait QueueClient extends Serializable {
   * a static map gives tests a faithful queue; on a real cluster this class is
   * test-only and the `QueueClient` impl would hold a lazily-initialized SQS
   * client instead (never serialize live connections).
+  *
+  * Each queue is a [[QueueLog]]: the messages sit in append-only segment
+  * files under the JVM's `graft-queue-<uuid>` dir (see [[QueueLog]] for the
+  * layout and where the dir lives), and the heap holds only an 8-byte
+  * offset per message, plus the receive counts and dead-letter moves of a
+  * redrive policy when one is used. `size` is O(1) and `slice` decodes only
+  * its own records. `drain` detaches the current segments: later sends go
+  * to fresh ones. `clear` deletes the queue's segments. Bodies are stored
+  * as UTF-8, so a raw lone surrogate in a body comes back as `?`.
   */
 object InMemoryQueue {
-  private val queues =
-    new ConcurrentHashMap[String, ConcurrentLinkedQueue[QueueMessage]]()
+  private val queues = new ConcurrentHashMap[String, QueueLog]()
   // per-queue message receive counts — the SQS ApproximateReceiveCount
   // analog the streaming source's redrive policy is driven by
   private val receives =
     new ConcurrentHashMap[String, ConcurrentHashMap[String, Integer]]()
 
-  def queue(name: String): ConcurrentLinkedQueue[QueueMessage] =
-    queues.computeIfAbsent(name, _ => new ConcurrentLinkedQueue[QueueMessage]())
+  def queue(name: String): QueueLog = queues.computeIfAbsent(name, _ => new QueueLog)
 
-  def size(name: String): Int = queue(name).size()
+  def size(name: String): Int = queue(name).size
 
   def drain(name: String): Seq[QueueMessage] = {
-    val q = queue(name)
-    Iterator.continually(q.poll()).takeWhile(_ != null).toSeq
+    val v = queue(name).detach()
+    try v.messages finally v.delete()
   }
 
   def clear(name: String): Unit = {
-    queues.remove(name)
+    Option(queues.remove(name)).foreach(_.delete())
     receives.remove(name)
     dlqMoves.remove(name)
   }
 
-  def all(name: String): Seq[QueueMessage] = queue(name).iterator().asScala.toSeq
+  def all(name: String): Seq[QueueMessage] = queue(name).view.messages
 
-  /** The [start, end) log slice, without materializing the whole queue
-    * (the streaming source slices per micro-batch; copying the full log per
-    * planning would make an N-message drain O(N²) driver work). Offsets
-    * past Int.MaxValue fail loudly instead of wrapping.
+  /** The [start, end) log slice: reads and decodes only those records, so
+    * a micro-batch costs O(batch), not O(end). Offsets past Int.MaxValue
+    * fail loudly instead of wrapping.
     */
   def slice(name: String, start: Long, end: Long): Seq[QueueMessage] =
-    queue(name).iterator().asScala
-      .slice(Math.toIntExact(start), Math.toIntExact(end)).toSeq
+    records(name, start, end).map(_.message).toVector
+
+  /** [[slice]] as raw records, for readers that build rows from the stored
+    * UTF-8 bytes.
+    */
+  def records(name: String, start: Long, end: Long): Iterator[LogRecord] =
+    queue(name).view.records(start, end)
 
   /** Record one receive of `id` on `name`; returns the new count. Counts
     * survive consumer restarts (process-lifetime), which is what lets a
@@ -108,7 +118,8 @@ class DiscardQueueClient extends QueueClient {
   * `failFirstAttempts` fail until they have been attempted that many times
   * (exercises the retry path); ids in `poisonIds` always fail (exercises the
   * dead-letter path, reference redrive `maxReceiveCount: 5`,
-  * template.yaml:10-12).
+  * template.yaml:10-12). A null id never fails. The accepted messages of
+  * one `send` go to the queue in one append.
   */
 class InMemoryQueueClient(
     queueName: String,
@@ -116,18 +127,20 @@ class InMemoryQueueClient(
     poisonIds: Set[String] = Set.empty)
   extends QueueClient {
 
-  private val attempts = new ConcurrentHashMap[String, Integer]()
+  // keyed by Option(id): a ConcurrentHashMap takes no null key
+  private val attempts = new ConcurrentHashMap[Option[String], Integer]()
 
   override def send(batch: Seq[QueueMessage]): BatchSendResult = {
     require(batch.size <= maxBatchSize,
       s"batch of ${batch.size} exceeds maxBatchSize=$maxBatchSize")
     val failed = batch.filter { m =>
-      val n = attempts.merge(m.id, Integer.valueOf(1), (a, b) =>
+      val n = attempts.merge(Option(m.id), Integer.valueOf(1), (a, b) =>
         Integer.valueOf(a.intValue + b.intValue)).intValue
-      poisonIds.contains(m.id) || n <= failFirstAttempts.getOrElse(m.id, 0)
+      m.id != null &&
+        (poisonIds.contains(m.id) || n <= failFirstAttempts.getOrElse(m.id, 0))
     }
     val ok = batch.filterNot(m => failed.exists(_.id == m.id))
-    ok.foreach(InMemoryQueue.queue(queueName).add)
+    InMemoryQueue.queue(queueName).append(ok)
     BatchSendResult(failed.map(_.id))
   }
 }

@@ -356,19 +356,18 @@ private[v2] class KafkaShimReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
     val slice = partition.asInstanceOf[TopicSlice]
-    val msgs = InMemoryQueue.slice(
+    val records = InMemoryQueue.records(
       TopicDataSource.queueName(slice.topic, slice.partition),
       slice.start, slice.end)
     new PartitionReader[InternalRow] {
-      private val it = msgs.iterator
       private var pos = slice.start - 1
       private var cur: InternalRow = _
       override def next(): Boolean =
-        if (it.hasNext) {
-          val m = it.next()
+        if (records.hasNext) {
+          val r = records.next()
           pos += 1
           cur = new GenericInternalRow(Array[Any](
-            m.id.getBytes("UTF-8"), m.body.getBytes("UTF-8"),
+            r.idUtf8.getBytes, r.bodyUtf8.getBytes,
             UTF8String.fromString(slice.topic), slice.partition, pos,
             pos * 1000L, // offset ms since epoch, in micros (see scaladoc)
             0))

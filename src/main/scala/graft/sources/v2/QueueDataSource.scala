@@ -11,7 +11,6 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.pipeline.InMemoryQueue
 
@@ -27,6 +26,16 @@ import graft.pipeline.InMemoryQueue
   * of consumers), and replay from any retained offset is possible, which is
   * what gives checkpoint-restart its exactly-once story. `spark.read` (batch)
   * on the same format snapshots the current log.
+  *
+  * The log is the queue's [[graft.pipeline.QueueLog]]: length-prefixed
+  * UTF-8 records in append-only segment files under the JVM's
+  * `graft-queue-<uuid>` dir (in the first of `SPARK_LOCAL_DIRS`,
+  * `spark.local.dir` and `java.io.tmpdir`), found by an 8-byte-per-message
+  * offset index. A micro-batch reads and decodes only its own [start, end)
+  * records, O(batch) however long the log, and builds its rows straight
+  * from the stored bytes (`UTF8String.fromBytes`, no `String` round trip).
+  * A raw lone surrogate in a body therefore reads back as `?`, as
+  * `UTF8String.fromString` stores it.
   *
   * Redrive policy AT THE SOURCE (the reference's `maxReceiveCount: 5` +
   * DLQ, template.yaml:10-12), enabled by setting `maxReceiveCount` and/or
@@ -173,13 +182,13 @@ private[v2] class QueueMicroBatchStream(queueName: String,
     else {
       // Receive counting happens at planning, once per delivery (see
       // `counted`) — and ONLY under a configured redrive policy: the
-      // counting walk is O(end) driver work per batch, so policy-free
+      // counting walk is O(batch) driver work per batch, so policy-free
       // streams skip it entirely. Driver-side per-message state is the
       // local stand-in for what a real broker tracks
       // (ApproximateReceiveCount).
       if (policy.isDefined && counted.add((s, e)))
-        InMemoryQueue.slice(queueName, s, e)
-          .foreach(m => InMemoryQueue.incReceive(queueName, m.id))
+        InMemoryQueue.records(queueName, s, e)
+          .foreach(r => InMemoryQueue.incReceive(queueName, r.id))
       Array(QueueSlice(queueName, s, e, policy, streaming = true))
     }
   }
@@ -198,34 +207,32 @@ private[v2] class QueueMicroBatchStream(queueName: String,
 private[v2] class QueueReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val slice = partition.asInstanceOf[QueueSlice]
-    // ConcurrentLinkedQueue iterates head→tail and is append-only under this
-    // source (nothing drains), so index slicing is stable across batches.
-    val msgs = InMemoryQueue.slice(slice.queueName, slice.start, slice.end)
+    // The log is append-only under this source (nothing drains), so offset
+    // slicing is stable across batches; the slice reads only its records.
+    val records = InMemoryQueue.records(slice.queueName, slice.start, slice.end)
     new PartitionReader[InternalRow] {
-      private val it = msgs.iterator
       private var cur: InternalRow = _
       // Policy-free streamed reads skip the per-row count lookup: nothing
       // was counted at planning, so the truthful per-delivery value is 1.
       private val lookupCounts = slice.policy.isDefined || !slice.streaming
       override def next(): Boolean = {
-        while (it.hasNext) {
-          val m = it.next()
+        while (records.hasNext) {
+          val r = records.next()
           // counts were recorded at batch-planning time; the reader only
           // READS them, so re-executed scans cannot inflate receives
-          val n =
-            if (lookupCounts) InMemoryQueue.receiveCount(slice.queueName, m.id)
-            else 1
+          val id = if (lookupCounts) r.id else null
+          val n = if (lookupCounts) InMemoryQueue.receiveCount(slice.queueName, id) else 1
           val dlq = slice.policy.filter(p =>
             slice.streaming && n > p.maxReceiveCount)
           if (dlq.isDefined) {
             // redrive: exceeded maxReceiveCount — dead-letter instead of
             // delivering. claimDlqMove appends exactly once even if this
             // scan executes several times for the batch.
-            if (InMemoryQueue.claimDlqMove(slice.queueName, m.id))
-              InMemoryQueue.queue(dlq.get.dlq).add(m)
+            if (InMemoryQueue.claimDlqMove(slice.queueName, id))
+              InMemoryQueue.queue(dlq.get.dlq).add(r.message)
           } else {
-            cur = new GenericInternalRow(Array[Any](
-              UTF8String.fromString(m.id), UTF8String.fromString(m.body), n))
+            // straight from the stored UTF-8 bytes, no String round trip
+            cur = new GenericInternalRow(Array[Any](r.idUtf8, r.bodyUtf8, n))
             return true
           }
         }

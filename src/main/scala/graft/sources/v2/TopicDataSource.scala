@@ -11,7 +11,6 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.pipeline.{InMemoryQueue, QueueMessage}
 
@@ -202,19 +201,18 @@ private[v2] class TopicReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
     val slice = partition.asInstanceOf[TopicSlice]
-    val msgs = InMemoryQueue.slice(
+    val records = InMemoryQueue.records(
       TopicDataSource.queueName(slice.topic, slice.partition),
       slice.start, slice.end)
     new PartitionReader[InternalRow] {
-      private val it = msgs.iterator
       private var pos = slice.start - 1
       private var cur: InternalRow = _
       override def next(): Boolean =
-        if (it.hasNext) {
-          val m = it.next()
+        if (records.hasNext) {
+          val r = records.next()
           pos += 1
           cur = new GenericInternalRow(Array[Any](slice.partition, pos,
-            UTF8String.fromString(m.id), UTF8String.fromString(m.body)))
+            r.idUtf8, r.bodyUtf8))
           true
         } else false
       override def get(): InternalRow = cur

@@ -17,6 +17,8 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
+import graft.fs.SourcelessConfiguration
+
 /** Writes one micro-batch of one streaming query as parquet under
   * `<outPath>/batch_id=<id>`, in the layout `batch.write.parquet` leaves:
   * `part-<partition>-<token>-c<n><codec>.parquet` files and a `_SUCCESS`
@@ -26,11 +28,13 @@ import org.apache.spark.util.SerializableConfiguration
   * thousand entries) inside every task and commits through
   * `FileOutputCommitter`'s `_temporary` renames. Here the configuration
   * `ParquetFileFormat.prepareWrite` fills in is broadcast once per query
-  * and schema; a task reads it from the block manager. Each batch is one
-  * job over its rows: each task writes its part files into the hidden
-  * staging dir `.batch_id=<id>.<token>` (Spark's listing skips names that
-  * start with `.`), then the driver writes `_SUCCESS`, deletes an older
-  * `batch_id=<id>` and renames the staging dir into place. A crash before
+  * and schema, as a [[graft.fs.SourcelessConfiguration]] (no gzipped
+  * source list per property); a task reads it from the block manager.
+  * Each batch is one job over its rows: each task writes its part files
+  * into the hidden staging dir `.batch_id=<id>.<token>` (Spark's listing
+  * skips names that start with `.`), then the driver writes `_SUCCESS`,
+  * deletes an older `batch_id=<id>` and renames the staging dir into
+  * place. A crash before
   * the rename leaves the old output (or none) visible; the re-run batch
   * deletes the dead staging dir. The token is new for every write, so a
   * replayed batch's part files get new names.
@@ -91,7 +95,8 @@ private[streaming] final class BatchParquetWriter(outPath: String,
       job.setOutputValueClass(classOf[InternalRow])
       val factory = format.prepareWrite(spark, job, Map.empty, schema)
       val p = Prepared(schema, factory,
-        spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration)))
+        spark.sparkContext.broadcast(new SerializableConfiguration(
+          new SourcelessConfiguration(job.getConfiguration))))
       prepared = Some(p)
       p
     }

@@ -268,6 +268,25 @@ class PipelineSpec extends SparkSpec {
     assert(StagedBodies.liveIds.isEmpty)
   }
 
+  test("a dropped consumed frame's staged segments are deleted once it is unreachable") {
+    published("q19", 40L, 19L)
+    val files = InMemoryQueue.queue("q19").segmentFiles
+    assert(files.nonEmpty && files.forall(java.nio.file.Files.exists(_)))
+    // the frame is only reachable inside this call
+    def consumedRows(): Long =
+      Consumer.consume(spark, "q19", Encoders.product[Record].schema).count()
+    assert(consumedRows() === 40L)
+    // consume detached the segments: the queue no longer owns them
+    assert(InMemoryQueue.queue("q19").segmentFiles.isEmpty)
+    def left = files.filter(java.nio.file.Files.exists(_))
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (left.nonEmpty && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(100)
+    }
+    assert(left.isEmpty, left)
+  }
+
   test("a task whose staged snapshot is gone fails naming it") {
     // an id the registry never staged: what a task sees once the snapshot
     // was collected or when it runs in another JVM

@@ -123,6 +123,26 @@ class PublishMetricsSpec extends SparkSpec {
     assert(dead.metrics == Seq((4L, bytes)))
   }
 
+  test("rows with a null id publish through InMemoryQueueClient") {
+    val dir = tmpDir("pub-nullid")
+    import spark.implicits._
+    Seq(Some(1L) -> "a", None -> "b", Some(3L) -> "c", None -> "d")
+      .toDF("k", "text").write.mode("overwrite").parquet(dir)
+    val req = Publisher.PublishRequest(Seq(dir), idColumn = "k")
+    val qn = s"pub-nullid-${java.util.UUID.randomUUID()}"
+    val res = Publisher.publish(spark, req, new InMemoryQueueClient(qn))
+    assert(res.publishedRows == 4L && res.failedRows == 0L)
+    assert(InMemoryQueue.all(qn).map(_.id).sortBy(Option(_)) == Seq(null, null, "1", "3"))
+    // a null id is neither a poison id nor a fail-first id
+    val faulty = s"pub-nullid-faults-${java.util.UUID.randomUUID()}"
+    val dead = Publisher.publish(spark, req,
+      new InMemoryQueueClient(faulty, failFirstAttempts = Map("3" -> 1), poisonIds = Set("1")))
+    assert(dead.publishedRows == 3L && dead.deadLetters.map(_.id) == Seq("1"))
+    assert(InMemoryQueue.all(faulty).map(_.id).sortBy(Option(_)) == Seq(null, null, "3"))
+    InMemoryQueue.clear(qn)
+    InMemoryQueue.clear(faulty)
+  }
+
   test("the publish plan sends from its own rows, with no object deserializer") {
     val seen = observing {
       Publisher.publish(spark,

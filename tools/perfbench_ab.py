@@ -21,7 +21,9 @@ over the untraced runs, how many pairs the change won, whether the gap
 between the medians exceeds the parent's interquartile range, whether the
 change median stays within the metric's bound, and the claim verdict: at
 least ten pairs, the change better in at least nine of every ten, and the
-median gap beyond the parent's interquartile range.
+median gap beyond the parent's interquartile range. Next to it, per side,
+the quartiles of the per-iteration walls (`per_iteration_*`) and of the
+retained heap at each stage boundary the harness samples (`heap_mb_*`).
 """
 import argparse
 import json
@@ -132,6 +134,26 @@ def summarize(runs, end_to_end):
             if meds:
                 sides[side] = quartiles(meds)
         out[f"per_iteration_{key}"] = sides
+    # retained heap per stage boundary, from the harness's
+    # "heap_mb_median_max" detail ("after_publish=102.0/130.4 ..."): the
+    # quartiles over the runs of each run's median at that boundary, so a
+    # heap claim shows which boundary moved
+    heap = {side: [heap_medians(r["detail"].get("heap_mb_median_max", ""))
+                   for r in untraced if r["side"] == side]
+            for side in ("parent", "change")}
+    for b in sorted({b for hs in heap.values() for h in hs for b in h}):
+        out[f"heap_mb_{b}"] = {side: quartiles([h[b] for h in hs if b in h])
+                               for side, hs in heap.items() if any(b in h for h in hs)}
+    return out
+
+
+def heap_medians(detail):
+    """{"after_publish": 102.0, ...} from "after_publish=102.0/130.4 ..."."""
+    out = {}
+    for item in detail.split():
+        name, _, vals = item.partition("=")
+        if vals:
+            out[name] = float(vals.split("/")[0])
     return out
 
 
