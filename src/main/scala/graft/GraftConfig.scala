@@ -34,6 +34,9 @@ case class GraftConfig(
     queueUrl: String = "",
     queueBatchSize: Int = 10,
     fsEndpointOverride: String = "") {
+  // A batch size below 1 would only fail later, inside every publish task.
+  require(queueBatchSize >= 1,
+    s"SQS_BATCH_SIZE / queueBatchSize must be at least 1, got $queueBatchSize")
 
   /** Resolve a table name to its parquet URI under `baseUri`. */
   def tablePath(name: String): String = {
@@ -77,6 +80,8 @@ object GraftConfig {
     env = env.getOrElse("ENV", "local"),
     baseUri = env.getOrElse("GRAFT_BASE_URI", ""),
     queueUrl = env.getOrElse("QUEUE_URL", ""),
-    queueBatchSize = env.get("SQS_BATCH_SIZE").map(_.toInt).getOrElse(10),
+    queueBatchSize = env.get("SQS_BATCH_SIZE").map(v => v.toIntOption
+      .getOrElse(throw new IllegalArgumentException(
+        s"SQS_BATCH_SIZE must be an integer, got '$v'"))).getOrElse(10),
     fsEndpointOverride = env.getOrElse("S3_ENDPOINT_OVERRIDE", ""))
 }

@@ -28,17 +28,10 @@ object Tables {
     * input fixture. Every query still scans the parquet DATA from disk on
     * every execution. The cluster analog is reading through a catalog
     * table, where schema and file manifest are likewise resolved once.
-    */
-  private val handles =
-    new scala.collection.concurrent.TrieMap[(String, String, String), DataFrame]
-
-  /** Keyed by the session's `sessionUUID`: an identity hash can collide,
-    * or be reused once a session is collected, and hand one session a
-    * handle bound to another.
+    * Held by [[Staging.memo]].
     */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    handles.getOrElseUpdate(
-      (org.apache.spark.sql.GraftSqlShim.sessionUUID(spark), dir, name),
+    Staging.memo(spark, s"table $dir/$name")(
       if (name == "events") normalizeEventTs(eventsRaw(spark, dir))
       else spark.read.parquet(s"$dir/$name.parquet"))
 

@@ -34,8 +34,7 @@ trait QueueClient extends Serializable {
   * layout and where the dir lives), and the heap holds only an 8-byte
   * offset per message, plus the receive counts and dead-letter moves of a
   * redrive policy when one is used. `size` is O(1) and `slice` decodes only
-  * its own records. `drain` detaches the current segments: later sends go
-  * to fresh ones. `clear` deletes the queue's segments. Bodies are stored
+  * its own records. `clear` deletes the queue's segments. Bodies are stored
   * as UTF-8, so a raw lone surrogate in a body comes back as `?`.
   */
 object InMemoryQueue {
@@ -48,11 +47,6 @@ object InMemoryQueue {
   def queue(name: String): QueueLog = queues.computeIfAbsent(name, _ => new QueueLog)
 
   def size(name: String): Int = queue(name).size
-
-  def drain(name: String): Seq[QueueMessage] = {
-    val v = queue(name).detach()
-    try v.messages finally v.delete()
-  }
 
   def clear(name: String): Unit = {
     Option(queues.remove(name)).foreach(_.delete())

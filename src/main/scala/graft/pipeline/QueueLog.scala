@@ -5,7 +5,7 @@ import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
-import java.util.{Arrays, Comparator, UUID}
+import java.util.{Arrays, UUID}
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 import org.apache.spark.SparkEnv
@@ -101,14 +101,8 @@ object QueueLog {
       .getOrElse(System.getProperty("java.io.tmpdir"))
     val d = Paths.get(base).resolve(s"graft-queue-${UUID.randomUUID()}")
     Files.createDirectories(d)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(d), "graft-queue-cleanup"))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => graft.fs.deleteTree(d), "graft-queue-cleanup"))
     d
-  }
-
-  private def deleteTree(d: Path): Unit = if (Files.exists(d)) {
-    val paths = Files.walk(d)
-    try paths.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
-    finally paths.close()
   }
 
   private def newSegment(): Segment =

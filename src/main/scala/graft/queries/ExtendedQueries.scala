@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Staging
 import graft.Tables.t
 import graft.functions.Aggregators
 import graft.operators.TemporalJoins
@@ -582,8 +583,7 @@ object ExtendedQueries {
     // schema-drift posture every long-lived 100 TB dataset needs; merging
     // happens at footer level, scans stay columnar.
     "schema_evolution" -> ((s, dir) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-evolve-").toString
+      val out = Staging.dir(s, "graft-evolve-")
       val orders = t(s, dir, "orders")
       orders.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))

@@ -1,10 +1,11 @@
 package graft.queries
 
-import java.nio.file.Files
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Staging
 import graft.Tables.t
 import graft.operators.{Layout, Manifest, Segments}
 
@@ -19,25 +20,20 @@ object FormatQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   /** orders scaled into the 16-bit curve domain (raw o_orderkey exceeds
     * 65535 past sf0.01 and would wrap, shredding locality) — shared by
     * every layout query so the contract and timed forms scale
-    * identically. Bounds are data statistics, memoized per dir (the
-    * binWidthCache convention: a timer must not pay a fixture-statistics
-    * scan per rep).
+    * identically. Bounds are data statistics, memoized per dir through
+    * [[Staging.memo]] (a timer must not pay a fixture-statistics scan per
+    * rep).
     */
-  private val ordersBoundsCache =
-    new scala.collection.concurrent.TrieMap[String, (Long, Long)]
   private def scaledOrders(s: SparkSession, dir: String): DataFrame = {
     val raw = t(s, dir, "orders")
       .select(col("o_custkey"), col("o_orderkey"))
-    val (xMax, yMax) = ordersBoundsCache.getOrElseUpdate(dir, {
+    val (xMax, yMax) = Staging.memo(s, s"orders-bounds $dir") {
       val b = raw.agg(max(col("o_custkey")), max(col("o_orderkey"))).head()
       (b.getLong(0), b.getLong(1))
-    })
+    }
     raw.select(
       (col("o_custkey") * 65535L / xMax).cast("long").as("x"),
       (col("o_orderkey") * 65535L / yMax).cast("long").as("y"))
@@ -61,7 +57,7 @@ object FormatQueries {
 
     // CSV sink + source (schema-applied read; header mode).
     "csv_roundtrip" -> ((s, dir) => {
-      val out = tmp("graft-csv-")
+      val out = Staging.dir(s, "graft-csv-")
       val nation = t(s, dir, "nation")
       nation.write.mode("overwrite").option("header", "true").csv(out)
       s.read.option("header", "true").schema(nation.schema).csv(out)
@@ -72,7 +68,7 @@ object FormatQueries {
 
     // JSON-lines sink + source.
     "json_roundtrip" -> ((s, dir) => {
-      val out = tmp("graft-json-")
+      val out = Staging.dir(s, "graft-json-")
       val supplier = t(s, dir, "supplier")
       supplier.write.mode("overwrite").json(out)
       s.read.schema(supplier.schema).json(out)
@@ -84,7 +80,7 @@ object FormatQueries {
 
     // ORC sink + source (the other columnar format Spark ships natively).
     "orc_roundtrip" -> ((s, dir) => {
-      val out = tmp("graft-orc-")
+      val out = Staging.dir(s, "graft-orc-")
       val part = t(s, dir, "part")
       part.write.mode("overwrite").orc(out)
       s.read.orc(out)
@@ -103,7 +99,7 @@ object FormatQueries {
     // The oracle applies the same 1-in-7 predicate to the source table.
     "csv_malformed_tolerance" -> ((s, dir) => {
       import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
-      val out = tmp("graft-csvbad-")
+      val out = Staging.dir(s, "graft-csvbad-")
       t(s, dir, "events")
         .select(concat_ws(",", col("event_id"),
           when(col("event_id") % 7 === 0, lit("not-a-number"))
@@ -138,7 +134,7 @@ object FormatQueries {
     // partition directory (the plan's "partition filters" — at 100 TB this
     // is the difference between reading one directory and the whole table).
     "partitioned_write_scan" -> ((s, dir) => {
-      val out = tmp("graft-part-")
+      val out = Staging.dir(s, "graft-part-")
       t(s, dir, "orders").write.mode("overwrite")
         .partitionBy("o_orderstatus").parquet(out)
       s.read.parquet(out)
@@ -215,7 +211,7 @@ object FormatQueries {
     // (checksum) — the maintenance pass that keeps a streaming sink's
     // output scannable (Maintenance.compactParquet).
     "compact_files" -> ((s, dir) => {
-      val out = tmp("graft-compact-")
+      val out = Staging.dir(s, "graft-compact-")
       t(s, dir, "orders").repartition(40)
         .write.mode("overwrite").parquet(out)
       val before = Contracts.checksum(s.read.parquet(out))
@@ -234,7 +230,7 @@ object FormatQueries {
     // the idempotent-backfill primitive for a partitioned 100 TB table
     // (static overwrite mode would truncate every partition first).
     "dynamic_partition_overwrite" -> ((s, dir) => {
-      val out = tmp("graft-dynpart-")
+      val out = Staging.dir(s, "graft-dynpart-")
       val orders = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
       orders.write.mode("overwrite")
@@ -330,8 +326,8 @@ object FormatQueries {
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
       val base = li.filter(col("l_orderkey") % 4 =!= 3)
       val batch = li.filter(col("l_orderkey") % 4 === 3)
-      val tbl = tmp("graft-mantbl-")
-      val man = tmp("graft-manifest-")
+      val tbl = Staging.dir(s, "graft-mantbl-")
+      val man = Staging.dir(s, "graft-manifest-")
       Layout.layoutWriteExact(base,
         Seq(col("l_orderkey"), col("l_linenumber")), s"$tbl/d0", 6)
       Layout.layoutWriteExact(batch,
@@ -379,8 +375,8 @@ object FormatQueries {
     "manifest_time_travel" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-      val tbl = tmp("graft-mantt-tbl-")
-      val man = tmp("graft-mantt-")
+      val tbl = Staging.dir(s, "graft-mantt-tbl-")
+      val man = Staging.dir(s, "graft-mantt-")
       val slices = (0 to 2).map(i => li.filter(col("l_orderkey") % 3 === i))
       slices.zipWithIndex.foreach { case (sl, i) =>
         sl.coalesce(2).write.mode("overwrite").parquet(s"$tbl/d$i")
@@ -421,8 +417,8 @@ object FormatQueries {
       val li = t(s, dir, "lineitem").select(col("l_orderkey"),
         when(col("l_partkey") % 7 === 0, lit(null))
           .otherwise(col("l_partkey")).as("pk"))
-      val tbl = tmp("graft-mancnt-tbl-")
-      val man = tmp("graft-mancnt-man-")
+      val tbl = Staging.dir(s, "graft-mancnt-tbl-")
+      val man = Staging.dir(s, "graft-mancnt-man-")
       li.coalesce(4).write.mode("overwrite").parquet(s"$tbl/d0")
       Manifest.buildManifest(s, s"$tbl/d0", Seq("pk"), man)
       val co = Manifest.countOnly(s, man, "pk")
@@ -451,9 +447,9 @@ object FormatQueries {
     "manifest_ndv" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"))
-      val tbl = tmp("graft-manndv-tbl-")
-      val man = tmp("graft-manndv-man-")
-      val idx = tmp("graft-manndv-idx-")
+      val tbl = Staging.dir(s, "graft-manndv-tbl-")
+      val man = Staging.dir(s, "graft-manndv-man-")
+      val idx = Staging.dir(s, "graft-manndv-idx-")
       val mx = li.agg(max(col("l_orderkey"))).head().getLong(0)
       // ingest in two batches (build + append) so the estimate is served
       // from a multi-segment store — the streaming-maintenance shape
@@ -527,8 +523,8 @@ object FormatQueries {
     "manifest_index_unified" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
-      val tbl = tmp("graft-manuni-tbl-")
-      val man = tmp("graft-manuni-man-")
+      val tbl = Staging.dir(s, "graft-manuni-tbl-")
+      val man = Staging.dir(s, "graft-manuni-man-")
       val mx = li.agg(max(col("l_orderkey"))).head().getLong(0)
       li.filter(col("l_orderkey") <= mx / 2)
         .repartitionByRange(4, col("l_orderkey"))
@@ -538,10 +534,10 @@ object FormatQueries {
         .write.mode("overwrite").parquet(s"$tbl/d1")
       Manifest.buildManifest(s, s"$tbl/d0", Seq("l_orderkey"), man)
       Manifest.appendToManifest(s, Seq(s"$tbl/d1"), Seq("l_orderkey"), man)
-      val (bA, nA, kA) = (tmp("graft-manuni-ba-"), tmp("graft-manuni-na-"),
-        tmp("graft-manuni-ka-"))
-      val (bB, nB, kB) = (tmp("graft-manuni-bb-"), tmp("graft-manuni-nb-"),
-        tmp("graft-manuni-kb-"))
+      val (bA, nA, kA) = (Staging.dir(s, "graft-manuni-ba-"),
+        Staging.dir(s, "graft-manuni-na-"), Staging.dir(s, "graft-manuni-ka-"))
+      val (bB, nB, kB) = (Staging.dir(s, "graft-manuni-bb-"),
+        Staging.dir(s, "graft-manuni-nb-"), Staging.dir(s, "graft-manuni-kb-"))
       Manifest.buildBloomIndex(s, s"$tbl/d0", "l_partkey", bA)
       Manifest.appendToBloomIndex(s, Seq(s"$tbl/d1"), "l_partkey", bA,
         batchId = 1L)
@@ -622,8 +618,8 @@ object FormatQueries {
     "manifest_zorder_box" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
-      val tbl = tmp("graft-manzb-tbl-")
-      val man = tmp("graft-manzb-")
+      val tbl = Staging.dir(s, "graft-manzb-tbl-")
+      val man = Staging.dir(s, "graft-manzb-")
       Layout.zorderWriteExact(li, "l_partkey", "l_suppkey", s"$tbl/d0", 16)
       Manifest.buildManifest(s, s"$tbl/d0",
         Seq("l_partkey", "l_suppkey"), man)
@@ -656,9 +652,9 @@ object FormatQueries {
     "manifest_hilbert_box" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
-      val tbl = tmp("graft-manhb-tbl-")
-      val hMan = tmp("graft-manhb-h-")
-      val zMan = tmp("graft-manhb-z-")
+      val tbl = Staging.dir(s, "graft-manhb-tbl-")
+      val hMan = Staging.dir(s, "graft-manhb-h-")
+      val zMan = Staging.dir(s, "graft-manhb-z-")
       Layout.hilbertWriteExact(li, "l_partkey", "l_suppkey",
         s"$tbl/dh", 16)
       Layout.zorderWriteExact(li, "l_partkey", "l_suppkey", s"$tbl/dz", 16)
@@ -696,8 +692,8 @@ object FormatQueries {
     "manifest_history" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"))
-      val tbl = tmp("graft-manh-tbl-")
-      val man = tmp("graft-manh-man-")
+      val tbl = Staging.dir(s, "graft-manh-tbl-")
+      val man = Staging.dir(s, "graft-manh-man-")
       val mx = li.agg(max(col("l_orderkey"))).head().getLong(0)
       li.filter(col("l_orderkey") <= mx / 2)
         .repartitionByRange(2, col("l_orderkey"))
@@ -741,9 +737,9 @@ object FormatQueries {
     "manifest_quantile" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"))
-      val tbl = tmp("graft-manq-tbl-")
-      val man = tmp("graft-manq-man-")
-      val idx = tmp("graft-manq-idx-")
+      val tbl = Staging.dir(s, "graft-manq-tbl-")
+      val man = Staging.dir(s, "graft-manq-man-")
+      val idx = Staging.dir(s, "graft-manq-idx-")
       li.repartitionByRange(4, col("l_orderkey"))
         .sortWithinPartitions(col("l_orderkey"))
         .write.mode("overwrite").parquet(s"$tbl/d0")
@@ -792,8 +788,8 @@ object FormatQueries {
       val li = t(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"),
           col("l_quantity"))
-      val tbl = tmp("graft-manz3-tbl-")
-      val man = tmp("graft-manz3-")
+      val tbl = Staging.dir(s, "graft-manz3-tbl-")
+      val man = Staging.dir(s, "graft-manz3-")
       Layout.zorder3WriteExact(li, "l_partkey", "l_suppkey", "l_orderkey",
         s"$tbl/d0", 16)
       Manifest.buildManifest(s, s"$tbl/d0",
@@ -832,8 +828,8 @@ object FormatQueries {
     "manifest_zorder_optimize" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
-      val tbl = tmp("graft-manzo-tbl-")
-      val man = tmp("graft-manzo-man-")
+      val tbl = Staging.dir(s, "graft-manzo-tbl-")
+      val man = Staging.dir(s, "graft-manzo-man-")
       li.repartition(16, col("l_partkey").cast("string"))
         .write.mode("overwrite").parquet(s"$tbl/d0")
       Manifest.buildManifest(s, s"$tbl/d0",
@@ -876,14 +872,14 @@ object FormatQueries {
     "manifest_hilbert_optimize" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
-      val tbl = tmp("graft-manho-tbl-")
-      val hMan = tmp("graft-manho-hman-")
-      val zMan = s"${tmp("graft-manho-z-")}/man"
+      val tbl = Staging.dir(s, "graft-manho-tbl-")
+      val hMan = Staging.dir(s, "graft-manho-hman-")
+      val zMan = s"${Staging.dir(s, "graft-manho-z-")}/man"
       li.repartition(16, col("l_partkey").cast("string"))
         .write.mode("overwrite").parquet(s"$tbl/d0")
       Manifest.buildManifest(s, s"$tbl/d0",
         Seq("l_partkey", "l_suppkey"), hMan)
-      copyDir(s, hMan, zMan)
+      graft.fs.copyTree(Paths.get(hMan), Paths.get(zMan))
       val mx = li.agg(max(col("l_partkey")), max(col("l_suppkey"))).head()
       val (xLo, xHi) = (mx.getLong(0) / 4, mx.getLong(0) / 2)
       val (yLo, yHi) = (mx.getLong(1) / 4, mx.getLong(1) / 2)
@@ -928,9 +924,9 @@ object FormatQueries {
       val li = t(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"),
           col("l_quantity"))
-      val tbl = tmp("graft-manh3-tbl-")
-      val hMan = tmp("graft-manh3-h-")
-      val zMan = tmp("graft-manh3-z-")
+      val tbl = Staging.dir(s, "graft-manh3-tbl-")
+      val hMan = Staging.dir(s, "graft-manh3-h-")
+      val zMan = Staging.dir(s, "graft-manh3-z-")
       Layout.hilbert3WriteExact(li, "l_partkey", "l_suppkey", "l_orderkey",
         s"$tbl/dh", 16)
       Layout.zorder3WriteExact(li, "l_partkey", "l_suppkey", "l_orderkey",
@@ -986,9 +982,9 @@ object FormatQueries {
       // BOUNDED slice of the sorted files, not all of them
       val boxCond = col("l_partkey") > px * 3 / 4 &&
         col("l_suppkey") > py * 3 / 4
-      val tbl = tmp("graft-manoi-tbl-")
-      val incMan = tmp("graft-manoi-inc-")
-      val fullMan = s"${tmp("graft-manoi-f-")}/man"
+      val tbl = Staging.dir(s, "graft-manoi-tbl-")
+      val incMan = Staging.dir(s, "graft-manoi-inc-")
+      val fullMan = s"${Staging.dir(s, "graft-manoi-f-")}/man"
       Layout.hilbertWriteExact(li.filter(!boxCond),
         "l_partkey", "l_suppkey", s"$tbl/d0", 12)
       li.filter(boxCond).repartition(2, col("l_partkey"))
@@ -997,7 +993,7 @@ object FormatQueries {
         Seq("l_partkey", "l_suppkey"), incMan)
       Manifest.appendToManifest(s, Seq(s"$tbl/d1"),
         Seq("l_partkey", "l_suppkey"), incMan)
-      copyDir(s, incMan, fullMan)
+      graft.fs.copyTree(Paths.get(incMan), Paths.get(fullMan))
       val liveBefore = Manifest.readManifest(s, incMan)
         .select(col("file")).collect().map(_.getString(0)).toSet
       val preChk = Contracts.checksum(Manifest.fullRead(s, incMan)
@@ -1058,9 +1054,9 @@ object FormatQueries {
       val (px, py, pz) = (mx.getLong(0), mx.getLong(1), mx.getLong(2))
       val boxCond = col("l_partkey") > px * 3 / 4 &&
         col("l_suppkey") > py * 3 / 4 && col("l_orderkey") > pz * 3 / 4
-      val tbl = tmp("graft-manoi3-tbl-")
-      val incMan = tmp("graft-manoi3-inc-")
-      val fullMan = s"${tmp("graft-manoi3-f-")}/man"
+      val tbl = Staging.dir(s, "graft-manoi3-tbl-")
+      val incMan = Staging.dir(s, "graft-manoi3-inc-")
+      val fullMan = s"${Staging.dir(s, "graft-manoi3-f-")}/man"
       Layout.hilbert3WriteExact(li.filter(!boxCond),
         "l_partkey", "l_suppkey", "l_orderkey", s"$tbl/d0", 12)
       li.filter(boxCond).repartition(2, col("l_partkey"))
@@ -1068,7 +1064,7 @@ object FormatQueries {
       val cols = Seq("l_partkey", "l_suppkey", "l_orderkey")
       Manifest.buildManifest(s, s"$tbl/d0", cols, incMan)
       Manifest.appendToManifest(s, Seq(s"$tbl/d1"), cols, incMan)
-      copyDir(s, incMan, fullMan)
+      graft.fs.copyTree(Paths.get(incMan), Paths.get(fullMan))
       val liveBefore = Manifest.readManifest(s, incMan)
         .select(col("file")).collect().map(_.getString(0)).toSet
       def served(man: String) = Manifest.fullRead(s, man)
@@ -1143,10 +1139,10 @@ object FormatQueries {
       val (px, py) = (mx.getLong(0), mx.getLong(1))
       val boxCond = col("l_partkey") > px * 3 / 4 &&
         col("l_suppkey") > py * 3 / 4
-      val tbl = tmp("graft-manob-tbl-")
-      val incMan = tmp("graft-manob-inc-")
-      val fullMan = s"${tmp("graft-manob-f-")}/man"
-      val budMan = tmp("graft-manob-bud-")
+      val tbl = Staging.dir(s, "graft-manob-tbl-")
+      val incMan = Staging.dir(s, "graft-manob-inc-")
+      val fullMan = s"${Staging.dir(s, "graft-manob-f-")}/man"
+      val budMan = Staging.dir(s, "graft-manob-bud-")
       val cols = Seq("l_partkey", "l_suppkey")
       def served(man: String) = Manifest.fullRead(s, man)
         .groupBy(col("l_partkey"), col("l_suppkey"))
@@ -1159,7 +1155,7 @@ object FormatQueries {
         .write.mode("overwrite").parquet(s"$tbl/d1")
       Manifest.buildManifest(s, s"$tbl/d0", cols, incMan)
       Manifest.appendToManifest(s, Seq(s"$tbl/d1"), cols, incMan)
-      copyDir(s, incMan, fullMan)
+      graft.fs.copyTree(Paths.get(incMan), Paths.get(fullMan))
       val liveBefore = Manifest.readManifest(s, incMan)
         .select(col("file")).collect().map(_.getString(0)).toSet
       val preChk = Contracts.checksum(served(incMan))
@@ -1209,7 +1205,7 @@ object FormatQueries {
       // scattered files (copy-on-write never mutates them): budget ~40%
       // of the table in bytes, file budget unlimited — the unit a
       // production maintenance window is actually sized in ----
-      val bbMan = tmp("graft-manob-bb-")
+      val bbMan = Staging.dir(s, "graft-manob-bb-")
       Manifest.buildManifest(s, s"$tbl/dbud", cols, bbMan)
       val bbBudget = {
         val fs = new java.io.File(s"$tbl/dbud").listFiles()
@@ -1261,8 +1257,8 @@ object FormatQueries {
     "manifest_delete" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-      val tbl = tmp("graft-mandel-tbl-")
-      val man = tmp("graft-mandel-man-")
+      val tbl = Staging.dir(s, "graft-mandel-tbl-")
+      val man = Staging.dir(s, "graft-mandel-man-")
       Layout.layoutWriteExact(li,
         Seq(col("l_orderkey"), col("l_linenumber")), s"$tbl/d0", 8)
       Manifest.buildManifest(s, s"$tbl/d0", Seq("l_orderkey"), man)
@@ -1310,8 +1306,8 @@ object FormatQueries {
     "manifest_merge" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-      val tbl = tmp("graft-manmrg-tbl-")
-      val man = tmp("graft-manmrg-man-")
+      val tbl = Staging.dir(s, "graft-manmrg-tbl-")
+      val man = Staging.dir(s, "graft-manmrg-man-")
       Layout.layoutWriteExact(li,
         Seq(col("l_orderkey"), col("l_linenumber")), s"$tbl/d0", 8)
       Manifest.buildManifest(s, s"$tbl/d0", Seq("l_orderkey"), man)
@@ -1358,8 +1354,8 @@ object FormatQueries {
     "manifest_optimize" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"))
-      val tbl = tmp("graft-manopt-tbl-")
-      val man = tmp("graft-manopt-man-")
+      val tbl = Staging.dir(s, "graft-manopt-tbl-")
+      val man = Staging.dir(s, "graft-manopt-man-")
       li.filter(col("l_orderkey") % 4 === 3).repartition(12)
         .write.mode("overwrite").parquet(s"$tbl/d0")
       li.filter(col("l_orderkey") % 4 =!= 3).repartition(2)
@@ -1410,9 +1406,9 @@ object FormatQueries {
     "manifest_bloom_point" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"))
-      val tbl = tmp("graft-manbl-tbl-")
-      val man = tmp("graft-manbl-man-")
-      val idx = tmp("graft-manbl-idx-")
+      val tbl = Staging.dir(s, "graft-manbl-tbl-")
+      val man = Staging.dir(s, "graft-manbl-man-")
+      val idx = Staging.dir(s, "graft-manbl-idx-")
       li.repartition(16, col("l_orderkey"))
         .write.mode("overwrite").parquet(s"$tbl/d0")
       Manifest.buildManifest(s, s"$tbl/d0", Seq("l_orderkey"), man)
@@ -1757,16 +1753,13 @@ object FormatQueries {
       z3Man: String, zLo3: Long, zHi3: Long,
       zoMan: String, zoTbl: String)
 
-  private val storeCache =
-    new scala.collection.concurrent.TrieMap[String, ManifestStores]
-
   private def stores(s: SparkSession, dir: String): ManifestStores =
-    storeCache.getOrElseUpdate(dir, {
+    Staging.memo(s, s"manifest-stores $dir") {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
       // prune store — the contract query's exact layout (6 + 2 files)
-      val tbl = tmp("graft-mtimed-tbl-")
-      val pruneMan = tmp("graft-mtimed-man-")
+      val tbl = Staging.dir(s, "graft-mtimed-tbl-")
+      val pruneMan = Staging.dir(s, "graft-mtimed-man-")
       Layout.layoutWriteExact(li.filter(col("l_orderkey") % 4 =!= 3),
         Seq(col("l_orderkey"), col("l_linenumber")), s"$tbl/d0", 6)
       Layout.layoutWriteExact(li.filter(col("l_orderkey") % 4 === 3),
@@ -1776,8 +1769,8 @@ object FormatQueries {
         pruneMan)
       // time-travel store — 3 batch segments, uncompacted (history stays
       // addressable)
-      val ttTbl = tmp("graft-mtimed-tttbl-")
-      val ttMan = tmp("graft-mtimed-ttman-")
+      val ttTbl = Staging.dir(s, "graft-mtimed-tttbl-")
+      val ttMan = Staging.dir(s, "graft-mtimed-ttman-")
       (0 to 2).foreach { i =>
         li.filter(col("l_orderkey") % 3 === i).coalesce(2)
           .write.mode("overwrite").parquet(s"$ttTbl/d$i")
@@ -1788,14 +1781,14 @@ object FormatQueries {
       // z-order store — 16 Morton-clustered files
       val li2 = t(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
-      val zTbl = tmp("graft-mtimed-ztbl-")
-      val zMan = tmp("graft-mtimed-zman-")
+      val zTbl = Staging.dir(s, "graft-mtimed-ztbl-")
+      val zMan = Staging.dir(s, "graft-mtimed-zman-")
       Layout.zorderWriteExact(li2, "l_partkey", "l_suppkey", s"$zTbl/d0", 16)
       Manifest.buildManifest(s, s"$zTbl/d0",
         Seq("l_partkey", "l_suppkey"), zMan)
       // count store — planted nulls (the contract query's projection)
-      val cTbl = tmp("graft-mtimed-ctbl-")
-      val cntMan = tmp("graft-mtimed-cman-")
+      val cTbl = Staging.dir(s, "graft-mtimed-ctbl-")
+      val cntMan = Staging.dir(s, "graft-mtimed-cman-")
       t(s, dir, "lineitem").select(col("l_orderkey"),
           when(col("l_partkey") % 7 === 0, lit(null))
             .otherwise(col("l_partkey")).as("pk"))
@@ -1805,15 +1798,15 @@ object FormatQueries {
       val li3 = t(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"),
           col("l_quantity"))
-      val z3Tbl = tmp("graft-mtimed-z3tbl-")
-      val z3Man = tmp("graft-mtimed-z3man-")
+      val z3Tbl = Staging.dir(s, "graft-mtimed-z3tbl-")
+      val z3Man = Staging.dir(s, "graft-mtimed-z3man-")
       Layout.zorder3WriteExact(li3, "l_partkey", "l_suppkey",
         "l_orderkey", s"$z3Tbl/d0", 16)
       Manifest.buildManifest(s, s"$z3Tbl/d0",
         Seq("l_partkey", "l_suppkey", "l_orderkey"), z3Man)
       // pristine hash-scattered store for the optimize timed form
-      val zoTbl = tmp("graft-mtimed-zotbl-")
-      val zoMan = tmp("graft-mtimed-zoman-")
+      val zoTbl = Staging.dir(s, "graft-mtimed-zotbl-")
+      val zoMan = Staging.dir(s, "graft-mtimed-zoman-")
       li2.repartition(16, col("l_partkey").cast("string"))
         .write.mode("overwrite").parquet(s"$zoTbl/d0")
       Manifest.buildManifest(s, s"$zoTbl/d0",
@@ -1824,7 +1817,7 @@ object FormatQueries {
         m2.getLong(0) / 4, m2.getLong(0) / 2,
         m2.getLong(1) / 4, m2.getLong(1) / 2,
         z3Man, mx / 4, mx / 2, zoMan, zoTbl)
-    })
+    }
 
   /** Bench overrides: serving-only forms over the memoized stores — the
     * timer sees one pruned/manifest-only read, the operator itself. The
@@ -1838,18 +1831,21 @@ object FormatQueries {
     // fragmentation staging write and the two full-table checksum
     // equalities — QA harness around the operator, ~2/3 of the old wall.
     "compact_files" -> ((s, dir) => {
-      val staged = compactFilesCache.getOrElseUpdate(dir, {
-        val d = tmp("graft-compactf-stage-")
+      // staged 40-file fragmented orders table (read-only; copied to a
+      // fresh work dir per rep — compaction mutates its input)
+      val staged = Staging.memo(s, s"compact-files $dir") {
+        val d = Staging.dir(s, "graft-compactf-stage-")
         t(s, dir, "orders").repartition(40)
           .write.mode("overwrite").parquet(s"$d/t")
         s"$d/t"
-      })
+      }
       // the row holds computed values only, so the rep's work dir is
       // deleted once they are in
-      val run = new org.apache.hadoop.fs.Path(tmp("graft-compactf-run-"))
+      val run =
+        new org.apache.hadoop.fs.Path(Staging.dir(s, "graft-compactf-run-"))
       val work = s"$run/t"
       try {
-        copyDir(s, staged, work)
+        graft.fs.copyTree(Paths.get(staged), Paths.get(work))
         val (nBefore, nAfter) = graft.sources.Maintenance
           .compactParquet(s, work, targetFileBytes = 512L * 1024 * 1024)
         Contracts.row(s,
@@ -1878,11 +1874,11 @@ object FormatQueries {
     // full-scan equality stay in Verify
     "manifest_hilbert_box" -> ((s, dir) => {
       val (man, xLo, xHi, yLo, yHi) =
-        hilbertBoxCache.getOrElseUpdate(dir, {
+        Staging.memo(s, s"hilbert-box $dir") {
           val li = t(s, dir, "lineitem")
             .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
-          val tbl = tmp("graft-manhb-bench-")
-          val man0 = tmp("graft-manhb-bman-")
+          val tbl = Staging.dir(s, "graft-manhb-bench-")
+          val man0 = Staging.dir(s, "graft-manhb-bman-")
           Layout.hilbertWriteExact(li, "l_partkey", "l_suppkey",
             s"$tbl/dh", 16)
           Manifest.buildManifest(s, s"$tbl/dh",
@@ -1891,7 +1887,7 @@ object FormatQueries {
             .head()
           (man0, mx.getLong(0) / 4, mx.getLong(0) / 2,
             mx.getLong(1) / 4, mx.getLong(1) / 2)
-        })
+        }
       Manifest.prunedReadBox(s, man, "l_partkey", xLo, xHi,
         "l_suppkey", yLo, yHi)._1
     }),
@@ -1915,9 +1911,9 @@ object FormatQueries {
     // shared immutable hash-scattered files
     "manifest_zorder_optimize" -> ((s, dir) => {
       val st = stores(s, dir)
-      val base = tmp("graft-manzo-run-")
+      val base = Staging.dir(s, "graft-manzo-run-")
       val man = s"$base/man"
-      copyDir(s, st.zoMan, man)
+      graft.fs.copyTree(Paths.get(st.zoMan), Paths.get(man))
       val (r, c) = Manifest.optimizeZorder(s, man, s"$base/rw",
         "l_partkey", "l_suppkey", Seq("l_partkey", "l_suppkey"), 16)
       Contracts.row(s, "files_rewritten" -> r, "files_created" -> c)
@@ -1926,9 +1922,9 @@ object FormatQueries {
     // COW rewrite; the morton-twin opens comparison stays in Verify
     "manifest_hilbert_optimize" -> ((s, dir) => {
       val st = stores(s, dir)
-      val base = tmp("graft-manho-run-")
+      val base = Staging.dir(s, "graft-manho-run-")
       val man = s"$base/man"
-      copyDir(s, st.zoMan, man)
+      graft.fs.copyTree(Paths.get(st.zoMan), Paths.get(man))
       val (r, c) = Manifest.optimizeLayout(s, man, s"$base/rw",
         "l_partkey", "l_suppkey", Seq("l_partkey", "l_suppkey"), 16,
         curve = "hilbert")
@@ -1938,18 +1934,18 @@ object FormatQueries {
     // store — the morton21 twin and full-scan equality stay in Verify
     "manifest_hilbert_box3" -> ((s, dir) => {
       val st = stores(s, dir)
-      val man = hilbert3Cache.getOrElseUpdate(dir, {
+      val man = Staging.memo(s, s"hilbert3-manifest $dir") {
         val li = t(s, dir, "lineitem")
           .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"),
             col("l_quantity"))
-        val tbl = tmp("graft-manh3-bench-")
-        val man0 = tmp("graft-manh3-bman-")
+        val tbl = Staging.dir(s, "graft-manh3-bench-")
+        val man0 = Staging.dir(s, "graft-manh3-bman-")
         Layout.hilbert3WriteExact(li, "l_partkey", "l_suppkey",
           "l_orderkey", s"$tbl/dh", 16)
         Manifest.buildManifest(s, s"$tbl/dh",
           Seq("l_partkey", "l_suppkey", "l_orderkey"), man0)
         man0
-      })
+      }
       Manifest.prunedReadBox3(s, man, "l_partkey", st.xLo, st.xHi,
         "l_suppkey", st.yLo, st.yHi, "l_orderkey", st.zLo3, st.zHi3)._1
     }),
@@ -1957,28 +1953,10 @@ object FormatQueries {
     // sorted+appended manifest, re-layout only the overlapping tail —
     // the full-twin opens comparison and fixed-point check stay in Verify
     "manifest_optimize_incremental" -> ((s, dir) => {
-      val pristine = incOptCache.getOrElseUpdate(dir, {
-        val li = t(s, dir, "lineitem")
-          .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
-        val mx = li.agg(max(col("l_partkey")), max(col("l_suppkey")))
-          .head()
-        val boxCond = col("l_partkey") > mx.getLong(0) * 3 / 4 &&
-          col("l_suppkey") > mx.getLong(1) * 3 / 4
-        val tbl = tmp("graft-manoi-bench-")
-        val man0 = tmp("graft-manoi-bman-")
-        Layout.hilbertWriteExact(li.filter(!boxCond),
-          "l_partkey", "l_suppkey", s"$tbl/d0", 12)
-        li.filter(boxCond).repartition(2, col("l_partkey"))
-          .write.mode("overwrite").parquet(s"$tbl/d1")
-        Manifest.buildManifest(s, s"$tbl/d0",
-          Seq("l_partkey", "l_suppkey"), man0)
-        Manifest.appendToManifest(s, Seq(s"$tbl/d1"),
-          Seq("l_partkey", "l_suppkey"), man0)
-        man0
-      })
-      val base = tmp("graft-manoi-run-")
+      val pristine = incOptManifest(s, dir)
+      val base = Staging.dir(s, "graft-manoi-run-")
       val man = s"$base/man"
-      copyDir(s, pristine, man)
+      graft.fs.copyTree(Paths.get(pristine), Paths.get(man))
       val (r, c, k) = Manifest.optimizeLayoutIncremental(s, man,
         s"$base/rw", "l_partkey", "l_suppkey",
         Seq("l_partkey", "l_suppkey"), curve = "hilbert")
@@ -1986,7 +1964,7 @@ object FormatQueries {
         "clusters" -> k)
     }),
     "manifest_optimize_incremental3" -> ((s, dir) => {
-      val pristine = incOpt3Cache.getOrElseUpdate(dir, {
+      val pristine = Staging.memo(s, s"inc-opt3-manifest $dir") {
         val li = t(s, dir, "lineitem")
           .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"),
             col("l_quantity"))
@@ -1995,8 +1973,8 @@ object FormatQueries {
         val boxCond = col("l_partkey") > mx.getLong(0) * 3 / 4 &&
           col("l_suppkey") > mx.getLong(1) * 3 / 4 &&
           col("l_orderkey") > mx.getLong(2) * 3 / 4
-        val tbl = tmp("graft-manoi3-bench-")
-        val man0 = tmp("graft-manoi3-bman-")
+        val tbl = Staging.dir(s, "graft-manoi3-bench-")
+        val man0 = Staging.dir(s, "graft-manoi3-bman-")
         val cols = Seq("l_partkey", "l_suppkey", "l_orderkey")
         Layout.hilbert3WriteExact(li.filter(!boxCond),
           "l_partkey", "l_suppkey", "l_orderkey", s"$tbl/d0", 12)
@@ -2005,10 +1983,10 @@ object FormatQueries {
         Manifest.buildManifest(s, s"$tbl/d0", cols, man0)
         Manifest.appendToManifest(s, Seq(s"$tbl/d1"), cols, man0)
         man0
-      })
-      val base = tmp("graft-manoi3-run-")
+      }
+      val base = Staging.dir(s, "graft-manoi3-run-")
       val man = s"$base/man"
-      copyDir(s, pristine, man)
+      graft.fs.copyTree(Paths.get(pristine), Paths.get(man))
       val (r, c, k) = Manifest.optimizeLayoutIncremental(s, man,
         s"$base/rw", "l_partkey", "l_suppkey",
         Seq("l_partkey", "l_suppkey", "l_orderkey"),
@@ -2021,28 +1999,10 @@ object FormatQueries {
     // writers — the budget drain and both twins' opens audits stay in
     // Verify
     "manifest_optimize_budgeted" -> ((s, dir) => {
-      val pristine = incOptCache.getOrElseUpdate(dir, {
-        val li = t(s, dir, "lineitem")
-          .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
-        val mx = li.agg(max(col("l_partkey")), max(col("l_suppkey")))
-          .head()
-        val boxCond = col("l_partkey") > mx.getLong(0) * 3 / 4 &&
-          col("l_suppkey") > mx.getLong(1) * 3 / 4
-        val tbl = tmp("graft-manoi-bench-")
-        val man0 = tmp("graft-manoi-bman-")
-        Layout.hilbertWriteExact(li.filter(!boxCond),
-          "l_partkey", "l_suppkey", s"$tbl/d0", 12)
-        li.filter(boxCond).repartition(2, col("l_partkey"))
-          .write.mode("overwrite").parquet(s"$tbl/d1")
-        Manifest.buildManifest(s, s"$tbl/d0",
-          Seq("l_partkey", "l_suppkey"), man0)
-        Manifest.appendToManifest(s, Seq(s"$tbl/d1"),
-          Seq("l_partkey", "l_suppkey"), man0)
-        man0
-      })
-      val base = tmp("graft-manob-run-")
+      val pristine = incOptManifest(s, dir)
+      val base = Staging.dir(s, "graft-manob-run-")
       val man = s"$base/man"
-      copyDir(s, pristine, man)
+      graft.fs.copyTree(Paths.get(pristine), Paths.get(man))
       val (r, c, k) = Manifest.optimizeLayoutIncremental(s, man,
         s"$base/rw", "l_partkey", "l_suppkey",
         Seq("l_partkey", "l_suppkey"), curve = "hilbert",
@@ -2058,9 +2018,9 @@ object FormatQueries {
     // not fixture generation. The lifecycle checks stay in Verify.
     "manifest_delete" -> ((s, dir) => {
       val st = dmlStores(s, dir)
-      val base = tmp("graft-mandel-run-")
+      val base = Staging.dir(s, "graft-mandel-run-")
       val man = s"$base/man"
-      copyDir(s, st.delMan, man)
+      graft.fs.copyTree(Paths.get(st.delMan), Paths.get(man))
       val (a, tot, d) = Manifest.deleteRange(s, man, "l_orderkey",
         st.lo, st.hi, s"$base/rw", Seq("l_orderkey"))
       Contracts.row(s, "files_affected" -> a, "files_total" -> tot,
@@ -2068,18 +2028,18 @@ object FormatQueries {
     }),
     "manifest_optimize" -> ((s, dir) => {
       val st = dmlStores(s, dir)
-      val base = tmp("graft-manopt-run-")
+      val base = Staging.dir(s, "graft-manopt-run-")
       val man = s"$base/man"
-      copyDir(s, st.optMan, man)
+      graft.fs.copyTree(Paths.get(st.optMan), Paths.get(man))
       val (m, c) = Manifest.optimizeSmallFiles(s, man, s"$base/opt",
         Seq("l_orderkey"), st.target, st.minR)
       Contracts.row(s, "files_merged" -> m, "files_created" -> c)
     }),
     "manifest_merge" -> ((s, dir) => {
       val st = dmlStores(s, dir)
-      val base = tmp("graft-manmrg-run-")
+      val base = Staging.dir(s, "graft-manmrg-run-")
       val man = s"$base/man"
-      copyDir(s, st.delMan, man)
+      graft.fs.copyTree(Paths.get(st.delMan), Paths.get(man))
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
       val upd = li.filter(col("l_orderkey").between(st.lo, st.hi))
@@ -2112,17 +2072,17 @@ object FormatQueries {
     // one pass over a memoized table copy) — the build IS the operator;
     // the per-family byte/serving-equivalence harness stays in Verify.
     "manifest_index_unified" -> ((s, dir) => {
-      val tbl = uniTblCache.getOrElseUpdate(dir, {
-        val p = tmp("graft-manuni-bench-")
+      val tbl = Staging.memo(s, s"unified-index-table $dir") {
+        val p = Staging.dir(s, "graft-manuni-bench-")
         t(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
           .repartitionByRange(4, col("l_orderkey"))
           .write.mode("overwrite").parquet(s"$p/d0")
         p
-      })
-      val bloom = tmp("graft-ub-")
+      }
+      val bloom = Staging.dir(s, "graft-ub-")
       Manifest.buildFileIndexes(s, s"$tbl/d0", "l_partkey", "l_quantity",
-        bloom, tmp("graft-un-"), tmp("graft-uk-"))
+        bloom, Staging.dir(s, "graft-un-"), Staging.dir(s, "graft-uk-"))
       // listing-sized read-back (4 rows) proves the build landed without
       // adding a second table pass to the timed number
       s.read.parquet(s"$bloom/b0").select(col("file"))
@@ -2138,37 +2098,29 @@ object FormatQueries {
         "x", "y", nFiles = 16)
     }))
 
-  private val uniTblCache =
-    new scala.collection.concurrent.TrieMap[String, String]
-
-  /** Memoized manifest over the hilbert-3-D layout (timed box3 serving). */
-  private val hilbert3Cache =
-    new scala.collection.concurrent.TrieMap[String, String]
-
-  /** Staged 40-file fragmented orders table for the compact_files timed
-    * form (read-only; copied to a fresh work dir per rep — compaction
-    * mutates its input).
-    */
-  private val compactFilesCache =
-    new scala.collection.concurrent.TrieMap[String, String]
-
   /** Memoized pristine sorted+appended manifest for the incremental
-    * OPTIMIZE timed form (the zoMan posture: copied per call, never
+    * OPTIMIZE timed forms (the zoMan posture: copied per call, never
     * mutated in place).
     */
-  private val incOptCache =
-    new scala.collection.concurrent.TrieMap[String, String]
-
-  private val incOpt3Cache =
-    new scala.collection.concurrent.TrieMap[String, String]
-
-  /** (manifest path, xLo, xHi, yLo, yHi) for the timed hilbert-box
-    * serving form — the layout + manifest build is one-off ingest cost,
-    * memoized per dir like the other manifest stores.
-    */
-  private val hilbertBoxCache =
-    new scala.collection.concurrent.TrieMap[String,
-      (String, Long, Long, Long, Long)]
+  private def incOptManifest(s: SparkSession, dir: String): String =
+    Staging.memo(s, s"inc-opt-manifest $dir") {
+      val li = t(s, dir, "lineitem")
+        .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
+      val mx = li.agg(max(col("l_partkey")), max(col("l_suppkey"))).head()
+      val boxCond = col("l_partkey") > mx.getLong(0) * 3 / 4 &&
+        col("l_suppkey") > mx.getLong(1) * 3 / 4
+      val tbl = Staging.dir(s, "graft-manoi-bench-")
+      val man0 = Staging.dir(s, "graft-manoi-bman-")
+      Layout.hilbertWriteExact(li.filter(!boxCond),
+        "l_partkey", "l_suppkey", s"$tbl/d0", 12)
+      li.filter(boxCond).repartition(2, col("l_partkey"))
+        .write.mode("overwrite").parquet(s"$tbl/d1")
+      Manifest.buildManifest(s, s"$tbl/d0",
+        Seq("l_partkey", "l_suppkey"), man0)
+      Manifest.appendToManifest(s, Seq(s"$tbl/d1"),
+        Seq("l_partkey", "l_suppkey"), man0)
+      man0
+    }
 
   /** Memoized fixtures for the DML/bloom/NDV/quantile timed forms above. */
   private case class DmlStores(delMan: String, lo: Long, hi: Long,
@@ -2177,31 +2129,20 @@ object FormatQueries {
       ndvMan: String, ndvIdx: String, ndvHi: Long,
       qMan: String, qIdx: String)
 
-  private val dmlCache =
-    new scala.collection.concurrent.TrieMap[String, DmlStores]
-
-  private def copyDir(s: SparkSession, src: String, dst: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val sp = new org.apache.hadoop.fs.Path(src)
-    val dp = new org.apache.hadoop.fs.Path(dst)
-    org.apache.hadoop.fs.FileUtil.copy(
-      sp.getFileSystem(conf), sp, dp.getFileSystem(conf), dp, false, conf)
-  }
-
   private def dmlStores(s: SparkSession, dir: String): DmlStores =
-    dmlCache.getOrElseUpdate(dir, {
+    Staging.memo(s, s"dml-stores $dir") {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-      val delTbl = tmp("graft-dtimed-tbl-")
-      val delMan = tmp("graft-dtimed-man-")
+      val delTbl = Staging.dir(s, "graft-dtimed-tbl-")
+      val delMan = Staging.dir(s, "graft-dtimed-man-")
       Layout.layoutWriteExact(li,
         Seq(col("l_orderkey"), col("l_linenumber")), s"$delTbl/d0", 8)
       Manifest.buildManifest(s, s"$delTbl/d0", Seq("l_orderkey"), delMan)
       val mx = li.agg(max(col("l_orderkey"))).head().getLong(0)
       val li2 = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"))
-      val optTbl = tmp("graft-otimed-tbl-")
-      val optMan = tmp("graft-otimed-man-")
+      val optTbl = Staging.dir(s, "graft-otimed-tbl-")
+      val optMan = Staging.dir(s, "graft-otimed-man-")
       li2.filter(col("l_orderkey") % 4 === 3).repartition(12)
         .write.mode("overwrite").parquet(s"$optTbl/d0")
       li2.filter(col("l_orderkey") % 4 =!= 3).repartition(2)
@@ -2210,26 +2151,26 @@ object FormatQueries {
       Manifest.appendToManifest(s, Seq(s"$optTbl/d1"), Seq("l_orderkey"),
         optMan, batchId = 1)
       val rows = li2.count()
-      val blTbl = tmp("graft-btimed-tbl-")
-      val blIdx = tmp("graft-btimed-idx-")
+      val blTbl = Staging.dir(s, "graft-btimed-tbl-")
+      val blIdx = Staging.dir(s, "graft-btimed-idx-")
       li2.repartition(16, col("l_orderkey"))
         .write.mode("overwrite").parquet(s"$blTbl/d0")
       Manifest.buildBloomIndex(s, s"$blTbl/d0", "l_orderkey", blIdx,
         expectedPerFile = 100000L)
       val key = li2.filter(col("l_orderkey") <= mx / 2)
         .agg(max(col("l_orderkey"))).head().getLong(0)
-      val ndvTbl = tmp("graft-ntimed-tbl-")
-      val ndvMan = tmp("graft-ntimed-man-")
-      val ndvIdx = tmp("graft-ntimed-idx-")
+      val ndvTbl = Staging.dir(s, "graft-ntimed-tbl-")
+      val ndvMan = Staging.dir(s, "graft-ntimed-man-")
+      val ndvIdx = Staging.dir(s, "graft-ntimed-idx-")
       t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
         .repartitionByRange(4, col("l_orderkey"))
         .sortWithinPartitions(col("l_orderkey"))
         .write.mode("overwrite").parquet(s"$ndvTbl/d0")
       Manifest.buildManifest(s, s"$ndvTbl/d0", Seq("l_orderkey"), ndvMan)
       Manifest.buildNdvIndex(s, s"$ndvTbl/d0", "l_partkey", ndvIdx)
-      val qTbl = tmp("graft-qtimed-tbl-")
-      val qMan = tmp("graft-qtimed-man-")
-      val qIdx = tmp("graft-qtimed-idx-")
+      val qTbl = Staging.dir(s, "graft-qtimed-tbl-")
+      val qMan = Staging.dir(s, "graft-qtimed-man-")
+      val qIdx = Staging.dir(s, "graft-qtimed-idx-")
       t(s, dir, "lineitem").select(col("l_orderkey"), col("l_quantity"))
         .repartitionByRange(4, col("l_orderkey"))
         .sortWithinPartitions(col("l_orderkey"))
@@ -2239,5 +2180,5 @@ object FormatQueries {
       DmlStores(delMan, mx / 3, mx / 2,
         optMan, math.max(4L, rows / 8), math.max(2L, rows / 16),
         blIdx, key, ndvMan, ndvIdx, mx / 4, qMan, qIdx)
-    })
+    }
 }

@@ -1,8 +1,11 @@
 package graft.queries
 
+import java.nio.file.Paths
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Staging
 import graft.Tables.t
 import graft.functions.HashExpressions
 import graft.operators.{Bpe, Chunking, Decontaminate, Dedup, Embeddings, Filtering, Multimodal, Packing, QualityModel, Redaction, Retrieval, Sampling, Segments, Selection, Similarity, Sketches, TextAnalysis}
@@ -901,8 +904,7 @@ object PipelineQueries {
     "sim_ivfpq_indexed" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 10)
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-ivfpq-idx-").toString
+      val path = Staging.dir(s, "graft-ivfpq-idx-")
       Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", path,
         nCentroids = 16, m = 16)
       val stored = Similarity.queryIvfPqIndex(emb, q, "vec_id", "embedding",
@@ -936,10 +938,8 @@ object PipelineQueries {
       val base = emb.filter(col("vec_id") % 3 =!= 2)
       val b1 = emb.filter(col("vec_id") % 3 === 2 && col("vec_id") % 2 === 0)
       val b2 = emb.filter(col("vec_id") % 3 === 2 && col("vec_id") % 2 === 1)
-      val pInc = java.nio.file.Files
-        .createTempDirectory("graft-ivfpq-inc-").toString
-      val pFull = java.nio.file.Files
-        .createTempDirectory("graft-ivfpq-full-").toString
+      val pInc = Staging.dir(s, "graft-ivfpq-inc-")
+      val pFull = Staging.dir(s, "graft-ivfpq-full-")
       Similarity.buildIvfPqIndex(base, "vec_id", "embedding", pInc,
         nCentroids = 16, m = 16)
       Similarity.appendToIvfPqIndex(b1, "vec_id", "embedding", pInc)
@@ -978,8 +978,7 @@ object PipelineQueries {
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 10)
       val allowed = emb.filter(col("label") < 5).select(col("vec_id"))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-ivfpq-flt-").toString
+      val path = Staging.dir(s, "graft-ivfpq-flt-")
       Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", path,
         nCentroids = 16, m = 16)
       val served = Similarity.queryIvfPqIndex(emb, q, "vec_id", "embedding",
@@ -1789,8 +1788,7 @@ object PipelineQueries {
     "compact_embedding_index" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-eseg-").toString
+      val stage = Staging.dir(s, "graft-eseg-")
       (0 until 2).foreach { i =>
         val slice = emb.filter(col("vec_id") % 3 === i)
         slice.coalesce(1).write.parquet(s"$stage/corpus/b$i")
@@ -1830,8 +1828,7 @@ object PipelineQueries {
     // same score against the uncompacted segments.
     "compact_gram_segments" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val segDir = java.nio.file.Files
-        .createTempDirectory("graft-gseg-").toString
+      val segDir = Staging.dir(s, "graft-gseg-")
       (0 until 3).foreach { i =>
         TextAnalysis.gramDf(docs.filter(col("doc_id") % 3 === i),
             "doc_id", "text")
@@ -2270,8 +2267,7 @@ object PipelineQueries {
       val docs = t(s, dir, "documents")
       val qs = docs.filter(col("doc_id") < 5)
         .select(col("doc_id").as("query_id"), col("text"))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-bm25-idx-").toString
+      val path = Staging.dir(s, "graft-bm25-idx-")
       TextAnalysis.buildTextIndex(docs.filter(col("doc_id") % 2 === 0),
         "doc_id", "text", path, nBuckets = 16, batchId = 0L)
       TextAnalysis.appendToTextIndex(docs.filter(col("doc_id") % 2 === 1),
@@ -2307,8 +2303,7 @@ object PipelineQueries {
       val qs = docs.filter(col("doc_id") < 5)
         .select(col("doc_id").as("query_id"), col("text"))
       val allowed = docs.filter(col("lang") === "en").select(col("doc_id"))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-bm25-flt-").toString
+      val path = Staging.dir(s, "graft-bm25-flt-")
       TextAnalysis.buildTextIndex(docs, "doc_id", "text", path,
         nBuckets = 16, batchId = 0L)
       TextAnalysis.queryTextIndex(qs, "query_id", "text", path, "doc_id",
@@ -2389,10 +2384,8 @@ object PipelineQueries {
       val qs = docs.filter(col("doc_id") < 5)
         .select(col("doc_id").as("query_id"), col("text"))
       val qv = emb.filter(col("vec_id") < 5)
-      val tpath = java.nio.file.Files
-        .createTempDirectory("graft-hybrid-text-").toString
-      val vpath = java.nio.file.Files
-        .createTempDirectory("graft-hybrid-ivfpq-").toString
+      val tpath = Staging.dir(s, "graft-hybrid-text-")
+      val vpath = Staging.dir(s, "graft-hybrid-ivfpq-")
       TextAnalysis.buildTextIndex(docs, "doc_id", "text", tpath,
         nBuckets = 16, batchId = 0L)
       Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", vpath,
@@ -2433,10 +2426,8 @@ object PipelineQueries {
       val qs = docs.filter(col("doc_id") < 5)
         .select(col("doc_id").as("query_id"), col("text"))
       val qv = emb.filter(col("vec_id") < 5)
-      val tpath = java.nio.file.Files
-        .createTempDirectory("graft-hybflt-text-").toString
-      val vpath = java.nio.file.Files
-        .createTempDirectory("graft-hybflt-ivfpq-").toString
+      val tpath = Staging.dir(s, "graft-hybflt-text-")
+      val vpath = Staging.dir(s, "graft-hybflt-ivfpq-")
       TextAnalysis.buildTextIndex(docs, "doc_id", "text", tpath,
         nBuckets = 16, batchId = 0L)
       Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", vpath,
@@ -2850,74 +2841,51 @@ object PipelineQueries {
     })
   )
 
-  /** Per-dir merge-list memo for the timed bpe_encode form — training runs
-    * once per scale dir, outside every timed rep. Driver-side Seq of ≤12
-    * Merge rows: bounded, and immune to the bench's RDD-cache releases.
+  // Fixtures of the timed forms below, memoized per (session, dir) through
+  // Staging.memo: one-off ingest or training outside every timed rep,
+  // never the operator a form times.
+
+  /** Unigram model the two timed unigram forms serve from (training is
+    * unigram_train's number).
     */
-  private val bpeTimedMergeCache =
-    new scala.collection.concurrent.TrieMap[String, Seq[graft.operators.Bpe.Merge]]
-
-  private val unigramTimedModelCache =
-    new scala.collection.concurrent.TrieMap[String,
-      graft.operators.Unigram.Model]
-
-  /** Per-dir memo of the interval join's data-derived bin width (timed
-    * form only — one approxQuantile per scale dir, outside the reps).
-    */
-  private val binWidthCache =
-    new scala.collection.concurrent.TrieMap[String, Double]
-
-  /** Per-dir memo of the incremental-kNN timed form's base graph, persisted
-    * to a temp parquet path (the persisted-index pattern — same as the SRP
-    * and IVF-PQ stored forms, and immune to the bench's RDD-cache releases
-    * between reps; a driver-side row cache would be a collect() scale
-    * anti-pattern). Building the 90%-corpus graph is sim_knn_graph's
-    * number; the timer covers read + maintenance only.
-    */
-  private val knnBaseCache =
-    new scala.collection.concurrent.TrieMap[String, (String, Long)]
-
-  /** Per-dir memo of the persisted BM25 index path (timed form only):
-    * index CONSTRUCTION is a one-off ingest cost — the serving-path number
-    * a bench should track is pruned-scan query latency. Same persisted-
-    * index pattern as the kNN base cache above.
-    */
-  private val bm25IndexCache =
-    new scala.collection.concurrent.TrieMap[String, String]
-
-  /** Per-dir memo of the (text index, IVF-PQ index) path pair for the
-    * timed hybrid_indexed form — same one-off-ingest reasoning as
-    * [[bm25IndexCache]], covering both serving arms.
-    */
-  private val hybridIndexCache =
-    new scala.collection.concurrent.TrieMap[String, (String, String)]
-
-  /** Per-dir memos of the STAGED (uncompacted) segment stores the two
-    * timed compaction forms consume (r14): building the per-slice segments
-    * is ingest scaffolding — srpIndex / gramDf passes over the corpus —
-    * not the operator under test. Compaction MUTATES its store, so each
-    * timed rep file-copies the staged store to a fresh dir (tens of MB,
-    * inside the timer — the copy is the "read the segments" cost any
-    * merge pays) and compacts the copy. The contract forms in Verify keep
-    * building from scratch and checking before/after equality.
-    */
-  private val compactEmbStoreCache =
-    new scala.collection.concurrent.TrieMap[String, String]
-  private val compactGramSegCache =
-    new scala.collection.concurrent.TrieMap[String, String]
-
-  /** Recursive file-tree copy (staged store → fresh work dir). */
-  private def copyTree(from: String, to: String): Unit = {
-    val src = java.nio.file.Paths.get(from)
-    val dst = java.nio.file.Paths.get(to)
-    java.nio.file.Files.walk(src).forEach { p =>
-      val t = dst.resolve(src.relativize(p))
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  private def unigramModel(s: SparkSession,
+      dir: String): graft.operators.Unigram.Model =
+    Staging.memo(s, s"unigram-model $dir") {
+      val wt = graft.operators.Unigram
+        .wordTable(t(s, dir, "documents"), "text").localCheckpoint()
+      graft.operators.Unigram.train(wt, seedSize = 512, iters = 2)._1
     }
-  }
+
+  /** Persisted BM25 index path for the timed bm25 forms: index
+    * CONSTRUCTION is a one-off ingest cost — the serving-path number a
+    * bench should track is pruned-scan query latency (the persisted-index
+    * pattern of the kNN base below).
+    */
+  private def bm25Index(s: SparkSession, dir: String): String =
+    Staging.memo(s, s"bm25-index $dir") {
+      val docs = t(s, dir, "documents")
+      val p = Staging.dir(s, "graft-bm25-bench-")
+      TextAnalysis.buildTextIndex(docs.filter(col("doc_id") % 2 === 0),
+        "doc_id", "text", p, nBuckets = 16, batchId = 0L)
+      TextAnalysis.appendToTextIndex(docs.filter(col("doc_id") % 2 === 1),
+        "doc_id", "text", p, batchId = 1L)
+      p
+    }
+
+  /** (text index, IVF-PQ index) path pair for the timed hybrid forms —
+    * same one-off-ingest reasoning as [[bm25Index]], covering both serving
+    * arms.
+    */
+  private def hybridIndexes(s: SparkSession, dir: String): (String, String) =
+    Staging.memo(s, s"hybrid-indexes $dir") {
+      val tp = Staging.dir(s, "graft-hybrid-text-bench-")
+      val vp = Staging.dir(s, "graft-hybrid-ivfpq-bench-")
+      TextAnalysis.buildTextIndex(t(s, dir, "documents"), "doc_id", "text",
+        tp, nBuckets = 16, batchId = 0L)
+      Similarity.buildIvfPqIndex(t(s, dir, "embeddings"), "vec_id",
+        "embedding", vp, nCentroids = 16, m = 16)
+      (tp, vp)
+    }
 
   /** Bench-only timing variants (see SparkEntry.benchQueries): the contract
     * queries above run the operator PLUS its verification harness — exact
@@ -2968,11 +2936,16 @@ object PipelineQueries {
     // build + pair-before/pair-after equality harness, which at ~4.8 s
     // was ~5x the operator it certifies.
     "compact_embedding_index" -> ((s, dir) => {
-      val staged = compactEmbStoreCache.getOrElseUpdate(dir, {
+      // the STAGED (uncompacted) segment store is ingest scaffolding —
+      // srpIndex / gramDf passes over the corpus — memoized per dir;
+      // compaction MUTATES its store, so each rep file-copies it to a
+      // fresh dir (tens of MB, inside the timer — the copy is the "read
+      // the segments" cost any merge pays) and compacts the copy. The
+      // contract forms in Verify build from scratch and check equality.
+      val staged = Staging.memo(s, s"compact-emb-store $dir") {
         val emb = t(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"))
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-eseg-stage-").toString
+        val d = Staging.dir(s, "graft-eseg-stage-")
         (0 until 2).foreach { i =>
           val slice = emb.filter(col("vec_id") % 3 === i)
           slice.coalesce(1).write.parquet(s"$d/corpus/b$i")
@@ -2980,30 +2953,27 @@ object PipelineQueries {
             .write.parquet(s"$d/idx/b$i")
         }
         d
-      })
-      val work = java.nio.file.Files
-        .createTempDirectory("graft-eseg-work-").toString
-      copyTree(staged, work)
+      }
+      val work = Staging.dir(s, "graft-eseg-work-")
+      graft.fs.copyTree(Paths.get(staged), Paths.get(work))
       Dedup.compactSegmentDirs(s, s"$work/corpus")
       Dedup.compactSegmentDirs(s, s"$work/idx")
       s.read.parquet(s"$work/idx/b*")
     }),
     // same shape for the gram-df (summing) segment merge
     "compact_gram_segments" -> ((s, dir) => {
-      val staged = compactGramSegCache.getOrElseUpdate(dir, {
+      val staged = Staging.memo(s, s"compact-gram-segments $dir") {
         val docs = t(s, dir, "documents")
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-gseg-stage-").toString
+        val d = Staging.dir(s, "graft-gseg-stage-")
         (0 until 3).foreach { i =>
           TextAnalysis.gramDf(docs.filter(col("doc_id") % 3 === i),
               "doc_id", "text")
             .coalesce(1).write.parquet(s"$d/b$i")
         }
         d
-      })
-      val work = java.nio.file.Files
-        .createTempDirectory("graft-gseg-work-").toString
-      copyTree(staged, work)
+      }
+      val work = Staging.dir(s, "graft-gseg-work-")
+      graft.fs.copyTree(Paths.get(staged), Paths.get(work))
       TextAnalysis.compactGramDf(s, work)
       s.read.parquet(s"$work/b*")
     }),
@@ -3022,16 +2992,7 @@ object PipelineQueries {
     // append are memoized per dir (one-off ingest cost; the contract form
     // in Verify still runs the full build-append-compare harness).
     "bm25_indexed" -> ((s, dir) => {
-      val path = bm25IndexCache.getOrElseUpdate(dir, {
-        val docs = t(s, dir, "documents")
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-bm25-bench-").toString
-        TextAnalysis.buildTextIndex(docs.filter(col("doc_id") % 2 === 0),
-          "doc_id", "text", p, nBuckets = 16, batchId = 0L)
-        TextAnalysis.appendToTextIndex(docs.filter(col("doc_id") % 2 === 1),
-          "doc_id", "text", p, batchId = 1L)
-        p
-      })
+      val path = bm25Index(s, dir)
       val qs = t(s, dir, "documents").filter(col("doc_id") < 5)
         .select(col("doc_id").as("query_id"), col("text"))
       TextAnalysis.queryTextIndex(qs, "query_id", "text", path,
@@ -3039,16 +3000,7 @@ object PipelineQueries {
     }),
     // filtered serving from the same memoized index
     "bm25_filtered" -> ((s, dir) => {
-      val path = bm25IndexCache.getOrElseUpdate(dir, {
-        val docs = t(s, dir, "documents")
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-bm25-bench-").toString
-        TextAnalysis.buildTextIndex(docs.filter(col("doc_id") % 2 === 0),
-          "doc_id", "text", p, nBuckets = 16, batchId = 0L)
-        TextAnalysis.appendToTextIndex(docs.filter(col("doc_id") % 2 === 1),
-          "doc_id", "text", p, batchId = 1L)
-        p
-      })
+      val path = bm25Index(s, dir)
       val docs = t(s, dir, "documents")
       val qs = docs.filter(col("doc_id") < 5)
         .select(col("doc_id").as("query_id"), col("text"))
@@ -3062,19 +3014,7 @@ object PipelineQueries {
     // are memoized per dir; the contract form still builds fresh and
     // compares against the in-memory fusion in Verify.
     "hybrid_indexed" -> ((s, dir) => {
-      val (tpath, vpath) = hybridIndexCache.getOrElseUpdate(dir, {
-        val docs = t(s, dir, "documents")
-        val emb = t(s, dir, "embeddings")
-        val tp = java.nio.file.Files
-          .createTempDirectory("graft-hybrid-text-bench-").toString
-        val vp = java.nio.file.Files
-          .createTempDirectory("graft-hybrid-ivfpq-bench-").toString
-        TextAnalysis.buildTextIndex(docs, "doc_id", "text", tp,
-          nBuckets = 16, batchId = 0L)
-        Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", vp,
-          nCentroids = 16, m = 16)
-        (tp, vp)
-      })
+      val (tpath, vpath) = hybridIndexes(s, dir)
       val docs = t(s, dir, "documents")
       val emb = t(s, dir, "embeddings")
       val qs = docs.filter(col("doc_id") < 5)
@@ -3092,19 +3032,7 @@ object PipelineQueries {
     // filtered fusion from the same memoized indexes — the in-memory
     // equality baseline stays in Verify
     "hybrid_filtered" -> ((s, dir) => {
-      val (tpath, vpath) = hybridIndexCache.getOrElseUpdate(dir, {
-        val docs = t(s, dir, "documents")
-        val emb = t(s, dir, "embeddings")
-        val tp = java.nio.file.Files
-          .createTempDirectory("graft-hybrid-text-bench-").toString
-        val vp = java.nio.file.Files
-          .createTempDirectory("graft-hybrid-ivfpq-bench-").toString
-        TextAnalysis.buildTextIndex(docs, "doc_id", "text", tp,
-          nBuckets = 16, batchId = 0L)
-        Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", vp,
-          nCentroids = 16, m = 16)
-        (tp, vp)
-      })
+      val (tpath, vpath) = hybridIndexes(s, dir)
       val docs = t(s, dir, "documents")
       val emb = t(s, dir, "embeddings")
       val allowed = docs.filter(col("lang") === "en").select(col("doc_id"))
@@ -3134,11 +3062,11 @@ object PipelineQueries {
       val ranges = ev.filter(col("event_type") === "purchase")
         .select(col("event_id").as("range_id"), col("value").as("lo"),
           (col("value") + 2.0).as("hi"))
-      val width = binWidthCache.getOrElseUpdate(dir, {
+      val width = Staging.memo(s, s"interval-bin-width $dir") {
         val w = ranges.select((col("hi") - col("lo")).as("_len"))
           .stat.approxQuantile("_len", Array(0.5), 0.01)
         if (w.nonEmpty && w(0) > 0) w(0) / 4.0 else 1.0
-      })
+      }
       graft.operators.TemporalJoins.rangeJoinBinned(clicks, ranges,
           "value", "lo", "hi", width)
         .groupBy(col("event_id"))
@@ -3153,11 +3081,13 @@ object PipelineQueries {
       // ADVICE r8): the timer covers the word-table scan + encode
       // projection only — training cost is bpe_train's number. The first
       // rep pays the memoization; the bench's median-of-3 discards it.
-      val merges = bpeTimedMergeCache.getOrElseUpdate(dir, {
+      // (a driver-side Seq of ≤12 Merge rows: bounded, and immune to the
+      // bench's RDD-cache releases)
+      val merges = Staging.memo(s, s"bpe-merges $dir") {
         val wt0 = Bpe.wordTable(t(s, dir, "documents"), "text")
           .localCheckpoint()
         Bpe.trainOnWords(wt0, nMerges = 12)._1
-      })
+      }
       // timed form still pays the realistic 10k-entry rank table
       Bpe.encode(Bpe.wordTable(t(s, dir, "documents"), "text"),
         merges ++ (1 to 10000).map(i =>
@@ -3168,11 +3098,7 @@ object PipelineQueries {
     // number), and the contract form's double-run/checksum harness stays
     // in Verify.
     "unigram_nbest" -> ((s, dir) => {
-      val model = unigramTimedModelCache.getOrElseUpdate(dir, {
-        val wt = graft.operators.Unigram
-          .wordTable(t(s, dir, "documents"), "text").localCheckpoint()
-        graft.operators.Unigram.train(wt, seedSize = 512, iters = 2)._1
-      })
+      val model = unigramModel(s, dir)
       graft.operators.Unigram.nBest(
         graft.operators.Unigram.wordTable(t(s, dir, "documents"), "text"),
         model, k = 3)
@@ -3183,11 +3109,7 @@ object PipelineQueries {
     // envelope/partition-invariance harness (three further nBest
     // passes) stays in Verify.
     "unigram_sample_encode" -> ((s, dir) => {
-      val model = unigramTimedModelCache.getOrElseUpdate(dir, {
-        val wt = graft.operators.Unigram
-          .wordTable(t(s, dir, "documents"), "text").localCheckpoint()
-        graft.operators.Unigram.train(wt, seedSize = 512, iters = 2)._1
-      })
+      val model = unigramModel(s, dir)
       val occs = t(s, dir, "documents")
         .select(col("doc_id"),
           posexplode(split(trim(lower(col("text"))), "\\s+")))
@@ -3312,23 +3234,25 @@ object PipelineQueries {
       Similarity.knnGraphDescent(emb, "vec_id", "embedding", k = 5)
     }),
     // Timed incremental maintenance: base graph built once per dir and
-    // persisted (see knnBaseCache); the timer covers reading the stored
-    // graph + folding a 1% batch in — the daily-drop ratio (the contract
-    // form uses 10% for robust adoption checks; the TIMED question is
-    // "what does folding a small drop cost", where frontier locality is
-    // the point).
+    // persisted to parquet (the persisted-index pattern of the SRP and
+    // IVF-PQ stored forms, immune to the bench's RDD-cache releases between
+    // reps; a driver-side row cache would be a collect() scale
+    // anti-pattern). Building the 99%-corpus graph is sim_knn_graph's
+    // number; the timer covers reading the stored graph + folding a 1%
+    // batch in — the daily-drop ratio (the contract form uses 10% for
+    // robust adoption checks; the TIMED question is "what does folding a
+    // small drop cost", where frontier locality is the point).
     "sim_knn_graph_incremental" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val (path, cut) = knnBaseCache.getOrElseUpdate(dir, {
+      val (path, cut) = Staging.memo(s, s"knn-base $dir") {
         val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)
         val c = (maxId * 99) / 100
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-knn-base-").toString
+        val p = Staging.dir(s, "graft-knn-base-")
         Similarity.knnGraphDescent(emb.filter(col("vec_id") <= c),
             "vec_id", "embedding", k = 5)
           .write.mode("overwrite").parquet(p)
         (p, c)
-      })
+      }
       Similarity.knnGraphIncremental(s.read.parquet(path),
         emb.filter(col("vec_id") <= cut),
         emb.filter(col("vec_id") > cut), "vec_id", "embedding", k = 5)
@@ -3347,8 +3271,7 @@ object PipelineQueries {
     // times build + stored-layout query end-to-end (the serving shape)
     "sim_ivfpq_indexed" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-ivfpq-idx-").toString
+      val path = Staging.dir(s, "graft-ivfpq-idx-")
       Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", path,
         nCentroids = 16, m = 16)
       Similarity.queryIvfPqIndex(emb, emb.filter(col("vec_id") < 10),
@@ -3358,8 +3281,7 @@ object PipelineQueries {
     // the contract's rebuild/compaction equality baselines stay in Verify
     "sim_ivfpq_incremental" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-ivfpq-inc-t-").toString
+      val path = Staging.dir(s, "graft-ivfpq-inc-t-")
       Similarity.buildIvfPqIndex(emb.filter(col("vec_id") % 3 =!= 2),
         "vec_id", "embedding", path, nCentroids = 16, m = 16)
       Similarity.appendToIvfPqIndex(emb.filter(col("vec_id") % 3 === 2),
@@ -3413,8 +3335,7 @@ object PipelineQueries {
     // checks stay in Verify
     "sim_ivfpq_filtered" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-ivfpq-flt-t-").toString
+      val path = Staging.dir(s, "graft-ivfpq-flt-t-")
       Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", path,
         nCentroids = 16, m = 16)
       Similarity.queryIvfPqIndex(emb, emb.filter(col("vec_id") < 10),

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, TTLConfig, Trigger, ValueState}
 
-import graft.Tables
+import graft.{Staging, Tables}
 
 /** Structured-Streaming operators run to completion over a bounded file
   * source (`Trigger.AvailableNow`) so their final result is a plain
@@ -59,27 +59,26 @@ object StreamingQueries {
     reader.parquet(stage.toString)
   }
 
-  /** Staged n-file split input per (source dir, family) — scaffolding, not
-    * operator: deterministic `sliceKey % n` slices of the same table,
-    * written once and read-only afterwards, shared by the contract and
-    * timed forms and across bench reps; each RUN still gets its own fresh
-    * checkpoint/snapshot/work dirs. One family per distinct frame: folds
-    * that stream the same columns share one staged split.
+  /** Staged n-file split input per (source dir, family), memoized through
+    * [[Staging.memo]] — scaffolding, not operator: deterministic
+    * `sliceKey % n` slices of the same table, written once and read-only
+    * afterwards, shared by the contract and timed forms and across bench
+    * reps; each RUN still gets its own fresh checkpoint/snapshot/work dirs.
+    * One family per distinct frame: folds that stream the same columns
+    * share one staged split.
     */
-  private val splitInCache =
-    new scala.collection.concurrent.TrieMap[(String, String), String]
   private def stagedSplit(s: SparkSession, dir: String, fam: String,
       df: => DataFrame, sliceKey: org.apache.spark.sql.Column,
       n: Int = 3): String =
-    splitInCache.getOrElseUpdate((dir, fam), {
-      val d = Files.createTempDirectory(s"graft-$fam-in-").toString
+    Staging.memo(s, s"split $fam $dir") {
+      val d = Staging.dir(s, s"graft-$fam-in-")
       val frame = df
       (0 until n).foreach { i =>
         frame.filter(sliceKey % n === i).coalesce(1)
           .write.parquet(s"$d/f$i.parquet")
       }
       d
-    })
+    }
 
   /** Run `f` with `spark.sql.shuffle.partitions` set to `n`, restoring the
     * session value after; `None` leaves the session conf untouched.
@@ -111,19 +110,14 @@ object StreamingQueries {
           s"did not end within $boundMs ms and was stopped")
     }
 
-  /** Runs `body` on a fresh temp dir named `prefix*`, then deletes the dir
-    * and everything under it, whether `body` ended or threw. The delete is
-    * in-process and does not follow links (Spark's `Utils.deleteRecursively`
-    * forks `rm -rf`); an entry it cannot delete fails the call.
+  /** Runs `body` on a fresh [[Staging.dir]] named `prefix*`, then deletes
+    * the dir and everything under it ([[graft.fs.deleteTree]]), whether
+    * `body` ended or threw.
     */
-  private def withTempDir[T](prefix: String)(body: Path => T): T = {
-    val dir = Files.createTempDirectory(prefix)
-    try body(dir) finally if (Files.exists(dir)) {
-      val paths = Files.walk(dir)
-      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.delete(p))
-      finally paths.close()
-    }
+  private def withTempDir[T](s: SparkSession, prefix: String)(
+      body: Path => T): T = {
+    val dir = Paths.get(Staging.dir(s, prefix))
+    try body(dir) finally graft.fs.deleteTree(dir)
   }
 
   /** Runs `df` to completion into a memory table and returns the table. The
@@ -138,7 +132,7 @@ object StreamingQueries {
     // deployment sizes this to keyspace × executor count instead). The
     // partition count is baked into the query's checkpoint at first start,
     // so set it only for this launch and restore after.
-    withTempDir("graft-ckpt-") { cp =>
+    withTempDir(s, "graft-ckpt-") { cp =>
       withShufflePartitions(s, Some(8)) {
         awaitBounded(df.writeStream.format("memory").queryName(qn)
           .outputMode(mode)
@@ -220,7 +214,7 @@ object StreamingQueries {
     */
   private def runEmbeddingIndexStream(s: SparkSession,
       dir: String): EmbeddingIndexRun = {
-    val stage = Files.createTempDirectory("graft-semb-").toString
+    val stage = Staging.dir(s, "graft-semb-")
     val emb = Tables.t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val inDir = stagedSplit(s, dir, "semb", emb, col("vec_id"))
@@ -321,7 +315,7 @@ object StreamingQueries {
       dir: String): (String, Long) = {
     val docs = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
     val inDir = stagedSplit(s, dir, "sdoc", docs, col("doc_id"))
-    val stage = Files.createTempDirectory("graft-stxt-").toString
+    val stage = Staging.dir(s, "graft-stxt-")
     val idxPath = s"$stage/idx"
     graft.operators.TextAnalysis.initTextIndex(s, idxPath, nBuckets = 16)
     val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
@@ -359,7 +353,7 @@ object StreamingQueries {
     val emb = Tables.t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val inDir = stagedSplit(s, dir, "semb", emb, col("vec_id"))
-    val stage = Files.createTempDirectory("graft-sivfpq-").toString
+    val stage = Staging.dir(s, "graft-sivfpq-")
     val idxPath = s"$stage/idx"
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -404,7 +398,7 @@ object StreamingQueries {
       dir: String): (String, String, Long) = {
     val docs = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
     val inDir = stagedSplit(s, dir, "sdoc", docs, col("doc_id"))
-    val stage = Files.createTempDirectory("graft-snov-").toString
+    val stage = Staging.dir(s, "graft-snov-")
     val segDir = s"$stage/segments"
     val outDir = s"$stage/scores"
     val fs = new org.apache.hadoop.fs.Path(stage)
@@ -447,7 +441,7 @@ object StreamingQueries {
       dir: String): (String, Long) = {
     val docs = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
     val inDir = stagedSplit(s, dir, "sdoc", docs, col("doc_id"))
-    val stage = Files.createTempDirectory("graft-sres-").toString
+    val stage = Staging.dir(s, "graft-sres-")
     val segDir = s"$stage/snap"
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -484,7 +478,7 @@ object StreamingQueries {
       weights: Array[Double]): (String, Long) = {
     val docs = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
     val inDir = stagedSplit(s, dir, "sdoc", docs, col("doc_id"))
-    val stage = Files.createTempDirectory("graft-sqsc-").toString
+    val stage = Staging.dir(s, "graft-sqsc-")
     val outDir = s"$stage/scores"
     val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
       graft.operators.QualityModel
@@ -510,7 +504,7 @@ object StreamingQueries {
       dir: String): (String, String, Long) = {
     val docs = Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
     val inDir = stagedSplit(s, dir, "sdoc", docs, col("doc_id"))
-    val stage = Files.createTempDirectory("graft-sman-").toString
+    val stage = Staging.dir(s, "graft-sman-")
     val tbl = s"$stage/table"
     val man = s"$stage/manifest"
     val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
@@ -538,7 +532,7 @@ object StreamingQueries {
       .filter(col("event_type") === "purchase")
       .select(col("event_id"), col("value"))
     val inDir = stagedSplit(s, dir, "sdrift", ev, col("event_id"))
-    val stage = Files.createTempDirectory("graft-sdrift-").toString
+    val stage = Staging.dir(s, "graft-sdrift-")
     val segDir = s"$stage/segments"
     val run = runFold(s, ev.schema, inDir, stage, Some(8)) { (b, id) =>
       b.filter(col("value").isNotNull)
@@ -569,7 +563,7 @@ object StreamingQueries {
     val docs = Tables.t(s, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     val inDir = stagedSplit(s, dir, "sexp", docs, col("doc_id"))
-    val stage = Files.createTempDirectory("graft-sexp-").toString
+    val stage = Staging.dir(s, "graft-sexp-")
     val segDir = s"$stage/segments"
     val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
       b.agg(
@@ -604,7 +598,7 @@ object StreamingQueries {
     val docs = Tables.t(s, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     val inDir = stagedSplit(s, dir, "sexp", docs, col("doc_id"))
-    val stage = Files.createTempDirectory("graft-sexphll-").toString
+    val stage = Staging.dir(s, "graft-sexphll-")
     val segDir = s"$stage/segments"
     val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
       b.agg(count(lit(1)).as("n"),
@@ -644,18 +638,15 @@ object StreamingQueries {
     */
   private val PlattDriftEnvelopeFx = 1500000L
 
-  /** Per-dir memo of the frozen serving fit (a_fx, b_fx) the drift gate
-    * compares against — a deterministic pure function of the corpus
-    * (additive ppm bins + fixed-25-Newton plattFit), so the contract and
-    * timed forms share one computation per scale dir. The gate's operator
-    * cost is the STREAM fold; deriving the frozen fit is quality_platt's
-    * number.
+  /** Per-dir memo ([[Staging.memo]]) of the frozen serving fit (a_fx,
+    * b_fx) the drift gate compares against — a deterministic pure function
+    * of the corpus (additive ppm bins + fixed-25-Newton plattFit), so the
+    * contract and timed forms share one computation per scale dir. The
+    * gate's operator cost is the STREAM fold; deriving the frozen fit is
+    * quality_platt's number.
     */
-  private val plattFrozenFitCache =
-    new scala.collection.concurrent.TrieMap[String, (Long, Long)]
-
   private def plattFrozenFit(s: SparkSession, dir: String): (Long, Long) =
-    plattFrozenFitCache.getOrElseUpdate(dir, {
+    Staging.memo(s, s"platt-frozen-fit $dir") {
       val docs = Tables.t(s, dir, "documents")
       val fullBins = plattScored(docs)
         .withColumn("bin",
@@ -672,7 +663,7 @@ object StreamingQueries {
         }.toSeq)
       (math.floor(a0 * 1e6 + 0.5).toLong,
         math.floor(b0 * 1e6 + 0.5).toLong)
-    })
+    }
 
   /** Streaming Platt drift gate (the r13 verdict's model-layer ST3
     * posture — "detect the poison data" at the calibration level): each
@@ -696,7 +687,7 @@ object StreamingQueries {
     val docs = Tables.t(s, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     val inDir = stagedSplit(s, dir, "sexp", docs, col("doc_id"))
-    val stage = Files.createTempDirectory("graft-splatt-").toString
+    val stage = Staging.dir(s, "graft-splatt-")
     val segDir = s"$stage/segments"
     val verDir = s"$stage/verdicts"
     val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
@@ -872,7 +863,7 @@ object StreamingQueries {
     val ev = Tables.t(s, dir, "events")
       .select(col("event_id"), col("event_type"), col("user_id"))
     val inDir = stagedSplit(s, dir, "ssk", ev, col("event_id"))
-    val stage = Files.createTempDirectory("graft-ssk-").toString
+    val stage = Staging.dir(s, "graft-ssk-")
     val snapPath = s"$stage/snap"
     val snapDir = new org.apache.hadoop.fs.Path(snapPath)
     val fs = snapDir.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -901,7 +892,7 @@ object StreamingQueries {
     val docs = Tables.t(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("text"))
     val inDir = stagedSplit(s, dir, "sfi", docs, col("doc_id"))
-    val stage = Files.createTempDirectory("graft-sfi-").toString
+    val stage = Staging.dir(s, "graft-sfi-")
     val segPath = s"$stage/segs"
     val run = runFold(s, docs.schema, inDir, stage, None) { (b, id) =>
       val toks = b.select(col("lang"),
@@ -923,7 +914,7 @@ object StreamingQueries {
     val ev = Tables.t(s, dir, "events")
       .select(col("event_id"), col("event_type"), col("value"))
     val inDir = stagedSplit(s, dir, "skll", ev, col("event_id"))
-    val stage = Files.createTempDirectory("graft-skll-").toString
+    val stage = Staging.dir(s, "graft-skll-")
     val snapPath = s"$stage/snap"
     val snapDir = new org.apache.hadoop.fs.Path(snapPath)
     val fs = snapDir.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1248,7 +1239,7 @@ object StreamingQueries {
     // stream the watermark DOES eventually pass a session's close time; on
     // this bounded harness it never can (watermark stops at max(ts) - delay),
     // which is exactly why the flush must not depend on it here.
-    "streaming_sessionize" -> ((s, dir) => withTempDir("graft-stream-in-") { stage =>
+    "streaming_sessionize" -> ((s, dir) => withTempDir(s, "graft-stream-in-") { stage =>
       collapseSessions(runToTable(
         sessionizeStream(rawEvents(s, dir, stage)), "update", s))
     }),
@@ -1256,7 +1247,7 @@ object StreamingQueries {
     // The SAME sessionization through the built-in streaming session_window
     // operator (merging-window state store path) — custom state above, native
     // operator here, one oracle for both.
-    "streaming_session_window" -> ((s, dir) => withTempDir("graft-stream-in-") { stage =>
+    "streaming_session_window" -> ((s, dir) => withTempDir(s, "graft-stream-in-") { stage =>
       val agg = rawEvents(s, dir, stage)
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
@@ -1314,7 +1305,7 @@ object StreamingQueries {
       }
     }),
 
-    "streaming_tws_stats" -> ((s, dir) => withTempDir("graft-stream-in-") { stage =>
+    "streaming_tws_stats" -> ((s, dir) => withTempDir(s, "graft-stream-in-") { stage =>
       import s.implicits._
       val prev = s.conf.getOption(
         "spark.sql.streaming.stateStore.providerClass")
@@ -1343,7 +1334,7 @@ object StreamingQueries {
     }),
     // Tumbling event-time window + watermark, run to completion. Identical
     // results to the batch `time_window_agg` — which is exactly the point.
-    "streaming_window_agg" -> ((s, dir) => withTempDir("graft-stream-in-") { stage =>
+    "streaming_window_agg" -> ((s, dir) => withTempDir(s, "graft-stream-in-") { stage =>
       val agg = rawEvents(s, dir, stage)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -1358,7 +1349,7 @@ object StreamingQueries {
     // happen within 10 minutes after the click. Watermarks + the time-range
     // predicate bound both join states, which is what lets two unbounded
     // streams join with finite memory.
-    "streaming_stream_join" -> ((s, dir) => withTempDir("graft-stream-in-") { stage =>
+    "streaming_stream_join" -> ((s, dir) => withTempDir(s, "graft-stream-in-") { stage =>
       val clicks = rawEvents(s, dir, stage)
         .filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
@@ -1383,7 +1374,7 @@ object StreamingQueries {
     // downstream counts must equal the batch counts over the original table.
     // (Unbounded dedup state here; production bounds it with
     // dropDuplicatesWithinWatermark once ids can't recur past the watermark.)
-    "streaming_dedup" -> ((s, dir) => withTempDir("graft-stream-in-") { stage =>
+    "streaming_dedup" -> ((s, dir) => withTempDir(s, "graft-stream-in-") { stage =>
       val ev = rawEvents(s, dir, stage)
       val deduped = ev.union(ev)
         .dropDuplicates("event_id")
@@ -1401,7 +1392,7 @@ object StreamingQueries {
     // single file would only exercise intra-batch dedup); the oracle is the
     // batch funnel over the same table — streaming/batch parity for the
     // curation path.
-    "streaming_curation" -> ((s, dir) => withTempDir("graft-stream-docs-") { stage =>
+    "streaming_curation" -> ((s, dir) => withTempDir(s, "graft-stream-docs-") { stage =>
       val docs = rawDocs(s, dir, stage, nCopies = 2, maxFilesPerTrigger = Some(1))
       val funnel = docs
         .withColumn("n_tok",
@@ -1418,7 +1409,7 @@ object StreamingQueries {
     // dedup state once the watermark passes an id's event time — the
     // production form when duplicates can only arrive within a known delay
     // (unbounded dropDuplicates state is the alternative above).
-    "streaming_dedup_watermark" -> ((s, dir) => withTempDir("graft-stream-in-") { stage =>
+    "streaming_dedup_watermark" -> ((s, dir) => withTempDir(s, "graft-stream-in-") { stage =>
       val ev = rawEvents(s, dir, stage)
       val deduped = ev.union(ev)
         .withWatermark("ts", "1 day")
@@ -1433,7 +1424,7 @@ object StreamingQueries {
     // memory sink (update mode) records one row per key per micro-batch;
     // max(n) per key is the final count regardless of how the source was
     // split into batches.
-    "streaming_stateful_count" -> ((s, dir) => withTempDir("graft-stream-in-") { stage =>
+    "streaming_stateful_count" -> ((s, dir) => withTempDir(s, "graft-stream-in-") { stage =>
       import s.implicits._
       val perKey = rawEvents(s, dir, stage)
         .select(col("user_id")).as[Long]
@@ -1460,12 +1451,12 @@ object StreamingQueries {
     // safety (re-delivered batch ids are no-ops) is in `runIncrementalMv`
     // and exercised by StreamingSpec.
     "streaming_incremental_agg" -> ((s, dir) => {
-      val stage = Files.createTempDirectory("graft-minc-").toString
+      val stage = Staging.dir(s, "graft-minc-")
       val ev = Tables.t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
       val inDir = stagedSplit(s, dir, "minc", ev, col("event_id"), n = 2)
       runIncrementalMv(s, ev.schema, s"$inDir/*.parquet", s"$stage/mv",
-        Files.createTempDirectory("graft-minc-ckpt-").toString)
+        Staging.dir(s, "graft-minc-ckpt-"))
     }),
 
     // Sketch-snapshot maintenance as a STREAM: each micro-batch sketches
@@ -1645,7 +1636,7 @@ object StreamingQueries {
         graft.operators.Similarity.queryIvfPqIndex(emb, qv, "vec_id",
           "embedding", p, k = 5, nProbe = 8, shortlistFactor = 8)
       val served = serve(idxPath).localCheckpoint()
-      val rebuilt = Files.createTempDirectory("graft-sivfpq-rb-").toString
+      val rebuilt = Staging.dir(s, "graft-sivfpq-rb-")
       graft.operators.Similarity.buildIvfPqIndex(emb, "vec_id",
         "embedding", rebuilt, nCentroids = 8, m = 16,
         trainOn = s.read.parquet(s"$stage/train"))
@@ -2087,7 +2078,7 @@ object StreamingQueries {
         .save()
       // The input and, under it, the checkpoint live until `back` is
       // local-checkpointed: it no longer reads them.
-      val back = withTempDir("graft-ksink-in-") { dir =>
+      val back = withTempDir(s, "graft-ksink-in-") { dir =>
         val inDir = dir.toString
         ev.filter(col("key").cast("long") % 2 === 1)
           .write.mode("overwrite").parquet(inDir)
@@ -2155,8 +2146,8 @@ object StreamingQueries {
         awaitBounded(sq)
         true
       } catch { case _: Throwable => false }
-      val out = Files.createTempDirectory("graft-dlq-out-").toString
-      val cp = Files.createTempDirectory("graft-dlq-ckpt-").toString
+      val out = Staging.dir(s, "graft-dlq-out-")
+      val cp = Staging.dir(s, "graft-dlq-ckpt-")
       var runs = 1
       while (!consume(qn, out, cp, failOnPoison = true) && runs < 10)
         runs += 1
@@ -2164,8 +2155,8 @@ object StreamingQueries {
       val dlqName = s"$qn-dlq"
       val dlqSnap = s.read.format("graft-queue").option("queue", dlqName)
         .load().localCheckpoint()
-      val out2 = Files.createTempDirectory("graft-dlq-out2-").toString
-      val cp2 = Files.createTempDirectory("graft-dlq-ckpt2-").toString
+      val out2 = Staging.dir(s, "graft-dlq-out2-")
+      val cp2 = Staging.dir(s, "graft-dlq-ckpt2-")
       val redriveClean = consume(dlqName, out2, cp2, failOnPoison = false)
       val redriven = s.read.parquet(out2).localCheckpoint()
       graft.pipeline.InMemoryQueue.clear(qn)
@@ -2200,7 +2191,7 @@ object StreamingQueries {
     // and invent nothing — and every published record lands in some window.
     "streaming_queue_window" -> ((s, dir) => {
       val qn = s"stream-win-${java.util.UUID.randomUUID()}"
-      val stage = Files.createTempDirectory("graft-qwin-").toString
+      val stage = Staging.dir(s, "graft-qwin-")
       graft.sources.DataGenerator.generate(s, 2000L, seed = 7L).toDF()
         .write.mode("overwrite").parquet(s"$stage/records.parquet")
       graft.pipeline.Publisher.publish(s,

@@ -81,6 +81,17 @@ class GraftConfigSpec extends SparkSpec {
     assert(GraftTestFs.seenEndpoint.contains("http://localhost:4566"))
   }
 
+  Seq("0", "-3", "abc").foreach { v =>
+    test(s"SQS_BATCH_SIZE=$v fails when the config is built, naming the " +
+        "variable and the value") {
+      val e = intercept[IllegalArgumentException] {
+        GraftConfig.fromEnv(Map("QUEUE_URL" -> "mem://cfg-bad-batch", "SQS_BATCH_SIZE" -> v))
+      }
+      assert(e.getMessage.contains("SQS_BATCH_SIZE") && e.getMessage.contains(v),
+        e.getMessage)
+    }
+  }
+
   test("unknown queue scheme fails loudly instead of silently degrading") {
     val e = intercept[IllegalArgumentException] {
       GraftConfig(queueUrl = "sqs://us-east-1/q").queueClient()

@@ -43,8 +43,7 @@ class ExpectationsSpec extends SparkSpec {
   }
 
   test("the whole suite costs ONE scan of the table (the deequ claim)") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-exp-").toString
+    val dir = tmpDir("graft-exp-")
     Seq((1L, 2.0), (2L, 3.0)).toDF("id", "v")
       .write.mode("overwrite").parquet(dir)
     // AQE wraps the plan in an adaptive node whose subtree collect()

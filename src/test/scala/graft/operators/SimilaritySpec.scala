@@ -247,8 +247,7 @@ class SimilaritySpec extends SparkSpec {
   test("IVF-PQ append guards dim parity; compaction leaves one segment " +
       "and identical serving") {
     val emb = t(spark, sfDir, "embeddings")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-ivfpq-apnd-").toString
+    val path = tmpDir("graft-ivfpq-apnd-")
     Similarity.buildIvfPqIndex(emb.filter(col("vec_id") % 2 === 0),
       "vec_id", "embedding", path, nCentroids = 8, m = 8)
     // a batch of the wrong dimension must fail loudly, not write garbage

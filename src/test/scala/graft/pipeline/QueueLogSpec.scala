@@ -39,7 +39,8 @@ class QueueLogSpec extends SparkSpec {
     assert(raw.map(r => Option(r.idUtf8).map(_.toString).orNull) === awkward.map(_.id))
     assert(raw.map(r => Option(r.bodyUtf8).map(_.toString).orNull) === awkward.map(_.body))
 
-    assert(InMemoryQueue.drain(q) === awkward)
+    val drained = InMemoryQueue.queue(q).detach()
+    try assert(drained.messages === awkward) finally drained.delete()
     assert(InMemoryQueue.size(q) === 0)
     InMemoryQueue.queue(q).append(awkward.reverse)
     assert(InMemoryQueue.all(q) === awkward.reverse)
@@ -151,7 +152,8 @@ class QueueLogSpec extends SparkSpec {
 
     InMemoryQueue.queue(q).append(awkward)
     val again = InMemoryQueue.queue(q).segmentFiles
-    assert(InMemoryQueue.drain(q) === awkward)
+    val drained = InMemoryQueue.queue(q).detach()
+    try assert(drained.messages === awkward) finally drained.delete()
     assert(again.forall(f => !Files.exists(f)), again)
     InMemoryQueue.clear(q)
   }

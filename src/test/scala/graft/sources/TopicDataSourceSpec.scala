@@ -113,7 +113,7 @@ class TopicDataSourceSpec extends SparkSpec {
 
   test("checkpoint restart resumes from the committed per-partition offsets") {
     val topic = topicName
-    val cp = java.nio.file.Files.createTempDirectory("tds-ckpt-").toString
+    val cp = tmpDir("tds-ckpt-")
     publishInts(topic, 3, 0 until 9)
     // foreachBatch (unlike the memory sink) supports checkpoint recovery
     def drain(): Seq[Int] = {
@@ -142,7 +142,7 @@ class TopicDataSourceSpec extends SparkSpec {
     val topic = topicName
     publishInts(topic, 2, 0 until 5)
     // drive a tiny stream so an offset log is written, then parse it back
-    val cp = java.nio.file.Files.createTempDirectory("tds-off-").toString
+    val cp = tmpDir("tds-off-")
     val sq = spark.readStream.format("graft-topic")
       .option("topic", topic).option("partitions", "2").load()
       .writeStream.format("memory").queryName("tds_off_sink")

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import graft.SparkSpec
+import graft.{SparkSpec, Staging}
 import graft.pipeline.{Consumer, InMemoryQueue, InMemoryQueueClient}
 import graft.sources.DataGenerator
 
@@ -228,12 +228,19 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming_kafka_sink and a runToTable query leave none of their temp dirs behind") {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    // The queries' dirs sit under the context's staging root; the top of
+    // java.io.tmpdir is listed too, so a dir created in either counts.
+    def places: Seq[java.io.File] = Seq(
+      new java.io.File(System.getProperty("java.io.tmpdir")), Staging.root(spark).toFile)
     // Only the names these two queries create: other processes come and go
     // in the shared temp dir.
-    def entries: Set[String] = tmp.list().toSet.filter(n =>
+    def entries: Set[String] = places.flatMap(_.listFiles().toSeq).filter(f =>
       Seq("graft-ksink-", "graft-ckpt-", "graft-stream-in-", "graft-stream-docs-")
-        .exists(n.startsWith))
+        .exists(f.getName.startsWith)).map(_.getPath).toSet
+    // The listing sees a dir handed out under the staging root.
+    val probe = Staging.dir(spark, "graft-ckpt-")
+    assert(entries.contains(probe))
+    graft.fs.deleteTree(java.nio.file.Paths.get(probe))
     // streaming_funnel stages its split input once per source dir and
     // keeps it for later runs; the first run creates it.
     val funnel = StreamingQueries.queries("streaming_funnel")
