@@ -1,13 +1,7 @@
 package graft.pipeline
 
-import java.lang.ref.{Cleaner, WeakReference}
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
+import java.lang.ref.Cleaner
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.{Partition, SparkContext, TaskContext}
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{ExprUtils, GenericInternalRow}
 import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JacksonParser, JSONOptions}
@@ -31,12 +25,15 @@ object Consumer {
     * source instead (see graft.streaming).
     *
     * The drain is eager: the queue is empty when this returns. It detaches
-    * the queue's segment files (see [[QueueLog]]) as one staged snapshot,
-    * read through a [[StagedBodiesRDD]] whose partitions carry only their
-    * index: each parse task reads its contiguous record range from the
-    * segment files in place, so no body is held on the driver heap or
-    * serialized into a task. Slicing is `parallelize`'s: one slice per
-    * core, at most one per body, so each action on the result sees the
+    * the queue's segment files (see [[QueueLog]]) as one staged snapshot
+    * and cuts its `n` records into contiguous ranges, slice `i` taking
+    * `[i * n / slices, (i + 1) * n / slices)`: one slice per core, at most
+    * one per body. The driver plans each range as its list of [[Chunk]]s
+    * (file path, byte range, record count) and parallelizes the lists, one
+    * partition each, so a parse task carries only its own list and reads
+    * its records from the segment files in place: no body is held on the
+    * driver heap or serialized into a task, and a task needs nothing from
+    * the driver's JVM but the files. Each action on the result sees the
     * same rows, in queue order. (A local `Seq` would become a
     * `LocalRelation`, into which the optimizer folds the parse: every body
     * parsed on the driver thread.)
@@ -66,31 +63,34 @@ object Consumer {
     * Bodies are stored as UTF-8, so a raw lone surrogate reads back as `?`,
     * as it does through `createDataset`.
     *
-    * The snapshot lives exactly as long as the returned frame: the frame's
-    * RDD holds it, the task-side registry only weakly, and once it is
-    * unreachable a `Cleaner` deletes its segment files (the queue's
-    * shutdown hook deletes any left at exit). Tasks find it because
-    * local[n] runs them in the driver's JVM, the premise `InMemoryQueue`
-    * and the `graft-queue` source already rest on; a task that cannot find
-    * its snapshot fails, naming it, rather than return no rows.
+    * The snapshot's segment files live as long as the returned frame: a
+    * `Cleaner` registered on the frame's RDD deletes them once that RDD is
+    * unreachable (the queue's shutdown hook deletes any left at exit). An
+    * action that runs after the files are gone fails, naming the missing
+    * file, rather than return no rows.
     */
   def consume(spark: SparkSession, queueName: String, schema: StructType): DataFrame = {
     val staged = InMemoryQueue.queue(queueName).detach()
-    val slices = math.max(1,
-      math.min(staged.count, spark.sparkContext.defaultParallelism))
+    val n = staged.count.toLong
+    val slices = math.max(1, math.min(staged.count, spark.sparkContext.defaultParallelism))
+    val plans = (0 until slices).map(i => staged.chunks(i * n / slices, (i + 1) * n / slices))
     val nullable = GraftSqlShim.asNullable(schema)
     val timeZone = spark.conf.get("spark.sql.session.timeZone")
     val corruptColumn = spark.conf.get("spark.sql.columnNameOfCorruptRecord")
-    val rows = StagedBodies(spark.sparkContext, staged, slices).mapPartitions { it =>
+    val rows = spark.sparkContext.parallelize(plans, slices).mapPartitions { it =>
       val parse = jsonParser(nullable, timeZone, corruptColumn)
       val allNull = new GenericInternalRow(nullable.length)
-      it.map { body =>
+      it.flatMap(_.iterator.flatMap(_.records)).map { record =>
+        val body = record.body
         val parsed = if (body == null) Iterator.empty else parse.parse(body)
         if (parsed.hasNext) parsed.next() else allNull
       }
     }
+    cleaner.register(rows, staged.deleter)
     GraftSqlShim.internalCreateDataFrame(spark, rows, nullable)
   }
+
+  private val cleaner = Cleaner.create()
 
   /** `JsonToStructsEvaluator`'s parser for a struct schema, reading
     * `String`s instead of `UTF8String`s.
@@ -106,61 +106,4 @@ object Consumer {
       body => raw.parse(body, CreateJacksonParser.string, UTF8String.fromString),
       options.parseMode, schema, options.columnNameOfCorruptRecord)
   }
-}
-
-/** The drained bodies of one [[Consumer.consume]] call as an `RDD[String]`
-  * of `slices` contiguous record ranges of its staged [[LogView]]. The
-  * snapshot stays on the driver: the RDD holds it in a `@transient` field
-  * (`pin`, which only keeps it reachable), and each task looks it up by
-  * `stagedId` in the JVM-local [[StagedBodies]] registry, which holds it
-  * only weakly, and reads its range from the segment files.
-  */
-private[pipeline] class StagedBodiesRDD(
-    sc: SparkContext,
-    @transient private val pin: AnyRef,
-    stagedId: Long,
-    slices: Int) extends RDD[String](sc, Nil) {
-
-  override protected def getPartitions: Array[Partition] =
-    Array.tabulate[Partition](slices)(StagedSlice)
-
-  override def compute(split: Partition, context: TaskContext): Iterator[String] = {
-    val staged = StagedBodies.lookup(stagedId)
-    val i = split.index.toLong
-    staged.records(i * staged.count / slices, (i + 1) * staged.count / slices)
-      .map(_.body)
-  }
-}
-
-private case class StagedSlice(index: Int) extends Partition
-
-/** JVM-local registry of staged consume snapshots, keyed by a per-call id.
-  * Entries are weak: a snapshot is reachable only while the frame whose RDD
-  * holds it is, and a collected one leaves a cleared entry that the next
-  * staging call purges. A `Cleaner` deletes a snapshot's segment files
-  * once it is unreachable.
-  */
-private[pipeline] object StagedBodies {
-  private val staged = new ConcurrentHashMap[Long, WeakReference[LogView]]
-  private val nextId = new AtomicLong
-  private val cleaner = Cleaner.create()
-
-  def apply(sc: SparkContext, snapshot: LogView, slices: Int): StagedBodiesRDD = {
-    staged.values.removeIf(_.get == null)
-    val id = nextId.incrementAndGet()
-    staged.put(id, new WeakReference(snapshot))
-    cleaner.register(snapshot, snapshot.deleter)
-    new StagedBodiesRDD(sc, snapshot, id, slices)
-  }
-
-  def lookup(id: Long): LogView =
-    Option(staged.get(id)).flatMap(r => Option(r.get)).getOrElse(
-      throw new IllegalStateException(s"staged consume snapshot $id is gone: " +
-        "its frame was dropped, or the task runs outside the driver JVM that " +
-        "staged it (Consumer.consume assumes local[n], where tasks share the " +
-        "driver's JVM)"))
-
-  /** Ids whose snapshot is still reachable. */
-  def liveIds: Seq[Long] =
-    staged.asScala.collect { case (id, r) if r.get != null => id }.toSeq
 }

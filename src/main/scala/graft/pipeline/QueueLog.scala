@@ -21,9 +21,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * positional write into the current segment; a batch that does not fit
   * starts a new segment (of its own size when it is larger than a
   * segment). The index packs each record's segment number and offset in
-  * that segment into one `Long`. A slice `[start, end)` reads only the
-  * bytes of its records, in chunks of about 1 MiB, and decodes nothing
-  * outside it.
+  * that segment into one `Long`.
+  *
+  * Reads go through a [[LogView]]: the index turns a record range into
+  * [[Chunk]]s, each a file path, a byte range of at most
+  * [[LogView.ChunkBytes]] and a record count, so a slice reads only the
+  * bytes of its own records and decodes nothing outside them. A chunk is
+  * read by opening its file and doing one positional read, not through a
+  * memory map: a segment deleted before a read then fails that read with
+  * an exception that names the file, and its disk space is freed at
+  * delete rather than when a mapping is collected.
   *
   * [[detach]] hands the current segments and index over as a [[LogView]]
   * and starts the log afresh: later appends go to new segments. [[delete]]
@@ -31,10 +38,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Segments live in one `graft-queue-<uuid>` dir per JVM, under the first
   * of `SPARK_LOCAL_DIRS`, `spark.local.dir` and `java.io.tmpdir`; a
-  * shutdown hook deletes that dir. Reads are positional `FileChannel`
-  * reads, not memory maps: a segment deleted under a reader then fails
-  * that read with an exception, and its disk space is freed at delete
-  * rather than when a mapping is collected.
+  * shutdown hook deletes that dir.
   */
 final class QueueLog private[pipeline] (segmentBytes: Long = QueueLog.SegmentBytes) {
   import QueueLog._
@@ -126,82 +130,66 @@ object QueueLog {
   }
 }
 
-/** One segment file. Only its log's lock writes it; [[end]] is how far. */
+/** One segment file. Only its log's lock writes it; [[end]] is how far.
+  * Readers open the file by path (see [[Chunk]]).
+  */
 private[pipeline] final class Segment(val path: Path) {
-  private val ch = FileChannel.open(path,
-    StandardOpenOption.CREATE_NEW, StandardOpenOption.READ, StandardOpenOption.WRITE)
+  private val ch = FileChannel.open(path, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
   @volatile var end = 0L
 
   def write(buf: ByteBuffer): Unit = while (buf.hasRemaining) end += ch.write(buf, end)
-
-  /** Bytes `[from, until)` in a fresh array. */
-  def read(from: Long, until: Long): Array[Byte] = {
-    val a = new Array[Byte](Math.toIntExact(until - from))
-    val b = ByteBuffer.wrap(a)
-    while (b.hasRemaining)
-      if (ch.read(b, from + b.position()) < 0)
-        throw new EOFException(s"$path ends before byte $until")
-    a
-  }
 
   def delete(): Unit = try ch.close() finally Files.deleteIfExists(path)
 }
 
 /** Records `[0, count)` of a log: its segments, where the last of them
   * ended (`tailEnd`), and their offset index. Only the last segment grows
-  * and index entries below `count` never change, so a view reads without
-  * the log's lock.
+  * and index entries below `count` never change, so a view plans reads
+  * without the log's lock.
+  *
+  * Its one read path is [[chunks]]: a record range becomes a list of
+  * [[Chunk]]s, each a run of whole records in one segment file that is
+  * read with one positional read. [[records]] reads such a list in order
+  * on the caller's thread; `Consumer.consume` ships one list to each task.
   */
 final class LogView private[pipeline] (segments: Vector[Segment], tailEnd: Long,
     index: Array[Long], val count: Int, decoded: LongAdder) {
   import LogView._
 
-  /** Records `[start, end)`, clamped to `[0, count)`. Offsets past
-    * `Int.MaxValue` fail instead of wrapping.
+  /** Records `[start, end)`, clamped to `[0, count)`, decoding nothing
+    * outside them. Offsets past `Int.MaxValue` fail instead of wrapping.
     */
-  def records(start: Long, end: Long): Iterator[LogRecord] = {
-    val total = count
-    val last = math.min(Math.toIntExact(end), total)
-    val first = math.min(Math.toIntExact(start), last)
-    new Iterator[LogRecord] {
-      private var i = first         // the next record to return
-      private var chunkEnd = first  // records [i, chunkEnd) are in `buf`
-      private var buf: Array[Byte] = _
-      private var from = 0L         // where `buf` starts in its segment
+  def records(start: Long, end: Long): Iterator[LogRecord] =
+    chunks(start, end).iterator.flatMap(_.records).map { r => decoded.increment(); r }
 
-      override def hasNext: Boolean = i < last
-
-      override def next(): LogRecord = {
-        if (!hasNext) throw new NoSuchElementException("end of log slice")
-        if (i == chunkEnd) fill()
-        val at = (offsetOf(index(i)) - from).toInt
-        i += 1
-        decoded.increment()
-        val idLen = int(at)
-        val bodyAt = at + 4 + math.max(idLen, 0)
-        new LogRecord(buf, at + 4, idLen, bodyAt + 4, int(bodyAt))
-      }
-
-      private def int(at: Int): Int =
-        (buf(at) & 0xFF) << 24 | (buf(at + 1) & 0xFF) << 16 |
-          (buf(at + 2) & 0xFF) << 8 | (buf(at + 3) & 0xFF)
-
-      // Reads the records from `i` on that share its segment and fit in
-      // about one chunk (at least one record).
-      private def fill(): Unit = {
-        val seg = segmentOf(index(i))
-        from = offsetOf(index(i))
-        var k = i + 1
-        while (k < last && segmentOf(index(k)) == seg && offsetOf(index(k)) - from < ChunkBytes)
-          k += 1
-        val until =
-          if (k < total && segmentOf(index(k)) == seg) offsetOf(index(k))
-          else if (seg == segments.length - 1) tailEnd
-          else segments(seg).end
-        buf = segments(seg).read(from, until)
-        chunkEnd = k
-      }
+  /** The chunks that hold records `[start, end)` (clamped as [[records]]
+    * clamps), in order. A chunk stays within one segment and spans at most
+    * [[LogView.ChunkBytes]], unless it is a single record larger than that.
+    */
+  private[pipeline] def chunks(start: Long, end: Long): Vector[Chunk] = {
+    val last = math.min(Math.toIntExact(end), count)
+    var i = math.min(Math.toIntExact(start), last)
+    val out = Vector.newBuilder[Chunk]
+    while (i < last) {
+      val seg = segmentOf(index(i))
+      val from = offsetOf(index(i))
+      var k = i + 1
+      while (k < last && segmentOf(index(k)) == seg && endOf(k) - from <= ChunkBytes)
+        k += 1
+      out += Chunk(segments(seg).path.toString, from, endOf(k - 1), k - i)
+      i = k
     }
+    out.result()
+  }
+
+  /** Where record `k` ends: where the next one starts in its segment, or
+    * where the segment ends.
+    */
+  private def endOf(k: Int): Long = {
+    val seg = segmentOf(index(k))
+    if (k + 1 < count && segmentOf(index(k + 1)) == seg) offsetOf(index(k + 1))
+    else if (seg == segments.length - 1) tailEnd
+    else segments(seg).end
   }
 
   def messages: Seq[QueueMessage] = records(0, count).map(_.message).toVector
@@ -217,10 +205,45 @@ final class LogView private[pipeline] (segments: Vector[Segment], tailEnd: Long,
 }
 
 private object LogView {
-  /** A slice is read in chunks of about this many bytes. */
-  val ChunkBytes: Int = 1 << 20
+  /** The most bytes a chunk reads into one array (unless a single record
+    * is larger): half a 1 MiB G1 region, less a byte array's 16-byte
+    * header. G1 sizes regions at 1 MiB for heaps under 4 GB (perfbench
+    * runs a 2 GB heap), and an array larger than half a region is a
+    * humongous allocation: it takes whole regions of its own outside the
+    * young generation.
+    */
+  val ChunkBytes: Int = (512 << 10) - 16
   def segmentOf(p: Long): Int = (p >>> 32).toInt
   def offsetOf(p: Long): Long = p & 0xFFFFFFFFL
+}
+
+/** A run of `count` whole records that fill bytes `[from, until)` of the
+  * segment file at `path`. It needs neither the log nor its index, so a
+  * task reads it wherever the file is readable; a file deleted before the
+  * read fails it with an exception that names the file.
+  */
+private[pipeline] final case class Chunk(path: String, from: Long, until: Long, count: Int) {
+
+  /** Reads the bytes with one positional read and walks the records in
+    * order.
+    */
+  def records: Iterator[LogRecord] = {
+    val buf = ByteBuffer.allocate(Math.toIntExact(until - from))
+    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
+    try while (buf.hasRemaining)
+      if (ch.read(buf, from + buf.position()) < 0)
+        throw new EOFException(s"$path ends before byte $until")
+    finally ch.close()
+    var at = 0 // where the next record starts in `buf`
+    Iterator.fill(count) {
+      val idLen = buf.getInt(at)
+      val bodyAt = at + 4 + math.max(idLen, 0)
+      val bodyLen = buf.getInt(bodyAt)
+      val r = new LogRecord(buf.array, at + 4, idLen, bodyAt + 4, bodyLen)
+      at = bodyAt + 4 + math.max(bodyLen, 0)
+      r
+    }
+  }
 }
 
 /** One record as it lies in a read buffer: the UTF-8 bytes of its id and

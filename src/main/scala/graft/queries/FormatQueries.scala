@@ -3,6 +3,8 @@ package graft.queries
 import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanLike
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.Staging
@@ -37,6 +39,22 @@ object FormatQueries {
     raw.select(
       (col("o_custkey") * 65535L / xMax).cast("long").as("x"),
       (col("o_orderkey") * 65535L / yMax).cast("long").as("y"))
+  }
+
+  /** True when `df`'s executed plan scans files under each of `dirs` and
+    * under nothing else: the "zero data-file opens" check of the manifest
+    * contracts. It reads the file scans' root paths, through AQE stages and
+    * subqueries, not the plan string, where Spark cuts a scan's `Location`
+    * to `spark.sql.maxMetadataStringLength` characters.
+    */
+  private def scansOnly(df: DataFrame, dirs: String*): Boolean = {
+    val roots = new AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(df.queryExecution.executedPlan) {
+        case scan: FileSourceScanLike => scan.relation.location.rootPaths
+      }.flatten.map(p => Paths.get(p.toUri.getPath))
+    val under = dirs.map(Paths.get(_))
+    under.forall(d => roots.exists(_.startsWith(d))) &&
+      roots.forall(r => under.exists(r.startsWith))
   }
 
   val queries: Map[String, Q] = Map(
@@ -424,15 +442,13 @@ object FormatQueries {
       val co = Manifest.countOnly(s, man, "pk")
       // zero data-file opens: the aggregate's only file source is the
       // manifest store — the data dir must not appear in the plan
-      val plan = co.queryExecution.executedPlan.toString
+      val manifestOnly = scansOnly(co, man)
       val row = co.head()
       Contracts.row(s,
         "n_rows" -> row.getLong(0),
         "n_nulls" -> row.getLong(1),
         "n_not_null" -> row.getLong(2),
-        "zero_data_file_opens_ok" ->
-          (plan.contains("graft-mancnt-man-") &&
-            !plan.contains("graft-mancnt-tbl-")))
+        "zero_data_file_opens_ok" -> manifestOnly)
     }),
 
     // Per-file NDV sketches beside the manifest: distinct counts do NOT
@@ -469,8 +485,7 @@ object FormatQueries {
       val all = Manifest.ndvEstimateAll(s, idx)
       val ranged = Manifest.ndvEstimateForRange(s, idx, man,
         "l_orderkey", lo, hi)
-      val allPlan = all.queryExecution.executedPlan.toString
-      val rangedPlan = ranged.queryExecution.executedPlan.toString
+      val sidecarsOnly = scansOnly(all, idx) && scansOnly(ranged, idx, man)
       val allRow = all.head()
       val rangedRow = ranged.head()
       val exactAll = li.select(count_distinct(col("l_partkey")))
@@ -496,11 +511,7 @@ object FormatQueries {
         "compaction_invisible_ok" ->
           (compacted.getLong(0) == allRow.getLong(0) &&
             compacted.getLong(1) == allRow.getLong(1)),
-        "zero_data_file_opens_ok" ->
-          (allPlan.contains("graft-manndv-idx-") &&
-            !allPlan.contains("graft-manndv-tbl-") &&
-            rangedPlan.contains("graft-manndv-idx-") &&
-            !rangedPlan.contains("graft-manndv-tbl-")))
+        "zero_data_file_opens_ok" -> sidecarsOnly)
     }),
 
     // Unified sidecar build + APPEND: Bloom + NDV + KLL per-file indexes
@@ -750,7 +761,7 @@ object FormatQueries {
       val qs = Seq(0.5, 0.9)
       val est = Manifest.quantileEstimateForRange(s, idx, man,
         "l_orderkey", lo, hi, qs)
-      val plan = est.queryExecution.executedPlan.toString
+      val sidecarsOnly = scansOnly(est, idx, man)
       val rows = est.collect().map(r =>
         (r.getDouble(0), r.getDouble(1), r.getLong(2))).sortBy(_._1)
       val survivors = Manifest.readManifest(s, man)
@@ -772,10 +783,7 @@ object FormatQueries {
         "median_all" -> exactMedianAll,
         "n_exact_ok" -> (nExact > 0L && rows.forall(_._3 == nExact)),
         "estimates_in_envelope_ok" -> envelopeOk,
-        "zero_data_file_opens_ok" ->
-          (plan.contains("graft-manq-idx-") &&
-            plan.contains("graft-manq-man-") &&
-            !plan.contains("graft-manq-tbl-")))
+        "zero_data_file_opens_ok" -> sidecarsOnly)
     }),
 
     // Three-dimensional curve × manifest composition: the 21-bit Morton

@@ -254,20 +254,6 @@ class PipelineSpec extends SparkSpec {
     } finally spark.conf.unset(key)
   }
 
-  test("a dropped consumed frame leaves no live staged snapshot") {
-    published("q13", 40L, 15L)
-    // the frame is only reachable inside this call
-    def consumedRows(): Long =
-      Consumer.consume(spark, "q13", Encoders.product[Record].schema).count()
-    assert(consumedRows() === 40L)
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (StagedBodies.liveIds.nonEmpty && System.nanoTime() < deadline) {
-      System.gc()
-      Thread.sleep(100)
-    }
-    assert(StagedBodies.liveIds.isEmpty)
-  }
-
   test("a dropped consumed frame's staged segments are deleted once it is unreachable") {
     published("q19", 40L, 19L)
     val files = InMemoryQueue.queue("q19").segmentFiles
@@ -287,14 +273,14 @@ class PipelineSpec extends SparkSpec {
     assert(left.isEmpty, left)
   }
 
-  test("a task whose staged snapshot is gone fails naming it") {
-    // an id the registry never staged: what a task sees once the snapshot
-    // was collected or when it runs in another JVM
-    val orphan = new StagedBodiesRDD(spark.sparkContext, Array("{}"),
-      stagedId = -1L, slices = 1)
-    val e = intercept[SparkException](orphan.collect())
-    assert(e.getMessage.contains("staged consume snapshot -1 is gone"))
-    assert(e.getMessage.contains("local[n]"))
+  test("an action after the consumed frame's segment files are gone fails naming the file") {
+    published("q13", 40L, 15L)
+    val files = InMemoryQueue.queue("q13").segmentFiles
+    assert(files.nonEmpty)
+    val back = Consumer.consume(spark, "q13", Encoders.product[Record].schema)
+    files.foreach(java.nio.file.Files.delete)
+    val e = intercept[SparkException](back.count())
+    assert(e.getMessage.contains(files.head.toString), e.getMessage)
   }
 
   /** Consumes `bodies` from a fresh queue `q` and checks the frame against

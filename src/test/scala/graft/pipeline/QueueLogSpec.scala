@@ -7,6 +7,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
 
@@ -87,6 +88,33 @@ class QueueLogSpec extends SparkSpec {
         case (a, b) => assert(v.records(a, b).map(_.message).toSeq === all.slice(a, b), (a, b))
       }
     } finally log.delete()
+  }
+
+  test("read chunks stay within ChunkBytes; a body of three chunks gets one of its own " +
+      "and round-trips through the log, a graft-queue read and consume") {
+    val q = fresh("log-big")
+    val small = (0 until 1000).map(i => QueueMessage(s"s-$i", s"""{"v":"${"y" * 1600}$i"}"""))
+    val bigValue = "x" * (3 * LogView.ChunkBytes)
+    val big = QueueMessage("big", s"""{"v":"$bigValue"}""")
+    val msgs = small.take(500) ++ Seq(big) ++ small.drop(500)
+    msgs.grouped(10).foreach(InMemoryQueue.queue(q).append)
+    val v = InMemoryQueue.queue(q).view
+    val chunks = v.chunks(0, v.count)
+    assert(chunks.map(_.count).sum === msgs.size)
+    assert(chunks.exists(c => c.count == 1 && c.until - c.from > 3L * LogView.ChunkBytes), chunks)
+    chunks.foreach(c => assert(c.until - c.from <= LogView.ChunkBytes || c.count == 1, c))
+    assert(chunks.size > 3, chunks)
+    assert(v.records(0, v.count).map(_.message).toSeq === msgs)
+    assert(v.records(499, 502).map(_.message).toSeq === msgs.slice(499, 502))
+
+    val rows = spark.read.format("graft-queue").option("queue", q).load()
+      .collect().map(r => QueueMessage(r.getString(0), r.getString(1))).toSeq
+    assert(rows === msgs)
+
+    val back = Consumer.consume(spark, q, new StructType().add("v", "string"))
+    assert(back.collect().map(_.getString(0)).toSeq ===
+      msgs.map(m => m.body.stripPrefix("{\"v\":\"").stripSuffix("\"}")))
+    InMemoryQueue.clear(q)
   }
 
   test("concurrent senders and readers see every batch whole, in each sender's order") {

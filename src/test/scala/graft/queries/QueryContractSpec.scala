@@ -80,6 +80,19 @@ class QueryContractSpec extends SparkSpec {
     }
   }
 
+  test("manifest contracts see zero data-file opens under a short plan-metadata limit") {
+    // Spark cuts a scan's Location in the plan string to this many
+    // characters, so the check must not read the directory names there
+    val key = "spark.sql.maxMetadataStringLength"
+    spark.conf.set(key, "20")
+    try Seq("manifest_count_only", "manifest_ndv", "manifest_quantile").foreach { q =>
+      withClue(q) {
+        val row = SparkEntry.queries(q)(spark, sfDir).head()
+        assert(row.getAs[Boolean]("zero_data_file_opens_ok"))
+      }
+    } finally spark.conf.unset(key)
+  }
+
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0L)
   }

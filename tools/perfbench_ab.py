@@ -5,8 +5,13 @@
         --seeds 3-12 [--traced-seeds 7]
 
 The parent is HEAD's committed files, written with `git archive HEAD` into a
-temporary directory that is removed when the script ends; the change is the
-working tree. Both sides run at perfbench's default length. For every seed
+temporary directory; the change is a copy of the working tree's files that
+git tracks or would add (tracked files still on disk and untracked files
+that are not ignored), made into a sibling directory when the script
+starts. Both sides thus build and run from fresh directories next to each
+other, and later edits to the working tree do not reach the runs. The
+directory is removed when the script ends. Both sides run at perfbench's
+default length. For every seed
 one parent run and one change run of `perfbench/run.py` follow each other;
 the side that runs first alternates from pair to pair, so a drift of the
 machine's load over the session does not favour one side. Traced runs
@@ -55,6 +60,19 @@ def quartiles(xs):
         return {"q1": xs[0], "median": xs[0], "q3": xs[0]}
     q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
     return {"q1": q1, "median": med, "q3": q3}
+
+
+def copy_worktree(dest):
+    """Copies the working tree's tracked and untracked non-ignored files
+    (as they are on disk) into `dest`."""
+    listed = subprocess.run(
+        ["git", "-C", str(ROOT), "ls-files", "-z", "--cached", "--others",
+         "--exclude-standard"], capture_output=True, check=True).stdout
+    for rel in sorted({f for f in listed.decode().split("\0") if f}):
+        src = ROOT / rel
+        if src.is_file() or src.is_symlink():
+            (dest / rel).parent.mkdir(parents=True, exist_ok=True)
+            shutil.copy2(src, dest / rel, follow_symlinks=False)
 
 
 def run_once(checkout, workload, seed, trace):
@@ -191,9 +209,11 @@ def main():
                              "outside --seeds/--traced-seeds; resume with the arguments "
                              "that wrote it")
     tmp = Path(tempfile.mkdtemp(prefix="perfbench-ab-"))
-    parent_dir = tmp / "parent"
+    parent_dir, change_dir = tmp / "parent", tmp / "change"
     try:
         parent_dir.mkdir()
+        change_dir.mkdir()
+        copy_worktree(change_dir)
         archive = subprocess.run(["git", "-C", str(ROOT), "archive", parent_rev],
                                  capture_output=True, check=True).stdout
         subprocess.run(["tar", "-x", "-C", str(parent_dir)], input=archive, check=True)
@@ -202,7 +222,7 @@ def main():
             for i, side in enumerate(order):
                 if any(r["pair"] == pair and r["side"] == side for r in runs):
                     continue
-                checkout = parent_dir if side == "parent" else ROOT
+                checkout = parent_dir if side == "parent" else change_dir
                 rec = run_once(checkout, a.workload, seed, trace)
                 runs.append({"side": side, "seed": seed, "pair": pair,
                              "ran_first": i == 0, **rec})
@@ -214,6 +234,8 @@ def main():
                     "workload": a.workload,
                     "parent": parent_rev,
                     "parent_checkout": f"git archive {parent_rev}",
+                    "change_checkout": "copy of the working tree's tracked and "
+                                       "untracked non-ignored files",
                     "command": f"python3 perfbench/run.py --workload {a.workload} "
                                "--seed <seed> --trace <0|1>",
                     "pairing": "one parent and one change run per seed, "
