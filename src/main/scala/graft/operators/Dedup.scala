@@ -1023,24 +1023,13 @@ object Dedup {
   }
 
   /** Merge `b*` segment subdirs of DISJOINT rows — the streaming
-    * embedding index's corpus/ and idx/ stores — into one segment.
+    * embedding index's corpus/ and idx/ stores — into one segment `b-1`.
     * Unlike [[TextAnalysis.compactGramDf]]'s summing merge, rows here
     * pass through unchanged (each vector/band row lives in exactly one
     * batch segment), so compaction is purely scan-fan-in repair: a
     * long-running ingest accumulates one subdir per micro-batch and the
-    * per-batch candidate read degrades with file count, not data.
-    *
-    * Concurrency contract: the segment list is SNAPSHOTTED once up front —
-    * the staged merge reads exactly those paths and the delete loop removes
-    * exactly those paths, so a segment appended by a concurrent streaming
-    * micro-batch between snapshot and swap SURVIVES un-merged (it is simply
-    * picked up by the next compaction) instead of being destroyed.
-    * Compaction should still not run concurrently with READS: the
-    * delete-then-rename swap has a brief window where the snapshotted
-    * segments are gone and the merged one not yet renamed in, so a reader
-    * racing the swap can see a partial store. Run it from the maintenance
-    * path (between micro-batches / from a scheduled job), like any
-    * LSM/Lucene segment merge.
+    * per-batch candidate read degrades with file count, not data. The
+    * snapshot, swap and concurrency rules are [[Segments]]'.
     *
     * Schema metadata (the SRP parameter block on `bucket`) survives the
     * parquet round trip, so a compacted index still fails loudly on
@@ -1049,24 +1038,9 @@ object Dedup {
     */
   def compactSegmentDirs(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(dir)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = s"$dir/.compact"
-    // one listing: read set == delete set, immune to concurrent appends.
-    // The merged segment lands OUTSIDE the batchId keyspace (b-1; stream
-    // batch ids are >= 0): a compacted store must never share a name with
-    // a replayable append, or an at-least-once redelivery of batch 0
-    // would overwrite the merged history with one batch's rows.
-    // strict b<number> match: a stray "backup/" dir or interrupted-rename
-    // leftover under the store must not be swallowed into the merge (its
-    // rows would be destroyed) or crash the id parse of sibling readers
-    val segs = fs.listStatus(hp)
-      .filter(st => Segments.isSegment(st.getPath.getName))
-      .map(_.getPath)
-    if (segs.isEmpty) return
-    spark.read.parquet(segs.map(_.toString): _*).coalesce(1)
-      .write.mode("overwrite").parquet(s"$stage/b-1")
-    Segments.swapIn(fs, segs, stage, "b-1", dir)
+    val store = Segments.open(spark, dir)
+    if (store.ids.nonEmpty)
+      store.replaceAll("b-1")(store.read().coalesce(1).write.parquet)
   }
 
   def embeddingPairsLsh(df: DataFrame, idCol: String, vecCol: String,

@@ -64,31 +64,18 @@ object Manifest {
 
   /** Build the manifest over every parquet file currently under
     * `tablePath` (recursive) and persist it as segment `b0` of
-    * `manifestPath`. Rebuild-in-place semantics: existing segments are
-    * wiped first — a rebuild defines a fresh snapshot, and a stale append
-    * segment surviving it would resurrect files the rebuild chose to drop.
+    * `manifestPath`. A rebuild replaces every existing segment — it
+    * defines a fresh snapshot, and a stale append segment surviving it
+    * would resurrect files the rebuild chose to drop.
     */
   def buildManifest(spark: SparkSession, tablePath: String,
-      statsCols: Seq[String], manifestPath: String): Unit = {
-    val mp = new org.apache.hadoop.fs.Path(manifestPath)
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(mp)) fs.delete(mp, true)
-    fileStats(spark, Seq(tablePath), statsCols)
-      .coalesce(1).write.mode("overwrite").parquet(s"$manifestPath/b0")
-  }
+      statsCols: Seq[String], manifestPath: String): Unit =
+    Segments.open(spark, manifestPath).replaceAll("b0")(
+      fileStats(spark, Seq(tablePath), statsCols).coalesce(1).write.parquet)
 
-  /** Next replayable batch id: max existing non-negative segment + 1 (a
-    * fresh store starts at `b0` — legitimate in the manifest-IS-the-table
-    * ingest pattern).
-    */
-  private def nextBatchId(fs: org.apache.hadoop.fs.FileSystem,
-      mp: org.apache.hadoop.fs.Path): Long = {
-    val existing =
-      if (!fs.exists(mp)) Array.empty[Long]
-      else fs.listStatus(mp)
-        .map(_.getPath.getName).flatMap(segmentId).filter(_ >= 0)
-    if (existing.isEmpty) 0L else existing.max + 1
-  }
+  /** `batchId`, or the store's next id when it is negative. */
+  private def idOr(spark: SparkSession, path: String, batchId: Long): Long =
+    if (batchId >= 0) batchId else Segments.nextId(spark, path)
 
   /** Append stats for NEWLY LANDED data files — exactly the given paths —
     * as one `b<batchId>` overwrite segment. O(new files): history is never
@@ -98,16 +85,12 @@ object Manifest {
     */
   def appendToManifest(spark: SparkSession, newPaths: Seq[String],
       statsCols: Seq[String], manifestPath: String,
-      batchId: Long = -1L): Unit = {
-    if (newPaths.isEmpty) return
-    val mp = new org.apache.hadoop.fs.Path(manifestPath)
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bid = if (batchId >= 0) batchId else nextBatchId(fs, mp)
-    fileStats(spark, newPaths, statsCols)
-      .coalesce(1).write.mode("overwrite").parquet(s"$manifestPath/b$bid")
-  }
+      batchId: Long = -1L): Unit =
+    if (newPaths.nonEmpty)
+      Segments.put(spark, manifestPath, s"b${idOr(spark, manifestPath, batchId)}")(
+        fileStats(spark, newPaths, statsCols).coalesce(1).write.parquet)
 
-  /** Segment merge — same one-listing/staged-swap contract as
+  /** Segment merge — the [[Segments]] compaction, as in
     * [[Dedup.compactSegmentDirs]], but manifest-aware: the merged `b-1`
     * segment is the RESOLVED live listing (tombstones applied and dropped),
     * so compaction doubles as Iceberg's expire-snapshots for DML history —
@@ -118,15 +101,9 @@ object Manifest {
     * every deleted file.
     */
   def compactManifest(spark: SparkSession, manifestPath: String): Unit = {
-    val mp = new org.apache.hadoop.fs.Path(manifestPath)
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val segs = fs.listStatus(mp)
-      .filter(st => Segments.isSegment(st.getPath.getName)).map(_.getPath)
-    if (segs.isEmpty) return
-    val stage = s"$manifestPath/.compact"
-    resolved(spark, segs.map(_.toString).toSeq)
-      .coalesce(1).write.mode("overwrite").parquet(s"$stage/b-1")
-    Segments.swapIn(fs, segs, stage, "b-1", manifestPath)
+    val store = Segments.open(spark, manifestPath)
+    if (store.ids.nonEmpty)
+      store.replaceAll("b-1")(resolved(spark, store.paths()).coalesce(1).write.parquet)
   }
 
   /** The current manifest: union of all segments, one row per data file. */
@@ -144,30 +121,20 @@ object Manifest {
     * run compaction at the cadence your audit window allows, exactly like
     * Iceberg's expire-snapshots.
     */
-  /** Segment name → batch id; None for anything that is not a `b<number>`
-    * segment (a stray `backup/` dir or interrupted-rename leftover must be
-    * IGNORED, not crash every subsequent read with a NumberFormatException).
-    * Shared definition: [[Segments.id]].
-    */
-  private def segmentId(name: String): Option[Long] = Segments.id(name)
-
   private def segmentPathsAsOf(spark: SparkSession, manifestPath: String,
       asOf: Long): Seq[String] = {
-    val mp = new org.apache.hadoop.fs.Path(manifestPath)
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val all = fs.listStatus(mp).map(_.getPath)
-      .flatMap(p => segmentId(p.getName).map(id => (id, p)))
+    val store = Segments.open(spark, manifestPath)
     // a compacted store has collapsed its history into b-1: serving a
     // finite asOf from it would silently return the MERGED listing (too
     // many files) instead of the snapshot — fail loudly, like reading an
     // expired Iceberg snapshot
-    require(asOf == Long.MaxValue || !all.exists(_._1 == -1L),
+    require(asOf == Long.MaxValue || !store.ids.contains(-1L),
       s"snapshot asOf=$asOf expired: compaction collapsed $manifestPath's " +
         "history into b-1; only the current listing is addressable")
-    val segs = all.filter(_._1 <= asOf).map(_._2.toString)
+    val segs = store.paths(_ <= asOf)
     require(segs.nonEmpty,
       s"no manifest segment at or below batch $asOf under $manifestPath")
-    segs.toSeq
+    segs
   }
 
   /** Segments → the LIVE file listing: union the segment rows (mergeSchema,
@@ -402,9 +369,9 @@ object Manifest {
       case Some(a) => a.unionByName(tomb, allowMissingColumns = true)
       case None    => tomb
     }
-    seg.coalesce(1).write.mode("overwrite").parquet(s"$manifestPath/b$bid")
+    Segments.put(spark, manifestPath, s"b$bid")(seg.coalesce(1).write.parquet)
     if (addStats.isEmpty) 0L
-    else spark.read.parquet(s"$manifestPath/b$bid")
+    else Segments.open(spark, manifestPath).read(_ == bid)
       .filter(!coalesce(col("removed"), lit(false)))
       .agg(coalesce(sum(col("nrows")), lit(0L))).head().getLong(0)
   }
@@ -422,8 +389,6 @@ object Manifest {
   def deleteRange(spark: SparkSession, manifestPath: String, statsCol: String,
       lo: Any, hi: Any, rewriteDir: String, statsCols: Seq[String],
       batchId: Long = -1L): (Long, Long, Long) = {
-    val mp = new org.apache.hadoop.fs.Path(manifestPath)
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val m = readManifest(spark, manifestPath)
       .select(col("file"), col("nrows"),
         col(s"min_$statsCol"), col(s"max_$statsCol"))
@@ -433,7 +398,7 @@ object Manifest {
         col(s"max_$statsCol") >= lit(lo))
       .select(col("file"), col("nrows")).collect()
     if (affected.isEmpty) return (0L, total, 0L)
-    val bid = if (batchId >= 0) batchId else nextBatchId(fs, mp)
+    val bid = idOr(spark, manifestPath, batchId)
     val out = s"$rewriteDir/b$bid"
     spark.read.parquet(affected.map(r => globEscape(r.getString(0))).toSeq: _*)
       .filter(!col(statsCol).between(lit(lo), lit(hi)))
@@ -459,8 +424,6 @@ object Manifest {
   def mergeInto(spark: SparkSession, manifestPath: String,
       updates: DataFrame, keyCol: String, rewriteDir: String,
       statsCols: Seq[String], batchId: Long = -1L): (Long, Long, Long) = {
-    val mp = new org.apache.hadoop.fs.Path(manifestPath)
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val m = readManifest(spark, manifestPath)
       .select(col("file"), col(s"min_$keyCol"), col(s"max_$keyCol"))
       .localCheckpoint()
@@ -470,7 +433,7 @@ object Manifest {
         col(s"min_$keyCol") <= col(keyCol) &&
           col(s"max_$keyCol") >= col(keyCol), "left_semi")
       .select(col("file")).collect().map(_.getString(0))
-    val bid = if (batchId >= 0) batchId else nextBatchId(fs, mp)
+    val bid = idOr(spark, manifestPath, batchId)
     val out = s"$rewriteDir/b$bid"
     val rewritten =
       if (affected.isEmpty) updates // pure insert: no file can match
@@ -511,7 +474,7 @@ object Manifest {
       .filter(col("nrows") < lit(minR))
       .select(col("file"), col("nrows")).collect().sortBy(_.getString(0))
     if (small.length < 2) return (0L, 0L)
-    val bid = if (batchId >= 0) batchId else nextBatchId(fs, mp)
+    val bid = idOr(spark, manifestPath, batchId)
     val out = s"$rewriteDir/b$bid"
     val nOut = math.max(1,
       math.ceil(small.map(_.getLong(1)).sum.toDouble / targetRows).toInt)
@@ -625,7 +588,7 @@ object Manifest {
       .select(col("file")).collect().map(_.getString(0)).sorted
     require(files.nonEmpty,
       s"manifest at $manifestPath names no files — nothing to optimize")
-    val bid = if (batchId >= 0) batchId else nextBatchId(fs, mp)
+    val bid = idOr(spark, manifestPath, batchId)
     val out = s"$rewriteDir/b$bid"
     layoutWriter(curve, xCol, yCol, zCol, nFiles, deterministic)(
       spark.read.parquet(files.map(globEscape).toSeq: _*), out)
@@ -753,7 +716,7 @@ object Manifest {
     }
     val rewrite = clusters.filter(_.length >= 2)
     if (rewrite.isEmpty) return (0L, 0L, 0L)
-    val bid = if (batchId >= 0) batchId else nextBatchId(fs, mp)
+    val bid = idOr(spark, manifestPath, batchId)
     val out = s"$rewriteDir/b$bid"
     val removed = scala.collection.mutable.ArrayBuffer[String]()
     // one getFileStatus per cluster member, only when a byte budget is
@@ -840,9 +803,7 @@ object Manifest {
     */
   def vacuumTable(spark: SparkSession, manifestPath: String,
       dataRoots: Seq[String]): Long = {
-    val mp = new org.apache.hadoop.fs.Path(manifestPath)
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val segIds = fs.listStatus(mp).map(_.getPath.getName).flatMap(segmentId)
+    val segIds = Segments.open(spark, manifestPath).ids
     require(segIds.nonEmpty && segIds.forall(_ == -1L),
       s"vacuum requires a compacted manifest at $manifestPath (single b-1 " +
         "segment): un-expired snapshots may still reference removed files")
@@ -915,11 +876,8 @@ object Manifest {
   def buildBloomIndex(spark: SparkSession, tablePath: String, keyCol: String,
       indexPath: String, expectedPerFile: Long = 1000000L,
       fpp: Double = 0.01): Unit = {
-    val ip = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = ip.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(ip)) fs.delete(ip, true) // rebuild = fresh snapshot
-    fileBloom(spark, Seq(tablePath), keyCol, expectedPerFile, fpp)
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/b0")
+    Segments.open(spark, indexPath).replaceAll("b0")( // rebuild = fresh snapshot
+      fileBloom(spark, Seq(tablePath), keyCol, expectedPerFile, fpp).coalesce(1).write.parquet)
   }
 
   /** The [[appendToNdvIndex]] ingest shape for the Bloom index: filters
@@ -929,11 +887,8 @@ object Manifest {
       keyCol: String, indexPath: String, expectedPerFile: Long = 1000000L,
       fpp: Double = 0.01, batchId: Long = -1L): Unit = {
     if (newPaths.isEmpty) return
-    val ip = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = ip.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bid = if (batchId >= 0) batchId else nextBatchId(fs, ip)
-    fileBloom(spark, newPaths, keyCol, expectedPerFile, fpp)
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/b$bid")
+    Segments.put(spark, indexPath, s"b${idOr(spark, indexPath, batchId)}")(
+      fileBloom(spark, newPaths, keyCol, expectedPerFile, fpp).coalesce(1).write.parquet)
   }
 
   private def fileBloom(spark: SparkSession, paths: Seq[String],
@@ -982,11 +937,8 @@ object Manifest {
     */
   def buildNdvIndex(spark: SparkSession, tablePath: String, keyCol: String,
       indexPath: String, lgConfigK: Int = 12): Unit = {
-    val ip = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = ip.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(ip)) fs.delete(ip, true) // rebuild = fresh snapshot
-    fileNdv(spark, Seq(tablePath), keyCol, lgConfigK)
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/b0")
+    Segments.open(spark, indexPath).replaceAll("b0")( // rebuild = fresh snapshot
+      fileNdv(spark, Seq(tablePath), keyCol, lgConfigK).coalesce(1).write.parquet)
   }
 
   /** Append sketches for NEWLY LANDED data files — exactly the given
@@ -1001,11 +953,8 @@ object Manifest {
       keyCol: String, indexPath: String, lgConfigK: Int = 12,
       batchId: Long = -1L): Unit = {
     if (newPaths.isEmpty) return
-    val ip = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = ip.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bid = if (batchId >= 0) batchId else nextBatchId(fs, ip)
-    fileNdv(spark, newPaths, keyCol, lgConfigK)
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/b$bid")
+    Segments.put(spark, indexPath, s"b${idOr(spark, indexPath, batchId)}")(
+      fileNdv(spark, newPaths, keyCol, lgConfigK).coalesce(1).write.parquet)
   }
 
   private def fileNdv(spark: SparkSession, paths: Seq[String],
@@ -1015,19 +964,12 @@ object Manifest {
       .groupBy(col("file"))
       .agg(hll_sketch_agg(col(keyCol), lgConfigK).as("ndv_sketch"))
 
-  /** All live segments of a per-file sketch store (strict `b<number>`
-    * match — the shared [[Segments]] discipline: stray dirs are never
-    * swallowed).
-    */
+  /** All live segments of a per-file sketch store. */
   private def readSegmentStore(spark: SparkSession, indexPath: String,
       what: String): DataFrame = {
-    val ip = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = ip.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val segs = fs.listStatus(ip).map(_.getPath)
-      .filter(p => graft.operators.Segments.isSegment(p.getName))
-      .map(_.toString)
-    require(segs.nonEmpty, s"$what at $indexPath has no segments")
-    spark.read.parquet(segs.toSeq: _*)
+    val store = Segments.open(spark, indexPath)
+    require(store.ids.nonEmpty, s"$what at $indexPath has no segments")
+    store.read()
   }
 
   /** Snapshot history audit — the DESCRIBE HISTORY of this store: one row
@@ -1039,13 +981,10 @@ object Manifest {
     * snapshot-expiry horizon, and this view makes that visible.
     */
   def history(spark: SparkSession, manifestPath: String): DataFrame = {
-    val mp = new org.apache.hadoop.fs.Path(manifestPath)
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val segs = fs.listStatus(mp).map(_.getPath)
-      .filter(p => Segments.isSegment(p.getName)).map(_.toString)
+    val segs = Segments.open(spark, manifestPath).paths()
     require(segs.nonEmpty, s"manifest at $manifestPath has no segments")
     val m = spark.read.option("mergeSchema", "true")
-      .parquet(segs.toSeq: _*)
+      .parquet(segs: _*)
       .withColumn("batch_id",
         // anchored to the LEAF file's parent: an ancestor directory that
         // happens to match /b<digits>/ must not hijack every row's id
@@ -1078,11 +1017,8 @@ object Manifest {
     */
   def buildQuantileIndex(spark: SparkSession, tablePath: String,
       valueCol: String, indexPath: String, k: Int = 200): Unit = {
-    val ip = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = ip.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(ip)) fs.delete(ip, true) // rebuild = fresh snapshot
-    fileKll(spark, Seq(tablePath), valueCol, k)
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/b0")
+    Segments.open(spark, indexPath).replaceAll("b0")( // rebuild = fresh snapshot
+      fileKll(spark, Seq(tablePath), valueCol, k).coalesce(1).write.parquet)
   }
 
   /** The [[appendToNdvIndex]] ingest shape for the quantile index:
@@ -1093,11 +1029,8 @@ object Manifest {
       valueCol: String, indexPath: String, k: Int = 200,
       batchId: Long = -1L): Unit = {
     if (newPaths.isEmpty) return
-    val ip = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = ip.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bid = if (batchId >= 0) batchId else nextBatchId(fs, ip)
-    fileKll(spark, newPaths, valueCol, k)
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/b$bid")
+    Segments.put(spark, indexPath, s"b${idOr(spark, indexPath, batchId)}")(
+      fileKll(spark, newPaths, valueCol, k).coalesce(1).write.parquet)
   }
 
   private def fileKll(spark: SparkSession, paths: Seq[String],
@@ -1225,17 +1158,13 @@ object Manifest {
       kllPath: String, expectedPerFile: Long = 1000000L, fpp: Double = 0.01,
       lgConfigK: Int = 12, kllK: Int = 200, batchId: Long = -1L): Unit = {
     if (newPaths.isEmpty) return
-    // auto batchId = max of nextBatchId across ALL THREE stores: deriving
+    // auto batchId = max of nextId across ALL THREE stores: deriving
     // it from the bloom store alone would, after any per-family append
     // that touched only the NDV or KLL store, silently overwrite that
     // store's existing b<id> segment with unrelated rows
     val bid =
       if (batchId >= 0) batchId
-      else Seq(bloomPath, ndvPath, kllPath).map { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        nextBatchId(
-          hp.getFileSystem(spark.sparkContext.hadoopConfiguration), hp)
-      }.max
+      else Seq(bloomPath, ndvPath, kllPath).map(Segments.nextId(spark, _)).max
     writeIndexSegments(spark, newPaths, keyCol, valueCol, bloomPath,
       ndvPath, kllPath, expectedPerFile, fpp, lgConfigK, kllK,
       batchId = bid, fresh = false)
@@ -1254,10 +1183,9 @@ object Manifest {
       val combined = fileIndexRows(spark, paths, keyCol, valueCol,
         expectedPerFile, fpp, lgConfigK, kllK).localCheckpoint()
       def segment(path: String, rows: DataFrame): Unit = {
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fresh && fs.exists(p)) fs.delete(p, true) // rebuild = fresh
-        rows.coalesce(1).write.mode("overwrite").parquet(s"$path/b$batchId")
+        val write: String => Unit = rows.coalesce(1).write.parquet
+        if (fresh) Segments.open(spark, path).replaceAll(s"b$batchId")(write) // rebuild = fresh
+        else Segments.put(spark, path, s"b$batchId")(write)
       }
       segment(bloomPath, combined.select(col("file"), col("bloom")))
       segment(ndvPath, combined.select(col("file"), col("ndv_sketch")))

@@ -559,7 +559,7 @@ object Similarity {
   }
 
   /** Build and PERSIST the IVF-PQ serving index: the (bucket, nid, codes)
-    * scan table written bucket-partitioned under `path/codes/batch=0` (so a
+    * scan table written bucket-partitioned under `path/codes/batch=<batchId>` (so a
     * query's nProbe buckets map to partition directories and everything
     * else is never read), plus the trained model — coarse centroids under
     * `path/centroids`, PQ codebook + params under `path/model`. This is the
@@ -580,7 +580,9 @@ object Similarity {
     * DIFFERENT frame than the one encoded — the standard large-corpus
     * workflow (train on a bounded sample table, encode everything), and
     * what makes an incrementally-maintained index exactly comparable to a
-    * one-shot rebuild over the same history.
+    * one-shot rebuild over the same history. `batchId` names the one codes
+    * segment the build leaves (a streaming bootstrap passes its batch id,
+    * so a replayed append of that batch rewrites the same segment).
     */
   /** Declared memo (r15, inputs-only rule): the persisted index's MODEL
     * (PQ codebook + params) and coarse centroids, keyed by index path.
@@ -611,7 +613,7 @@ object Similarity {
   def buildIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
       path: String, nCentroids: Int = 16, m: Int = 16, ksub: Int = 16,
       seed: Long = 11L, trainIters: Int = 4, sampleN: Int = 256,
-      trainOn: DataFrame = null): Unit = {
+      trainOn: DataFrame = null, batchId: Long = 0L): Unit = {
     ivfPqStoreCache.remove(path) // rebuild rewrites model + centroids
     val spark = corpus.sparkSession
     HashExpressions.register(spark)
@@ -627,21 +629,16 @@ object Similarity {
     val (coarse, cbFlat) = trainIvfPq(tr, nCentroids, m, ksub, sub, seed,
       trainIters, sampleN)
     if (!(tr eq c)) tr.unpersist(blocking = false)
-    // Rebuild-in-place wipes the WHOLE codes dir first: the overwrite below
-    // is scoped to batch=0, and a stale appended segment surviving a
-    // retrain would be decoded with the NEW codebooks — garbage ADC scores
-    // served silently.
-    val codesRoot = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val cfs = codesRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(codesRoot)) cfs.delete(codesRoot, true)
-    c.select(
+    // A rebuild replaces EVERY codes segment: a stale appended segment
+    // surviving a retrain would be decoded with the NEW codebooks — garbage
+    // ADC scores served silently.
+    Segments.open(spark, s"$path/codes").replaceAll(s"batch=$batchId")(c.select(
         centroidScores(spark, coarse)(col("v_n"), col("n_n")).getItem(0)
           .getField("bucket").as("bucket"),
         col("nid"),
         graft.functions.PqExpressions.pqEncode(spark, col("v_n"), col("n_n"),
           cbFlat, m, ksub, sub).as("codes"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/codes/batch=0")
+      .write.partitionBy("bucket").parquet)
     c.unpersist()
     coarse.toSeq.map { case (b, cv, cn) => (b, cv, cn) }
       .toDF("bucket", "cv", "cn")
@@ -679,55 +676,31 @@ object Similarity {
     require(batchDim == dim,
       s"index at $path was built with dim=$dim but the batch has " +
         s"dim=$batchDim")
-    val codesPath = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val fs = codesPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bid = if (batchId >= 0) batchId else {
-      val existing = fs.listStatus(codesPath)
-        .map(_.getPath.getName).filter(_.startsWith("batch="))
-        .map(_.stripPrefix("batch=").toLong)
-      if (existing.isEmpty) 0L else existing.max + 1
-    }
-    withNorm(batch, idCol, vecCol, "nid", "v_n", "n_n")
+    val bid = if (batchId >= 0) batchId else Segments.nextId(spark, s"$path/codes")
+    val codes = withNorm(batch, idCol, vecCol, "nid", "v_n", "n_n")
       .select(
         centroidScores(spark, coarse)(col("v_n"), col("n_n")).getItem(0)
           .getField("bucket").as("bucket"),
         col("nid"),
         graft.functions.PqExpressions.pqEncode(spark, col("v_n"), col("n_n"),
           cbFlat, m, ksub, sub).as("codes"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/codes/batch=$bid")
+    Segments.put(spark, s"$path/codes", s"batch=$bid")(
+      codes.write.partitionBy("bucket").parquet)
   }
 
-  /** Merge accumulated IVF-PQ code segments into one — the same
-    * scan-fan-in repair as [[graft.operators.Dedup.compactSegmentDirs]]
-    * (rows are disjoint and pass through unchanged; only the directory
-    * fan-in shrinks), with the same snapshot concurrency contract: the
-    * segment list is listed ONCE, the staged merge reads exactly those
-    * paths and deletes exactly those paths, so a concurrently appended
-    * segment survives un-merged. Serving is identical before and after
+  /** Merge accumulated IVF-PQ code segments into the one segment
+    * `batch=-1` — the same scan-fan-in repair as
+    * [[graft.operators.Dedup.compactSegmentDirs]] (rows are disjoint and
+    * pass through unchanged; only the directory fan-in shrinks), through
+    * the [[Segments]] compaction. Serving is identical before and after
     * (the probe scan unions segments either way).
-    *
-    * The merged segment lands OUTSIDE the batchId keyspace (`batch=-1`;
-    * stream/caller batch ids are >= 0): a compacted store must never share
-    * a name with a replayable append, or an at-least-once redelivery of
-    * that batch id would overwrite the merged history with one batch's
-    * rows — silent loss of everything else. With the sentinel name, a
-    * replayed append only ever rewrites its own rows.
     */
   def compactIvfPqIndex(spark: SparkSession, path: String): Unit = {
-    val codesPath = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val fs = codesPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val segs = fs.listStatus(codesPath)
-      .filter(_.getPath.getName.startsWith("batch="))
-      .map(_.getPath)
-    if (segs.isEmpty) return
-    val stage = s"$path/.compact"
-    spark.read.option("basePath", s"$path/codes")
-      .parquet(segs.map(_.toString): _*)
-      .select(col("nid"), col("codes"), col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$stage/batch=-1")
-    Segments.swapIn(fs, segs, stage, "batch=-1", s"$path/codes")
+    val store = Segments.open(spark, s"$path/codes")
+    if (store.ids.nonEmpty)
+      store.replaceAll("batch=-1")(store.read()
+        .select(col("nid"), col("codes"), col("bucket"))
+        .write.partitionBy("bucket").parquet)
   }
 
   /** Query a [[buildIvfPqIndex]]-persisted index. `corpus` supplies the raw
@@ -764,7 +737,7 @@ object Similarity {
         1, nProbe)).as("p"))
       .select(col("p.bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val codesAll = spark.read.parquet(s"$path/codes")
+    val codesAll = Segments.read(spark, s"$path/codes")
       .filter(col("bucket").isin(probedBuckets: _*))
       .select(col("bucket").cast("int").as("bucket"), col("nid"),
         col("codes"))

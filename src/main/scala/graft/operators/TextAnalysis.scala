@@ -375,7 +375,8 @@ object TextAnalysis {
       .groupBy(col("doc"), col("term")).agg(count(lit(1)).as("tf"))
       .withColumn("bucket", pmod(hash(col("term")), lit(nBuckets)))
       .persist()
-    try writeUnifiedSegment(unifiedStores(tf), s"$path/seg/batch=$batchId")
+    try Segments.put(spark, s"$path/seg", s"batch=$batchId")(
+      writeUnifiedSegment(unifiedStores(tf), _))
     finally tf.unpersist(blocking = false)
   }
 
@@ -424,35 +425,17 @@ object TextAnalysis {
     */
   private def writeUnifiedSegment(unified: DataFrame, dest: String): Unit =
     unified.repartition(col("store"), col("bucket"))
-      .write.mode("overwrite").partitionBy("store", "bucket")
+      .write.partitionBy("store", "bucket")
       .parquet(dest)
-
-  /** All segments of a unified index read as one frame; `store`, `bucket`
-    * and `batch` are partition columns, so per-store filters prune
-    * directories instead of scanning them.
-    */
-  private def readSegments(spark: org.apache.spark.sql.SparkSession,
-      path: String, paths: Seq[String] = Nil): DataFrame =
-    if (paths.isEmpty) spark.read.parquet(s"$path/seg")
-    else spark.read.option("basePath", s"$path/seg").parquet(paths: _*)
 
   /** Merge all accumulated segments into ONE (Lucene's segment merge):
     * many small per-batch files degrade scan fan-in over time, and the
     * merge is pure aggregation — postings rows are already per-(doc, term)
     * within disjoint batches so they only re-bucket-partition, df re-sums
-    * per term, norms union, stats re-sum to a single row. Written to
-    * batch=-1 of a staging directory then swapped in via rename (-1 sits
-    * outside the >= 0 batchId keyspace, so a replayed append can never
-    * overwrite merged history); a [[queryTextIndex]] result is IDENTICAL
-    * before and after (the query-time merge already sums per-segment
-    * rows — compaction just makes that sum trivial).
-    *
-    * Concurrency contract (same as [[compactGramDf]]): each store's
-    * `batch=*` segment list is snapshotted ONCE — the staged merge reads
-    * exactly those segments and the delete loop removes exactly those, so
-    * a segment appended by a concurrent [[appendToTextIndex]] between
-    * snapshot and swap survives un-merged. Readers must not race the
-    * delete-then-rename swap window; run compaction between batches.
+    * per term, norms union, stats re-sum to a single row, committed as
+    * segment `batch=-1` by the [[Segments]] compaction; a [[queryTextIndex]]
+    * result is IDENTICAL before and after (the query-time merge already
+    * sums per-segment rows — compaction just makes that sum trivial).
     *
     * Fails, rather than do nothing, on a path without the `meta` directory
     * [[initTextIndex]] writes and on the legacy four-store layout
@@ -461,7 +444,6 @@ object TextAnalysis {
     */
   def compactTextIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    val stage = s"$path/.compact"
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val segRoot = new org.apache.hadoop.fs.Path(s"$path/seg")
@@ -474,26 +456,16 @@ object TextAnalysis {
         "with buildTextIndex")
     require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/meta")),
       s"$path is not a text index: no meta directory (initTextIndex writes it)")
-    if (!hasSegs) return
-    // one listing of the unified segment store: read set == delete set
-    // (concurrent appends land outside the snapshot and survive the swap
-    // un-merged). The single-write segment form retires the old
-    // half-written-store diagnosis: all four stores of a batch commit in
-    // one job, so a segment exists whole or not at all.
-    val segs = fs.listStatus(segRoot)
-      .filter(_.getPath.getName.startsWith("batch="))
-      .map(_.getPath)
-    if (segs.isEmpty) return
-    val all = readSegments(spark, path, segs.map(_.toString).toSeq)
+    val store = Segments.open(spark, segRoot.toString)
+    if (store.ids.isEmpty) return
+    val all = store.read()
     val nullL = lit(null).cast("long")
     val docT = all.schema("doc").dataType
     val nullDoc = lit(null).cast(docT)
     val nullTerm = lit(null).cast("string")
     // postings/norms rows pass through (disjoint doc batches), df re-sums
     // per term, stats re-sum to one row — the same merged rows as the
-    // four-store form produced, staged in ONE write to batch=-1 (outside
-    // the batchId keyspace, ids >= 0: a replayed append can never
-    // overwrite merged history)
+    // four-store form produced, in ONE write
     val postings = all.filter(col("store") === "postings")
       .select(lit("postings").as("store"), col("bucket"), col("doc"),
         col("term"), col("tf"), nullL.as("df"), nullL.as("dl"),
@@ -513,10 +485,8 @@ object TextAnalysis {
       .select(lit("stats").as("store"), lit(-1).as("bucket"),
         nullDoc.as("doc"), nullTerm.as("term"), nullL.as("tf"),
         nullL.as("df"), nullL.as("dl"), col("n_docs"), col("total_dl"))
-    writeUnifiedSegment(
-      postings.unionByName(dfreq).unionByName(normsRows).unionByName(stats),
-      s"$stage/batch=-1")
-    Segments.swapIn(fs, segs, stage, "batch=-1", s"$path/seg")
+    store.replaceAll("batch=-1")(writeUnifiedSegment(
+      postings.unionByName(dfreq).unionByName(normsRows).unionByName(stats), _))
   }
 
   /** BM25 top-`k` over a persisted index — exact same ranking as a
@@ -544,7 +514,7 @@ object TextAnalysis {
       .distinct().collect().map(_.getInt(0)).toSeq
     // one unified segment read; store= and bucket= are partition columns,
     // so each per-store view below prunes to its directories at planning
-    val seg = readSegments(spark, path)
+    val seg = Segments.read(spark, s"$path/seg")
     // corpus stats ride the main plan as a broadcast one-row join instead
     // of a separate head() action; the same longs go through the same
     // double division, so every snapped contribution is bit-identical
@@ -696,33 +666,14 @@ object TextAnalysis {
     * the snapshot at any moment IS the sum over segments, compaction
     * changes nothing a reader can observe (readers group-sum either way).
     * Compacting twice is a no-op by construction (summing one segment
-    * re-produces it).
-    *
-    * Concurrency contract (same as [[Dedup.compactSegmentDirs]]): the
-    * segment list is snapshotted ONCE — the staged merge reads exactly
-    * those paths and the delete loop removes exactly those paths, so a
-    * segment appended by a concurrent micro-batch between snapshot and
-    * swap survives un-merged rather than being silently destroyed. Readers
-    * must still not race the delete-then-rename swap window; run
-    * compaction from the maintenance path between micro-batches.
+    * re-produces it). Snapshot, swap and concurrency: [[Segments]].
     */
   def compactGramDf(spark: org.apache.spark.sql.SparkSession,
       segDir: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(segDir)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = s"$segDir/.compact"
-    // strict match ([[Segments.isSegment]]): a stray non-numeric b* entry
-    // must be ignored, never swallowed into the merge and destroyed
-    val segs = fs.listStatus(hp)
-      .filter(st => Segments.isSegment(st.getPath.getName))
-      .map(_.getPath)
-    if (segs.isEmpty) return
-    // b-1 = outside the batchId keyspace (ids >= 0): a replayed batch 0
-    // must never be able to overwrite the merged history
-    spark.read.parquet(segs.map(_.toString): _*)
-      .groupBy(col("g")).agg(sum(col("df")).as("df"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$stage/b-1")
-    Segments.swapIn(fs, segs, stage, "b-1", segDir)
+    val store = Segments.open(spark, segDir)
+    if (store.ids.nonEmpty)
+      store.replaceAll("b-1")(store.read().groupBy(col("g"))
+        .agg(sum(col("df")).as("df")).coalesce(1).write.parquet)
   }
 
   /** Incremental novelty: score an arriving batch against the persisted

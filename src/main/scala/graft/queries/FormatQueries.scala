@@ -363,8 +363,7 @@ object FormatQueries {
       Manifest.compactManifest(s, man)
       val (pruned2, nRead2, _) =
         Manifest.prunedRead(s, man, "l_orderkey", lo, hi)
-      val segs = new java.io.File(man).listFiles()
-        .filter(f => f.isDirectory && Segments.isSegment(f.getName))
+      val segs = Segments.open(s, man).ids
       val agg = pruned
         .agg(count(lit(1)), round(sum(col("l_quantity")), 2)).head()
       Contracts.row(s,
@@ -602,14 +601,12 @@ object FormatQueries {
         "n_rows" -> li.count(),
         "one_scan_ok" -> (nScans == 1),
         "files_match_ok" ->
-          (s.read.parquet(s"$bA/b*").count() == 6 &&
-            s.read.parquet(s"$bB/b*").count() == 6),
+          (Segments.read(s, bA).count() == 6 &&
+            Segments.read(s, bB).count() == 6),
         "bloom_bytes_equal_ok" ->
-          bytesEqual(s.read.parquet(s"$bA/b*"),
-            s.read.parquet(s"$bB/b*"), "bloom"),
+          bytesEqual(Segments.read(s, bA), Segments.read(s, bB), "bloom"),
         "ndv_bytes_equal_ok" ->
-          bytesEqual(s.read.parquet(s"$nA/b*"),
-            s.read.parquet(s"$nB/b*"), "ndv_sketch"),
+          bytesEqual(Segments.read(s, nA), Segments.read(s, nB), "ndv_sketch"),
         "bloom_serving_equal_ok" ->
           (survA == survB && totA == totB &&
             Contracts.checksum(resA) == Contracts.checksum(resB)),

@@ -953,8 +953,7 @@ object PipelineQueries {
       val rebuild = serve(pFull).localCheckpoint()
       Similarity.compactIvfPqIndex(s, pInc)
       val incAfter = serve(pInc).localCheckpoint()
-      val segs = new java.io.File(s"$pInc/codes").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("batch="))
+      val segs = Segments.open(s, s"$pInc/codes").ids
       Contracts.row(s,
         "n_queries" -> q.count(),
         "ranks_ok" -> Contracts.ranksWellFormed(incAfter, "qid", "rank", 5),
@@ -1789,32 +1788,23 @@ object PipelineQueries {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val stage = Staging.dir(s, "graft-eseg-")
-      (0 until 2).foreach { i =>
-        val slice = emb.filter(col("vec_id") % 3 === i)
-        slice.coalesce(1).write.parquet(s"$stage/corpus/b$i")
-        Dedup.srpIndex(slice, "vec_id", "embedding").coalesce(1)
-          .write.parquet(s"$stage/idx/b$i")
-      }
+      writeEmbeddingSegments(s, emb, stage)
       val batch = emb.filter(col("vec_id") % 3 === 2)
       def pair(): DataFrame = Dedup.embeddingPairsLshIncremental(batch,
-        s.read.parquet(s"$stage/corpus/b*"),
-        s.read.parquet(s"$stage/idx/b*"),
+        Segments.read(s, s"$stage/corpus"),
+        Segments.read(s, s"$stage/idx"),
         "vec_id", "embedding", threshold = 0.4)
       val before = pair().localCheckpoint()
-      val rowsBefore = s.read.parquet(s"$stage/idx/b*").count()
+      val rowsBefore = Segments.read(s, s"$stage/idx").count()
       Dedup.compactSegmentDirs(s, s"$stage/corpus")
       Dedup.compactSegmentDirs(s, s"$stage/idx")
-      val fs = new org.apache.hadoop.fs.Path(stage)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      def segs(d: String): Int = fs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$stage/$d"))
-        .count(st => Segments.isSegment(st.getPath.getName))
+      def segs(d: String): Int = Segments.open(s, s"$stage/$d").ids.size
       val after = pair().localCheckpoint()
       Contracts.row(s,
         "n_batch" -> batch.count(),
         "one_segment_each_ok" -> (segs("corpus") == 1 && segs("idx") == 1),
         "rows_preserved_ok" ->
-          (s.read.parquet(s"$stage/idx/b*").count() == rowsBefore),
+          (Segments.read(s, s"$stage/idx").count() == rowsBefore),
         "pairs_unchanged_ok" -> (Contracts.sameKeys(after, before,
           Seq("id_a", "id_b", "cos")) && after.count() == before.count()),
         "nonvacuous_ok" -> (before.count() >= 1L))
@@ -1829,24 +1819,16 @@ object PipelineQueries {
     "compact_gram_segments" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val segDir = Staging.dir(s, "graft-gseg-")
-      (0 until 3).foreach { i =>
-        TextAnalysis.gramDf(docs.filter(col("doc_id") % 3 === i),
-            "doc_id", "text")
-          .coalesce(1).write.parquet(s"$segDir/b$i")
-      }
+      writeGramSegments(s, docs, segDir)
       val batch = docs.filter(col("doc_id") < 50)
       val scoreBefore = TextAnalysis.noveltyIncremental(batch,
-        s.read.parquet(s"$segDir/b*"), "doc_id", "text")._2
+        Segments.read(s, segDir), "doc_id", "text")._2
         .localCheckpoint()
       TextAnalysis.compactGramDf(s, segDir)
-      val fs = new org.apache.hadoop.fs.Path(segDir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val segsOnce = fs.listStatus(
-        new org.apache.hadoop.fs.Path(segDir))
-        .count(st => Segments.isSegment(st.getPath.getName))
-      val afterOnce = s.read.parquet(s"$segDir/b*").localCheckpoint()
+      val segsOnce = Segments.open(s, segDir).ids.size
+      val afterOnce = Segments.read(s, segDir).localCheckpoint()
       TextAnalysis.compactGramDf(s, segDir)
-      val afterTwice = s.read.parquet(s"$segDir/b*").localCheckpoint()
+      val afterTwice = Segments.read(s, segDir).localCheckpoint()
       val scratch = TextAnalysis.gramDf(docs, "doc_id", "text")
         .localCheckpoint()
       val scoreAfter = TextAnalysis.noveltyIncremental(batch,
@@ -2278,8 +2260,7 @@ object PipelineQueries {
         "query_id", "text", k = 5)
       val plan = TextAnalysis.queryTextIndex(qs, "query_id", "text", path,
         "doc_id", k = 5).queryExecution.executedPlan.toString
-      val segments = new java.io.File(s"$path/seg").listFiles()
-        .count(f => f.isDirectory && f.getName.startsWith("batch="))
+      val segments = Segments.open(s, s"$path/seg").ids.size
       Contracts.row(s,
         "n_queries" -> qs.count(),
         "equals_full_run_ok" ->
@@ -2896,6 +2877,28 @@ object PipelineQueries {
     * the contract scalars; Verify still runs the full contract form, so
     * correctness coverage is unchanged.
     */
+  /** The compaction fixtures' embedding-index store under `d`: two vec_id
+    * slices as segments `b0`, `b1` of `corpus/` and of `idx/`.
+    */
+  private def writeEmbeddingSegments(s: SparkSession, emb: DataFrame,
+      d: String): Unit =
+    (0 until 2).foreach { i =>
+      val slice = emb.filter(col("vec_id") % 3 === i)
+      Segments.put(s, s"$d/corpus", s"b$i")(slice.coalesce(1).write.parquet)
+      Segments.put(s, s"$d/idx", s"b$i")(
+        Dedup.srpIndex(slice, "vec_id", "embedding").coalesce(1).write.parquet)
+    }
+
+  /** The compaction fixtures' gram-df store: three doc_id slices as
+    * segments `b0`..`b2` of `d`.
+    */
+  private def writeGramSegments(s: SparkSession, docs: DataFrame,
+      d: String): Unit =
+    (0 until 3).foreach { i =>
+      Segments.put(s, d, s"b$i")(TextAnalysis.gramDf(
+        docs.filter(col("doc_id") % 3 === i), "doc_id", "text").coalesce(1).write.parquet)
+    }
+
   /** Shared JL→SRP→exact-rerank serving pipeline for `sim_jl_srp_topk`
     * (contract + timed forms run ONE implementation — the
     * `Layout.fileBoxes` discipline: the timed number and the certified
@@ -2946,36 +2949,27 @@ object PipelineQueries {
         val emb = t(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"))
         val d = Staging.dir(s, "graft-eseg-stage-")
-        (0 until 2).foreach { i =>
-          val slice = emb.filter(col("vec_id") % 3 === i)
-          slice.coalesce(1).write.parquet(s"$d/corpus/b$i")
-          Dedup.srpIndex(slice, "vec_id", "embedding").coalesce(1)
-            .write.parquet(s"$d/idx/b$i")
-        }
+        writeEmbeddingSegments(s, emb, d)
         d
       }
       val work = Staging.dir(s, "graft-eseg-work-")
       graft.fs.copyTree(Paths.get(staged), Paths.get(work))
       Dedup.compactSegmentDirs(s, s"$work/corpus")
       Dedup.compactSegmentDirs(s, s"$work/idx")
-      s.read.parquet(s"$work/idx/b*")
+      Segments.read(s, s"$work/idx")
     }),
     // same shape for the gram-df (summing) segment merge
     "compact_gram_segments" -> ((s, dir) => {
       val staged = Staging.memo(s, s"compact-gram-segments $dir") {
         val docs = t(s, dir, "documents")
         val d = Staging.dir(s, "graft-gseg-stage-")
-        (0 until 3).foreach { i =>
-          TextAnalysis.gramDf(docs.filter(col("doc_id") % 3 === i),
-              "doc_id", "text")
-            .coalesce(1).write.parquet(s"$d/b$i")
-        }
+        writeGramSegments(s, docs, d)
         d
       }
       val work = Staging.dir(s, "graft-gseg-work-")
       graft.fs.copyTree(Paths.get(staged), Paths.get(work))
       TextAnalysis.compactGramDf(s, work)
-      s.read.parquet(s"$work/b*")
+      Segments.read(s, work)
     }),
 
     // The timer covers one Newton fit + the scoring projection (the

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.io.IOException
 import java.util.UUID
 
 import scala.collection.mutable.ArrayBuffer
@@ -18,6 +17,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.fs.SourcelessConfiguration
+import graft.operators.Segments
 
 /** Writes one micro-batch of one streaming query as parquet under
   * `<outPath>/batch_id=<id>`, in the layout `batch.write.parquet` leaves:
@@ -31,20 +31,18 @@ import graft.fs.SourcelessConfiguration
   * and schema, as a [[graft.fs.SourcelessConfiguration]] (no gzipped
   * source list per property); a task reads it from the block manager.
   * Each batch is one job over its rows: each task writes its part files
-  * into the hidden staging dir `.batch_id=<id>.<token>` (Spark's listing
-  * skips names that start with `.`), then the driver writes `_SUCCESS`,
-  * deletes an older `batch_id=<id>` and renames the staging dir into
-  * place. A crash before
-  * the rename leaves the old output (or none) visible; the re-run batch
-  * deletes the dead staging dir. The token is new for every write, so a
-  * replayed batch's part files get new names.
+  * into the hidden stage of a [[graft.operators.Segments.commit]], which
+  * the driver ends with `_SUCCESS` and swaps in for an older
+  * `batch_id=<id>`. A crash leaves the old output (or none) visible; the
+  * re-run batch settles what the dead commit left. The part files' token
+  * is new for every write, so a replayed batch's part files get new names.
   *
   * File operations go through the Hadoop `FileSystem` of the output path;
   * for `file:` paths after [[graft.fs.setup]] that is the fork-free
   * [[graft.fs.NioLocalFileSystem]]. [[close]] destroys the broadcast.
   *
   * `beforeCommit` runs on the driver after the part files and `_SUCCESS`
-  * are written and before the rename (a seam for crash-injection specs).
+  * are written and before the swap (a seam for crash-injection specs).
   */
 private[streaming] final class BatchParquetWriter(outPath: String,
     beforeCommit: Long => Unit = _ => ()) {
@@ -55,26 +53,19 @@ private[streaming] final class BatchParquetWriter(outPath: String,
   def write(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val p = prepare(spark, batch.schema)
-    val conf = p.conf.value.value
-    val out = new Path(outPath, s"batch_id=$batchId")
-    val fs = out.getFileSystem(conf)
-    Option(fs.globStatus(new Path(outPath, s".batch_id=$batchId.*")))
-      .foreach(_.foreach(st => fs.delete(st.getPath, true)))
-    val token = UUID.randomUUID().toString
-    val staging = new Path(outPath, s".batch_id=$batchId.$token")
+    val dir = new Path(outPath)
     val rdd = batch.queryExecution.toRdd
     // As FileFormatWriter: a batch without partitions still writes one
     // schema-only file.
     val rows = if (rdd.partitions.isEmpty) {
       spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
     } else rdd
-    val task = new WriteTask(p.conf, p.factory, p.schema, staging.toString, token,
-      spark.sessionState.conf.maxRecordsPerFile)
-    spark.sparkContext.runJob(rows, task.run _)
-    fs.create(new Path(staging, "_SUCCESS")).close()
-    beforeCommit(batchId)
-    if (fs.exists(out) && !fs.delete(out, true)) throw new IOException(s"could not delete $out")
-    if (!fs.rename(staging, out)) throw new IOException(s"could not rename $staging to $out")
+    Segments.commit(dir.getFileSystem(p.conf.value.value), dir, s"batch_id=$batchId",
+        () => beforeCommit(batchId)) { stage =>
+      val task = new WriteTask(p.conf, p.factory, p.schema, stage.toString,
+        UUID.randomUUID().toString, spark.sessionState.conf.maxRecordsPerFile)
+      spark.sparkContext.runJob(rows, task.run _)
+    }
   }
 
   /** Destroys the broadcast configuration; idempotent. */

@@ -14,9 +14,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, T
   * Each batch is written by the query's [[BatchParquetWriter]]: one job
   * whose tasks write their part files into a hidden staging dir
   * (`.batch_id=<id>.<token>`), after which the driver writes `_SUCCESS`,
-  * deletes the batch's older output and renames the staging dir into place.
-  * A crash before that rename leaves no partial `batch_id=<id>` behind; the
-  * re-run batch lands exactly once. The parquet write configuration is
+  * moves the batch's older output aside, renames the staging dir into place
+  * and deletes the aside ([[graft.operators.Segments.commit]]). A crash
+  * before that rename leaves no partial `batch_id=<id>` behind; the re-run
+  * batch lands exactly once. The parquet write configuration is
   * broadcast once per query instead of being serialized into every task,
   * and the broadcast is destroyed when the query terminates.
   *

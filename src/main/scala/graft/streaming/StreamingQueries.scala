@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, TTLConfig, Trigger, ValueState}
 
 import graft.{Staging, Tables}
+import graft.operators.Segments
 
 /** Structured-Streaming operators run to completion over a bounded file
   * source (`Trigger.AvailableNow`) so their final result is a plain
@@ -228,13 +229,10 @@ object StreamingQueries {
     val threshold = 0.4
     val idxPath = s"$stage/idx"
     val pairsPath = s"$stage/pairs"
-    val fs = new org.apache.hadoop.fs.Path(stage)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
     val run = runFold(s, emb.schema, inDir, stage, Some(8)) { (b, id) =>
-      val haveIndex =
-        fs.exists(new org.apache.hadoop.fs.Path(idxPath))
+      val idx = Segments.open(s, idxPath)
       val pairs =
-        if (haveIndex) {
+        if (idx.ids.nonEmpty) {
           // Anti-join out this batch's OWN ids: a batch replayed
           // after a mid-batch crash has already written its corpus
           // and index subdirs, and pairing it against its own rows
@@ -252,9 +250,9 @@ object StreamingQueries {
           // vs 1.44 with the standalone-optimal vecs-only setting)
           graft.operators.Dedup.embeddingPairsLshIncremental(
             b,
-            s.read.parquet(s"$stage/corpus/b*")
+            Segments.read(s, s"$stage/corpus")
               .join(own, Seq("vec_id"), "left_anti"),
-            s.read.parquet(s"$idxPath/b*")
+            idx.read()
               .join(own.select(col("vec_id").as("id")), Seq("id"),
                 "left_anti"),
             "vec_id", "embedding", threshold, nBits, nTables,
@@ -265,17 +263,15 @@ object StreamingQueries {
       // coalesce(1): batch-sized outputs — one file per batch per
       // table keeps the per-ingest file count (and the next
       // batch's read fan-in) proportional to batches, not tasks
-      pairs.select(col("id_a"), col("id_b"), col("cos")).coalesce(1)
-        .write.mode("overwrite").parquet(s"$pairsPath/b$id")
-      b.coalesce(1)
-        .write.mode("overwrite").parquet(s"$stage/corpus/b$id")
-      graft.operators.Dedup.srpIndex(b, "vec_id", "embedding",
-          nBits, nTables).coalesce(1)
-        .write.mode("overwrite").parquet(s"$idxPath/b$id")
+      Segments.put(s, pairsPath, s"b$id")(
+        pairs.select(col("id_a"), col("id_b"), col("cos")).coalesce(1).write.parquet)
+      Segments.put(s, s"$stage/corpus", s"b$id")(b.coalesce(1).write.parquet)
+      Segments.put(s, idxPath, s"b$id")(graft.operators.Dedup.srpIndex(b, "vec_id", "embedding",
+        nBits, nTables).coalesce(1).write.parquet)
     }
     observeBatchWall(s, "streaming_embedding_index_batch_wall", run.walls)
-    EmbeddingIndexRun(s.read.parquet(s"$pairsPath/b*"),
-      s.read.parquet(s"$idxPath/b*"), nVecs, nBits, nTables, threshold,
+    EmbeddingIndexRun(Segments.read(s, pairsPath),
+      Segments.read(s, idxPath), nVecs, nBits, nTables, threshold,
       run.batches)
   }
 
@@ -336,13 +332,13 @@ object StreamingQueries {
     * (`appendToIvfPqIndex` — O(batch) per append, history never re-read,
     * never re-quantized). Replay is idempotent end to end, with `train/`
     * as the bootstrap COMMIT MARKER written last: a replay after a
-    * mid-bootstrap crash (marker absent) re-runs the build, which wipes
-    * and rewrites model/centroids/codes byte-identically (training draws
+    * mid-bootstrap crash (marker absent) re-runs the build, which replaces
+    * model/centroids/codes byte-identically (training draws
     * are seeded and hash-ordered); a replay after a completed bootstrap
     * (marker present) takes the append path and overwrites its own
     * batchId-keyed segment with identical codes (stored-codebook encode
-    * is deterministic) — the build's batch=0 segment is renamed to the
-    * bootstrap batch's real id so that rewrite hits the same directory.
+    * is deterministic) — the build writes its segment under the bootstrap
+    * batch's real id so that rewrite hits the same directory.
     *
     * Returns (index path, stage path, batch count); the contract query
     * compares serving against a one-shot rebuild trained on the recorded
@@ -362,17 +358,8 @@ object StreamingQueries {
       // scaladoc: makes every crash-replay interleaving idempotent)
       if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/train"))) {
         graft.operators.Similarity.buildIvfPqIndex(b, "vec_id",
-          "embedding", idxPath, nCentroids = 8, m = 16)
-        if (id != 0L) {
-          val from = new org.apache.hadoop.fs.Path(
-            s"$idxPath/codes/batch=0")
-          val to = new org.apache.hadoop.fs.Path(
-            s"$idxPath/codes/batch=$id")
-          if (fs.exists(to)) fs.delete(to, true)
-          fs.rename(from, to)
-        }
-        b.coalesce(1).write.mode("overwrite")
-          .parquet(s"$stage/train")
+          "embedding", idxPath, nCentroids = 8, m = 16, batchId = id)
+        Segments.put(s, stage, "train")(b.coalesce(1).write.parquet)
       } else
         graft.operators.Similarity.appendToIvfPqIndex(b, "vec_id",
           "embedding", idxPath, batchId = id)
@@ -401,19 +388,15 @@ object StreamingQueries {
     val stage = Staging.dir(s, "graft-snov-")
     val segDir = s"$stage/segments"
     val outDir = s"$stage/scores"
-    val fs = new org.apache.hadoop.fs.Path(stage)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
     val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
-      val prior = priorSegments(s, fs, segDir, id)
+      val prior = priorSegments(s, segDir, id)
       // shared gram pass (r15): one tokenize/shingle of the batch
       // feeds both writes — see TextAnalysis.noveltyBatchFold
       val (bg, scores, base) = graft.operators.TextAnalysis
         .noveltyBatchFold(b, prior, "doc_id", "text")
       try {
-        scores.coalesce(1)
-          .write.mode("overwrite").parquet(s"$outDir/b$id")
-        bg.coalesce(1)
-          .write.mode("overwrite").parquet(s"$segDir/b$id")
+        Segments.put(s, outDir, s"b$id")(scores.coalesce(1).write.parquet)
+        Segments.put(s, segDir, s"b$id")(bg.coalesce(1).write.parquet)
       } finally base.unpersist(blocking = false)
     }
     (segDir, outDir, run.batches)
@@ -443,21 +426,15 @@ object StreamingQueries {
     val inDir = stagedSplit(s, dir, "sdoc", docs, col("doc_id"))
     val stage = Staging.dir(s, "graft-sres-")
     val segDir = s"$stage/snap"
-    val fs = new org.apache.hadoop.fs.Path(stage)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
     val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
-      val p = new org.apache.hadoop.fs.Path(segDir)
-      val prior =
-        if (!fs.exists(p)) Array.empty[Long]
-        else fs.listStatus(p).map(_.getPath.getName)
-          .flatMap(graft.operators.Segments.id)
-          .filter(_ < id)
+      val store = Segments.open(s, segDir)
+      val prior = store.ids.filter(_ < id)
       val snap =
         if (prior.isEmpty) b.select(col("doc_id")).limit(0)
-        else s.read.parquet(s"$segDir/b${prior.max}")
-      graft.operators.Sampling.reservoirMerge(snap,
+        else store.read(_ == prior.max)
+      Segments.put(s, segDir, s"b$id")(graft.operators.Sampling.reservoirMerge(snap,
           b.select(col("doc_id")), "doc_id", reservoirK, "rs")
-        .coalesce(1).write.mode("overwrite").parquet(s"$segDir/b$id")
+        .coalesce(1).write.parquet)
     }
     (segDir, run.batches)
   }
@@ -481,9 +458,8 @@ object StreamingQueries {
     val stage = Staging.dir(s, "graft-sqsc-")
     val outDir = s"$stage/scores"
     val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
-      graft.operators.QualityModel
-        .score(b, "doc_id", "text", weights)
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/b$id")
+      Segments.put(s, outDir, s"b$id")(graft.operators.QualityModel
+        .score(b, "doc_id", "text", weights).coalesce(1).write.parquet)
     }
     (outDir, run.batches)
   }
@@ -535,12 +511,11 @@ object StreamingQueries {
     val stage = Staging.dir(s, "graft-sdrift-")
     val segDir = s"$stage/segments"
     val run = runFold(s, ev.schema, inDir, stage, Some(8)) { (b, id) =>
-      b.filter(col("value").isNotNull)
+      Segments.put(s, segDir, s"b$id")(b.filter(col("value").isNotNull)
         .groupBy(graft.operators.Drift
           .bucketOf(col("value"), edges).as("bucket"))
         .agg(count(lit(1)).as("n"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$segDir/b$id")
+        .coalesce(1).write.parquet)
     }
     (segDir, run.batches)
   }
@@ -566,7 +541,7 @@ object StreamingQueries {
     val stage = Staging.dir(s, "graft-sexp-")
     val segDir = s"$stage/segments"
     val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
-      b.agg(
+      Segments.put(s, segDir, s"b$id")(b.agg(
         count(lit(1)).as("n"),
         count(when(col("text").isNotNull, lit(1)))
           .as("n_text_nonnull"),
@@ -575,8 +550,7 @@ object StreamingQueries {
         sum(col("n_chars")).as("sum_n_chars"),
         min(col("n_chars")).as("min_n_chars"),
         max(col("n_chars")).as("max_n_chars"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$segDir/b$id")
+        .coalesce(1).write.parquet)
     }
     (segDir, run.batches)
   }
@@ -601,10 +575,9 @@ object StreamingQueries {
     val stage = Staging.dir(s, "graft-sexphll-")
     val segDir = s"$stage/segments"
     val run = runFold(s, docs.schema, inDir, stage, Some(8)) { (b, id) =>
-      b.agg(count(lit(1)).as("n"),
+      Segments.put(s, segDir, s"b$id")(b.agg(count(lit(1)).as("n"),
           hll_sketch_agg(col("doc_id"), lit(12)).as("hll"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$segDir/b$id")
+        .coalesce(1).write.parquet)
     }
     (segDir, run.batches)
   }
@@ -711,22 +684,13 @@ object StreamingQueries {
           sum(col("y")).cast("long").as("n_pos"),
           sum(col("score_ppm")).cast("long").as("sum_ppm"))
         .localCheckpoint()
-      seg.coalesce(1).write.mode("overwrite")
-        .parquet(s"$segDir/b$id")
+      Segments.put(s, segDir, s"b$id")(seg.coalesce(1).write.parquet)
       // cumulative bins: prior segments STRICTLY below id + this
       // batch's stats from memory — a replayed batch never reads
-      // its own half-written segment as prior
-      val fs = new org.apache.hadoop.fs.Path(segDir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val sp = new org.apache.hadoop.fs.Path(segDir)
-      val priorDirs =
-        if (!fs.exists(sp)) Array.empty[String]
-        else fs.listStatus(sp).map(_.getPath)
-          .filter(d => graft.operators.Segments.id(d.getName)
-            .exists(_ < id))
-          .map(_.toString)
-      val cum = (if (priorDirs.isEmpty) seg
-        else seg.unionByName(s.read.parquet(priorDirs.toSeq: _*)))
+      // its own segment as prior
+      val store = Segments.open(s, segDir)
+      val cum = (if (!store.ids.exists(_ < id)) seg
+        else seg.unionByName(store.read(_ < id)))
         .groupBy(col("variant"), col("bin"))
         .agg(sum(col("n")).as("n"),
           sum(col("n_pos")).as("n_pos"),
@@ -748,10 +712,9 @@ object StreamingQueries {
             math.abs(bFx - bFrozenFx) > PlattDriftEnvelopeFx)
       }
       import s.implicits._
-      verdicts.toDF("variant", "batch_id", "a_fx", "b_fx",
+      Segments.put(s, verDir, s"b$id")(verdicts.toDF("variant", "batch_id", "a_fx", "b_fx",
           "tripped")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$verDir/b$id")
+        .coalesce(1).write.parquet)
     }
     (stage, run.batches)
   }
@@ -766,7 +729,7 @@ object StreamingQueries {
     */
   private def servedUniquenessHll(s: SparkSession,
       segDir: String): DataFrame =
-    s.read.parquet(s"$segDir/b*")
+    Segments.read(s, segDir)
       .agg(sum(col("n")).as("n"),
         hll_sketch_estimate(hll_union_agg(col("hll"))).as("dhat"))
       .select(lit("uniqueness_doc_id_approx").as("check_name"),
@@ -784,7 +747,7 @@ object StreamingQueries {
     */
   private def servedExpectations(s: SparkSession,
       segDir: String): DataFrame = {
-    val agg = s.read.parquet(s"$segDir/b*").agg(
+    val agg = Segments.read(s, segDir).agg(
       sum(col("n")).as("n"),
       sum(col("n_text_nonnull")).as("nt"),
       sum(col("n_lang_conform")).as("nl"),
@@ -837,19 +800,13 @@ object StreamingQueries {
     * segment (or, on an out-of-order replay, a later one) as "prior".
     * Empty (g, df) frame when no prior segment exists (batch 0).
     */
-  private def priorSegments(s: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, segDir: String,
+  private def priorSegments(s: SparkSession, segDir: String,
       id: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(segDir)
-    val dirs =
-      if (!fs.exists(p)) Array.empty[String]
-      else fs.listStatus(p).map(_.getPath)
-        .filter(d => graft.operators.Segments.id(d.getName).exists(_ < id))
-        .map(_.toString)
-    if (dirs.isEmpty) {
+    val store = Segments.open(s, segDir)
+    if (!store.ids.exists(_ < id)) {
       import s.implicits._
       Seq.empty[(String, Long)].toDF("g", "df")
-    } else s.read.parquet(dirs: _*)
+    } else store.read(_ < id)
   }
 
   /** The HLL-snapshot maintenance fold (stream half of
@@ -865,20 +822,16 @@ object StreamingQueries {
     val inDir = stagedSplit(s, dir, "ssk", ev, col("event_id"))
     val stage = Staging.dir(s, "graft-ssk-")
     val snapPath = s"$stage/snap"
-    val snapDir = new org.apache.hadoop.fs.Path(snapPath)
-    val fs = snapDir.getFileSystem(s.sparkContext.hadoopConfiguration)
     val run = runFold(s, ev.schema, inDir, stage, None) { (b, id) =>
+      val store = Segments.open(s, stage)
       val batchSk = graft.operators.Sketches.hllByGroup(
         b, "event_type", "user_id")
       val merged =
-        if (fs.exists(snapDir))
+        if (store.contains("snap"))
           graft.operators.Sketches.hllMergeSnapshots(
             s.read.parquet(snapPath), batchSk, "event_type")
         else batchSk
-      val next = new org.apache.hadoop.fs.Path(s"$snapPath-next-$id")
-      merged.write.mode("overwrite").parquet(next.toString)
-      if (fs.exists(snapDir)) fs.delete(snapDir, true)
-      fs.rename(next, snapDir)
+      Segments.put(s, stage, "snap")(merged.write.parquet)
     }
     (snapPath, run.batches)
   }
@@ -898,9 +851,8 @@ object StreamingQueries {
       val toks = b.select(col("lang"),
         explode(graft.operators.TextAnalysis.tokens(col("text")))
           .as("token"))
-      graft.operators.Sketches.fiByGroup(
-          toks, "lang", "token", maxMapSize = 8)
-        .write.mode("overwrite").parquet(s"$segPath/b$id")
+      Segments.put(s, segPath, s"b$id")(graft.operators.Sketches.fiByGroup(
+          toks, "lang", "token", maxMapSize = 8).write.parquet)
     }
     (segPath, run.batches)
   }
@@ -916,20 +868,16 @@ object StreamingQueries {
     val inDir = stagedSplit(s, dir, "skll", ev, col("event_id"))
     val stage = Staging.dir(s, "graft-skll-")
     val snapPath = s"$stage/snap"
-    val snapDir = new org.apache.hadoop.fs.Path(snapPath)
-    val fs = snapDir.getFileSystem(s.sparkContext.hadoopConfiguration)
     val run = runFold(s, ev.schema, inDir, stage, None) { (b, id) =>
+      val store = Segments.open(s, stage)
       val batchSk = graft.operators.Sketches.kllByGroup(
         b, "event_type", "value")
       val merged =
-        if (fs.exists(snapDir))
+        if (store.contains("snap"))
           graft.operators.Sketches.kllMergeSnapshots(
             s.read.parquet(snapPath), batchSk, "event_type")
         else batchSk
-      val next = new org.apache.hadoop.fs.Path(s"$snapPath-next-$id")
-      merged.write.mode("overwrite").parquet(next.toString)
-      if (fs.exists(snapDir)) fs.delete(snapDir, true)
-      fs.rename(next, snapDir)
+      Segments.put(s, stage, "snap")(merged.write.parquet)
     }
     (snapPath, run.batches)
   }
@@ -952,7 +900,7 @@ object StreamingQueries {
       val (segPath, _) = runFiSnapshotStream(s, dir)
       graft.operators.Sketches.fiFrequentItems(
         graft.operators.Sketches.fiMergeSegments(
-          s.read.parquet(s"$segPath/b*"), "lang", maxMapSize = 8), "lang")
+          Segments.read(s, segPath), "lang", maxMapSize = 8), "lang")
     }),
     "streaming_quantile_snapshot" -> ((s, dir) => {
       val (snapPath, _) = runKllSnapshotStream(s, dir)
@@ -965,11 +913,11 @@ object StreamingQueries {
     "streaming_platt_drift" -> ((s, dir) => {
       val (a0Fx, b0Fx) = plattFrozenFit(s, dir)
       val (stage, _) = runPlattDriftStream(s, dir, a0Fx, b0Fx)
-      s.read.parquet(s"$stage/verdicts/b*")
+      Segments.read(s, s"$stage/verdicts")
     }),
     "streaming_novelty" -> ((s, dir) => {
       val (_, outDir, _) = runNoveltyStream(s, dir)
-      s.read.parquet(s"$outDir/b*")
+      Segments.read(s, outDir)
     }),
     // fold + one manifest-served range read — the full-scan equality and
     // compaction baselines stay in Verify
@@ -982,10 +930,8 @@ object StreamingQueries {
     // fold only — the batch-equality baseline stays in Verify
     "streaming_reservoir" -> ((s, dir) => {
       val (segDir, _) = runReservoirStream(s, dir)
-      val ids = new java.io.File(segDir).listFiles()
-        .filter(_.isDirectory)
-        .flatMap(f => graft.operators.Segments.id(f.getName))
-      s.read.parquet(s"$segDir/b${ids.max}")
+      val store = Segments.open(s, segDir)
+      store.read(_ == store.ids.max)
     }),
     // fold + served verdict rows — the batch-equality baseline stays in
     // Verify
@@ -1005,7 +951,7 @@ object StreamingQueries {
       val ev = Tables.t(s, dir, "events")
       val edges = graft.operators.Drift.quantileEdges(ev, "value", 10)
       val (segDir, _) = runDriftStream(s, dir, edges)
-      val counts = s.read.parquet(s"$segDir/b*")
+      val counts = Segments.read(s, segDir)
         .groupBy(col("bucket")).agg(sum(col("n")).as("n"))
       graft.operators.Drift.compare(
         graft.operators.Drift.histogram(ev, "value", edges),
@@ -1016,7 +962,7 @@ object StreamingQueries {
     "streaming_quality_score" -> ((s, dir) => {
       val w = Array(-0.5, 2.0, 1.5, -0.3, 0.4, 1.0)
       val (outDir, _) = runQualityScoreStream(s, dir, w)
-      s.read.parquet(s"$outDir/b*")
+      Segments.read(s, outDir)
     }),
     "streaming_embedding_index" -> ((s, dir) =>
       runEmbeddingIndexStream(s, dir).accumulated),
@@ -1183,6 +1129,7 @@ object StreamingQueries {
       mvPath: String, checkpoint: String): DataFrame = {
     val mvDir = new org.apache.hadoop.fs.Path(mvPath)
     val fs = mvDir.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (parent, name) = (mvDir.getParent.toString, mvDir.getName)
     def lastApplied(): Long = {
       val f = new org.apache.hadoop.fs.Path(mvDir, "_last_applied")
       if (!fs.exists(f)) -1L
@@ -1197,24 +1144,24 @@ object StreamingQueries {
       .option("maxFilesPerTrigger", "1").parquet(inGlob)
       .writeStream
       .foreachBatch { (b: DataFrame, id: Long) =>
+        val store = Segments.open(s, parent) // settles a swap a crash cut
         if (id > lastApplied()) {
           val agg = b.groupBy(col("event_type"))
             .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"))
           val merged =
-            if (fs.exists(mvDir))
-              s.read.parquet(mvDir.toString).unionByName(agg)
+            if (store.contains(name))
+              s.read.parquet(mvPath).unionByName(agg)
                 .groupBy(col("event_type"))
                 .agg(sum(col("n")).as("n"), sum(col("sv")).as("sv"))
             else agg
-          val next = new org.apache.hadoop.fs.Path(s"$mvPath-next-$id")
-          merged.write.mode("overwrite").parquet(next.toString)
-          val out = fs.create(
-            new org.apache.hadoop.fs.Path(next, "_last_applied"), true)
-          try out.write(id.toString.getBytes(
-            java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-          fs.delete(mvDir, true)
-          fs.rename(next, mvDir)
+          Segments.put(s, parent, name) { next =>
+            merged.write.parquet(next)
+            val out = fs.create(
+              new org.apache.hadoop.fs.Path(next, "_last_applied"), true)
+            try out.write(id.toString.getBytes(
+              java.nio.charset.StandardCharsets.UTF_8))
+            finally out.close()
+          }
         }
         ()
       }
@@ -1514,7 +1461,7 @@ object StreamingQueries {
       val batches = new java.util.concurrent.atomic.AtomicLong(nb)
       // read-time merge over all segments: one distributed FiUnion agg
       val snap = graft.operators.Sketches.fiMergeSegments(
-        s.read.parquet(s"$segPath/b*"), "lang", maxMapSize = 8)
+        Segments.read(s, segPath), "lang", maxMapSize = 8)
       val items = graft.operators.Sketches.fiFrequentItems(
         snap, "lang").localCheckpoint()
       val exact = docs.select(col("lang"),
@@ -1641,11 +1588,7 @@ object StreamingQueries {
         "embedding", rebuilt, nCentroids = 8, m = 16,
         trainOn = s.read.parquet(s"$stage/train"))
       val rebuildServed = serve(rebuilt).localCheckpoint()
-      val fs = new org.apache.hadoop.fs.Path(idxPath)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      def segs(): Long = fs.listStatus(
-          new org.apache.hadoop.fs.Path(s"$idxPath/codes"))
-        .count(_.getPath.getName.startsWith("batch=")).toLong
+      def segs(): Long = Segments.open(s, s"$idxPath/codes").ids.size.toLong
       val segsBefore = segs()
       graft.operators.Similarity.compactIvfPqIndex(s, idxPath)
       val after = serve(idxPath).localCheckpoint()
@@ -1670,22 +1613,18 @@ object StreamingQueries {
     "streaming_novelty" -> ((s, dir) => {
       val (segDir, outDir, nb) = runNoveltyStream(s, dir)
       val docs = Tables.t(s, dir, "documents")
-      val fs = new org.apache.hadoop.fs.Path(segDir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val snap = s.read.parquet(s"$segDir/b*")
+      val snap = Segments.read(s, segDir)
         .groupBy(col("g")).agg(sum(col("df")).as("df"))
         .localCheckpoint()
       val full = graft.operators.TextAnalysis
         .gramDf(docs, "doc_id", "text").localCheckpoint()
-      val ids = fs.listStatus(new org.apache.hadoop.fs.Path(segDir))
-        .map(_.getPath.getName)
-        .flatMap(graft.operators.Segments.id).sorted
-      val sequentialOk = ids.forall { id =>
-        val scored = s.read.parquet(s"$outDir/b$id").localCheckpoint()
+      val scores = Segments.open(s, outDir)
+      val sequentialOk = Segments.open(s, segDir).ids.forall { id =>
+        val scored = scores.read(_ == id).localCheckpoint()
         val batchDocs = docs.join(scored.select(col("doc_id")),
           Seq("doc_id"))
         val expected = graft.operators.TextAnalysis.noveltyIncremental(
-          batchDocs, priorSegments(s, fs, segDir, id), "doc_id",
+          batchDocs, priorSegments(s, segDir, id), "doc_id",
           "text")._2.localCheckpoint()
         graft.queries.Contracts.sameKeys(scored, expected,
           Seq("doc_id", "n_novel", "n_grams", "novelty_ppm")) &&
@@ -1723,9 +1662,7 @@ object StreamingQueries {
       graft.operators.Manifest.compactManifest(s, man)
       val (pruned2, _, _) =
         graft.operators.Manifest.prunedRead(s, man, "doc_id", lo, hi)
-      val segs = new java.io.File(man).listFiles()
-        .filter(f => f.isDirectory &&
-          graft.operators.Segments.isSegment(f.getName))
+      val segs = Segments.open(s, man).ids
       graft.queries.Contracts.row(s,
         "n_docs" -> docs.count(),
         "multi_batch_ok" -> (nb >= 3L),
@@ -1751,7 +1688,7 @@ object StreamingQueries {
       val docs = Tables.t(s, dir, "documents")
       val fit = graft.operators.QualityModel.train(docs, "doc_id", "text")
       val (outDir, nb) = runQualityScoreStream(s, dir, fit.weights)
-      val streamed = s.read.parquet(s"$outDir/b*").localCheckpoint()
+      val streamed = Segments.read(s, outDir).localCheckpoint()
       val batch = graft.operators.QualityModel
         .score(docs, "doc_id", "text", fit.weights)
       graft.queries.Contracts.row(s,
@@ -1784,7 +1721,7 @@ object StreamingQueries {
       val edges = graft.operators.Drift.quantileEdges(ev, "value", 10)
       val (segDir, nb) = runDriftStream(s, dir, edges)
       def r6(x: Double): Double = graft.operators.Fixed.round6(x)
-      val streamedCounts = s.read.parquet(s"$segDir/b*")
+      val streamedCounts = Segments.read(s, segDir)
         .groupBy(col("bucket")).agg(sum(col("n")).as("n"))
         .localCheckpoint()
       val batchCounts = graft.operators.Drift
@@ -1841,7 +1778,7 @@ object StreamingQueries {
       val docs = Tables.t(s, dir, "documents")
       val (a0Fx, b0Fx) = plattFrozenFit(s, dir)
       val (stage, nb) = runPlattDriftStream(s, dir, a0Fx, b0Fx)
-      val v = s.read.parquet(s"$stage/verdicts/b*").localCheckpoint()
+      val v = Segments.read(s, s"$stage/verdicts").localCheckpoint()
       val maxId = v.agg(max(col("batch_id"))).head().getLong(0)
       def fin(variant: String) = v.filter(col("variant") === variant &&
         col("batch_id") === maxId).head()
@@ -1877,9 +1814,9 @@ object StreamingQueries {
       val docs = Tables.t(s, dir, "documents")
       val (segDir, nb) = runExpectationsHllStream(s, dir)
       val served = servedUniquenessHll(s, segDir).head()
-      val n = s.read.parquet(s"$segDir/b*")
+      val n = Segments.read(s, segDir)
         .agg(sum(col("n"))).head().getLong(0)
-      val dhat = s.read.parquet(s"$segDir/b*")
+      val dhat = Segments.read(s, segDir)
         .agg(hll_sketch_estimate(hll_union_agg(col("hll"))))
         .head().getLong(0)
       val nDocs = docs.count()
@@ -1904,10 +1841,9 @@ object StreamingQueries {
     "streaming_reservoir" -> ((s, dir) => {
       val (segDir, nb) = runReservoirStream(s, dir)
       val docs = Tables.t(s, dir, "documents")
-      val ids = new java.io.File(segDir).listFiles()
-        .filter(_.isDirectory)
-        .flatMap(f => graft.operators.Segments.id(f.getName)).sorted
-      val last = s.read.parquet(s"$segDir/b${ids.max}").localCheckpoint()
+      val store = Segments.open(s, segDir)
+      val ids = store.ids
+      val last = store.read(_ == ids.max).localCheckpoint()
       val batch = graft.operators.Sampling.exactK(
         docs.select(col("doc_id")), "doc_id", reservoirK, "rs")
       graft.queries.Contracts.row(s,
@@ -1934,8 +1870,7 @@ object StreamingQueries {
         "query_id", "text", idxPath, "doc_id", k = 5).localCheckpoint()
       val scratch = graft.operators.TextAnalysis.bm25TopK(docs, qs,
         "doc_id", "text", "query_id", "text", k = 5)
-      val segs = new java.io.File(s"$idxPath/seg").listFiles()
-        .count(f => f.isDirectory && f.getName.startsWith("batch="))
+      val segs = Segments.open(s, s"$idxPath/seg").ids.size
       graft.queries.Contracts.row(s,
         "n_docs" -> docs.count(),
         "multi_batch_ok" -> (nb >= 3L),

@@ -19,15 +19,15 @@ class NoCompactRenameFs extends RawLocalFileSystem {
     src.getParent.getName != ".compact" && super.rename(src, dst)
 }
 
-/** Every segment compaction deletes its snapshotted segments before it
-  * renames the staged merge in, so a rename that fails must fail the call
-  * and keep the staged merge: it is the only copy of the store's rows.
+/** A segment compaction whose rename-in of the staged merge fails must
+  * fail the call, and the store, read through [[Segments]], must return
+  * exactly its old rows.
   */
 class CompactionRenameSpec extends SparkSpec {
   import spark.implicits._
 
   /** Runs `compact` on `store` through the `norename:` scheme, expects an
-    * IOException naming `$store/.compact/$name` and `$into/$name`, and
+    * IOException naming `$into/.compact/$name` and `$into/$name`, and
     * returns the staged merge, read back through `file:`.
     */
   private def failedSwap(store: String, name: String, into: String)(
@@ -40,10 +40,10 @@ class CompactionRenameSpec extends SparkSpec {
       hc.unset("fs.norename.impl")
       hc.unset("fs.norename.impl.disable.cache")
     }
-    assert(e.getMessage.contains(s"$store/.compact/$name"), e.getMessage)
+    assert(e.getMessage.contains(s"$into/.compact/$name"), e.getMessage)
     assert(e.getMessage.contains(s"$into/$name"), e.getMessage)
     assert(!new File(s"$into/$name").exists())
-    spark.read.parquet(s"$store/.compact/$name")
+    spark.read.parquet(s"$into/.compact/$name")
   }
 
   private def segments(dir: String, prefix: String): Seq[String] =
@@ -56,6 +56,7 @@ class CompactionRenameSpec extends SparkSpec {
     val staged = failedSwap(dir, "b-1", dir)(Dedup.compactSegmentDirs(spark, _))
     assert(segments(dir, "b") === Nil)
     assert(staged.as[Long].collect().sorted.toSeq === (0L until 50L))
+    assert(Segments.read(spark, dir).as[Long].collect().sorted.toSeq === (0L until 50L))
   }
 
   test("compactGramDf keeps the staged merge when the rename fails") {
@@ -66,6 +67,8 @@ class CompactionRenameSpec extends SparkSpec {
     assert(segments(dir, "b") === Nil)
     assert(staged.as[(String, Long)].collect().sorted.toSeq ===
       Seq("a" -> 1L, "b" -> 5L, "c" -> 4L))
+    assert(Segments.read(spark, dir).as[(String, Long)].collect().sorted.toSeq ===
+      Seq("a" -> 1L, "b" -> 2L, "b" -> 3L, "c" -> 4L))
   }
 
   test("compactManifest keeps the staged merge when the rename fails") {
@@ -79,6 +82,8 @@ class CompactionRenameSpec extends SparkSpec {
     val staged = failedSwap(man, "b-1", man)(Manifest.compactManifest(spark, _))
     assert(segments(man, "b") === Nil)
     assert(staged.count() === files)
+    assert(Manifest.readManifest(spark, man).count() === files)
+    assert(Segments.open(spark, man).ids === Seq(0L, 1L))
   }
 
   test("compactIvfPqIndex keeps the staged merge when the rename fails") {
@@ -91,6 +96,9 @@ class CompactionRenameSpec extends SparkSpec {
       Similarity.compactIvfPqIndex(spark, _))
     assert(segments(s"$path/codes", "batch=") === Nil)
     assert(staged.select("nid").as[Long].collect().sorted.toSeq === (0L until 15L))
+    val old = Segments.read(spark, s"$path/codes")
+    assert(old.select("nid").as[Long].collect().sorted.toSeq === (0L until 15L))
+    assert(Segments.open(spark, s"$path/codes").ids === Seq(0L, 1L))
   }
 
   test("compactTextIndex keeps the staged merge when the rename fails") {
@@ -107,5 +115,8 @@ class CompactionRenameSpec extends SparkSpec {
     assert(staged.filter(col("store") === "stats")
       .agg(sum(col("n_docs"))).head().getLong(0) === 3L)
     assert(staged.filter(col("store") === "norms").count() === 3L)
+    val old = Segments.read(spark, s"$path/seg")
+    assert(old.filter(col("store") === "norms").count() === 3L)
+    assert(Segments.open(spark, s"$path/seg").ids === Seq(0L, 1L))
   }
 }
