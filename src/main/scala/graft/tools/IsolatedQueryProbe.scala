@@ -51,12 +51,18 @@ object IsolatedQueryProbe {
       if (envelopeMode) null
       else graft.SparkEntry.benchQueries.getOrElse(name,
         sys.error(s"unknown bench query: $name"))
-    // same parallelism knob as Bench: the arbiter must measure under the
-    // conditions of the suite it arbitrates
+    // same session knobs as Bench (parallelism, codegen cache size,
+    // artifact isolation; see Bench.main for why): the arbiter must
+    // measure under the conditions of the suite it arbitrates
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      .config("spark.sql.artifact.isolation.enabled",
+        sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_ISOLATION", "false"))
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def rep(dir: String): Double = {
