@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlShim.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -49,194 +49,9 @@ case class BloomMightContain(child: Expression, bf: BloomFilter)
 object BloomExpressions {
 
   /** Column form: TRUE when `c` (bigint) might be in `bf`; never a false
-    * negative.
-    *
-    * The filter object cannot ride through SQL text, and every public
-    * Column-from-Expression bridge is `private[sql]`, so the expression is
-    * bound by registering a session temp function whose builder references
-    * `bf` weakly. Names come from [[TempFnNames]]: one binding per live
-    * filter object (re-binding the same filter every micro-batch reuses its
-    * entry, so the registry does not grow with call count), distinct
-    * filters always get distinct names (identityHashCode alone is not
-    * collision-free). The `mk` lambda must build from the dereferenced
-    * argument, never close over `bf` itself — that would re-pin the filter.
+    * negative. The Column holds the expression and with it `bf` itself: no
+    * function is registered, and the Column evaluates in any session.
     */
-  def bloomMightContain(spark: SparkSession, c: Column,
-      bf: BloomFilter): Column = {
-    val name = TempFnNames.register[BloomFilter](spark, "graft_bloom_probe",
-      bf, (o, exprs) => BloomMightContain(exprs.head, o))
-    call_function(name, c)
-  }
-}
-
-/** Stable unique temp-function names keyed by object identity: the same
-  * object reuses its name (no per-call registry/heap growth), distinct
-  * objects never collide (monotone suffix).
-  *
-  * [[register]] handles the recurring-rebuild pattern (a fresh Bloom filter
-  * / codebook per ingest or micro-batch) without the drop race an eager
-  * per-role eviction had: the registry builder holds the bound object only
-  * WEAKLY, so a registry entry never pins a filter-sized object — the
-  * moment the caller and all analyzed plans release it, it is collectable,
-  * entry or no entry. Entries of the same role whose object has been
-  * collected are swept on the next register (they are unusable by
-  * construction: no reachable path can still produce a working probe from
-  * them), which bounds registry names at live-objects + not-yet-swept dead
-  * ones. A bare un-analyzed Column therefore keeps resolving for as long
-  * as its object is strongly held ANYWHERE — concurrent builders on one
-  * session can no longer break a sibling thread's Column between
-  * `call_function` and eager analysis. Registration + role bookkeeping +
-  * sweep run in one critical section per (registry, role).
-  *
-  * Weak-only references would leave one hazard: between `register` (which
-  * returns a name for a Column) and the first analysis that builds the
-  * expression, the CALLER's frame may hold the only strong reference — and
-  * HotSpot may clear a local's slot after its last bytecode use, so a GC
-  * during Dataset construction could collect the object before the builder
-  * derefs it (the premature-finalization window `reachabilityFence` exists
-  * for). Each registry therefore also keeps a strong hold on its most
-  * recently registered objects in a bounded PER-ROLE FIFO
-  * (`StrongHoldCap` deep): enough to cover any realistic
-  * register→analysis gap, bounded so a superseded filter becomes
-  * collectable after `StrongHoldCap` further registrations OF ITS ROLE
-  * (or [[releaseStrongHolds]] for eager release). Per-role matters for
-  * memory: the recurring-ingest pattern registers a filter-sized object
-  * per micro-batch, and a global FIFO would pin `cap` of them at steady
-  * state — ~GBs for SCALE.md's 120 MB filters — where per-role holds pin
-  * only the last few of each kind.
-  */
-private[functions] object TempFnNames {
-  private val StrongHoldCap = 4
-  private val nextId = new java.util.concurrent.atomic.AtomicLong(0L)
-  // registry → role → FIFO strong holds of recently registered objects.
-  // Weak-keyed by registry so a closed session releases its holds with it.
-  private val recentHolds = new java.util.WeakHashMap[
-    AnyRef, java.util.concurrent.ConcurrentHashMap[
-      String, java.util.ArrayDeque[AnyRef]]]()
-  // per-prefix maps: one object may carry several bindings (a PQ codebook
-  // backs both the encode and the lut function) without evicting the other
-  private val names = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.Map[AnyRef, String]]()
-  // role → registered bindings (name + weak ref to the bound object), PER
-  // function registry: registries are per-SparkSession, so process-global
-  // bookkeeping would sweep against whichever session bound last. Weak
-  // keys let a closed session's bookkeeping be collected.
-  private val roleBindings = new java.util.WeakHashMap[
-    AnyRef, java.util.concurrent.ConcurrentHashMap[
-      String, java.util.ArrayList[
-        (String, java.lang.ref.WeakReference[AnyRef])]]]()
-
-  def nameFor(obj: AnyRef, prefix: String): String = {
-    val m = names.computeIfAbsent(prefix,
-      _ => new java.util.WeakHashMap[AnyRef, String]())
-    m.synchronized {
-      val cached = m.get(obj)
-      if (cached != null) cached
-      else {
-        val name = s"${prefix}_${nextId.incrementAndGet()}"
-        m.put(obj, name)
-        name
-      }
-    }
-  }
-
-  /** Register the temp function binding `obj`'s expression under `role`
-    * (also the name prefix) and return its name. `mk` builds the expression
-    * FROM THE DEREFERENCED OBJECT it is given — it must not close over
-    * `obj`, or the builder would pin it and defeat the weak design.
-    */
-  def register[T <: AnyRef](spark: SparkSession, role: String, obj: T,
-      mk: (T, Seq[Expression]) => Expression): String = {
-    val name = nameFor(obj, role)
-    val registry = spark.sessionState.functionRegistry
-    val ref = new java.lang.ref.WeakReference[AnyRef](obj)
-    val builder: Seq[Expression] => Expression = { exprs =>
-      val o = ref.get()
-      if (o == null) throw new IllegalStateException(
-        s"temp function $name: its bound object has been collected — " +
-          "rebuild the Column from a live object")
-      mk(o.asInstanceOf[T], exprs)
-    }
-    val list = bindingsFor(registry, role)
-    list.synchronized {
-      // Same live object re-bound (e.g. a centroid table used for both the
-      // corpus and the query side of one operator call): the existing
-      // binding already dereferences it — skip the re-register, which
-      // would only log a "function replaced" WARN per extra use.
-      val bound = list.stream()
-        .anyMatch(e => e._1 == name && e._2.get() != null)
-      if (!bound) {
-        registry.createOrReplaceTempFunction(name, builder, "built-in")
-        if (!list.stream().anyMatch(_._1 == name)) list.add((name, ref))
-      }
-      sweepLocked(registry, list, keep = name)
-    }
-    val holds = recentHolds.synchronized {
-      var byRole = recentHolds.get(registry)
-      if (byRole == null) {
-        byRole = new java.util.concurrent.ConcurrentHashMap[
-          String, java.util.ArrayDeque[AnyRef]]()
-        recentHolds.put(registry, byRole)
-      }
-      byRole.computeIfAbsent(role, _ => new java.util.ArrayDeque[AnyRef]())
-    }
-    holds.synchronized {
-      holds.addLast(obj)
-      while (holds.size() > StrongHoldCap) holds.removeFirst()
-    }
-    name
-  }
-
-  /** Eagerly release this session's bounded strong holds (memory-sensitive
-    * callers and the collectability specs; [[register]] normally ages them
-    * out FIFO).
-    */
-  def releaseStrongHolds(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    recentHolds.synchronized {
-      val byRole = recentHolds.get(registry)
-      if (byRole != null) byRole.values().forEach(d =>
-        d.synchronized(d.clear()))
-    }
-  }
-
-  /** Drop same-role entries whose object has been collected (test hook —
-    * [[register]] sweeps automatically).
-    */
-  def sweepRole(spark: SparkSession, role: String): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val list = bindingsFor(registry, role)
-    list.synchronized { sweepLocked(registry, list, keep = null) }
-  }
-
-  private def bindingsFor(registry: AnyRef, role: String):
-      java.util.ArrayList[(String, java.lang.ref.WeakReference[AnyRef])] = {
-    val byRole = roleBindings.synchronized {
-      var cur = roleBindings.get(registry)
-      if (cur == null) {
-        cur = new java.util.concurrent.ConcurrentHashMap[
-          String, java.util.ArrayList[
-            (String, java.lang.ref.WeakReference[AnyRef])]]()
-        roleBindings.put(registry, cur)
-      }
-      cur
-    }
-    byRole.computeIfAbsent(role, _ => new java.util.ArrayList())
-  }
-
-  private def sweepLocked(
-      registry: org.apache.spark.sql.catalyst.analysis.FunctionRegistry,
-      list: java.util.ArrayList[
-        (String, java.lang.ref.WeakReference[AnyRef])],
-      keep: String): Unit = {
-    val it = list.iterator()
-    while (it.hasNext) {
-      val (n, r) = it.next()
-      if (n != keep && r.get() == null) {
-        registry.dropFunction(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(n))
-        it.remove()
-      }
-    }
-  }
+  def bloomMightContain(c: Column, bf: BloomFilter): Column =
+    column(BloomMightContain(expression(c), bf))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlShim.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** The coarse-quantizer table of an IVF family operator: flattened nc×d
@@ -61,17 +61,11 @@ case class CentroidScores(left: Expression, right: Expression,
 
 object CentroidExpressions {
 
-  /** Bind `table` behind a session temp function (expression objects cannot
-    * ride through SQL text — the [[PqExpressions]] pattern) and return the
-    * scoring Column. One registration per live table: callers build the
-    * table once per operator invocation and reuse the Column for corpus and
+  /** The scoring Column over `table`. The Column holds its expression and
+    * with it `table`: no function is registered. Callers build the table
+    * once per operator invocation and reuse the Column for corpus and
     * query sides.
     */
-  def centroidScores(spark: SparkSession, vec: Column, norm: Column,
-      table: CentroidTable): Column = {
-    val name = TempFnNames.register[CentroidTable](spark,
-      "graft_centroid_scores", table,
-      (o, exprs) => CentroidScores(exprs.head, exprs(1), o))
-    call_function(name, vec, norm)
-  }
+  def centroidScores(vec: Column, norm: Column, table: CentroidTable): Column =
+    column(CentroidScores(expression(vec), expression(norm), table))
 }

@@ -11,8 +11,10 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   * so plain-SQL users (thriftserver, spark-sql, notebooks) get every
   * `HashExpressions.sqlFunctions` entry (`simhash64`, `minhash_sig`, …)
-  * without any imperative `register` call. `HashExpressions.register`
-  * remains for programmatic sessions; both routes read the same table.
+  * without any imperative `register` call. Both this and
+  * `HashExpressions.register` serve SQL text only and read the same table;
+  * Column code calls the typed constructors (`HashExpressions.minhashSig`,
+  * …), which need neither.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

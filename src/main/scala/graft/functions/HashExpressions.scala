@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, Column, SparkSession}
+import org.apache.spark.sql.GraftSqlShim.{column, expression}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
@@ -282,20 +283,67 @@ case class PqScore(left: Expression, right: Expression, ksub: Int)
       l: Expression, r: Expression): PqScore = copy(left = l, right = r)
 }
 
-/** Registration + shared hashing for graft's native expressions. */
+/** Typed Column constructors, the SQL function table, and shared hashing
+  * for graft's native expressions. Library code builds its Columns through
+  * the constructors: each wraps the expression directly, so it needs no
+  * session setup and leaves the function registry alone. [[register]] and
+  * [[GraftExtensions]] bind the same expressions to names for SQL text.
+  */
 object HashExpressions {
 
   private[functions] def splitmix64(x: Long): Long = NativeKernels.splitmix64(x)
 
   private[functions] def hash64(s: UTF8String): Long = NativeKernels.hash64(s)
 
-  private def intArg(e: Expression): Int =
-    e.eval(InternalRow.empty).asInstanceOf[Number].intValue
+  def simhash64(tokens: Column): Column = column(SimHash64(expression(tokens)))
+
+  def minhashSig(tokens: Column, k: Int): Column =
+    column(MinHashSig(expression(tokens), k))
+
+  def wordShingles(tokens: Column, n: Int): Column =
+    column(WordShingles(expression(tokens), n))
+
+  def winnowFingerprint(text: Column, k: Int, w: Int): Column =
+    column(WinnowFingerprint(expression(text), k, w))
+
+  def vecDot(a: Column, b: Column): Column =
+    column(VecDot(expression(a), expression(b)))
+
+  /** Generator: one `(pos, ngram)` row per window; like `posexplode`, it
+    * goes in a `select`.
+    */
+  def ngramGen(tokens: Column, n: Int): Column =
+    column(NgramGenerate(expression(tokens), n))
+
+  def pqScore(lut: Column, codes: Column, ksub: Int): Column =
+    column(PqScore(expression(lut), expression(codes), ksub))
+
+  def hilbert16(x: Column, y: Column): Column =
+    column(HilbertIndex(expression(x), expression(y)))
+
+  def hilbert21(x: Column, y: Column, z: Column): Column =
+    column(Hilbert3Index(expression(x), expression(y), expression(z)))
+
+  /** The int value of SQL argument `pos` (1-based) of `fn`: it must be a
+    * non-NULL constant, checked at analysis, where the error names both.
+    */
+  private def intArg(fn: String, e: Seq[Expression], pos: Int): Int = {
+    val arg = e(pos - 1)
+    val param = s"argument $pos"
+    if (!arg.foldable) throw new AnalysisException("NON_FOLDABLE_ARGUMENT",
+      Map("funcName" -> fn, "paramName" -> param, "paramType" -> "INT"))
+    arg.eval(InternalRow.empty) match {
+      case n: Number => n.intValue
+      case v => throw new AnalysisException("INVALID_PARAMETER_VALUE.INTEGER",
+        Map("parameter" -> param, "functionName" -> fn,
+          "invalidValue" -> String.valueOf(v)))
+    }
+  }
 
   /** graft's SQL functions as (name, usage, builder): the one table both
     * registration routes — [[register]] and [[GraftExtensions]] — are
     * built from, so they bind the same names to identical expression
-    * trees.
+    * trees, the same ones the typed constructors above build.
     */
   private[functions] val sqlFunctions
       : Seq[(String, String, Seq[Expression] => Expression)] = Seq(
@@ -303,37 +351,38 @@ object HashExpressions {
       e => SimHash64(e.head)),
     ("minhash_sig",
       "minhash_sig(array<string>, k) - k-minimum MinHash signature",
-      e => MinHashSig(e.head, intArg(e(1)))),
+      e => MinHashSig(e.head, intArg("minhash_sig", e, 2))),
     ("word_shingles",
       "word_shingles(array<string>, n) - distinct word n-grams",
-      e => WordShingles(e.head, intArg(e(1)))),
+      e => WordShingles(e.head, intArg("word_shingles", e, 2))),
     ("winnow_fingerprint",
       "winnow_fingerprint(string, k, w) - winnowing hashes",
-      e => WinnowFingerprint(e.head, intArg(e(1)), intArg(e(2)))),
+      e => WinnowFingerprint(e.head, intArg("winnow_fingerprint", e, 2),
+        intArg("winnow_fingerprint", e, 3))),
     ("vec_dot", "vec_dot(array<double>, array<double>) - dot product",
       e => VecDot(e.head, e(1))),
     ("ngram_gen", "ngram_gen(array<string>, n) - one row per n-gram window",
-      e => NgramGenerate(e.head, intArg(e(1)))),
+      e => NgramGenerate(e.head, intArg("ngram_gen", e, 2))),
     ("pq_score",
       "pq_score(array<double>, array<int>, ksub) - PQ ADC inner product",
-      e => PqScore(e.head, e(1), intArg(e(2)))),
+      e => PqScore(e.head, e(1), intArg("pq_score", e, 3))),
     ("hilbert16", "hilbert16(bigint, bigint) - 32-bit Hilbert curve index",
       e => HilbertIndex(e.head, e(1))),
     ("hilbert21",
       "hilbert21(bigint, bigint, bigint) - 63-bit 3-D Hilbert index",
       e => Hilbert3Index(e.head, e(1), e(2))))
 
-  /** Register every [[sqlFunctions]] entry as a session function.
-    * Idempotent; call once per session before using `expr`/`call_function`.
+  /** Register every [[sqlFunctions]] entry as a session function, for SQL
+    * text (`spark.sql`, `expr`) only: Column code uses the typed
+    * constructors and needs no registration. Idempotent.
     * (`GraftExtensions` registers the same table via spark.sql.extensions.)
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    // Re-registering logs a "function replaced" WARN per function per call;
-    // a 130-query sweep calls this once per query, so skip when the FULL
-    // set is already bound (checking one name as a proxy would skip
-    // registration in a session where e.g. an older build bound everything
-    // but pq_score).
+    // Re-registering logs a "function replaced" WARN per function, so skip
+    // when the FULL set is already bound (checking one name as a proxy
+    // would skip registration in a session where e.g. an older build bound
+    // everything but pq_score).
     if (sqlFunctions.forall { case (n, _, _) =>
         reg.functionExists(FunctionIdentifier(n)) }) return
     sqlFunctions.foreach { case (n, _, build) =>

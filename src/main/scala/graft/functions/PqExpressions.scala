@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlShim.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Product-quantization plan-side expressions. The codebook (trained
@@ -66,28 +66,18 @@ case class PqLut(left: Expression, right: Expression, cb: Array[Double],
       l: Expression, r: Expression): PqLut = copy(left = l, right = r)
 }
 
+/** Column forms of [[PqEncode]] and [[PqLut]]. Each Column holds its
+  * expression and with it the codebook array: no function is registered,
+  * and a codebook rebuilt per batch is collectable once its Columns and
+  * plans are.
+  */
 object PqExpressions {
 
-  private def bind(spark: SparkSession, cb: Array[Double], tag: String,
-      vec: Column, norm: Column,
-      mk: (Array[Double], Expression, Expression) => Expression): Column = {
-    // codebook objects cannot ride through SQL text — bind via a session
-    // temp function whose builder references them weakly; names reuse per
-    // live codebook (see BloomExpressions / TempFnNames). `mk` builds from
-    // the codebook it is HANDED, never a captured one — capturing cb in the
-    // closure would pin it against the weak design.
-    val name = TempFnNames.register[Array[Double]](spark, s"graft_pq_${tag}",
-      cb, (o, exprs) => mk(o, exprs.head, exprs(1)))
-    call_function(name, vec, norm)
-  }
+  def pqEncode(vec: Column, norm: Column, cb: Array[Double], m: Int,
+      ksub: Int, sub: Int): Column =
+    column(PqEncode(expression(vec), expression(norm), cb, m, ksub, sub))
 
-  def pqEncode(spark: SparkSession, vec: Column, norm: Column,
-      cb: Array[Double], m: Int, ksub: Int, sub: Int): Column =
-    bind(spark, cb, "encode", vec, norm,
-      (o, v, n) => PqEncode(v, n, o, m, ksub, sub))
-
-  def pqLut(spark: SparkSession, vec: Column, norm: Column,
-      cb: Array[Double], m: Int, ksub: Int, sub: Int): Column =
-    bind(spark, cb, "lut", vec, norm,
-      (o, v, n) => PqLut(v, n, o, m, ksub, sub))
+  def pqLut(vec: Column, norm: Column, cb: Array[Double], m: Int, ksub: Int,
+      sub: Int): Column =
+    column(PqLut(expression(vec), expression(norm), cb, m, ksub, sub))
 }

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.HashExpressions
+import graft.functions.BloomExpressions.bloomMightContain
+import graft.functions.HashExpressions.wordShingles
 
 /** Benchmark decontamination: remove corpus documents that share verbatim
   * n-grams with an evaluation/benchmark set — the train/test-overlap hygiene
@@ -20,10 +21,8 @@ object Decontaminate {
 
   private def shingleHashes(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    HashExpressions.register(df.sparkSession)
     df.select(col(idCol).as("doc"),
-      explode(expr(
-        s"word_shingles(split(trim(lower($textCol)), '\\\\s+'), $n)"))
+      explode(wordShingles(split(trim(lower(col(textCol))), "\\s+"), n))
         .as("gram"))
       .select(col("doc"), xxhash64(col("gram")).as("gh"))
   }
@@ -74,8 +73,7 @@ object Decontaminate {
     val nEval = math.max(evalGrams.count(), 1L)
     val bf = evalGrams.stat.bloomFilter("gh", nEval, fpp)
     val survivors = shingleHashes(corpus, idCol, textCol, n)
-      .filter(graft.functions.BloomExpressions
-        .bloomMightContain(corpus.sparkSession, col("gh"), bf))
+      .filter(bloomMightContain(col("gh"), bf))
     val verified =
       if (exact) survivors.join(broadcast(evalGrams), Seq("gh"), "left_semi")
       else survivors
@@ -106,10 +104,9 @@ object Decontaminate {
     */
   def fuzzyContaminated(corpus: DataFrame, evalSet: DataFrame, idCol: String,
       textCol: String, n: Int = 3, threshold: Double = 0.3): DataFrame = {
-    HashExpressions.register(corpus.sparkSession)
     def sides(df: DataFrame, doc: String, cnt: String) = df
       .select(col(doc),
-        expr(s"word_shingles(split(trim(lower(__text)), '\\\\s+'), $n)")
+        wordShingles(split(trim(lower(col("__text"))), "\\s+"), n)
           .as("__sh"))
       .select(col(doc), size(col("__sh")).as(cnt),
         explode(col("__sh")).as("__g"))

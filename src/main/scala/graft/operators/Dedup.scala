@@ -9,7 +9,8 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.HashExpressions
+import graft.functions.HashExpressions.{minhashSig, ngramGen, simhash64, vecDot,
+  winnowFingerprint, wordShingles}
 
 /** Deduplication operators for training-data pipelines, each designed so the
   * shuffle volume stays bounded at 100 TB:
@@ -64,7 +65,6 @@ object Dedup {
     */
   private def shingleFrame(df: DataFrame, idCol: String, textCol: String,
       nGram: Int, numPartitions: Int): DataFrame = {
-    HashExpressions.register(df.sparkSession)
     // Repartition the RAW text, then shingle: a single local parquet file
     // scans as one split, and an exchange placed after the projection would
     // leave the expensive kernel running on that one core. (Cheap to
@@ -72,7 +72,7 @@ object Dedup {
     df.select(col(idCol).as("id"), col(textCol).as("__text"))
       .repartition(numPartitions, col("id"))
       .select(col("id"),
-        expr(s"word_shingles(split(trim(lower(__text)), '\\\\s+'), $nGram)")
+        wordShingles(split(trim(lower(col("__text"))), "\\s+"), nGram)
           .as("sh"))
       .filter(size(col("sh")) > 0)
   }
@@ -291,7 +291,6 @@ object Dedup {
       nGram: Int = 3): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val r = k / bands
-    HashExpressions.register(df.sparkSession)
     // A single local parquet file scans as one split; spread the (cheap to
     // shuffle, expensive to hash) raw text across all cores first. Cluster
     // scans arrive pre-split and can skip this.
@@ -303,7 +302,7 @@ object Dedup {
     // the dup-cluster size ×bands. One representative per distinct signature
     // goes through LSH; pairs re-expand through the signature groups after —
     // candidate volume becomes O(distinct-sig collisions + output pairs).
-    val sig = sh.select(col("id"), expr(s"minhash_sig(sh, $k)").as("sig"))
+    val sig = sh.select(col("id"), minhashSig(col("sh"), k).as("sig"))
       .withColumn("rep", min(col("id")).over(Window.partitionBy(col("sig"))))
       .persist()
     val members = sig.select(col("id"), col("rep"))
@@ -342,7 +341,6 @@ object Dedup {
       k: Int = 64, bands: Int = 16, nGram: Int = 3): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val r = k / bands
-    HashExpressions.register(df.sparkSession)
     val par = df.sparkSession.sparkContext.defaultParallelism
     // Build parameters ride as column metadata (they survive a parquet
     // round-trip in the schema footer) so an incremental query against a
@@ -354,7 +352,7 @@ object Dedup {
       .putLong("graft.minhash.nGram", nGram)
       .build()
     shingleFrame(df, idCol, textCol, nGram, par)
-      .withColumn("sig", expr(s"minhash_sig(sh, $k)"))
+      .withColumn("sig", minhashSig(col("sh"), k))
       .select(col("id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           bi => xxhash64(slice(col("sig"), bi * r + 1, lit(r)), bi))))
@@ -393,7 +391,7 @@ object Dedup {
     val par = newBatch.sparkSession.sparkContext.defaultParallelism
     val shNew = shingleFrame(newBatch, idCol, textCol, nGram, par).persist()
     val bandedNew = shNew
-      .withColumn("sig", expr(s"minhash_sig(sh, $k)"))
+      .withColumn("sig", minhashSig(col("sh"), k))
       .select(col("id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           bi => xxhash64(slice(col("sig"), bi * (k / bands) + 1,
@@ -438,7 +436,6 @@ object Dedup {
     */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
-    HashExpressions.register(df.sparkSession)
     val par = df.sparkSession.sparkContext.defaultParallelism
     // exchange BEFORE the kernel — see shingleFrame
     // Pre-collapse identical fingerprints before banding: exact duplicates
@@ -451,7 +448,7 @@ object Dedup {
     val fp = df.select(col(idCol).as("id"), col(textCol).as("__text"))
       .repartition(par, col("id"))
       .select(col("id"),
-        expr("simhash64(split(trim(lower(__text)), '\\\\s+'))").as("fp"))
+        simhash64(split(trim(lower(col("__text"))), "\\s+")).as("fp"))
       .withColumn("rep", min(col("id")).over(Window.partitionBy(col("fp"))))
       .persist()
     val members = fp.select(col("id"), col("rep"))
@@ -518,13 +515,12 @@ object Dedup {
     */
   def repeatedSpans(df: DataFrame, idCol: String, textCol: String,
       k: Int = 8, minDocs: Int = 2): DataFrame = {
-    HashExpressions.register(df.sparkSession)
     val par = df.sparkSession.sparkContext.defaultParallelism
     // exchange BEFORE the kernel — see shingleFrame
     val win = df.select(col(idCol).as("id"), col(textCol).as("__text"))
       .repartition(par, col("id"))
       .select(col("id"),
-        expr(s"ngram_gen(split(trim(lower(__text)), '\\\\s+'), $k)"))
+        ngramGen(split(trim(lower(col("__text"))), "\\s+"), k))
       .select(col("id"), col("pos").cast("long").as("pos"),
         xxhash64(col("ngram")).as("gh"))
       .persist()
@@ -780,13 +776,12 @@ object Dedup {
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 8, w: Int = 4, threshold: Double = 0.5,
       maxDocFreq: Int = 100): DataFrame = {
-    HashExpressions.register(df.sparkSession)
     val par = df.sparkSession.sparkContext.defaultParallelism
     // exchange BEFORE the kernel — see shingleFrame
     val fp = df.select(col(idCol).as("id"), col(textCol).as("__text"))
       .repartition(par, col("id"))
       .select(col("id"),
-        expr(s"winnow_fingerprint(__text, $k, $w)").as("fp"))
+        winnowFingerprint(col("__text"), k, w).as("fp"))
       .filter(size(col("fp")) > 0)
       .persist()
     val ex = fp.select(col("id"), explode(col("fp")).as("h"))
@@ -863,16 +858,15 @@ object Dedup {
     */
   def embeddingPairs(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
-    HashExpressions.register(df.sparkSession)
     // Norm computed once per vector; each pair costs one fused native dot.
     val v = df.select(col(idCol).as("id"),
         col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", sqrt(call_function("vec_dot", col("v"), col("v"))))
+      .withColumn("n", sqrt(vecDot(col("v"), col("v"))))
     val a = v.select(col("id").as("id_a"), col("v").as("v_a"), col("n").as("n_a"))
     val b = v.select(col("id").as("id_b"), col("v").as("v_b"), col("n").as("n_b"))
     a.join(b, col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(call_function("vec_dot", col("v_a"), col("v_b")) /
+        round(vecDot(col("v_a"), col("v_b")) /
           (col("n_a") * col("n_b")), 6).as("cos"))
       .filter(col("cos") >= threshold)
       .orderBy(col("id_a"), col("id_b"))
@@ -910,7 +904,6 @@ object Dedup {
 
   private def srpIndexWithDim(df: DataFrame, idCol: String, vecCol: String,
       nBits: Int, nTables: Int, seed: Long, dim: Int): DataFrame = {
-    HashExpressions.register(df.sparkSession)
     val buildMeta = new org.apache.spark.sql.types.MetadataBuilder()
       .putLong("graft.srp.nBits", nBits)
       .putLong("graft.srp.nTables", nTables)
@@ -1005,7 +998,7 @@ object Dedup {
             "left_semi")
           .select(col(idCol).as("id"),
             col(vecCol).cast("array<double>").as("v")))
-      .withColumn("n", sqrt(call_function("vec_dot", col("v"), col("v"))))
+      .withColumn("n", sqrt(vecDot(col("v"), col("v"))))
     val vecs = if (cacheVecs) vecs0.persist() else vecs0
     val pairs = cand
       .join(vecs.select(col("id").as("id_a"), col("v").as("v_a"),
@@ -1013,7 +1006,7 @@ object Dedup {
       .join(vecs.select(col("id").as("id_b"), col("v").as("v_b"),
         col("n").as("n_b")), "id_b")
       .select(col("id_a"), col("id_b"),
-        round(call_function("vec_dot", col("v_a"), col("v_b")) /
+        round(vecDot(col("v_a"), col("v_b")) /
           (col("n_a") * col("n_b")), 6).as("cos"))
       .filter(col("cos") >= threshold)
     // no orderBy: the result is materialized right here, so a global sort
@@ -1046,7 +1039,6 @@ object Dedup {
   def embeddingPairsLsh(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nBits: Int = 4, nTables: Int = 4,
       seed: Long = 19L): DataFrame = {
-    HashExpressions.register(df.sparkSession)
     // Candidates are generated NARROW — (tbl, bucket, id) only — and the
     // vectors are attached to the distinct id pairs afterwards, the same
     // shape as [[embeddingPairsLshIncremental]]. Two reasons, both
@@ -1074,14 +1066,14 @@ object Dedup {
       .distinct()
     val vecs = df.select(col(idCol).as("id"),
         col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n", sqrt(call_function("vec_dot", col("v"), col("v"))))
+      .withColumn("n", sqrt(vecDot(col("v"), col("v"))))
     cand
       .join(vecs.select(col("id").as("id_a"), col("v").as("v_a"),
         col("n").as("n_a")), "id_a")
       .join(vecs.select(col("id").as("id_b"), col("v").as("v_b"),
         col("n").as("n_b")), "id_b")
       .select(col("id_a"), col("id_b"),
-        round(call_function("vec_dot", col("v_a"), col("v_b")) /
+        round(vecDot(col("v_a"), col("v_b")) /
           (col("n_a") * col("n_b")), 6).as("cos"))
       .filter(col("cos") >= threshold)
       .orderBy(col("id_a"), col("id_b"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
-import graft.functions.HashExpressions
+import graft.functions.HashExpressions.vecDot
 
 /** PCA / whitening over an embedding column — the dimensionality-reduction
   * and decorrelation step an embedding pipeline runs before indexing or
@@ -171,10 +171,9 @@ object Embeddings {
   def kmeans(df: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int = 4, seed: Long = 31L,
       clusterCol: String = "cluster"): (DataFrame, Array[Array[Double]]) = {
-    HashExpressions.register(df.sparkSession)
     val v = df.select(col(idCol).as("__id"),
         col(vecCol).cast("array<double>").as("__v"))
-      .withColumn("__n", sqrt(call_function("vec_dot", col("__v"), col("__v"))))
+      .withColumn("__n", sqrt(vecDot(col("__v"), col("__v"))))
       .filter(col("__n") > 0)
       .persist()
     def normalize(c: Array[Double]): Array[Double] = {
@@ -187,7 +186,7 @@ object Embeddings {
       .collect().map(r => r.getSeq[Double](0).toArray)
     def assignCol(cs: Array[Array[Double]]): Column =
       sort_array(array(cs.zipWithIndex.map { case (c, i) =>
-        struct((call_function("vec_dot", col("__v"), typedlit(c.toSeq)) /
+        struct((vecDot(col("__v"), typedlit(c.toSeq)) /
           col("__n")).as("sim"), lit(i).as("c"))
       }: _*), asc = false).getItem(0).getField("c")
     (0 until iters).foreach { _ =>
@@ -228,11 +227,10 @@ object Embeddings {
   def assign(df: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]],
       clusterCol: String = "cluster"): DataFrame = {
-    HashExpressions.register(df.sparkSession)
     val v = col(vecCol).cast("array<double>")
-    val n = sqrt(call_function("vec_dot", v, v))
+    val n = sqrt(vecDot(v, v))
     val best = sort_array(array(centroids.zipWithIndex.map { case (c, i) =>
-      struct((call_function("vec_dot", v, typedlit(c.toSeq)) / n).as("sim"),
+      struct((vecDot(v, typedlit(c.toSeq)) / n).as("sim"),
         lit(i).as("c"))
     }: _*), asc = false).getItem(0).getField("c")
     df.withColumn(clusterCol, when(n > 0, best))
@@ -250,11 +248,10 @@ object Embeddings {
       clusterCol: String = "cluster"): DataFrame = {
     require(probes >= 1 && probes <= centroids.length,
       s"probes must be in [1, ${centroids.length}], got $probes")
-    HashExpressions.register(df.sparkSession)
     val v = col(vecCol).cast("array<double>")
-    val n = sqrt(call_function("vec_dot", v, v))
+    val n = sqrt(vecDot(v, v))
     val sorted = sort_array(array(centroids.zipWithIndex.map { case (c, i) =>
-      struct((call_function("vec_dot", v, typedlit(c.toSeq)) / n).as("sim"),
+      struct((vecDot(v, typedlit(c.toSeq)) / n).as("sim"),
         lit(i).as("c"))
     }: _*), asc = false)
     df.filter(n > 0)
@@ -285,11 +282,10 @@ object Embeddings {
     */
   def semanticPairs(assigned: DataFrame, idCol: String, vecCol: String,
       clusterCol: String, threshold: Double): DataFrame = {
-    HashExpressions.register(assigned.sparkSession)
     val v = assigned.filter(col(clusterCol).isNotNull)
       .select(col(clusterCol).as("__c"), col(idCol).as("__id"),
         col(vecCol).cast("array<double>").as("__v"))
-      .withColumn("__n", sqrt(call_function("vec_dot", col("__v"), col("__v"))))
+      .withColumn("__n", sqrt(vecDot(col("__v"), col("__v"))))
       .filter(col("__n") > 0)
     val a = v.select(col("__c"), col("__id").as("id_a"),
       col("__v").as("__va"), col("__n").as("__na"))
@@ -297,7 +293,7 @@ object Embeddings {
       col("__v").as("__vb"), col("__n").as("__nb"))
     a.join(b, Seq("__c")).filter(col("id_a") < col("id_b"))
       .withColumn("cos",
-        round(call_function("vec_dot", col("__va"), col("__vb")) /
+        round(vecDot(col("__va"), col("__vb")) /
           (col("__na") * col("__nb")), 6))
       .filter(col("cos") >= threshold)
       .select(col("__c").as("cluster"), col("id_a"), col("id_b"), col("cos"))
@@ -330,10 +326,9 @@ object Embeddings {
     */
   def project(df: DataFrame, vecCol: String, model: PcaModel,
       outCol: String = "pc", whiten: Boolean = false): DataFrame = {
-    HashExpressions.register(df.sparkSession)
     val v = col(vecCol).cast("array<double>")
     val coords = model.components.zipWithIndex.map { case (c, i) =>
-      val centered = call_function("vec_dot", v, typedlit(c.toSeq)) -
+      val centered = vecDot(v, typedlit(c.toSeq)) -
         lit(c.zip(model.mean).map { case (a, b) => a * b }.sum)
       if (whiten) centered / lit(math.sqrt(math.max(model.eigenvalues(i), 1e-300)))
       else centered
@@ -370,12 +365,11 @@ object Embeddings {
   def jlProject(df: DataFrame, vecCol: String, dIn: Int, dOut: Int,
       seed: String = "jl", outCol: String = "proj"): DataFrame = {
     require(dOut >= 1 && dIn >= 1, s"bad dims dIn=$dIn dOut=$dOut")
-    HashExpressions.register(df.sparkSession)
     val scale = 1.0 / math.sqrt(dOut.toDouble)
     val v = col(vecCol).cast("array<double>")
     val coords = (0 until dOut).map { j =>
       val signs = (0 until dIn).map(i => jlSign(seed, j, i))
-      call_function("vec_dot", v, typedlit(signs)) * lit(scale)
+      vecDot(v, typedlit(signs)) * lit(scale)
     }
     df.withColumn(outCol, array(coords: _*))
   }

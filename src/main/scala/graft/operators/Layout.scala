@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.HashExpressions.{hilbert16, hilbert21}
+
 /** Multi-dimensional data layout (Z-ordering). Sorting a table by the Morton
   * interleave of two key columns clusters rows so that EVERY file's min/max
   * range is tight in BOTH dimensions at once — parquet min/max stats (and
@@ -107,12 +109,10 @@ object Layout {
     * have bounding boxes at most as loose as Morton's on the same data.
     * Runs as the native `hilbert16` codegen expression
     * ([[graft.functions.HashExpressions]]) — the 16-step rotate loop has
-    * no bounded column form; registered here so callers need no setup.
+    * no bounded column form.
     */
-  def hilbert16Key(df: DataFrame, xCol: String, yCol: String): Column = {
-    graft.functions.HashExpressions.register(df.sparkSession)
-    expr(s"hilbert16(CAST($xCol AS BIGINT), CAST($yCol AS BIGINT))")
-  }
+  def hilbert16Key(xCol: String, yCol: String): Column =
+    hilbert16(col(xCol).cast("bigint"), col(yCol).cast("bigint"))
 
   /** [[layoutWriteExact]] ordered by the Hilbert key — the
     * [[zorderWriteExact]] counterpart for the tighter curve.
@@ -120,7 +120,7 @@ object Layout {
   def hilbertWriteExact(df: DataFrame, xCol: String, yCol: String,
       path: String, nFiles: Int): Unit =
     layoutWriteExact(df,
-      Seq(hilbert16Key(df, xCol, yCol), col(xCol), col(yCol)), path, nFiles)
+      Seq(hilbert16Key(xCol, yCol), col(xCol), col(yCol)), path, nFiles)
 
   /** PRODUCTION Hilbert writer — [[zorderWrite]]'s range-shuffle form on
     * the Hilbert key: range-partition by `hilbert16(x, y)` (contiguous
@@ -132,7 +132,7 @@ object Layout {
     */
   def hilbertWrite(df: DataFrame, xCol: String, yCol: String, path: String,
       nFiles: Int): Unit = {
-    val keyed = df.withColumn("_hkey", hilbert16Key(df, xCol, yCol))
+    val keyed = df.withColumn("_hkey", hilbert16Key(xCol, yCol))
     keyed.repartitionByRange(nFiles, col("_hkey"))
       .sortWithinPartitions(col("_hkey"))
       .drop("_hkey")
@@ -143,12 +143,9 @@ object Layout {
     * locality-tighter analog, running as the native `hilbert21` codegen
     * expression (Skilling transpose-form; 21 bits per dimension).
     */
-  def hilbert21Key(df: DataFrame, xCol: String, yCol: String,
-      zCol: String): Column = {
-    graft.functions.HashExpressions.register(df.sparkSession)
-    expr(s"hilbert21(CAST($xCol AS BIGINT), CAST($yCol AS BIGINT), " +
-      s"CAST($zCol AS BIGINT))")
-  }
+  def hilbert21Key(xCol: String, yCol: String, zCol: String): Column =
+    hilbert21(col(xCol).cast("bigint"), col(yCol).cast("bigint"),
+      col(zCol).cast("bigint"))
 
   /** [[layoutWriteExact]] ordered by the 3-D Hilbert key — the
     * [[zorder3WriteExact]] counterpart for the tighter curve: no curve
@@ -158,7 +155,7 @@ object Layout {
   def hilbert3WriteExact(df: DataFrame, xCol: String, yCol: String,
       zCol: String, path: String, nFiles: Int): Unit =
     layoutWriteExact(df,
-      Seq(hilbert21Key(df, xCol, yCol, zCol),
+      Seq(hilbert21Key(xCol, yCol, zCol),
         col(xCol), col(yCol), col(zCol)), path, nFiles)
 
   /** [[layoutWriteExact]] ordered by the 3-D Morton key — every file's box
@@ -191,7 +188,7 @@ object Layout {
     */
   def hilbert3Write(df: DataFrame, xCol: String, yCol: String,
       zCol: String, path: String, nFiles: Int): Unit = {
-    val keyed = df.withColumn("_hkey", hilbert21Key(df, xCol, yCol, zCol))
+    val keyed = df.withColumn("_hkey", hilbert21Key(xCol, yCol, zCol))
     keyed.repartitionByRange(nFiles, col("_hkey"))
       .sortWithinPartitions(col("_hkey"))
       .drop("_hkey")

@@ -554,13 +554,13 @@ object Manifest {
     * by [[optimizeLayoutIncremental]]'s per-file range scan and any
     * caller that needs the key the writers sort by.
     */
-  private def curveKey(df: DataFrame, curve: String, xCol: String,
-      yCol: String, zCol: String = ""): Column = (curve, zCol.isEmpty) match {
+  private def curveKey(curve: String, xCol: String, yCol: String,
+      zCol: String = ""): Column = (curve, zCol.isEmpty) match {
     case ("morton", true)   => Layout.morton16(col(xCol), col(yCol))
-    case ("hilbert", true)  => Layout.hilbert16Key(df, xCol, yCol)
+    case ("hilbert", true)  => Layout.hilbert16Key(xCol, yCol)
     case ("morton", false)  =>
       Layout.morton21(col(xCol), col(yCol), col(zCol))
-    case ("hilbert", false) => Layout.hilbert21Key(df, xCol, yCol, zCol)
+    case ("hilbert", false) => Layout.hilbert21Key(xCol, yCol, zCol)
     case (other, _) => throw new IllegalArgumentException(
       s"unknown layout curve '$other' — expected 'morton' or 'hilbert'")
   }
@@ -693,7 +693,7 @@ object Manifest {
     val scan = spark.read.parquet(live.map(globEscape).toSeq: _*)
     val ranges = scan
       .select(input_file_name().as("file"),
-        curveKey(scan, curve, xCol, yCol, zCol).as("k"))
+        curveKey(curve, xCol, yCol, zCol).as("k"))
       .groupBy(col("file"))
       .agg(min(col("k")).as("kmin"), max(col("k")).as("kmax"))
       .collect()
@@ -761,7 +761,7 @@ object Manifest {
         val cutoff = cl(k)._2
         val df = spark.read
           .parquet(sel.map(r => globEscape(r._1)).toSeq: _*)
-        val key = curveKey(df, curve, xCol, yCol, zCol)
+        val key = curveKey(curve, xCol, yCol, zCol)
         val cnt = df.agg(
           sum(when(key < cutoff, 1L).otherwise(0L)),
           count(lit(1))).head()

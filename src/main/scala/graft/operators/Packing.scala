@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftSqlShim.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.ShiftLeft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -85,11 +87,11 @@ object Packing {
       batchSize: Int, salt: String = ""): DataFrame = {
     require(batchSize > 0)
     val tok = greatest(tokensCol.cast("long"), lit(1L))
-    // Scala's shiftleft(Column, Int) can't take a Column shift amount;
-    // route through the SQL function registry for the column-column form.
+    // functions.shiftleft takes an Int shift amount only; the Catalyst
+    // expression takes a Column.
     val bucket = when(tok === 1L, lit(1L))
-      .otherwise(call_function("shiftleft",
-        lit(1L), length(bin(tok - 1)).cast("int")))
+      .otherwise(column(ShiftLeft(expression(lit(1L)),
+        expression(length(bin(tok - 1)).cast("int")))))
       .cast("long").as("bucket")
     val w = Window.partitionBy(col("bucket"))
       .orderBy(md5(concat(col(idCol).cast("string"), lit(salt))), col(idCol))

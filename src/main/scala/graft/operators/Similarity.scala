@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.HashExpressions
+import graft.functions.CentroidExpressions.centroidScores
+import graft.functions.HashExpressions.{pqScore, vecDot}
+import graft.functions.PqExpressions.{pqEncode, pqLut}
 
 /** Similarity search over an embedding column (array<float>).
   *
@@ -45,15 +47,13 @@ object Similarity {
 
   /** Native-dot cosine from precomputed norms. */
   private def cosFast(va: Column, vb: Column, na: Column, nb: Column): Column =
-    call_function("vec_dot", va, vb) / (na * nb)
+    vecDot(va, vb) / (na * nb)
 
   /** (id, vec, norm) projection with the norm computed once per vector. */
   private[graft] def withNorm(df: DataFrame, idCol: String, vecCol: String,
       idAs: String, vecAs: String, normAs: String): DataFrame = {
-    HashExpressions.register(df.sparkSession)
     df.select(col(idCol).as(idAs), col(vecCol).cast("array<double>").as(vecAs))
-      .withColumn(normAs,
-        sqrt(call_function("vec_dot", col(vecAs), col(vecAs))))
+      .withColumn(normAs, sqrt(vecDot(col(vecAs), col(vecAs))))
   }
 
   /** Exact top-k cosine neighbors for each query vector (self excluded).
@@ -85,7 +85,7 @@ object Similarity {
   /** SRP bucket id: one bit per hyperplane sign. */
   def srpBucket(vecCol: Column, planes: Seq[Seq[Double]]): Column =
     planes.zipWithIndex.map { case (p, i) =>
-      when(call_function("vec_dot", vecCol, typedlit(p)) >= 0, lit(1L << i))
+      when(vecDot(vecCol, typedlit(p)) >= 0, lit(1L << i))
         .otherwise(lit(0L))
     }.reduce(_ + _)
 
@@ -123,7 +123,7 @@ object Similarity {
     // first.
     val q0 = withNorm(queries, idCol, vecCol, "qid", "v_q", "n_q")
       .withColumn("dv", array(ps.map(p =>
-        call_function("vec_dot", col("v_q"), typedlit(p))): _*))
+        vecDot(col("v_q"), typedlit(p))): _*))
     val base = (0 until nBits).map(i =>
       when(col("dv")(i) >= 0, lit(1L << i)).otherwise(lit(0L))).reduce(_ + _)
     val maskArr = array(masks.map { m =>
@@ -172,7 +172,7 @@ object Similarity {
       trainIters: Int): Array[(Int, Seq[Double], Double)] = {
     var cent = init
     (0 until trainIters).foreach { _ =>
-      val score = sortedBucketScores(c.sparkSession, cent)
+      val score = sortedBucketScores(cent)
       val means = c
         .withColumn("bucket",
           score(col("v_n"), col("n_n")).getItem(0).getField("bucket"))
@@ -270,8 +270,7 @@ object Similarity {
       (if (joinKeys.isEmpty) q.join(codes, col("qid") =!= col("nid"))
        else q.join(codes, joinKeys).filter(col("qid") =!= col("nid")))
         .select(col("qid"), col("nid"),
-          call_function("pq_score", col("lut"), col("codes"), lit(ksub))
-            .as("pq"))
+          pqScore(col("lut"), col("codes"), ksub).as("pq"))
     val wS = Window.partitionBy(col("qid"))
       .orderBy(col("pq").desc, col("nid"))
     scored.withColumn("srank", row_number().over(wS))
@@ -301,8 +300,6 @@ object Similarity {
       vecCol: String, k: Int, m: Int = 8, ksub: Int = 16,
       seed: Long = 23L, shortlistFactor: Int = 4,
       trainIters: Int = 4, sampleN: Int = 256): DataFrame = {
-    val spark = corpus.sparkSession
-    HashExpressions.register(spark)
     val dim = corpus.select(size(col(vecCol))).head().getInt(0)
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     val sub = dim / m
@@ -321,12 +318,10 @@ object Similarity {
     // codes table is intentionally NARROW (id + m codes): at scale it is
     // the only thing the exhaustive scan reads.
     val codes = c.select(col("nid"),
-      graft.functions.PqExpressions.pqEncode(spark, col("v_n"), col("n_n"),
-        cbFlat, m, ksub, sub).as("codes"))
+      pqEncode(col("v_n"), col("n_n"), cbFlat, m, ksub, sub).as("codes"))
     val q = withNorm(queries, idCol, vecCol, "qid", "v_q", "n_q")
       .withColumn("lut",
-        graft.functions.PqExpressions.pqLut(spark, col("v_q"), col("n_q"),
-          cbFlat, m, ksub, sub))
+        pqLut(col("v_q"), col("n_q"), cbFlat, m, ksub, sub))
       .persist() // small; feeds the ADC scan and the re-rank join
     val shortlist = adcShortlist(q.select(col("qid"), col("lut")), codes,
       Seq.empty, ksub, k, shortlistFactor)
@@ -353,8 +348,6 @@ object Similarity {
     */
   def sq8TopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, shortlistFactor: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
-    HashExpressions.register(spark)
     val c = withNorm(corpus, idCol, vecCol, "nid", "v_n", "n_n")
       .persist() // feeds range training, encoding, and the re-rank join
     val unit = c.select(col("nid"),
@@ -374,12 +367,12 @@ object Similarity {
     val qw = q.select(col("qid"),
       zip_with(transform(col("v_q"), x => x / col("n_q")), typedlit(delta),
         (a, b) => a * b).as("w"),
-      call_function("vec_dot",
-        transform(col("v_q"), x => x / col("n_q")), typedlit(lo)).as("bias"))
+      vecDot(transform(col("v_q"), x => x / col("n_q")), typedlit(lo))
+        .as("bias"))
     val scored = qw.join(codes, col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        (col("bias") + call_function("vec_dot", col("w"),
-          col("codes").cast("array<double>"))).as("approx"))
+        (col("bias") + vecDot(col("w"), col("codes").cast("array<double>")))
+          .as("approx"))
     val wS = Window.partitionBy(col("qid"))
       .orderBy(col("approx").desc, col("nid"))
     val shortlist = scored.withColumn("srank", row_number().over(wS))
@@ -419,7 +412,6 @@ object Similarity {
       vecCol: String, k: Int, m: Int = 8, ksub: Int = 16,
       seed: Long = 23L, shortlistFactor: Int = 4,
       trainIters: Int = 4, sampleN: Int = 256): DataFrame = {
-    HashExpressions.register(corpus.sparkSession)
     val dim = corpus.select(size(col(vecCol))).head().getInt(0)
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     val model = Embeddings.fitPca(corpus, vecCol, k = dim)
@@ -443,8 +435,7 @@ object Similarity {
     def rotate(df: DataFrame): DataFrame = {
       val v = col(vecCol).cast("array<double>")
       df.select(col(idCol), array(order.map(a =>
-        call_function("vec_dot", v,
-          typedlit(model.components(a).toSeq))): _*).as("__rotv"))
+        vecDot(v, typedlit(model.components(a).toSeq))): _*).as("__rotv"))
     }
     pqTopK(rotate(corpus), rotate(queries), idCol, "__rotv", k, m, ksub,
       seed, shortlistFactor, trainIters, sampleN)
@@ -489,14 +480,6 @@ object Similarity {
     (coarse, cbFlat)
   }
 
-  /** Descending (sim, bucket) scores of `v` against a centroid table —
-    * alias of [[sortedBucketScores]] kept for the IVF-PQ family's call
-    * shape.
-    */
-  private def centroidScores(spark: SparkSession,
-      cent: Array[(Int, Seq[Double], Double)])(v: Column, n: Column): Column =
-    sortedBucketScores(spark, cent)(v, n)
-
   /** The shared IVF-PQ query tail: lut queries → nProbe bucket probes →
     * bucket-key ADC scan over the (bucket, nid, codes) table → exact
     * re-rank against the raw corpus.
@@ -506,14 +489,12 @@ object Similarity {
       idCol: String, vecCol: String, k: Int, nProbe: Int, m: Int, ksub: Int,
       sub: Int, shortlistFactor: Int,
       alsoRelease: DataFrame*): DataFrame = {
-    val spark = c.sparkSession
     val q = withNorm(queries, idCol, vecCol, "qid", "v_q", "n_q")
       .withColumn("lut",
-        graft.functions.PqExpressions.pqLut(spark, col("v_q"), col("n_q"),
-          cbFlat, m, ksub, sub))
+        pqLut(col("v_q"), col("n_q"), cbFlat, m, ksub, sub))
       .persist()
     val probes = q.select(col("qid"), col("lut"),
-        explode(slice(centroidScores(spark, coarse)(col("v_q"), col("n_q")), 1,
+        explode(slice(sortedBucketScores(coarse)(col("v_q"), col("n_q")), 1,
           nProbe)).as("probe"))
       .select(col("qid"), col("lut"), col("probe.bucket").as("bucket"))
     val shortlist = adcShortlist(probes, codes, Seq("bucket"), ksub, k,
@@ -534,8 +515,6 @@ object Similarity {
       m: Int = 16, ksub: Int = 16, seed: Long = 11L,
       shortlistFactor: Int = 8, trainIters: Int = 4,
       sampleN: Int = 256, allowed: DataFrame = null): DataFrame = {
-    val spark = corpus.sparkSession
-    HashExpressions.register(spark)
     val dim = corpus.select(size(col(vecCol))).head().getInt(0)
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     val sub = dim / m
@@ -545,11 +524,10 @@ object Similarity {
     // the scan table: (bucket, id, codes) — nCentroids-partitionable,
     // m bytes of payload per vector
     val codesAll = c.select(
-      centroidScores(spark, coarse)(col("v_n"), col("n_n")).getItem(0)
+      sortedBucketScores(coarse)(col("v_n"), col("n_n")).getItem(0)
         .getField("bucket").as("bucket"),
       col("nid"),
-      graft.functions.PqExpressions.pqEncode(spark, col("v_n"), col("n_n"),
-        cbFlat, m, ksub, sub).as("codes"))
+      pqEncode(col("v_n"), col("n_n"), cbFlat, m, ksub, sub).as("codes"))
     val codes =
       if (allowed == null) codesAll
       else codesAll.join(allowed.select(col(idCol).as("nid")), Seq("nid"),
@@ -616,7 +594,6 @@ object Similarity {
       trainOn: DataFrame = null, batchId: Long = 0L): Unit = {
     ivfPqStoreCache.remove(path) // rebuild rewrites model + centroids
     val spark = corpus.sparkSession
-    HashExpressions.register(spark)
     import spark.implicits._
     val dim = corpus.select(size(col(vecCol))).head().getInt(0)
     require(dim % m == 0, s"m=$m must divide dim=$dim")
@@ -633,11 +610,10 @@ object Similarity {
     // surviving a retrain would be decoded with the NEW codebooks — garbage
     // ADC scores served silently.
     Segments.open(spark, s"$path/codes").replaceAll(s"batch=$batchId")(c.select(
-        centroidScores(spark, coarse)(col("v_n"), col("n_n")).getItem(0)
+        sortedBucketScores(coarse)(col("v_n"), col("n_n")).getItem(0)
           .getField("bucket").as("bucket"),
         col("nid"),
-        graft.functions.PqExpressions.pqEncode(spark, col("v_n"), col("n_n"),
-          cbFlat, m, ksub, sub).as("codes"))
+        pqEncode(col("v_n"), col("n_n"), cbFlat, m, ksub, sub).as("codes"))
       .write.partitionBy("bucket").parquet)
     c.unpersist()
     coarse.toSeq.map { case (b, cv, cn) => (b, cv, cn) }
@@ -666,7 +642,6 @@ object Similarity {
   def appendToIvfPqIndex(batch: DataFrame, idCol: String, vecCol: String,
       path: String, batchId: Long = -1L): Unit = {
     val spark = batch.sparkSession
-    HashExpressions.register(spark)
     // one action answers BOTH "is the batch empty" (no-op like
     // appendToTextIndex) and the dim-parity guard — previously isEmpty
     // plus a second dim probe job
@@ -679,11 +654,10 @@ object Similarity {
     val bid = if (batchId >= 0) batchId else Segments.nextId(spark, s"$path/codes")
     val codes = withNorm(batch, idCol, vecCol, "nid", "v_n", "n_n")
       .select(
-        centroidScores(spark, coarse)(col("v_n"), col("n_n")).getItem(0)
+        sortedBucketScores(coarse)(col("v_n"), col("n_n")).getItem(0)
           .getField("bucket").as("bucket"),
         col("nid"),
-        graft.functions.PqExpressions.pqEncode(spark, col("v_n"), col("n_n"),
-          cbFlat, m, ksub, sub).as("codes"))
+        pqEncode(col("v_n"), col("n_n"), cbFlat, m, ksub, sub).as("codes"))
     Segments.put(spark, s"$path/codes", s"batch=$bid")(
       codes.write.partitionBy("bucket").parquet)
   }
@@ -721,7 +695,6 @@ object Similarity {
       vecCol: String, path: String, k: Int, nProbe: Int = 6,
       shortlistFactor: Int = 8, allowed: DataFrame = null): DataFrame = {
     val spark = corpus.sparkSession
-    HashExpressions.register(spark)
     val (cbFlat, m, ksub, sub, _, coarse) = ivfPqStore(spark, path)
     // Persist the query pipeline first: both the bucket-set collect below
     // and ivfPqQuery's probe/lut derivation read it, and without the cache
@@ -733,7 +706,7 @@ object Similarity {
     // probed bucket=N directories, guaranteed, instead of relying on
     // dynamic pruning through the probe join to fire.
     val probedBuckets = withNorm(qBase, idCol, vecCol, "qid", "v_q", "n_q")
-      .select(explode(slice(centroidScores(spark, coarse)(col("v_q"), col("n_q")),
+      .select(explode(slice(sortedBucketScores(coarse)(col("v_q"), col("n_q")),
         1, nProbe)).as("p"))
       .select(col("p.bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq
@@ -786,7 +759,7 @@ object Similarity {
     * fixed cost at auto nc = sqrt(n) (results are byte-identical — see the
     * kernel's scaladoc for the float/ordering parity argument).
     */
-  private def sortedBucketScores(spark: SparkSession,
+  private def sortedBucketScores(
       cent: Array[(Int, Seq[Double], Double)]): (Column, Column) => Column = {
     val d = if (cent.isEmpty) 0 else cent(0)._2.length
     val flat = new Array[Double](cent.length * d)
@@ -797,14 +770,12 @@ object Similarity {
       norms(i) = cn
     }
     val table = graft.functions.CentroidTable(flat, norms, d)
-    (v, n) => graft.functions.CentroidExpressions.centroidScores(
-      spark, v, n, table)
+    (v, n) => centroidScores(v, n, table)
   }
 
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nCentroids: Int = 16, nProbe: Int = 6,
       seed: Long = 11L, trainIters: Int = 2): DataFrame = {
-    HashExpressions.register(corpus.sparkSession)
     val init = seedCentroids(corpus, idCol, vecCol, nCentroids, seed)
     // Persist while training: each Lloyd iteration re-reads the normed
     // corpus (assignment scan + mean aggregate), and the final bucket
@@ -817,7 +788,7 @@ object Similarity {
       if (trainIters <= 0) init
       else refineCentroids(corpusNormed, init, trainIters)
     // Per-bucket scored array → sorted desc by similarity → ranked prefix.
-    val bucketScores = sortedBucketScores(corpus.sparkSession, cent)
+    val bucketScores = sortedBucketScores(cent)
     val c = corpusNormed
       .withColumn("bucket",
         bucketScores(col("v_n"), col("n_n")).getItem(0).getField("bucket"))
@@ -909,7 +880,6 @@ object Similarity {
   private def knnGraphLazy(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, nCentroids: Int, nProbe: Int, seed: Long,
       trainIters: Int): (DataFrame, Seq[DataFrame]) = {
-    HashExpressions.register(corpus.sparkSession)
     val nc =
       if (nCentroids > 0) nCentroids
       else math.max(16, math.ceil(math.sqrt(corpus.count().toDouble)).toInt)
@@ -929,7 +899,7 @@ object Similarity {
     val cent =
       if (trainIters <= 0) init
       else refineCentroids(corpusNormed, init, trainIters)
-    val bucketScores = sortedBucketScores(corpus.sparkSession, cent)
+    val bucketScores = sortedBucketScores(cent)
     val assigned = corpusNormed
       .withColumn("probes",
         transform(slice(bucketScores(col("v_n"), col("n_n")), 1, np),

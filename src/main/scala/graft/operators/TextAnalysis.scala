@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.HashExpressions.{ngramGen, wordShingles}
+
 /** Text-analysis operators for training-data pipelines: tokenization, quality
   * scoring, language ID, fingerprinting. All are pure column expressions
   * (codegen'd, no UDFs) so they pipeline inside whole-stage codegen on a scan
@@ -560,18 +562,17 @@ object TextAnalysis {
     */
   def bigramLmScore(docs: DataFrame, idCol: String, textCol: String,
       ref: Option[DataFrame] = None): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     val refWs = ref.getOrElse(docs).select(tokens(col(textCol)).as("ws"))
     // feeds the vocabulary-size scalar AND the scoring join
     val uni = refWs.select(explode(col("ws")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cw"))
       .persist()
     val vocab = uni.count().toDouble
-    val bi = refWs.select(expr("ngram_gen(ws, 2)"))
+    val bi = refWs.select(ngramGen(col("ws"), 2))
       .groupBy(col("ngram")).agg(count(lit(1)).as("cb"))
     val docBi = docs
       .select(col(idCol).as("doc"), tokens(col(textCol)).as("ws"))
-      .select(col("doc"), expr("ngram_gen(ws, 2)"))
+      .select(col("doc"), ngramGen(col("ws"), 2))
       .select(col("doc"), col("ngram").as("bg"),
         substring_index(col("ngram"), " ", 1).as("w1"))
     val scored = docBi
@@ -614,9 +615,8 @@ object TextAnalysis {
   /** (doc, g) distinct word n-grams per document. */
   private def docGrams(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     docs.select(col(idCol).as("doc"), tokens(col(textCol)).as("ws"))
-      .select(col("doc"), explode(expr(s"word_shingles(ws, $n)")).as("g"))
+      .select(col("doc"), explode(wordShingles(col("ws"), n)).as("g"))
   }
 
   private def scoreNovelty(sh: DataFrame, gdf: DataFrame,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Staging
 import graft.Tables.t
 import graft.functions.Aggregators
+import graft.functions.HashExpressions.ngramGen
 import graft.operators.TemporalJoins
 
 /** Extended operator families: temporal joins (as-of / range / session),
@@ -510,11 +511,10 @@ object ExtendedQueries {
     // no per-row n-gram array materialized, unlike the
     // transform(sequence(...))+explode formulation.
     "udtf_ngrams" -> ((s, dir) => {
-      graft.functions.HashExpressions.register(s)
       t(s, dir, "documents")
         .filter(col("doc_id") < 20)
         .select(col("doc_id"),
-          expr("ngram_gen(split(trim(lower(text)), '\\\\s+'), 2)"))
+          ngramGen(split(trim(lower(col("text"))), "\\s+"), 2))
         .orderBy(col("doc_id"), col("pos"))
     }),
 

@@ -209,7 +209,7 @@ object FormatQueries {
       val nFiles = 16
       val boxes = for (i <- Seq(0L, 3L, 5L, 7L)) yield (
         i * 8192L, i * 8192L + 8191L, i * 8192L, i * 8192L + 8191L)
-      val hKey = Layout.hilbert16Key(orders, "x", "y")
+      val hKey = Layout.hilbert16Key("x", "y")
       val (hTouched, hRows) = Layout.boxesTouching(orders,
         Seq(hKey, col("x"), col("y")), "x", "y", nFiles, boxes)
       val (zTouched, _) = Layout.boxesTouching(orders,
@@ -2099,7 +2099,7 @@ object FormatQueries {
     "hilbert_layout" -> ((s, dir) => {
       val orders = scaledOrders(s, dir)
       Layout.fileBoxes(orders,
-        Seq(Layout.hilbert16Key(orders, "x", "y"), col("x"), col("y")),
+        Seq(Layout.hilbert16Key("x", "y"), col("x"), col("y")),
         "x", "y", nFiles = 16)
     }))
 

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Staging
 import graft.Tables.t
-import graft.functions.HashExpressions
+import graft.functions.HashExpressions.{simhash64, vecDot, winnowFingerprint,
+  wordShingles}
 import graft.operators.{Bpe, Chunking, Decontaminate, Dedup, Embeddings, Filtering, Multimodal, Packing, QualityModel, Redaction, Retrieval, Sampling, Segments, Selection, Similarity, Sketches, TextAnalysis}
 
 /** Training-data pipeline operators (builder mandate + SURVEY.md §7.3):
@@ -278,10 +279,9 @@ object PipelineQueries {
       val docs = t(s, dir, "documents")
       val sh = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
         .localCheckpoint()
-      graft.functions.HashExpressions.register(s)
       val fp = docs.filter(col("doc_id") < 300)
         .select(col("doc_id").as("id"),
-          expr("simhash64(split(trim(lower(text)), '\\\\s+'))").as("fp"))
+          simhash64(split(trim(lower(col("text"))), "\\s+")).as("fp"))
       val brute = fp.as("a").join(fp.as("b"), col("a.id") < col("b.id"))
         .filter(bit_count(col("a.fp").bitwiseXOR(col("b.fp"))) <= 3)
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
@@ -654,11 +654,10 @@ object PipelineQueries {
         .select(col("vec_id").as("id"),
           col("embedding").cast("array<double>").as("embedding"),
           col("proj"))
-      graft.functions.HashExpressions.register(s)
       def d2(a: String, b: String) =
-        call_function("vec_dot", col(a), col(a)) -
-          call_function("vec_dot", col(a), col(b)) * 2 +
-          call_function("vec_dot", col(b), col(b))
+        vecDot(col(a), col(a)) -
+          vecDot(col(a), col(b)) * 2 +
+          vecDot(col(b), col(b))
       val pairs = sub.as("a").join(sub.as("b"),
           col("a.id") < col("b.id"))
         .select(
@@ -740,8 +739,8 @@ object PipelineQueries {
           cs: Array[Array[Double]]): Double = {
         val v = col("embedding").cast("array<double>")
         val best = greatest(cs.map(c =>
-          call_function("vec_dot", v, typedlit(c.toSeq)) /
-            sqrt(call_function("vec_dot", v, v))): _*)
+          vecDot(v, typedlit(c.toSeq)) /
+            sqrt(vecDot(v, v))): _*)
         df.select(avg(best)).head().getDouble(0)
       }
       val ass = assigned.localCheckpoint()
@@ -1610,12 +1609,11 @@ object PipelineQueries {
     // comparison, and the keep thresholds chosen so this corpus exercises
     // both branches.
     "quality_rules" -> ((s, dir) => {
-      HashExpressions.register(s)
       val base = t(s, dir, "documents")
         .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
       val nTok = size(col("t"))
       val rep = floor((lit(1.0) -
-        size(expr("word_shingles(t, 2)")).cast("double") /
+        size(wordShingles(col("t"), 2)).cast("double") /
           greatest(nTok - 1, lit(1)).cast("double")) * 1e6 + 0.5) / 1e6
       val alphaRaw = size(filter(col("t"), x => x.rlike("^[a-z]+$")))
         .cast("double") / nTok
@@ -2527,12 +2525,11 @@ object PipelineQueries {
     // fingerprint table is bit-identical under a different partitioning
     // (the determinism a cluster re-run relies on).
     "text_fingerprint" -> ((s, dir) => {
-      HashExpressions.register(s)
       val docs = t(s, dir, "documents")
       def fpOf(d: org.apache.spark.sql.DataFrame) = d.select(
         col("doc_id"), col("text"),
-        expr("simhash64(split(trim(lower(text)), '\\\\s+'))").as("simhash"),
-        expr("winnow_fingerprint(text, 8, 4)").as("wfp"))
+        simhash64(split(trim(lower(col("text"))), "\\s+")).as("simhash"),
+        winnowFingerprint(col("text"), 8, 4).as("wfp"))
       val fp = fpOf(docs).localCheckpoint()
       val dupsConsistent = Contracts.forAll(
         fp.groupBy(md5(col("text")).as("key"))
@@ -3352,10 +3349,9 @@ object PipelineQueries {
       Sampling.topKPerGroup(assigned, "cluster", "vec_id", 20L, "cb")
     }),
     "text_fingerprint" -> ((s, dir) => {
-      HashExpressions.register(s)
       t(s, dir, "documents").select(col("doc_id"),
-        expr("simhash64(split(trim(lower(text)), '\\\\s+'))").as("simhash"),
-        expr("winnow_fingerprint(text, 8, 4)").as("wfp"))
+        simhash64(split(trim(lower(col("text"))), "\\s+")).as("simhash"),
+        winnowFingerprint(col("text"), 8, 4).as("wfp"))
     }),
     "heavy_hitters" -> ((s, dir) =>
       t(s, dir, "documents")

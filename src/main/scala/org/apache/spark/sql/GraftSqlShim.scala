@@ -2,17 +2,28 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StructType
 
 /** The `private[sql]` doorways graft needs: wrap a hand-built (already
   * resolved) logical plan or an `RDD[InternalRow]` back into a DataFrame,
-  * and read a session's unique id. Lives in the `org.apache.spark.sql`
-  * package solely for access to `classic.Dataset.ofRows`,
+  * move between a Column and its Catalyst expression, and read a session's
+  * unique id. Lives in the `org.apache.spark.sql` package solely for access
+  * to `classic.Dataset.ofRows`, `classic.ExpressionUtils`,
   * `SparkSession.internalCreateDataFrame`, `SparkSession.sessionUUID` and
   * `StructType.asNullable`; everything else in graft stays on public API.
   */
 object GraftSqlShim {
+  /** A Column holding `e` itself: no function name, no registry, and any
+    * object `e` references travels with the Column into whichever session
+    * analyzes it.
+    */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** The (possibly unresolved) Catalyst expression behind `c`. */
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 

@@ -21,6 +21,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     graft.fs.setup(s)
+    // the SQL route, for specs that write graft's functions as SQL text
+    // (`call_function("vec_dot", …)`); library code needs no registration
+    graft.functions.HashExpressions.register(s)
     s
   }
 

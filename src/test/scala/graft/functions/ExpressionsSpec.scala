@@ -83,7 +83,7 @@ class ExpressionsSpec extends SparkSpec {
             .map(e => (e.getDouble(0), e.getInt(1)))
         }.sortBy(_._1)
     def run(): (Seq[(Long, Seq[(Double, Int)])], Seq[(Long, Seq[(Double, Int)])]) =
-      (rows(CentroidExpressions.centroidScores(spark, col("v"), col("n"),
+      (rows(CentroidExpressions.centroidScores(col("v"), col("n"),
         table)), rows(refCol))
     // The kernel's division is raw IEEE float math (x/0 → ±Inf, 0/0 →
     // NaN, never an error): the composed reference must run with ANSI
@@ -210,77 +210,59 @@ class ExpressionsSpec extends SparkSpec {
     }
   }
 
-  test("TempFnNames: per-object reuse, per-prefix separation, no collision") {
-    val a = new Array[Double](4)
-    val b = new Array[Double](4)
-    val n1 = TempFnNames.nameFor(a, "p")
-    assert(TempFnNames.nameFor(a, "p") == n1,
-      "same object + prefix must reuse its binding (registry must not grow per call)")
-    assert(TempFnNames.nameFor(b, "p") != n1,
-      "distinct (value-equal) arrays must never share a binding")
-    val n2 = TempFnNames.nameFor(a, "q")
-    assert(n2 != n1 && TempFnNames.nameFor(a, "q") == n2,
-      "one object may carry one binding per prefix without eviction")
-    assert(TempFnNames.nameFor(a, "p") == n1,
-      "acquiring a second prefix must not evict the first")
-  }
-
-  test("register: rebuilds never break live bindings; dead entries sweep") {
-    // the recurring-ingest pattern, without the r5 eager-drop race: a
-    // rebuild must NOT drop a predecessor whose object is still strongly
-    // held (its bare Column keeps resolving), entries must not pin their
-    // objects (weak builder), and once an object is collected its entry
-    // sweeps away on the next register/sweep for the role.
-    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-    import org.apache.spark.sql.functions.call_function
-    val role = "tfn_probe"
-    def registered(): Set[String] =
-      spark.sessionState.functionRegistry.listFunction()
-        .map(_.funcName).filter(_.startsWith(role)).toSet
-    // mk builds from the handed object only — capturing the array would
-    // pin it and invalidate the collectability assertion below
-    val mk = (o: Array[Double], _: Seq[Expression]) =>
-      Literal(o.length): Expression
-    var a: Array[Double] = Array.fill(4)(1.0)
-    val aRef = new java.lang.ref.WeakReference[AnyRef](a)
-    val nameA = TempFnNames.register[Array[Double]](spark, role, a, mk)
-    val bareA = call_function(nameA) // un-analyzed Column held across rebind
-    val b = Array.fill(5)(2.0)
-    val nameB = TempFnNames.register[Array[Double]](spark, role, b, mk)
-    assert(registered() == Set(nameA, nameB),
-      "rebind must keep the live predecessor's entry")
-    assert(spark.range(1).select(bareA).head().getInt(0) == 4,
-      "a bare Column from before the rebind must still analyze")
-    assert(spark.range(1).select(call_function(nameB)).head().getInt(0) == 5)
-    a = null // drop the last strong reference
-    // the bounded recent-registration FIFO intentionally still pins `a`;
-    // age it out eagerly so collectability is down to the weak entry alone
-    TempFnNames.releaseStrongHolds(spark)
-    var tries = 0
-    while (aRef.get() != null && tries < 100) {
-      System.gc(); Thread.sleep(10); tries += 1
+  test("typed constructors and the SQL functions build the same rows, " +
+    "for every sqlFunctions entry") {
+    HashExpressions.register(spark)
+    val df = Seq(
+      (Seq("a", "b", "c", "a", "b"), "abcdefghijklmnopqrstuvwxyz",
+        Seq(1.0, 2.0, 3.0, 4.0), Seq(0.5, -1.0, 2.0, 0.25), Seq(1, 0),
+        3L, 5L, 7L),
+      (Seq("x"), "short", Seq(0.0, 0.0, 1.0, 1.0), Seq(2.0, 2.0, 2.0, 2.0),
+        Seq(0, 1), 65535L, 0L, 2097151L))
+      .toDF("toks", "text", "a", "b", "codes", "x", "y", "z")
+    import HashExpressions._
+    val forms: Map[String, (org.apache.spark.sql.Column, String)] = Map(
+      "simhash64" -> (simhash64(col("toks")) -> "simhash64(toks)"),
+      "minhash_sig" -> (minhashSig(col("toks"), 8) -> "minhash_sig(toks, 8)"),
+      "word_shingles" ->
+        (wordShingles(col("toks"), 2) -> "word_shingles(toks, 2)"),
+      "winnow_fingerprint" -> (winnowFingerprint(col("text"), 4, 3) ->
+        "winnow_fingerprint(text, 4, 3)"),
+      "vec_dot" -> (vecDot(col("a"), col("b")) -> "vec_dot(a, b)"),
+      "ngram_gen" -> (ngramGen(col("toks"), 2) -> "ngram_gen(toks, 2)"),
+      "pq_score" -> (pqScore(col("a"), col("codes"), 2) ->
+        "pq_score(a, codes, 2)"),
+      "hilbert16" -> (hilbert16(col("x"), col("y")) -> "hilbert16(x, y)"),
+      "hilbert21" -> (hilbert21(col("x"), col("y"), col("z")) ->
+        "hilbert21(x, y, z)"))
+    assert(forms.keySet == sqlFunctions.map(_._1).toSet)
+    forms.foreach { case (name, (typed, sql)) =>
+      def rows(c: org.apache.spark.sql.Column) =
+        df.select(col("x"), c).collect().map(_.toString).toSeq.sorted
+      val got = rows(typed)
+      assert(got.nonEmpty, name)
+      assert(got == rows(expr(sql)), name)
     }
-    assert(aRef.get() == null,
-      "a registry entry must not pin its bound object")
-    TempFnNames.sweepRole(spark, role)
-    assert(registered() == Set(nameB),
-      "collected predecessors sweep out of the registry")
   }
 
-  test("register: no premature-GC window between register and analysis") {
-    // a caller may hold the bound object only in a frame slot HotSpot has
-    // already cleared by analysis time; the bounded strong FIFO must keep
-    // the object alive across the register→first-build gap even when NO
-    // caller reference survives.
-    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-    import org.apache.spark.sql.functions.call_function
-    val mk = (o: Array[Double], _: Seq[Expression]) =>
-      Literal(o.length): Expression
-    val name = TempFnNames.register[Array[Double]](
-      spark, "tfn_window", Array.fill(7)(1.0), mk) // no ref kept
-    (0 until 3).foreach { _ => System.gc(); Thread.sleep(10) }
-    assert(spark.range(1).select(call_function(name)).head().getInt(0) == 7,
-      "binding must survive GC between register and first analysis")
-    TempFnNames.releaseStrongHolds(spark)
+  /** The analysis error `sql` fails with; it must name `fn`'s argument 2. */
+  private def intArgError(sql: String, fn: String): Unit = {
+    HashExpressions.register(spark)
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql(sql).collect()
+    }
+    assert(e.getMessage.contains(fn) && e.getMessage.contains("argument 2"),
+      e.getMessage)
+  }
+
+  test("a NULL SQL int argument fails at analysis, naming function and position") {
+    intArgError("SELECT minhash_sig(array('a'), NULL)", "minhash_sig")
+  }
+
+  test("a non-constant SQL int argument fails at analysis, naming function " +
+    "and position") {
+    intArgError(
+      "SELECT word_shingles(array('a','b'), n) FROM VALUES (2) AS t(n)",
+      "word_shingles")
   }
 }

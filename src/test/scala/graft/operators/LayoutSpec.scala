@@ -104,7 +104,7 @@ class LayoutSpec extends SparkSpec {
       rnd.nextLong() & 0xFFFFL))
     val got = pts.toDF("x", "y")
       .select(col("x"), col("y"),
-        Layout.hilbert16Key(pts.toDF("x", "y"), "x", "y").as("h"))
+        Layout.hilbert16Key("x", "y").as("h"))
       .collect()
     got.foreach { r =>
       assert(r.getLong(2) ==
@@ -198,7 +198,7 @@ class LayoutSpec extends SparkSpec {
       rnd.nextLong() & 0x1FFFFFL, rnd.nextLong() & 0x1FFFFFL))
     val df = pts.toDF("x", "y", "z")
     val got = df.select(col("x"), col("y"), col("z"),
-      Layout.hilbert21Key(df, "x", "y", "z").as("h")).collect()
+      Layout.hilbert21Key("x", "y", "z").as("h")).collect()
     got.foreach { r =>
       assert(r.getLong(3) == graft.functions.NativeKernels.hilbert21(
         r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -245,7 +245,7 @@ class LayoutSpec extends SparkSpec {
     assert(back.columns.toSeq == Seq("a", "b"), "key column must be dropped")
     val ranges = back
       .select(input_file_name().as("f"),
-        Layout.hilbert16Key(back, "a", "b").as("k"))
+        Layout.hilbert16Key("a", "b").as("k"))
       .groupBy(col("f"))
       .agg(min(col("k")).as("kmin"), max(col("k")).as("kmax"))
       .collect().map(r => (r.getLong(1), r.getLong(2)))
@@ -275,7 +275,7 @@ class LayoutSpec extends SparkSpec {
       ("hilbert3-prod", (d: org.apache.spark.sql.DataFrame, p: String) =>
         Layout.hilbert3Write(d, "a", "b", "c", p, 8),
         (d: org.apache.spark.sql.DataFrame) =>
-          Layout.hilbert21Key(d, "a", "b", "c"))
+          Layout.hilbert21Key("a", "b", "c"))
     ).foreach { case (tag, write, key) =>
       val dir = tmpDir(tag)
       write(df, dir)
