@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.queries._
 
@@ -15,7 +14,6 @@ import graft.queries._
   * SURVEY.md §2 family; this object is only the aggregation point.
   */
 object SparkEntry {
-  import Tables.t
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -555,7 +555,7 @@ object Manifest {
     * caller that needs the key the writers sort by.
     */
   private def curveKey(curve: String, xCol: String, yCol: String,
-      zCol: String = ""): Column = (curve, zCol.isEmpty) match {
+      zCol: String): Column = (curve, zCol.isEmpty) match {
     case ("morton", true)   => Layout.morton16(col(xCol), col(yCol))
     case ("hilbert", true)  => Layout.hilbert16Key(xCol, yCol)
     case ("morton", false)  =>

@@ -424,7 +424,6 @@ object Similarity {
     // greedy min-log-product form degenerates when eigenvalues sit below
     // 1, where adding an axis LOWERS a group's product and the first group
     // swallows all the leading axes, i.e. the identity permutation).
-    val sub = dim / m
     val groups = Array.fill(m)(List.empty[Int])
     model.eigenvalues.indices.foreach { rank =>
       val pos = rank % m

@@ -4,7 +4,7 @@ import org.apache.datasketches.common.ArrayOfStringsSerDe
 import org.apache.datasketches.frequencies.{ErrorType, ItemsSketch}
 import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.datasketches.memory.Memory
-import org.apache.datasketches.theta.{CompactSketch, Intersection, SetOperation, Sketches => DsSketches, Union, UpdateSketch}
+import org.apache.datasketches.theta.{CompactSketch, SetOperation, Sketches => DsSketches, Union}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._

@@ -6,6 +6,7 @@ import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.util.{Arrays, UUID}
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 import org.apache.spark.SparkEnv
@@ -26,7 +27,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * Reads go through a [[LogView]]: the index turns a record range into
   * [[Chunk]]s, each a file path, a byte range of at most
   * [[LogView.ChunkBytes]] and a record count, so a slice reads only the
-  * bytes of its own records and decodes nothing outside them. A chunk is
+  * bytes of its own records and decodes nothing outside them. The driver
+  * plans chunks and a task reads them (`Consumer.consume`, the
+  * `graft.sources.v2` log sources), so the log itself never leaves the
+  * driver. [[recordsDecoded]] counts the records read from this log's
+  * chunks in this JVM: each chunk carries its log's id, and
+  * [[Chunk.records]] bumps that id's counter in `QueueLog`'s table per
+  * record it decodes (a task in another JVM finds no counter there and
+  * counts nothing). A chunk is
   * read by opening its file and doing one positional read, not through a
   * memory map: a segment deleted before a read then fails that read with
   * an exception that names the file, and its disk space is freed at
@@ -46,7 +54,8 @@ final class QueueLog private[pipeline] (segmentBytes: Long = QueueLog.SegmentByt
   private var segments = Vector.empty[Segment]
   private var index = new Array[Long](16)
   private var count = 0
-  private val decoded = new LongAdder
+  private val id = ids.incrementAndGet()
+  decoded.put(id, new LongAdder)
 
   /** Appends one message; always true (a `java.util.Queue.add` shape). */
   def add(m: QueueMessage): Boolean = { append(Seq(m)); true }
@@ -72,7 +81,7 @@ final class QueueLog private[pipeline] (segmentBytes: Long = QueueLog.SegmentByt
 
   /** Records `[0, size)` as of now; later appends do not show in it. */
   def view: LogView = synchronized(
-    new LogView(segments, segments.lastOption.fold(0L)(_.end), index, count, decoded))
+    new LogView(segments, segments.lastOption.fold(0L)(_.end), index, count, id))
 
   /** Hands the current records over and empties the log. */
   private[pipeline] def detach(): LogView = synchronized {
@@ -83,11 +92,11 @@ final class QueueLog private[pipeline] (segmentBytes: Long = QueueLog.SegmentByt
     v
   }
 
-  /** Detaches and deletes every segment. */
-  private[pipeline] def delete(): Unit = detach().delete()
+  /** Detaches and deletes every segment, and drops the decode counter. */
+  private[pipeline] def delete(): Unit = try detach().delete() finally decoded.remove(id)
 
-  /** Records decoded from this log's views so far. */
-  private[graft] def recordsDecoded: Long = decoded.sum
+  /** Records decoded from this log's chunks so far, in this JVM. */
+  private[graft] def recordsDecoded: Long = Option(decoded.get(id)).fold(0L)(_.sum)
 
   private[graft] def segmentFiles: Seq[Path] = synchronized(segments.map(_.path))
 }
@@ -97,6 +106,13 @@ object QueueLog {
   private val SegmentBytes: Long = 64L << 20
 
   private val files = new AtomicLong
+  private val ids = new AtomicLong
+
+  /** Each live log's decode counter, by log id (see [[recordsDecoded]]). */
+  private val decoded = new ConcurrentHashMap[Long, LongAdder]()
+
+  /** The counter of log `id`, or `null` when no live log of this JVM has it. */
+  private[pipeline] def decodeCounter(id: Long): LongAdder = decoded.get(id)
 
   private lazy val dir: Path = {
     val base = sys.env.get("SPARK_LOCAL_DIRS")
@@ -150,23 +166,24 @@ private[pipeline] final class Segment(val path: Path) {
   * Its one read path is [[chunks]]: a record range becomes a list of
   * [[Chunk]]s, each a run of whole records in one segment file that is
   * read with one positional read. [[records]] reads such a list in order
-  * on the caller's thread; `Consumer.consume` ships one list to each task.
+  * on the caller's thread; `Consumer.consume` and the log sources ship one
+  * list to each task.
   */
 final class LogView private[pipeline] (segments: Vector[Segment], tailEnd: Long,
-    index: Array[Long], val count: Int, decoded: LongAdder) {
+    index: Array[Long], val count: Int, log: Long) {
   import LogView._
 
   /** Records `[start, end)`, clamped to `[0, count)`, decoding nothing
     * outside them. Offsets past `Int.MaxValue` fail instead of wrapping.
     */
   def records(start: Long, end: Long): Iterator[LogRecord] =
-    chunks(start, end).iterator.flatMap(_.records).map { r => decoded.increment(); r }
+    chunks(start, end).iterator.flatMap(_.records)
 
   /** The chunks that hold records `[start, end)` (clamped as [[records]]
     * clamps), in order. A chunk stays within one segment and spans at most
     * [[LogView.ChunkBytes]], unless it is a single record larger than that.
     */
-  private[pipeline] def chunks(start: Long, end: Long): Vector[Chunk] = {
+  private[graft] def chunks(start: Long, end: Long): Vector[Chunk] = {
     val last = math.min(Math.toIntExact(end), count)
     var i = math.min(Math.toIntExact(start), last)
     val out = Vector.newBuilder[Chunk]
@@ -176,7 +193,7 @@ final class LogView private[pipeline] (segments: Vector[Segment], tailEnd: Long,
       var k = i + 1
       while (k < last && segmentOf(index(k)) == seg && endOf(k) - from <= ChunkBytes)
         k += 1
-      out += Chunk(segments(seg).path.toString, from, endOf(k - 1), k - i)
+      out += Chunk(segments(seg).path.toString, from, endOf(k - 1), k - i, log)
       i = k
     }
     out.result()
@@ -218,16 +235,20 @@ private object LogView {
 }
 
 /** A run of `count` whole records that fill bytes `[from, until)` of the
-  * segment file at `path`. It needs neither the log nor its index, so a
-  * task reads it wherever the file is readable; a file deleted before the
-  * read fails it with an exception that names the file.
+  * segment file at `path`, a segment of the log with id `log`. It needs
+  * neither the log nor its index, so a task reads it wherever the file is
+  * readable; a file deleted before the read fails it with an exception
+  * that names the file.
   */
-private[pipeline] final case class Chunk(path: String, from: Long, until: Long, count: Int) {
+private[graft] final case class Chunk(path: String, from: Long, until: Long, count: Int,
+    log: Long) {
 
   /** Reads the bytes with one positional read and walks the records in
-    * order.
+    * order, counting each one it decodes on the log's counter when the log
+    * lives in this JVM.
     */
   def records: Iterator[LogRecord] = {
+    val decoded = QueueLog.decodeCounter(log)
     val buf = ByteBuffer.allocate(Math.toIntExact(until - from))
     val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
     try while (buf.hasRemaining)
@@ -241,6 +262,7 @@ private[pipeline] final case class Chunk(path: String, from: Long, until: Long, 
       val bodyLen = buf.getInt(bodyAt)
       val r = new LogRecord(buf.array, at + 4, idLen, bodyAt + 4, bodyLen)
       at = bodyAt + 4 + math.max(bodyLen, 0)
+      if (decoded != null) decoded.increment()
       r
     }
   }

@@ -1,16 +1,10 @@
 package graft.sources.v2
 
-import java.util.{Map => JMap}
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,9 +19,8 @@ import graft.pipeline.{InMemoryQueue, QueueMessage}
   *     .option("subscribe", topic).option("partitions", "4")
   *     .option("startingOffsets", """{"t":{"0":5,"1":-2}}""").load()
   *
-  * [[TopicDataSource]] is already Kafka-SHAPED (per-partition offset map,
-  * one task per partition, per-key publish-order logs); this shim adds the
-  * Kafka-SPEC surface on top of the same logs:
+  * It reads a topic's logs through the same [[LogStream]] as
+  * [[TopicDataSource]] and adds the Kafka-SPEC surface:
   *
   *  - the Kafka source SCHEMA: (key BINARY, value BINARY, topic,
   *    partition, offset, timestamp, timestampType) — a job written against
@@ -39,32 +32,26 @@ import graft.pipeline.{InMemoryQueue, QueueMessage}
   *    earliest; batch end: latest — the connector's own fallbacks).
   *    Streaming reads ignore `endingOffsets`, exactly like Kafka;
   *  - `maxOffsetsPerTrigger` as the admission-cap name (the topic
-  *    source's `maxMessagesPerTrigger` under its Kafka-spec alias).
+  *    source's `maxMessagesPerTrigger` under its Kafka-spec alias);
+  *  - `minPartitions` (see `KafkaShimScan.split`).
   *
   * The `timestamp` column is a DETERMINISTIC synthetic stamp (offset
   * milliseconds since epoch; the local registry stores no broker time)
   * with timestampType = 0 (CreateTime) — documented so nobody windows on
-  * it expecting wall-clock. Local scope: same single-JVM caveat as the
-  * topic source; a cluster swaps in the real Kafka connector with an
-  * IDENTICAL query shape — that swap being a one-line format change is
-  * the point of this shim.
+  * it expecting wall-clock. A cluster swaps in the real Kafka connector
+  * with an IDENTICAL query shape — that swap being a one-line format
+  * change is the point of this shim.
   */
-class KafkaShimDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-kafka"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    KafkaShim.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table = {
-    def req(k: String): String = Option(properties.get(k)).getOrElse(
-      throw new IllegalArgumentException(s"option '$k' is required"))
+class KafkaShimDataSource extends LogSource("graft-kafka", KafkaShim.schema) {
+  override protected def table(schema: StructType, options: CaseInsensitiveStringMap): Table = {
     // reads name the topic `subscribe`, writes name it `topic` — the
     // Kafka connector's own split; `schema` is the Kafka column set for
     // reads and the incoming frame's shape for writes
-    val topic = Option(properties.get("subscribe"))
-      .orElse(Option(properties.get("topic"))).getOrElse(
+    val topic = Option(options.get("subscribe"))
+      .orElse(Option(options.get("topic"))).getOrElse(
         throw new IllegalArgumentException(
           "option 'subscribe' (read) or 'topic' (write) is required"))
-    new KafkaShimTable(topic, req("partitions").toInt, schema)
+    new KafkaShimTable(topic, SourceOptions.partitions(options), schema)
   }
 }
 
@@ -157,7 +144,7 @@ object KafkaShim {
     */
   private[v2] def resolveOffsets(spec: String, topic: String,
       nPartitions: Int, latest: Int => Long,
-      default: String): TopicOffset = {
+      default: String): Vector[Long] = {
     def resolve(p: Int, v: Long): Long = v match {
       case -2L => 0L
       case -1L => latest(p)
@@ -168,40 +155,27 @@ object KafkaShim {
         off
     }
     spec.trim match {
-      case "earliest" => TopicOffset.zero(nPartitions)
-      case "latest" =>
-        TopicOffset((0 until nPartitions).map(p => p -> latest(p)).toMap)
+      case "earliest" => Vector.fill(nPartitions)(0L)
+      case "latest" => Vector.tabulate(nPartitions)(latest)
       case json =>
         val m = parseOffsetsJson(json).getOrElse(topic,
           throw new IllegalArgumentException(
             s"offsets JSON $json names no topic '$topic'"))
         val dflt = if (default == "latest") -1L else -2L
-        TopicOffset((0 until nPartitions).map { p =>
-          p -> resolve(p, m.getOrElse(p, dflt))
-        }.toMap)
+        Vector.tabulate(nPartitions)(p => resolve(p, m.getOrElse(p, dflt)))
     }
   }
 }
 
 private[v2] class KafkaShimTable(topic: String, nPartitions: Int,
-    tableSchema: StructType) extends Table
-    with SupportsRead with SupportsWrite {
-  require(nPartitions > 0, "partitions must be positive")
-  override def name(): String = s"graft_kafka($topic[$nPartitions])"
-  override def schema(): StructType = tableSchema
+    tableSchema: StructType)
+    extends LogTable(s"graft_kafka($topic[$nPartitions])", tableSchema,
+      new KafkaShimScan(topic, nPartitions, _)) with SupportsWrite {
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(
       TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_READ,
       TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
       TableCapability.ACCEPT_ANY_SCHEMA)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new KafkaShimScan(topic, nPartitions,
-        Option(options.get("startingOffsets")),
-        Option(options.get("endingOffsets")),
-        SourceOptions.positiveLong(options, "maxOffsetsPerTrigger"),
-        Option(options.get("minPartitions")).map(_.toInt).getOrElse(0))
-    }
 
   /** The Kafka SINK surface: rows with a `value` column (string or
     * binary) and an optional `key` route to `partitionFor(key)`'s log —
@@ -277,104 +251,48 @@ private[v2] class KafkaShimWriterFactory(topic: String, nPartitions: Int,
       epochId: Long): DataWriter[InternalRow] = writer()
 }
 
-private[v2] class KafkaShimScan(topic: String, nPartitions: Int,
-    starting: Option[String], ending: Option[String],
-    maxPerTrigger: Option[Long], minPartitions: Int) extends Scan {
+private[v2] class KafkaShimScan(topic: String, nPartitions: Int, options: CaseInsensitiveStringMap)
+    extends LogScan(TopicDataSource.logs(topic, nPartitions),
+      SourceOptions.positiveLong(options, "maxOffsetsPerTrigger")) {
+  private val starting = Option(options.get("startingOffsets"))
+  private val ending = Option(options.get("endingOffsets"))
+  private val minPartitions = SourceOptions.positiveInt(options, "minPartitions")
+
   override def readSchema(): StructType = KafkaShim.schema
-  override def description(): String =
-    s"graft-kafka topic=$topic partitions=$nPartitions"
-  private def latest(p: Int): Long =
-    InMemoryQueue.size(TopicDataSource.queueName(topic, p)).toLong
+  override def description(): String = s"graft-kafka topic=$topic partitions=$nPartitions"
 
-  /** Kafka's `minPartitions` semantics: when the natural one-slice-per-
-    * topic-partition plan yields fewer read tasks than requested, slices
-    * split into contiguous offset sub-ranges until the task count
-    * reaches the floor — read parallelism beyond partition count, the
-    * hot-partition relief a 100 TB backfill actually needs (a 3-broker-
-    * partition topic can still fan across 32 cores). Splits are
-    * proportional to slice depth (each slice gets ⌈share⌉ chunks of its
-    * record range), deterministic, and row-preserving: a sub-range
-    * [f, m) ∪ [m, t) is exactly [f, t) on an append log.
+  private def resolve(spec: Option[String], default: String): Vector[Long] =
+    KafkaShim.resolveOffsets(spec.getOrElse(default), topic, nPartitions, size, default)
+  override def initial: Vector[Long] = resolve(starting, "latest")
+  override def snapshot: (Vector[Long], Vector[Long]) =
+    (resolve(starting, "earliest"), resolve(ending, "latest"))
+
+  /** Kafka's `minPartitions`: with fewer slices than that, each is cut
+    * into contiguous offset sub-ranges, ⌈share⌉ of them by its depth, until
+    * the task count reaches the floor — read parallelism beyond partition
+    * count, the hot-partition relief a backfill needs. Deterministic and
+    * row-preserving: [f, m) ∪ [m, t) is exactly [f, t) on an append log.
     */
-  private def splitToMin(slices: Seq[TopicSlice]): Seq[TopicSlice] =
-    if (minPartitions <= slices.length || slices.isEmpty) slices
-    else {
-      val total = slices.map(s => s.end - s.start).sum.toDouble
-      slices.flatMap { s =>
-        val depth = s.end - s.start
-        val share = if (total <= 0) 1
-          else math.max(1, math.ceil(minPartitions * depth / total).toInt)
+  override def split(ranges: Seq[LogRange]): Seq[LogRange] = minPartitions match {
+    case Some(min) if min > ranges.length && ranges.nonEmpty =>
+      val total = ranges.map(r => r.until - r.from).sum.toDouble
+      ranges.flatMap { r =>
+        val depth = r.until - r.from
+        val share = math.max(1, math.ceil(min * depth / total).toInt)
         val chunk = math.max(1L, (depth + share - 1) / share)
-        (s.start until s.end by chunk).map { f =>
-          TopicSlice(s.topic, s.partition, f, math.min(f + chunk, s.end))
-        }
+        (r.from until r.until by chunk).map(f => r.copy(from = f, until = math.min(f + chunk, r.until)))
       }
-    }
-
-  /** The micro-batch stream IS the topic source's (same offset map, same
-    * per-partition slices, same admission allocation) with the initial
-    * position resolved from `startingOffsets` (default latest, the Kafka
-    * streaming default), slices split to `minPartitions`, and rows
-    * rendered in the Kafka schema.
-    */
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
-    val start = KafkaShim.resolveOffsets(starting.getOrElse("latest"),
-      topic, nPartitions, latest, "latest")
-    new TopicMicroBatchStream(topic, nPartitions, maxPerTrigger) {
-      override def initialOffset(): Offset = start
-      override def planInputPartitions(startOff: Offset,
-          endOff: Offset): Array[InputPartition] =
-        splitToMin(super.planInputPartitions(startOff, endOff)
-          .map(_.asInstanceOf[TopicSlice]).toSeq)
-          .map(s => s: InputPartition).toArray
-      override def createReaderFactory(): PartitionReaderFactory =
-        new KafkaShimReaderFactory
-    }
+    case _ => ranges
   }
 
-  /** Batch read over [startingOffsets (default earliest),
-    * endingOffsets (default latest)] — one task per (possibly split)
-    * partition slice.
-    */
-  override def toBatch: Batch = new Batch {
-    private val s0 = KafkaShim.resolveOffsets(
-      starting.getOrElse("earliest"), topic, nPartitions, latest,
-      "earliest")
-    private val e0 = KafkaShim.resolveOffsets(ending.getOrElse("latest"),
-      topic, nPartitions, latest, "latest")
-    override def planInputPartitions(): Array[InputPartition] =
-      splitToMin((0 until nPartitions).flatMap { p =>
-        val (from, to) = (s0.offsets(p), e0.offsets(p))
-        if (to > from) Some(TopicSlice(topic, p, from, to)) else None
-      }).map(s => s: InputPartition).toArray
-    override def createReaderFactory(): PartitionReaderFactory =
-      new KafkaShimReaderFactory
-  }
+  override def rows(streaming: Boolean): LogRows = KafkaRows(UTF8String.fromString(topic))
 }
 
-private[v2] class KafkaShimReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val slice = partition.asInstanceOf[TopicSlice]
-    val records = InMemoryQueue.records(
-      TopicDataSource.queueName(slice.topic, slice.partition),
-      slice.start, slice.end)
-    new PartitionReader[InternalRow] {
-      private var pos = slice.start - 1
-      private var cur: InternalRow = _
-      override def next(): Boolean =
-        if (records.hasNext) {
-          val r = records.next()
-          pos += 1
-          cur = new GenericInternalRow(Array[Any](
-            r.idUtf8.getBytes, r.bodyUtf8.getBytes,
-            UTF8String.fromString(slice.topic), slice.partition, pos,
-            pos * 1000L, // offset ms since epoch, in micros (see scaladoc)
-            0))
-          true
-        } else false
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
+private[v2] case class KafkaRows(topic: UTF8String) extends LogRows {
+  override def apply(slice: LogSlice): Iterator[InternalRow] =
+    slice.records.zipWithIndex.map { case (r, i) =>
+      val offset = slice.start + i // the timestamp is offset ms since epoch (see scaladoc)
+      new GenericInternalRow(Array[Any](r.idUtf8.getBytes, r.bodyUtf8.getBytes, topic,
+        slice.partition, offset, offset * 1000L, 0))
     }
-  }
 }

@@ -48,8 +48,8 @@ object StreamingQueries {
     * OWN micro-batch — the harness for proving state crosses real batch
     * boundaries.
     */
-  private def rawDocs(s: SparkSession, dir: String, stage: Path, nCopies: Int = 1,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+  private def rawDocs(s: SparkSession, dir: String, stage: Path, nCopies: Int,
+      maxFilesPerTrigger: Option[Int]): DataFrame = {
     val schema = s.read.parquet(s"$dir/documents.parquet").schema
     (1 to nCopies).foreach(i =>
       Files.copy(java.nio.file.Paths.get(s"$dir/documents.parquet"),
